@@ -142,6 +142,69 @@ object Bench {
     candidates.find(_.length <= MaxLineChars).getOrElse(line(None))
   }
 
+  /** The between-run residue sweep, run outside every timer (Bench's
+    * loops, ProfileQuery). It sweeps dead localCheckpoint blocks out of
+    * the block manager. Every run of a checkpointing query (25
+    * localCheckpoint sites in the iterative operators) persists RDD
+    * blocks that only die when the JVM happens to GC the owning
+    * reference — on a 48g heap that can be hundreds of queries later,
+    * and by the string-sorted tail (q13… runs after the whole q1xx
+    * block) the accumulated blocks were inflating medians 4–7× vs
+    * isolated runs (measured: q13 4.14 s in-harness, 0.56 s isolated).
+    * Full-GC pulses between queries were tried first and REJECTED: the
+    * collection itself is outside the timers, but it floods the
+    * ContextCleaner with removal work whose block-manager RPC storm
+    * lands inside the NEXT query's runs (measured: 6–11 s medians on
+    * cheap queries right after the big producers — strictly worse in
+    * total). The targeted sweep instead unpersists exactly the
+    * locally-checkpointed RDDs — dead by construction once their query
+    * finished, since no operator retains a checkpointed frame across
+    * queries ([[SessionFrames]] refuses to) — without touching the
+    * DELIBERATE cross-query session frames, which live in the
+    * CacheManager and are not locally checkpointed. (`isCheckpointed`
+    * is the public probe — it is true for materialized local/reliable
+    * checkpoints and false for CacheManager buffer RDDs; the bench never
+    * sets a reliable checkpoint dir, so everything it matches here is a
+    * local one.)
+    * The r7 bench proved the checkpoint sweep alone is NOT enough: the
+    * stateful DSv2/streaming q2xx block (string-sorted right before
+    * q28…q99) left residue that inflated nine untouched queries' warm
+    * medians 2–9× ABOVE their own cold runs. Three residue classes,
+    * each swept here because nothing else reclaims them mid-session:
+    *  - state-store providers: every streaming run opens providers
+    *    under a FRESH checkpoint dir, so the registry grows one entry
+    *    per (query × run) — RocksDB instances plus a maintenance task
+    *    that walks ALL of them every interval, landing snapshot/upload
+    *    work inside later queries' timed runs. `StateStore.stop()`
+    *    unloads every provider and stops the pool; it restarts lazily
+    *    at the next streaming query (same call executors make on
+    *    shutdown — by construction nothing references a finished
+    *    query's state).
+    *  - memory-sink temp views (q255_sink, q278_sink): each `start()`
+    *    re-registers the view, but the PREVIOUS run's sink rows stay
+    *    reachable until the registration is dropped.
+    *  - MemStore scratch tables (mem_cf, mem_rw, memd_cdc, …): up to
+    *    16-version histories of lineitem-sized snapshots in driver
+    *    heap — dead the moment their query returns (every mem query
+    *    rebuilds its table from DROP), but pinned until the next run's
+    *    DROP, i.e. across every query string-sorted in between. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(_.isCheckpointed)
+      .foreach(_.unpersist(blocking = false))
+    // a run that THREW between start() and awaitTermination can leave
+    // a live stream feeding a sink forever — stop strays first
+    spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
+    spark.sessionState.catalog.getTempViewNames()
+      .filter(_.endsWith("_sink"))
+      .foreach(spark.catalog.dropTempView(_))
+    graft.sources.MemStore.tableNames.foreach(graft.sources.MemStore.drop)
+    // fs scratch tables are disk, not heap, but their manifests/files
+    // are equally dead after the query returns — same policy
+    graft.sources.FsStore.dropAll()
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+  }
+
   def main(args: Array[String]): Unit = {
     val tStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
@@ -220,56 +283,6 @@ object Bench {
           false
       }
 
-    // warm-up pass, recorded as COLD timings (first execution: JIT, scan,
-    // cache materialization) but excluded from the medians. NOTE: caches
-    // persisted by one query (e.g. the shared dedup frames) are
-    // deliberately left for later queries — same-session reuse, exactly
-    // what a warm production cluster would see; the cold column is what a
-    // cache-less first pass costs.
-    // Between queries, sweep dead localCheckpoint blocks out of the
-    // block manager. Every run of a checkpointing query (25
-    // localCheckpoint sites in the iterative operators) persists RDD
-    // blocks that only die when the JVM happens to GC the owning
-    // reference — on a 48g heap that can be hundreds of queries later,
-    // and by the string-sorted tail (q13… runs after the whole q1xx
-    // block) the accumulated blocks were inflating medians 4–7× vs
-    // isolated runs (measured: q13 4.14 s in-harness, 0.56 s isolated).
-    // Full-GC pulses between queries were tried first and REJECTED: the
-    // collection itself is outside the timers, but it floods the
-    // ContextCleaner with removal work whose block-manager RPC storm
-    // lands inside the NEXT query's runs (measured: 6–11 s medians on
-    // cheap queries right after the big producers — strictly worse in
-    // total). The targeted sweep instead unpersists exactly the
-    // locally-checkpointed RDDs — dead by construction once their query
-    // finished, since no operator retains a checkpointed frame across
-    // queries — without touching the DELIBERATE cross-query SQL caches
-    // (DedupOps.frameCache), which live in the CacheManager and are not
-    // locally checkpointed. (`isCheckpointed` is the public probe — it
-    // is true for materialized local/reliable checkpoints and false for
-    // CacheManager buffer RDDs; the bench never sets a reliable
-    // checkpoint dir, so everything it matches here is a local one.)
-    // The r7 bench proved the checkpoint sweep alone is NOT enough: the
-    // stateful DSv2/streaming q2xx block (string-sorted right before
-    // q28…q99) left residue that inflated nine untouched queries' warm
-    // medians 2–9× ABOVE their own cold runs. Three residue classes,
-    // each swept here because nothing else reclaims them mid-session:
-    //  - state-store providers: every streaming run opens providers
-    //    under a FRESH checkpoint dir, so the registry grows one entry
-    //    per (query × run) — RocksDB instances plus a maintenance task
-    //    that walks ALL of them every interval, landing snapshot/upload
-    //    work inside later queries' timed runs. `StateStore.stop()`
-    //    unloads every provider and stops the pool; it restarts lazily
-    //    at the next streaming query (same call executors make on
-    //    shutdown — by construction nothing references a finished
-    //    query's state).
-    //  - memory-sink temp views (q255_sink, q278_sink): each `start()`
-    //    re-registers the view, but the PREVIOUS run's sink rows stay
-    //    reachable until the registration is dropped.
-    //  - MemStore scratch tables (mem_cf, mem_rw, memd_cdc, …): up to
-    //    16-version histories of lineitem-sized snapshots in driver
-    //    heap — dead the moment their query returns (every mem query
-    //    rebuilds its table from DROP), but pinned until the next run's
-    //    DROP, i.e. across every query string-sorted in between.
     // diagnostics (r12): the bench's wall budget is cold + warm + the
     // BETWEEN-query machinery; sweep_s and gc_s in BENCH.json attribute
     // the between cost so a budget shortfall can be diagnosed from the
@@ -283,26 +296,21 @@ object Bench {
     val gcStart = gcMillis
     def sweepCheckpoints(): Unit = {
       val t0 = System.nanoTime()
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      // a run that THREW between start() and awaitTermination can leave
-      // a live stream feeding a sink forever — stop strays first
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      spark.sessionState.catalog.getTempViewNames()
-        .filter(_.endsWith("_sink"))
-        .foreach(spark.catalog.dropTempView(_))
-      graft.sources.MemStore.tableNames.foreach(graft.sources.MemStore.drop)
-      // fs scratch tables are disk, not heap, but their manifests/files
-      // are equally dead after the query returns — same policy
-      graft.sources.FsStore.dropAll()
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      sweep(spark)
       sweepNanos += System.nanoTime() - t0
     }
 
     // mid-run checkpoint cadence: cheap (one println) and frequent enough
     // that a kill loses at most ~20 queries of per-query signal
     val PartialEvery = 20
+
+    // warm-up pass, recorded as COLD timings (first execution: JIT, scan,
+    // session-frame builds) but excluded from the medians. Session frames
+    // ([[SessionFrames]]) built by one query are deliberately left for
+    // later queries — same-session reuse, exactly what a warm production
+    // cluster would see — so only the FIRST member of a cache-sharing pack
+    // (README "Bench semantics") pays the shared build in its cold figure;
+    // later members' cold figures are marginal costs, not cache-less ones.
     val coldBuf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     queries.foreach { case (name, fn) =>
       val t0 = System.nanoTime()

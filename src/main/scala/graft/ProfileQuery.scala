@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool: per-query cost anatomy for the optimization rounds — splits a
   * registered query's wall time into driver-side plan construction
@@ -25,42 +26,30 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskMs = 0L
-    @volatile var gcMs = 0L
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val tasks = new AtomicInteger
+    val taskMs = new AtomicLong
+    val gcMs = new AtomicLong
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = ()
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages += 1
+        stages.incrementAndGet()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks += 1
+        tasks.incrementAndGet()
         if (t.taskMetrics != null) {
-          taskMs += t.taskMetrics.executorRunTime
-          gcMs += t.taskMetrics.jvmGCTime
+          taskMs.addAndGet(t.taskMetrics.executorRunTime)
+          gcMs.addAndGet(t.taskMetrics.jvmGCTime)
         }
       }
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(_.isCheckpointed).foreach(_.unpersist(blocking = false))
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      spark.sessionState.catalog.getTempViewNames()
-        .filter(_.endsWith("_sink")).foreach(spark.catalog.dropTempView(_))
-      graft.sources.MemStore.tableNames.foreach(graft.sources.MemStore.drop)
-      graft.sources.FsStore.dropAll()
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    }
-
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
       .foreach { case (name, fn) =>
         (0 to runs).foreach { run =>
-          jobs = 0; stages = 0; tasks = 0; taskMs = 0L; gcMs = 0L
+          jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L); gcMs.set(0L)
           val t0 = System.nanoTime()
           try {
             val df = fn(spark, sfDir)
@@ -72,12 +61,12 @@ object ProfileQuery {
             if (run > 0)
               println(f"[prof] $name run$run total=${(t2 - t0) / 1e9}%.2f " +
                 f"build=${(t1 - t0) / 1e9}%.2f exec=${(t2 - t1) / 1e9}%.2f " +
-                f"jobs=$jobs stages=$stages tasks=$tasks " +
-                f"taskTime=${taskMs / 1e3}%.2f gc=${gcMs / 1e3}%.2f")
+                f"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
+                f"taskTime=${taskMs.get / 1e3}%.2f gc=${gcMs.get / 1e3}%.2f")
           } catch { case e: Throwable =>
             println(s"[prof] $name run$run FAIL ${e.toString.take(160)}")
           }
-          sweep()
+          Bench.sweep(spark)
         }
       }
     spark.stop()

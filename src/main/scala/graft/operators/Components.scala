@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionFrames, Tables}
 
 /** Connected components over near-duplicate candidate pairs — the final
   * stage of near-dup deduplication (SURVEY.md §2.5 "connected components
@@ -132,31 +132,20 @@ object Components {
 
   /** Cluster labels over the pair-MEMBER vertex set of
     * [[DedupOps.verifiedPairs]] — the frame q53/q71/q204 and the
-    * CleanCorpus near-dup stage all derive. r13: session-cached (the
-    * DedupOps frameCache policy — the bench's sweep preserves
-    * CacheManager caches): each consumer re-ran the eager
-    * union-find/label loop per invocation even though the pair frame
-    * underneath was already cached. A cache, not a retained checkpoint —
-    * the sweep unpersists checkpointed RDDs between runs. */
-  private val clusterCache = scala.collection.concurrent.TrieMap[
-    (Int, String, Long), (SparkSession, DataFrame)]()
+    * CleanCorpus near-dup stage all derive. r13: a [[graft.SessionFrames]]
+    * frame: each consumer re-ran the eager union-find/label loop per
+    * invocation even though the pair frame underneath was already
+    * shared. The distributed (>1M-edge) branch returns checkpoint-backed
+    * labels, which SessionFrames hands back unmemoized. */
   private[operators] def pairMemberClusters(s: SparkSession, d: String,
-      cap: Long): DataFrame = {
-    clusterCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d, cap)
-    clusterCache.get(key) match {
-      case Some((owner, df)) if owner eq s => df
-      case _ =>
-        val edges = DedupOps.verifiedPairs(s, d, cap)
-          .select(col("d1").as("src"), col("d2").as("dst"))
-        val verts = edges.select(col("src").as("id"))
-          .union(edges.select(col("dst").as("id"))).distinct()
-        val df = connectedComponentsAuto(verts, edges).cache()
-        df.count()
-        clusterCache.put(key, (s, df))
-        df
+      cap: Long): DataFrame =
+    SessionFrames.frame(s, ("pairMemberClusters", d, cap)) {
+      val edges = DedupOps.verifiedPairs(s, d, cap)
+        .select(col("d1").as("src"), col("d2").as("dst"))
+      val verts = edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()
+      connectedComponentsAuto(verts, edges)
     }
-  }
 
   /** Recursive-CTE oracle fragment: clusters over the exact j>=0.6 pairs
     * (valid for the LSH edges by the verify + miss-probability argument in

