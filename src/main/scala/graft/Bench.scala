@@ -209,7 +209,6 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     // Wall-clock budget for the whole bench (measured from main entry —
     // sbt compile time is outside it, so leave headroom vs the driver's
@@ -219,26 +218,7 @@ object Bench {
     // inside this budget, and partial compact lines every
     // [[PartialEvery]] queries make even a killed run parseable.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1300").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The registry's single-partition windows all run on metadata-sized
-    // frames (presentation ranks, 1-row stacks — the r4 audit; a lit(0)
-    // partition key does NOT silence this: constant folding strips it
-    // back out). WindowExec's per-execution warning would otherwise
-    // dominate the log tail the driver parses, so scope that one logger
-    // down; real unpartitioned-window regressions are caught by
-    // PlanSpec's exchange budgets, not by log noise.
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
-      .setLevel(org.apache.log4j.Level.ERROR)
-
+    val spark = SparkEntry.session()
 
     // The last committed clean record (BENCH.json in the working dir) is
     // the drift reference for the second pass below: a warm figure >2x
@@ -269,8 +249,7 @@ object Bench {
     // the driver never sets it, so official runs always time everything
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filter.forall(_.contains(n)) }
+    val queries = SparkEntry.selected(filter)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
     // noop write: rows are fully produced and consumed, nothing is kept —

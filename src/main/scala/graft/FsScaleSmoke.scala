@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The file-backed connector's scale smoke — run in a DELIBERATELY SMALL
   * JVM so the claim is demonstrated, not told:
   *
-  * `SPARK_DRIVER_MEM=3g sbt "runMain graft.FsScaleSmoke"`
+  * `SPARK_DRIVER_MEM=3g SPARK_GRAFT_CPUS=16 sbt "runMain graft.FsScaleSmoke"`
   *
   * builds an fs table history whose row set, materialized the MemStore
   * way (driver-resident `Vector[InternalRow]`, ~120 B/row with object
@@ -24,16 +23,8 @@ import org.apache.spark.sql.functions._
   * heap cap doesn't starve them). */
 object FsScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.GraftCatalog].getName)
+    val spark = SparkEntry.session()
+    graft.sources.GraftCatalog.register(spark)
 
     val report = scala.collection.mutable.LinkedHashMap[String, Any]()
     val heapMax = Runtime.getRuntime.maxMemory()
@@ -44,7 +35,7 @@ object FsScaleSmoke {
     }
 
     // ---- build: V versions × R rows of (k BIGINT, payload CHAR(32)) ----
-    val rows = sys.env.getOrElse("SPARK_GRAFT_SMOKE_FSROWS", "56000000").toLong
+    val rows = 56000000L
     val versions = 8
     val per = rows / versions
     // MemStore-equivalent footprint: UnsafeRow(2 cols, 32B string) ≈
@@ -310,7 +301,7 @@ object FsScaleSmoke {
     // probes ship inside the partitions; measure both modes on the same
     // needle and pin that the task path (a) answers identically and
     // (b) actually skipped files reader-side.
-    val tpFiles = sys.env.getOrElse("SPARK_GRAFT_SMOKE_TPFILES", "10000").toInt
+    val tpFiles = 10000
     val tpRows = tpFiles * 200L
     spark.sql("DROP TABLE IF EXISTS graft.fs_smoket")
     spark.sql("""CREATE TABLE graft.fs_smoket (k BIGINT, tag STRING)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the near-dup pipeline: run the FULL MinHash+LSH+verify
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   * record the figures in COVERAGE.md. Every figure is ALSO written to
   * `SCALE_SMOKE.json` in the working directory, so the scale claims in
   * README/COVERAGE are machine-checkable artifacts, not prose.
-  * `SPARK_GRAFT_SMOKE_DOCS=5000 SPARK_GRAFT_SMOKE_REPLICAS=8 sbt "runMain graft.ScaleSmoke"`
+  * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleSmoke"`
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
@@ -38,28 +37,10 @@ object ScaleSmoke {
       }
       "\"" + k + "\":" + jv
     }.mkString("{", ",", "}")
-    val nBase = sys.env.getOrElse("SPARK_GRAFT_SMOKE_DOCS", "5000").toLong
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SMOKE_REPLICAS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nBase = 5000L
+    val replicas = 8
+    val spark = SparkEntry.session()
     graft.functions.GraftFunctions.register(spark)
-    // The registry's single-partition windows all run on metadata-sized
-    // frames (presentation ranks, 1-row stacks — the r4 audit; a lit(0)
-    // partition key does NOT silence this: constant folding strips it
-    // back out). WindowExec's per-execution warning would otherwise
-    // dominate the log tail the driver parses, so scope that one logger
-    // down; real unpartitioned-window regressions are caught by
-    // PlanSpec's exchange budgets, not by log noise.
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
-      .setLevel(org.apache.log4j.Level.ERROR)
-
 
     // doc i: 320 chars of md5-derived hex seeded by i (fully distributed
     // generation — no driver-side text); copy k appends "~k"
@@ -138,8 +119,7 @@ object ScaleSmoke {
     // (cos ≈ 0 ± 0.125). Brute force must rank exactly the planted set in
     // its top-20; IVF (64 sampled centroids, nprobe 4 → ~6% of the corpus
     // scanned) is measured for recall@20 against it.
-    val nVec = sys.env.getOrElse("SPARK_GRAFT_SMOKE_VECS", "500000").toLong
-    graft.functions.GraftFunctions.register(spark)
+    val nVec = 500000L
     val dims = 64
     val unit = (seed: org.apache.spark.sql.Column) =>
       transform(sequence(lit(0), lit(dims - 1)),
@@ -287,7 +267,7 @@ object ScaleSmoke {
     // find exactly the planted pairs: background max cosine over ~2e10
     // random 64-dim pairs concentrates near 0.86 — below the threshold —
     // and the planted-pair banding miss probability is ≤ 1e-9 each.
-    val ndVec = sys.env.getOrElse("SPARK_GRAFT_SMOKE_NDVECS", "200000").toLong
+    val ndVec = 200000L
     val ndDup = ndVec / 20
     val ndBase = spark.range(ndVec).toDF("vec_id")
       .select(col("vec_id"), unit(col("vec_id") + 7777777L).as("v"))
@@ -316,7 +296,7 @@ object ScaleSmoke {
     // spans are corpus-duplicates of its original's, so the expected
     // answer is exact — originals keep all 5 spans, copies keep 0, and
     // total surviving spans == distinct spans == 5 × nSpanDocs.
-    val nSpanDocs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SPANDOCS", "1000000").toLong
+    val nSpanDocs = 1000000L
     val words = concat_ws(" ", (0 until 10).map(c =>
       // each md5 hex string is split into 4 8-char words
       concat_ws(" ", (0 until 4).map(w => substring(
@@ -351,7 +331,7 @@ object ScaleSmoke {
     // made undirected → ~8·n directed edges) plus a planted HUB that every
     // 100th node links to. Checks: the planted hub ranks #1, and total
     // rank mass is conserved up to the documented floor-division loss.
-    val nPrNodes = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PRNODES", "1000000").toLong
+    val nPrNodes = 1000000L
     val prBase = spark.range(nPrNodes).toDF("src")
     val outTo = (k: Int) => pmod(xxhash64(col("src"), lit(k)), lit(nPrNodes)).as("dst")
     val rawEdges = (0 until 4).map(k => prBase.select(col("src"), outTo(k)))
@@ -396,7 +376,7 @@ object ScaleSmoke {
     // id with its first 16 chars substituted (lev ≤ 16 ≤ k=30). Random
     // hex never shares a ≥6-char segment, so the expected answer is
     // exactly the planted copies: recall AND precision are checkable.
-    val nEd = sys.env.getOrElse("SPARK_GRAFT_SMOKE_EDDOCS", "200000").toLong
+    val nEd = 200000L
     val edBody = concat_ws("", (0 until 13).map(c =>
       md5(concat(lit("ed"), col("base"), lit(s":$c")))): _*) // 416 hex chars
     val edLen = (lit(192) + (col("base") % 26) * 8).cast("int")
@@ -454,7 +434,7 @@ object ScaleSmoke {
     // component) and the chain head. Checks: every chain node gets its
     // geodesic hop exactly; frontier counts grow monotonically (the
     // supercritical regime a degree-8 random graph must show).
-    val nBfs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_BFSNODES", "1000000").toLong
+    val nBfs = 1000000L
     val bfsBase = spark.range(nBfs).toDF("src")
     val bOut = (k: Int) => pmod(xxhash64(col("src"), lit(100 + k)), lit(nBfs)).as("dst")
     val bRaw = (0 until 4).map(k => bfsBase.select(col("src"), bOut(k)))
@@ -535,7 +515,7 @@ object ScaleSmoke {
     //   Jaccard J(A,B) = 40/60 = 0.667 ≥ 0.6 — the same corpus also
     //   exercises the q87 family at its threshold.
     // Expected answers are exact: recall AND precision both checkable.
-    val nPf = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PFDOCS", "200000").toLong
+    val nPf = 200000L
     val pfUnit = (k: Int) => substring(
       md5(concat(lit(s"pf$k:"), col("base"))), 1, 8)
     val pfBody = concat_ws(" ", (0 until 40).map(pfUnit): _*)
@@ -605,7 +585,7 @@ object ScaleSmoke {
     // ~16^-j, so across 10k sharers islands bleed a few chars past the
     // slogan (measured ~+6 avg) — but never ≥K chars per side, giving
     // the hard per-doc bound [sloganLen, sloganLen + 2(K-1)].
-    val nSubDocs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SUBDOCS", "200000").toLong
+    val nSubDocs = 200000L
     val slogan = "call me ishmael some years ago never mind how long precisely " +
       "having little or no money in my purse" // 98 chars, no repeated 40-gram
     val sloganLen = slogan.length.toLong
@@ -649,7 +629,7 @@ object ScaleSmoke {
     // (≪ nodes communities), label every vertex exactly once, and the
     // resulting partition's integer modularity must reflect the planted
     // structure (Q > 0.3 — random labels give ~0).
-    val nLpa = sys.env.getOrElse("SPARK_GRAFT_SMOKE_LPANODES", "200000").toLong
+    val nLpa = 200000L
     val blockSz = 100L
     val lpaBase = spark.range(nLpa).toDF("src")
     val inBlock = (k: Int) =>
@@ -697,7 +677,7 @@ object ScaleSmoke {
     // planted far outlier at 100,000^16. Greedy farthest-point must pick
     // the outlier FIRST after the seed — the selection property the
     // coreset depends on — with k narrow scans and no corpus shuffle.
-    val nKc = sys.env.getOrElse("SPARK_GRAFT_SMOKE_KCVECS", "2000000").toLong
+    val nKc = 2000000L
     val outlierId = nKc - 1
     val kcVecs = spark.range(nKc).toDF("vec_id")
       .select(col("vec_id"),
@@ -744,7 +724,7 @@ object ScaleSmoke {
     // the entire distributed cost: one narrow scan into a 256-cell
     // max-agg, map-side combined — the shuffle carries ≤ 256 rows per
     // partition regardless of corpus size.
-    val nHllRows = sys.env.getOrElse("SPARK_GRAFT_SMOKE_HLLROWS", "50000000").toLong
+    val nHllRows = 50000000L
     val nHllKeys = nHllRows / 5 * 2
     val hllIn = spark.range(nHllRows)
       .select(lit("g").as("g"), pmod(col("id") * 2654435761L, lit(nHllKeys)).as("k"))
@@ -777,8 +757,8 @@ object ScaleSmoke {
     // 777,000,000+i and one interval [777e6, 777e6+99] whose planted
     // hits are exact by construction (random points may also fall in —
     // counted separately via the id range).
-    val nRjPts = sys.env.getOrElse("SPARK_GRAFT_SMOKE_RJPTS", "5000000").toLong
-    val nRjIvs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_RJIVS", "100000").toLong
+    val nRjPts = 5000000L
+    val nRjIvs = 100000L
     graft.plans.BinnedRangeJoin.install(spark)
     spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "50000")
     try {
@@ -821,9 +801,9 @@ object ScaleSmoke {
     // truth: the full facility table is metadata-sized, so the planted
     // points' engine assignments are checked against a driver-side
     // argmin over ALL facilities — exact, not probabilistic.
-    val nSpPts = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SPPTS", "2000000").toLong
-    val nSpBoxes = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SPBOXES", "50000").toLong
-    val nSpFac = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SPFAC", "2000").toLong
+    val nSpPts = 2000000L
+    val nSpBoxes = 50000L
+    val nSpFac = 2000L
     val spPts = spark.range(nSpPts).select(col("id").as("event_id"),
         when(col("id") < 100, lit(900L) + pmod(col("id"), lit(40)))
           .otherwise(pmod(xxhash64(col("id"), lit(21L)), lit(1000L))).as("px"),
@@ -885,8 +865,7 @@ object ScaleSmoke {
     // spelling shuffles+sorts all 10M rows; the bounded-heap aggregate
     // ships ≤ 5 rows per (map task, group). Both are EXACT — the phase
     // asserts bit-identical results and records both timings.
-    val nTk = sys.env.getOrElse("SPARK_GRAFT_SMOKE_TKROWS", "10000000").toLong
-    graft.functions.GraftFunctions.register(spark)
+    val nTk = 10000000L
     val tkIn = spark.range(nTk).select(
         pmod(xxhash64(col("id"), lit(31L)), lit(1000L)).as("g"),
         xxhash64(col("id"), lit(32L)).as("score"), col("id"))
@@ -923,8 +902,8 @@ object ScaleSmoke {
     // set-algebra invariants (exact, no quadratic ground truth needed):
     // every point appears (matched or padded), every interval appears,
     // and the planted interval matches its 100 planted points.
-    val nFoPts = sys.env.getOrElse("SPARK_GRAFT_SMOKE_FOPTS", "2000000").toLong
-    val nFoIvs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_FOIVS", "50000").toLong
+    val nFoPts = 2000000L
+    val nFoIvs = 50000L
     graft.plans.BinnedRangeJoin.install(spark)
     spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "50000")
     try {
@@ -976,7 +955,7 @@ object ScaleSmoke {
     // the bitmap aggregate moves ONE 2 MB block per (map task, group)
     // through a single shuffle. Both are EXACT — the phase asserts
     // identical counts and records both timings.
-    val nBm = sys.env.getOrElse("SPARK_GRAFT_SMOKE_BMROWS", "50000000").toLong
+    val nBm = 50000000L
     val bmDomain = 1L << 24
     val bmIn = spark.range(nBm).select(
         pmod(xxhash64(col("id"), lit(41L)), lit(8L)).as("g"),
@@ -1009,10 +988,9 @@ object ScaleSmoke {
     // (fat commits split WITHIN a version → ~32 batches, bounding the
     // consumer's per-batch memory). Exactly-once is asserted by closed
     // form on both: count and Σk must match the committed range.
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.GraftCatalog].getName)
+    graft.sources.GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_cf_smoke")
-    val cfRows = sys.env.getOrElse("SPARK_GRAFT_SMOKE_CFROWS", "10000000").toLong
+    val cfRows = 10000000L
     val cfVersions = 8
     val cfPer = cfRows / cfVersions
     val tCfB = System.nanoTime()

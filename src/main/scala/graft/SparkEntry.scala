@@ -33,4 +33,39 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** [[queries]] in name order, restricted to `names` when given. */
+  def selected(names: Option[Set[String]]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => names.forall(_.contains(n)) }
+
+  /** The one session every main runs on: `local[SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions, UTC, AQE on,
+    * `nanosAsLong` for ns-encoded events, no UI, log level WARN.
+    *
+    * Specs never call this: they share `TestSession`, and `getOrCreate`
+    * on that live session would rewrite its SQL confs under every other
+    * spec. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The registry's single-partition windows all run on metadata-sized
+    // frames (presentation ranks, 1-row stacks — the r4 audit; a lit(0)
+    // partition key does NOT silence this: constant folding strips it
+    // back out). WindowExec's per-execution warning would otherwise
+    // dominate the machine-parsed log tail, so scope that one logger
+    // down; real unpartitioned-window regressions are caught by
+    // PlanSpec's exchange budgets, not by log noise.
+    org.apache.log4j.Logger
+      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
+      .setLevel(org.apache.log4j.Level.ERROR)
+    spark
+  }
 }

@@ -37,7 +37,7 @@ object Tables {
     *
     * µs path: Spark 4 infers parquet `isAdjustedToUTC=false` timestamps as
     * TIMESTAMP_NTZ; the session timezone is pinned to UTC everywhere
-    * (Verify/Bench/specs), so the cast to TimestampType is value-preserving
+    * (SparkEntry.session and specs), so the cast to TimestampType is value-preserving
     * and `unix_micros` matches DuckDB's `epoch_us(ts)` exactly. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}

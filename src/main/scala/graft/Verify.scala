@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,26 +9,7 @@ object Verify {
     // driver always runs the full registry)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The registry's single-partition windows all run on metadata-sized
-    // frames (presentation ranks, 1-row stacks — the r4 audit; a lit(0)
-    // partition key does NOT silence this: constant folding strips it
-    // back out). WindowExec's per-execution warning would otherwise
-    // dominate the log tail the driver parses, so scope that one logger
-    // down; real unpartitioned-window regressions are caught by
-    // PlanSpec's exchange budgets, not by log noise.
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.window.WindowExec")
-      .setLevel(org.apache.log4j.Level.ERROR)
+    val spark = SparkEntry.session()
 
     new java.io.File(outDir).mkdirs()
 
@@ -51,9 +31,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected(only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -21,9 +21,6 @@ import org.apache.spark.sql.types.LongType
   */
 object FsQueries {
 
-  private def cat(s: org.apache.spark.sql.SparkSession): Unit =
-    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-
   /** ONE-job multiset equality for the in-query verification requires.
     * The r11 shape — two-sided exceptAll-is-empty —
     * launched two jobs, EACH re-deriving both input lineages (the view
@@ -59,7 +56,7 @@ object FsQueries {
   val q289FsRoundtrip = graft.QueryDef(
     "q289_fs_write_roundtrip",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -90,7 +87,7 @@ object FsQueries {
   val q290FsUpdate = graft.QueryDef(
     "q290_fs_update",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"),
@@ -120,7 +117,7 @@ object FsQueries {
   val q291FsMerge = graft.QueryDef(
     "q291_fs_merge",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -176,7 +173,7 @@ object FsQueries {
   val q292FsdDeltaMerge = graft.QueryDef(
     "q292_fsd_delta_merge",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -239,7 +236,7 @@ object FsQueries {
   val q293FsEvolution = graft.QueryDef(
     "q293_fs_schema_evolution",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("int").as("cust"))
@@ -305,7 +302,7 @@ object FsQueries {
   val q294FsdCdfBatch = graft.QueryDef(
     "q294_fsd_cdf_batch",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"))
@@ -350,7 +347,7 @@ object FsQueries {
   val q295FsdCdfStream = graft.QueryDef(
     "q295_fsd_cdf_stream",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(sum(col("l_quantity").cast("long")).as("sq"))
@@ -416,7 +413,7 @@ object FsQueries {
   val q296FsTimestampTravel = graft.QueryDef(
     "q296_fs_timestamp_travel",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val t0 = 1700000000000L // fixed, deterministic epoch ms
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
@@ -469,7 +466,7 @@ object FsQueries {
   val q297FsFeedBytes = graft.QueryDef(
     "q297_fs_feed_bytes",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         md5(col("o_orderkey").cast("string")).as("payload"))
@@ -521,7 +518,7 @@ object FsQueries {
   val q299FsZoneSkip = graft.QueryDef(
     "q299_fs_zone_skip",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -556,7 +553,7 @@ object FsQueries {
   val q300FsColumnPrune = graft.QueryDef(
     "q300_fs_column_prune",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"),
@@ -588,7 +585,7 @@ object FsQueries {
   val q301FsStreamingSink = graft.QueryDef(
     "q301_fs_streaming_sink",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.fs_ssink")
       s.sql("CREATE TABLE graft.fs_ssink (doc_id BIGINT, h BIGINT, bucket BIGINT)")
       val ckpt = java.nio.file.Files
@@ -634,7 +631,7 @@ object FsQueries {
   val q302FsWideTypes = graft.QueryDef(
     "q302_fs_wide_types",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val base = 1700000000000000L // epoch µs, fixed
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
@@ -679,7 +676,7 @@ object FsQueries {
   val q303FsColStats = graft.QueryDef(
     "q303_fs_colstats",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         floor(col("l_extendedprice") * 100.0 + 0.5).cast(LongType).as("cents"),
@@ -726,7 +723,7 @@ object FsQueries {
   val q304FsSpjJoin = graft.QueryDef(
     "q304_fs_spj_join",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -794,7 +791,7 @@ object FsQueries {
   val q305FsCompact = graft.QueryDef(
     "q305_fs_compact",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -847,7 +844,7 @@ object FsQueries {
   val q306FsAggPushdown = graft.QueryDef(
     "q306_fs_agg_pushdown",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"),
@@ -887,7 +884,7 @@ object FsQueries {
   val q307FsRuntimePrune = graft.QueryDef(
     "q307_fs_runtime_prune",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.fs_rtf")
       s.sql("""CREATE TABLE graft.fs_rtf (k BIGINT, qty BIGINT)
               |PARTITIONED BY (bucket(8, k))""".stripMargin)
@@ -935,7 +932,7 @@ object FsQueries {
   val q308FsBloomSkip = graft.QueryDef(
     "q308_fs_bloom_skip",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         md5(col("o_orderkey").cast("long").cast("string").cast("binary")).as("tag"),
@@ -1005,7 +1002,7 @@ object FsQueries {
   val q309FsZorder = graft.QueryDef(
     "q309_fs_zorder",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("x"),
@@ -1094,7 +1091,7 @@ object FsQueries {
   val q310FsWapBranch = graft.QueryDef(
     "q310_fs_wap_branch",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1154,7 +1151,7 @@ object FsQueries {
   val q311FsRebucket = graft.QueryDef(
     "q311_fs_rebucket",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -1225,7 +1222,7 @@ object FsQueries {
   val q312FsMetaTables = graft.QueryDef(
     "q312_fs_meta_tables",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1285,7 +1282,7 @@ object FsQueries {
   val q313FsNullSkip = graft.QueryDef(
     "q313_fs_null_skip",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val li = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1349,7 +1346,7 @@ object FsQueries {
   val q314FsCurationWap = graft.QueryDef(
     "q314_fs_curation_wap",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       import org.apache.spark.sql.expressions.Window
       val curated = graft.Tables.documents(s, d)
         .withColumn("digest", sha2(col("text"), 256))
@@ -1417,7 +1414,7 @@ object FsQueries {
   val q315FsMatViewIvm = graft.QueryDef(
     "q315_fs_matview_ivm",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 24).cast(LongType).as("grp"),
@@ -1482,7 +1479,7 @@ object FsQueries {
   val q316FsTxnPublish = graft.QueryDef(
     "q316_fs_txn_publish",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         col("o_custkey").cast(LongType).as("cust"),
@@ -1554,7 +1551,7 @@ object FsQueries {
   val q317FsNgramSkip = graft.QueryDef(
     "q317_fs_ngram_skip",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         concat(lit("s3://corpus/tenant"), col("o_custkey") % 20,
@@ -1614,7 +1611,7 @@ object FsQueries {
   val q318FsMatViewDelta = graft.QueryDef(
     "q318_fs_matview_delta",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast(LongType).as("k"),
         (col("p_partkey") % 24).cast(LongType).as("grp"),
@@ -1683,7 +1680,7 @@ object FsQueries {
   val q319FsBinaryPayload = graft.QueryDef(
     "q319_fs_binary_payload",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.documents(s, d).select(
         col("doc_id").cast(LongType).as("doc_id"),
         col("lang"),
@@ -1736,7 +1733,7 @@ object FsQueries {
   val q320FsCloneRestore = graft.QueryDef(
     "q320_fs_clone_restore",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.customer(s, d).select(
         col("c_custkey").cast(LongType).as("k"),
         col("c_mktsegment").as("seg"),
@@ -1827,7 +1824,7 @@ object FsQueries {
   val q321FsMatViewNulls = graft.QueryDef(
     "q321_fs_matview_nulls",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 20).cast(LongType).as("grp"),
@@ -1888,7 +1885,7 @@ object FsQueries {
   val q322FsMatViewMinMax = graft.QueryDef(
     "q322_fs_matview_minmax",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast(LongType).as("k"),
         (col("p_partkey") % 16).cast(LongType).as("grp"),
@@ -1950,7 +1947,7 @@ object FsQueries {
   val q323FsDatePartition = graft.QueryDef(
     "q323_fs_date_partition",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"), col("event_type"), col("value").as("v"))
@@ -2014,7 +2011,7 @@ object FsQueries {
   val q324FsCompositePartition = graft.QueryDef(
     "q324_fs_composite_partition",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"),
@@ -2089,7 +2086,7 @@ object FsQueries {
   val q325FsMatViewMultiGroup = graft.QueryDef(
     "q325_fs_matview_multigroup",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 6).cast(LongType).as("g1"),
@@ -2183,7 +2180,7 @@ object FsQueries {
   val q326FsNestedStruct = graft.QueryDef(
     "q326_fs_nested_struct",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"),
@@ -2247,7 +2244,7 @@ object FsQueries {
   val q327FsBucketValueSpj = graft.QueryDef(
     "q327_fs_bucket_value_spj",
     (s, d) => {
-      cat(s)
+      GraftCatalog.register(s)
       val o = graft.Tables.orders(s, d)
       s.sql("DROP TABLE IF EXISTS graft.fs_bvl")
       s.sql("DROP TABLE IF EXISTS graft.fs_bvr")

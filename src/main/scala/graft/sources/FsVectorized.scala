@@ -75,15 +75,11 @@ object FsVectorized {
       new SelectedVector(base.getChild(ordinal), sel)
   }
 
-  /** In-process row-reader toggle (env is fixed at JVM start): the specs
-    * assert row ≡ columnar equivalence across masks with it. */
+  /** In-process row-reader toggle: the specs assert row ≡ columnar
+    * equivalence across masks with it (the row reader is the reference). */
   @volatile var forceRowReader: Boolean = false
 
-  /** A/B + ops escape hatch: `SPARK_GRAFT_FS_COLUMNAR=false` forces the
-    * row reader everywhere (how the row≡columnar equivalence and the
-    * speedup are measured without code changes). */
-  def enabled: Boolean = !forceRowReader &&
-    sys.env.get("SPARK_GRAFT_FS_COLUMNAR").forall(_.toBoolean)
+  def enabled: Boolean = !forceRowReader
 
   /** The file-shaped requested schema: scan columns renamed to their
     * file-era names by field id; ids the file lacks get a reserved name

@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * exchange-free (the same contract Iceberg/Delta kernels fulfil —
   * cf. Spark's own `functions.UnboundFunction` docs).
   *
-  * Register at runtime (`spark.sql.catalog.graft = <this class>`), then
+  * Register at runtime ([[GraftCatalog.register]]), then
   * `spark.table("graft.synth_<rows>_<parts>")` — the identifier encodes
   * the generator geometry, `_flat` suffix opts out of bucketing.
   */
@@ -402,6 +402,13 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
 }
 
 object GraftCatalog {
+  /** Registers this catalog as `graft` on `s`. Idempotent, so every
+    * query that reads `graft.*` calls it on each run instead of relying
+    * on how its session was built (specs and the benchmark harness build
+    * their own). */
+  def register(s: org.apache.spark.sql.SparkSession): Unit =
+    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+
   private val TablePat = "synth_([0-9]+)_([0-9]+)(_flat)?".r
 
   /** `bucket(n, id) = id mod n` — EXACTLY the value each

@@ -662,7 +662,7 @@ object SynthSource {
       val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       try {
         def rd = s.table(s"graft.synth_${Rows}_8")
         val probe = rd.filter(col("doc_id") >= RLo && col("doc_id") < RHi)
@@ -746,7 +746,7 @@ object SynthSource {
   val q228WriteRoundtrip = graft.QueryDef(
     "q228_dsv2_write_roundtrip",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d)
         .groupBy(col("l_returnflag").as("flag"), col("l_linestatus").as("status"))
         .agg(count(lit(1)).as("n"), sum(col("l_orderkey")).as("sum_key"))
@@ -777,7 +777,7 @@ object SynthSource {
   val q245Dsv2Delete = graft.QueryDef(
     "q245_dsv2_delete",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_partkey").cast("long").as("pk"),
@@ -822,7 +822,7 @@ object SynthSource {
   val q248TimeTravel = graft.QueryDef(
     "q248_dsv2_time_travel",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"),
@@ -873,7 +873,7 @@ object SynthSource {
   val q254ReplaceWhere = graft.QueryDef(
     "q254_dsv2_replace_where",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"),
@@ -922,7 +922,7 @@ object SynthSource {
   val q255StreamingRead = graft.QueryDef(
     "q255_dsv2_streaming_read",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       // the measured subject is the OFFSET/ADMISSION machinery, not
       // stateful aggregation (q253/q268/etc. cover that): stream RAW
       // rows in append mode — stateless micro-batches, no state store
@@ -1006,7 +1006,7 @@ object SynthSource {
   val q266Dsv2Update = graft.QueryDef(
     "q266_dsv2_update",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"),
@@ -1044,7 +1044,7 @@ object SynthSource {
   val q267Dsv2Merge = graft.QueryDef(
     "q267_dsv2_merge",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -1111,7 +1111,7 @@ object SynthSource {
   val q272DeltaMerge = graft.QueryDef(
     "q272_dsv2_delta_merge",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -1177,7 +1177,7 @@ object SynthSource {
   val q273VersionCdc = graft.QueryDef(
     "q273_dsv2_version_cdc",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(sum(col("l_quantity").cast("long")).as("sq"))
@@ -1247,7 +1247,7 @@ object SynthSource {
   val q278ChangeFeed = graft.QueryDef(
     "q278_dsv2_change_feed",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       ensureHistory(s, d, "mem_cf", wantVersion = 3) {
         val src = graft.Tables.lineitem(s, d).select(
           col("l_orderkey").cast("long").as("k"),
@@ -1297,7 +1297,7 @@ object SynthSource {
   val q279SchemaEvolution = graft.QueryDef(
     "q279_dsv2_schema_evolution",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("cust"))
@@ -1362,7 +1362,7 @@ object SynthSource {
   val q280CdfStream = graft.QueryDef(
     "q280_dsv2_cdf_stream",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       ensureHistory(s, d, "memd_cfs", wantVersion = 2) {
         val tgt = graft.Tables.lineitem(s, d)
           .groupBy(col("l_orderkey").cast("long").as("k"))
@@ -1435,7 +1435,7 @@ object SynthSource {
   val q281CdfBatch = graft.QueryDef(
     "q281_dsv2_cdf_batch",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"))
@@ -1483,7 +1483,7 @@ object SynthSource {
   val q282CdfEvolution = graft.QueryDef(
     "q282_dsv2_cdf_evolution",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"))
@@ -1531,7 +1531,7 @@ object SynthSource {
   val q283MemStatsJoin = graft.QueryDef(
     "q283_dsv2_mem_stats_join",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       ensureHistory(s, d, "mem_dim", wantVersion = 1) {
         graft.Tables.part(s, d).select(
           col("p_partkey").cast("long").as("k"),
@@ -1569,7 +1569,7 @@ object SynthSource {
   val q286StateStoreRead = graft.QueryDef(
     "q286_dsv2_state_store_read",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_q286_ckpt").toString
       // 8 state partitions for 97 buckets (pinned into the checkpoint
@@ -1629,7 +1629,7 @@ object SynthSource {
   val q298TwsStateRead = graft.QueryDef(
     "q298_dsv2_tws_state_read",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+      GraftCatalog.register(s)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_q298_ckpt").toString
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")

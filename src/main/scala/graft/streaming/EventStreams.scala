@@ -271,18 +271,17 @@ object EventStreams {
     * drain's checkpoint. Each stateful operator commits one state store
     * per shuffle partition PER BATCH, so the drain's 3 tiny micro-batches
     * pay O(parts) fixed commit cost — the dominant term at bench scale.
-    * Env-tunable (`SPARK_GRAFT_STREAM_PARTS`) because the right value is
-    * scale-dependent: a production unbounded stream with large keyspaces
-    * wants O(cores×executors); a bounded drain of a small backfill wants
-    * just enough partitions to spread the state. Default 2: the r12
-    * ladder (9-query pack, 2-run medians, degraded box) read 8 → 46.3 s,
-    * 4 → 29.8 s, 2 → 33.7 s; re-measured r13 on a clean box over the
-    * 7-query stateful core (3-run medians) the ladder reads 4 → 28.3 s,
-    * 2 → 23.9 s, 1 → 24.5 s — the per-batch state-store commit cost
-    * dominates down to 2 partitions at ANY core count (the cost is per
-    * state store, not per core), and 1 loses the residual overlap. */
-  private val StreamParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2")
+    * The right value is scale-dependent: a production unbounded stream
+    * with large keyspaces wants O(cores×executors); a bounded drain of a
+    * small backfill wants just enough partitions to spread the state.
+    * Fixed at 2 for these drains: the r12 ladder (9-query pack, 2-run
+    * medians, degraded box) read 8 → 46.3 s, 4 → 29.8 s, 2 → 33.7 s;
+    * re-measured r13 on a clean box over the 7-query stateful core
+    * (3-run medians) the ladder reads 4 → 28.3 s, 2 → 23.9 s, 1 → 24.5 s
+    * — the per-batch state-store commit cost dominates down to 2
+    * partitions at ANY core count (the cost is per state store, not per
+    * core), and 1 loses the residual overlap. */
+  private val StreamParts = "2"
 
   private case class Staged(schema: org.apache.spark.sql.types.StructType,
                             tsIsNs: Boolean, stageDir: String)
@@ -1387,8 +1386,7 @@ object EventStreams {
   val q274StreamingTableSink = graft.QueryDef(
     "q274_streaming_table_sink",
     (s, d) => {
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
+      graft.sources.GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.mem_ssink")
       s.sql("""CREATE TABLE graft.mem_ssink
               |(w_start TIMESTAMP, event_type STRING, cnt BIGINT,

@@ -150,10 +150,10 @@ class PlanSpec extends SparkSpec {
     assert(exchanges <= 2, s"z-order report needs only the agg + sort exchanges:\n$p")
   }
 
-  /** Whole-registry scale-invariant sweep (PlanAudit promoted to a test):
-    * a regression that turns an equi-join into a cartesian, or sneaks a
-    * nested-loop join onto a non-broadcast path, or adds an unexpected
-    * shuffle stage, fails `sbt test` — not just a dev tool run. */
+  /** Whole-registry scale-invariant sweep: a regression that turns an
+    * equi-join into a cartesian, or sneaks a nested-loop join onto a
+    * non-broadcast path, or adds an unexpected shuffle stage, fails
+    * `sbt test`. */
   test("registry sweep: no cartesians; BNLJ only on intended broadcast paths; bounded exchanges") {
     // tiny-broadcast-side nested loops that are BY DESIGN: scalar query
     // vector / query set (q27/q28/q29/q38) and the intentional cross
@@ -225,38 +225,33 @@ class PlanSpec extends SparkSpec {
       // facility table over the (small) empty-ring point slice — the
       // q27 shape, by design
       "q231_nearest_facility")
-    // exchange budgets ([[exchanges]]): the LSH pipeline legitimately has
-    // ~18 (sig agg + banding self-join + verify joins); everything else
-    // must stay single-digit.
+    // exchange budgets ([[exchanges]]): 8 by default; a query with its
+    // own budget states the structure that sets it.
     val exchangeBudget: String => Int = {
-      // q71's vertex set derives FROM the cached pair frame (union of both
-      // endpoints), so unlike q44 (vertices from the documents scan) its
-      // plan text repeats the pair lineage several times over
-      // q87/q95: candidate AND verified-pair frames are cached (r5), so
-      // the plan TEXT repeats the candidate lineage inside nested
-      // InMemoryRelation blocks — runtime reads the cached frames
-      // (r12: rawShingles' spread adds one runtime exchange that the
-      // repeated cached candidate lineage multiplies in plan text —
-      // 300 → 450; runtime reads the cached frames either way)
-      case n if n.startsWith("q46") || n.startsWith("q53") ||
-        n.startsWith("q54") || n.startsWith("q71") || n.startsWith("q76") ||
-        n.startsWith("q87") || n.startsWith("q95") ||
-        n.startsWith("q204") => 450
-      case n if n.startsWith("q23") => 24
-      // q24/q52: the verify stage references the materialized candidate
-      // cache three times (candDocs union x2 + the pair join) and the
-      // shingle-set array subtree twice, so the candidate lineage repeats
-      // inside InMemoryRelation blocks — text duplication, the runtime
-      // reads the cached frame
-      // q142 is the q52 pairs frame + a per-row split projection, so its
-      // plan text repeats the same cached candidate lineage; q199 joins
-      // the same cached pair frame to documents twice (source lookup per
-      // endpoint), repeating the lineage under both join branches
-      // (r12: rawShingles' spread round-robin adds ONE runtime exchange
-      // under the documents scan, which the repeated cached lineage
-      // multiplies ~16x in plan text — 90 → 110)
-      case n if n.startsWith("q24") || n.startsWith("q52") ||
-        n.startsWith("q142") || n.startsWith("q199") => 110
+      // The dedup/cluster family reads session frames ([[SessionFrames]]):
+      // shingles, signatures, candidate and verified pairs and the cluster
+      // labels are each one cached scan, so only the query's own tail is
+      // counted. Budgets are the measured count + 2 — room for one more
+      // two-phase agg or spread, not for a stage rebuilt inline.
+      // q24/q52/q87/q95/q142: the final ORDER BY over the cached pair
+      // frame (1)
+      case n if Seq("q24_", "q52_", "q87_", "q95_", "q142_").exists(n.startsWith) => 3
+      // q53: component agg + sort (2); q71: + the canonical-doc broadcast
+      // (3); q76: doc agg + sort + two new-batch broadcasts (4); q204: the
+      // component agg, two cluster-size aggs and the global total (4);
+      // q199: (src_a, src_b) agg + sort + one source-lookup broadcast per
+      // pair endpoint (4)
+      case n if Seq("q53_", "q71_", "q76_", "q199_", "q204_").exists(n.startsWith) => 6
+      // q23: pair agg + sort, the shingle broadcast, and per pair side a
+      // doc agg under a broadcast (7); q46/q54: the exact-dup text agg
+      // under its keep-set broadcast, the near-dup keep-set broadcast,
+      // two spread round-robins, the lang agg + sort (7)
+      case n if Seq("q23_", "q46_", "q54_").exists(n.startsWith) => 9
+      // q231: the ring probe (cell broadcast + per-point min agg) runs
+      // twice — for the winners and under the fallback's anti join (two
+      // event_id exchanges) — plus the brute-force facility broadcast and
+      // the fid agg + sort (9)
+      case n if n.startsWith("q231_") => 11
       // q93: short-bucket union + segment/probe join + distinct + two
       // text re-joins + DP repartition — candidate generation is wide by
       // design, every shuffled row is metadata-narrow

@@ -12,6 +12,9 @@ import org.apache.spark.sql.types._
   * Both branches must present the identical logical schema (`ts_ns`
   * BIGINT exact nanos + `ts` TimestampType µs) with identical values for
   * µs-aligned data.
+  *
+  * Also pins [[Tables.spread]]'s scale branch: it widens a narrow frame
+  * and leaves an already-wide one (multi-file tables at scale) untouched.
   */
 class TablesSpec extends SparkSpec {
 
@@ -109,5 +112,25 @@ class TablesSpec extends SparkSpec {
       assert(spark.conf.getOption(flag) == before,
         "µs read must restore the caller's conf (ADVICE: no session-wide side effect)")
     } finally prev.foreach(spark.conf.set(flag, _))
+  }
+
+  test("spread round-robins a frame with too few partitions to defaultParallelism") {
+    val target = spark.sparkContext.defaultParallelism
+    assert(target > 1, "the spec session must have more than one core")
+    val narrow = spark.range(0, 1000, 1, 1).toDF("id")
+    val spread = Tables.spread(narrow)
+    assert(spread.rdd.getNumPartitions == target)
+    assert(spread.count() == 1000L)
+  }
+
+  test("spread leaves a frame with enough partitions (multi-file parquet) untouched") {
+    val target = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread_spec").toString
+    try {
+      spark.range(0, 1000, 1, target * 2).write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val wide = spark.read.parquet(s"$dir/t.parquet")
+      assert(wide.rdd.getNumPartitions >= target, "fixture must already be wide enough")
+      assert(Tables.spread(wide) eq wide)
+    } finally Tables.deleteRecursively(new java.io.File(dir))
   }
 }

@@ -11,7 +11,7 @@ class FsNgramSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
   private def cat(): Unit =
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
   private def drop(t: String): Unit = spark.sql(s"DROP TABLE IF EXISTS graft.$t")
 
   private def mkTable(name: String): Long = {

@@ -15,7 +15,7 @@ class FsTableSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
   private def cat(): Unit =
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
   private def drop(t: String): Unit = spark.sql(s"DROP TABLE IF EXISTS graft.$t")
 
   /** Every parquet file under the table dir (data files only). */

@@ -13,7 +13,7 @@ class FsTxnSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
   private def cat(): Unit =
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
   private def drop(t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft.$t")
     if (FsStore.exists(t)) FsStore.drop(t)

@@ -245,7 +245,7 @@ class SourcesSpec extends SparkSpec {
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    GraftCatalog.register(spark)
     try {
       def rd = spark.table("graft.synth_100000_8")
       val a = rd
@@ -271,7 +271,7 @@ class SourcesSpec extends SparkSpec {
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    GraftCatalog.register(spark)
     try {
       def rd = spark.table("graft.synth_100000_8")
       val j = rd.join(
@@ -361,7 +361,7 @@ class SourcesSpec extends SparkSpec {
 
   test("custom DSv2 sink: commit is atomic — a failed job leaves the committed version intact") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_atomic")
     // first write commits
     spark.range(0, 100).selectExpr("id", "id * 7 AS v")
@@ -388,7 +388,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 DELETE WHERE: filters evaluated exactly; refused/failed deletes keep the version") {
     import graft.sources.{GraftCatalog, MemFilterEval, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_delspec")
     spark.range(0, 100)
       .selectExpr("id AS k", "CASE WHEN id % 3 = 0 THEN 'a' ELSE 'b' END AS tag",
@@ -438,7 +438,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 row-level ops: UPDATE and MERGE rewrite copy-on-write, atomically, aborts keep the version") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_rlo")
     spark.range(0, 50)
       .selectExpr("id AS k", "id * 10 AS v",
@@ -502,7 +502,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 delta row-level ops: WriteDelta plans, per-verb deltas apply keyed, aborts keep the version") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.memd_spec")
     spark.range(0, 40)
       .selectExpr("id AS k", "id * 10 AS v")
@@ -568,7 +568,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 streaming write: epoch replay is a no-op — no rows, no version burned") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_epoch")
     spark.sql("CREATE TABLE graft.mem_epoch (k BIGINT)")
     import org.apache.spark.sql.catalyst.InternalRow
@@ -600,7 +600,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 change feed: one version per micro-batch; non-append history refused") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_cfspec")
     spark.range(0, 10).selectExpr("id AS k").writeTo("graft.mem_cfspec").create()
     spark.range(10, 25).selectExpr("id AS k").writeTo("graft.mem_cfspec").append()
@@ -638,7 +638,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 VERSION AS OF: snapshots are immutable, expiry errors, aborts burn no version") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_tt_spec")
     spark.range(0, 10).selectExpr("id AS k").writeTo("graft.mem_tt_spec").create() // v1
     spark.sql("DELETE FROM graft.mem_tt_spec WHERE k >= 5")                        // v2
@@ -682,7 +682,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 replaceWhere: atomic slice restatement; refused/aborted overwrites keep the version") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_rw_spec")
     spark.range(0, 100)
       .selectExpr("id AS k", "CASE WHEN id % 3 = 0 THEN 'a' ELSE 'b' END AS tag")
@@ -750,7 +750,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 streaming read: offsets pace multiple micro-batches, rows exactly once") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     val q = spark.readStream.table("graft.synth_10000_4")
       .groupBy(lit(1).as("g"))
       .agg(count(lit(1)).as("n"), sum("doc_id").as("s"))
@@ -800,7 +800,7 @@ class SourcesSpec extends SparkSpec {
 
   test("graft catalog: SHOW TABLES lists live mem tables; __changes names reserved") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_listspec")
     spark.range(0, 3).selectExpr("id AS k").writeTo("graft.mem_listspec").create()
     val names = spark.sql("SHOW TABLES IN graft").collect().map(_.getString(1))
@@ -819,7 +819,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 schema evolution: ADD/RENAME are metadata-only; old versions keep the old schema; rewrites refused") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_evospec")
     spark.range(0, 5).selectExpr("id AS k", "id * 2 AS v")
       .writeTo("graft.mem_evospec").create()
@@ -862,7 +862,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 schema evolution x row-level ops: UPDATE/MERGE rewrite over NULL-padded rows") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     // copy-on-write flavor: the ReplaceData scan must pad pre-ALTER rows
     // before the rewrite, and the replacement write carries full width
     spark.sql("DROP TABLE IF EXISTS graft.mem_evorlo")
@@ -907,7 +907,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 change feed: maxRowsPerBatch splits a fat commit across micro-batches, totals unchanged") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_fatspec")
     spark.range(0, 10).selectExpr("id AS k").writeTo("graft.mem_fatspec").create()
     spark.range(10, 110).selectExpr("id AS k").writeTo("graft.mem_fatspec").append() // fat: 100 rows
@@ -932,7 +932,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 __changes relation: typed row-level history, startingVersion slices, plain feed still refuses") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.memd_cdfspec")
     spark.range(0, 10).selectExpr("id AS k", "id AS v")
       .writeTo("graft.memd_cdfspec").create() // v1: 10 inserts
@@ -992,7 +992,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 change feed: rolled history starts new readers at the oldest retained version") {
     import graft.sources.{GraftCatalog, MemStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_rollspec")
     spark.range(0, 2).selectExpr("id AS k").writeTo("graft.mem_rollspec").create()
     (0 until MemStore.MaxVersions).foreach { i =>
@@ -1016,7 +1016,7 @@ class SourcesSpec extends SparkSpec {
 
   test("DSv2 mem table reported statistics: a small dim auto-broadcasts with no hint") {
     import graft.sources.GraftCatalog
-    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_statspec")
     spark.range(0, 1000)
       .selectExpr("id AS k", "CAST(id % 7 AS STRING) AS tag")
