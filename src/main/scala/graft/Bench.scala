@@ -20,7 +20,8 @@ import java.nio.file.{Files, Paths}
   * exactly as a real writer would — the measured plan is the plan
   * `Verify` ships to parquet, minus only the encoder.
   *
-  * Output protocol: the FULL result (medians + cold map + errors) goes to
+  * Output protocol: the FULL result (medians + cold map + errors, under a
+  * [[header]] naming the cpu count and git revision) goes to
   * `BENCH.json` in the working directory; stdout gets a single COMPACT
   * final line — the driver machine-parses a bounded tail window of stdout
   * (2,000 chars), so the line shrinks its per-query precision (3 → 2 → 1
@@ -47,6 +48,22 @@ object Bench {
     * Budget the trailer in: 1860 + 76 + newlines stays inside 2000 with
     * margin for a longer wall-clock string. */
   val MaxLineChars = 1860
+
+  /** The record's header fields: the cpu count the session ran on and
+    * the checked-out revision of `dir` (null outside a git work tree), so
+    * a record states what ran under which conditions. */
+  def header(cpus: Int, dir: java.io.File): String =
+    s""""cpus":$cpus,"git_rev":${gitRev(dir).fold("null")("\"" + _ + "\"")}"""
+
+  /** `git rev-parse HEAD` in `dir`; None when it fails (no work tree, no
+    * commit, no git). */
+  def gitRev(dir: java.io.File): Option[String] =
+    try {
+      val p = new ProcessBuilder("git", "rev-parse", "HEAD").directory(dir)
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+      if (p.waitFor() == 0 && out.matches("[0-9a-f]{40,64}")) Some(out) else None
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Compact JSON number: `dp` decimals, trailing zeros stripped. */
   private def fmt(v: Double, dp: Int): String =
@@ -412,7 +429,7 @@ object Bench {
       .mkString("{", ",", "}")
     val runsMin = if (runsUsed.isEmpty) runs else runsUsed.values.min
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"runs_min":$runsMin,"n_ok":$nOk,"n_failed":${results.size - nOk},"cold_total":$coldTotal,"cold_queries":$coldJson,"runs_used":$runsJson,"retimed":$retimedJson,"budget_s":$budgetS,"wall_s":${fmt(elapsedS, 1)},"sweep_s":${fmt(sweepNanos / 1e9, 1)},"gc_s":${fmt((gcMillis - gcStart) / 1e3, 1)},"errors":$errJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",${header(spark.sparkContext.defaultParallelism, new java.io.File("."))},"runs":$runs,"runs_min":$runsMin,"n_ok":$nOk,"n_failed":${results.size - nOk},"cold_total":$coldTotal,"cold_queries":$coldJson,"runs_used":$runsJson,"retimed":$retimedJson,"budget_s":$budgetS,"wall_s":${fmt(elapsedS, 1)},"sweep_s":${fmt(sweepNanos / 1e9, 1)},"gc_s":${fmt((gcMillis - gcStart) / 1e3, 1)},"errors":$errJson}"""
     // dev-filtered runs write a SIDE file: BENCH.json is the committed
     // official record AND the drift-pass baseline — a 5-query spot run
     // overwriting it poisons both (exactly how the round-11 record lost

@@ -1,18 +1,50 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader for the driver-generated TPC-H-ish star schema
-  * (see /root/repo/TESTDATA.md). One parquet file per table under
+  * (see TESTDATA.md). One parquet file per table under
   * `\$dir/<name>.parquet`.
   *
   * Scale notes: `spark.read.parquet` gives the vectorized Parquet reader,
   * predicate pushdown and column pruning for free — callers should filter
   * and select as early as possible so Catalyst pushes both into the scan.
+  *
+  * Schema memo: Spark's parquet schema inference runs a distributed job
+  * on every read, even of a single file, so each table's inferred
+  * `StructType` is kept in a [[SessionFrames.memo]] entry and later reads
+  * pass it to the reader, which then starts no job. The entry is keyed by
+  * the path, the path's length and modification time (one Hadoop
+  * `getFileStatus`: a file rewritten in place is inferred again) and the
+  * session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs,
+  * which inference depends on (`nanosAsLong`, which [[events]] sets). A
+  * directory table is re-inferred when its entries change, not when a
+  * file inside it is rewritten under the same name. Only the schema is
+  * kept: data, file listings and plans are never cached, and every read
+  * is a new DataFrame with fresh attribute ids, so self-joins resolve.
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** The parquet schema of `path`, inferred once per session and file
+    * version (see the object doc). A path whose status cannot be read is
+    * inferred unmemoized, so Spark raises its own error for it. */
+  private def schemaOf(s: SparkSession, path: String): StructType = {
+    def infer: StructType = s.read.parquet(path).schema
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p)).fold(
+      _ => infer,
+      st => {
+        val confs = s.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }
+        SessionFrames.memo(s, ("parquetSchema", path, st.getLen, st.getModificationTime, confs))(infer)
+      })
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType, LongType,
+  MapType, StructType}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
@@ -303,7 +304,7 @@ object EventStreams {
     val prevFlag = s.conf.getOption(flag)
     s.conf.set(flag, "true")
     val srcFile = s"$d/events.parquet"
-    val raw = s.read.parquet(srcFile)
+    val raw = graft.Tables(s, d, "events")
     val tsType = raw.schema("ts").dataType
     val tsIsNs = tsType == LongType
     if (!tsIsNs) prevFlag.fold(s.conf.unset(flag))(s.conf.set(flag, _))
@@ -390,14 +391,15 @@ object EventStreams {
     val prevProvider = s.conf.getOption(providerKey)
     if (rocksDb) s.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q =
-      try plan(stream)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally {
+    val (q, sinkSchema) =
+      try {
+        val planned = plan(stream)
+        (planned.writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append())
+          .trigger(Trigger.AvailableNow())
+          .start(), planned.schema)
+      } finally {
         s.conf.set("spark.sql.shuffle.partitions", prevParts)
         if (rocksDb) prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
       }
@@ -409,7 +411,22 @@ object EventStreams {
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
-    s.read.parquet(outDir)
+    s.read.schema(nullable(sinkSchema)).parquet(outDir)
+  }
+
+  /** `st` with every field, array element and map value nullable: the
+    * schema a plain parquet read infers from files Spark wrote. Read-backs
+    * of a drain's own output pass it instead of inferring (a Spark job per
+    * read); on a streaming sink's directory the reader relaxes neither a
+    * given nor an inferred schema, so it is relaxed here. */
+  private def nullable(st: StructType): StructType =
+    StructType(st.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case st: StructType => nullable(st)
+    case ArrayType(e, _) => ArrayType(nullableType(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullableType(k), nullableType(v), valueContainsNull = true)
+    case other => other
   }
 
   /** q64: the streaming ENGINE under the DuckDB oracle. q30 oracle-checks
@@ -803,6 +820,7 @@ object EventStreams {
                           keys: Seq[String]): DataFrame = {
     val serve = java.nio.file.Files.createTempDirectory("graft_serve").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_ckpt").toString
+    val served = nullable(agg.schema)
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamParts)
     val q =
@@ -817,7 +835,7 @@ object EventStreams {
             .find(f => new java.io.File(f, "_SUCCESS").exists())
           val merged = prev match {
             case Some(p) =>
-              sp.read.parquet(p.toString)
+              sp.read.schema(served).parquet(p.toString)
                 .join(batch.select(keys.map(col): _*), keys, "left_anti")
                 .unionByName(batch)
             case None => batch
@@ -835,7 +853,7 @@ object EventStreams {
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
-    s.read.parquet(last.toString)
+    s.read.schema(served).parquet(last.toString)
   }
 
   /** q161: the foreachBatch MERGE serving table under the DuckDB oracle.

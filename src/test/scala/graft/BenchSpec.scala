@@ -85,6 +85,29 @@ class BenchSpec extends AnyFunSuite {
       "markers are degradation-only — clean lines keep the committed shape")
   }
 
+  test("record header states the cpu count and the git revision, null outside a work tree") {
+    def parse(h: String) = new com.fasterxml.jackson.databind.ObjectMapper().readTree("{" + h + "}")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec").toFile
+    try {
+      val bare = parse(Bench.header(8, dir))
+      assert(bare.get("cpus").asInt == 8)
+      assert(bare.get("git_rev").isNull, "no work tree, no revision")
+      def git(args: String*): String = {
+        val p = new ProcessBuilder(("git" +: "-c" +: "user.name=t" +: "-c" +: "user.email=t@t" +: args): _*)
+          .directory(dir).redirectErrorStream(true).start()
+        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+        assert(p.waitFor() == 0, out)
+        out
+      }
+      git("init", "-q")
+      git("commit", "-q", "--allow-empty", "-m", "x")
+      val rev = git("rev-parse", "HEAD")
+      val inTree = parse(Bench.header(32, dir))
+      assert(inTree.get("cpus").asInt == 32)
+      assert(inTree.get("git_rev").asText == rev)
+    } finally Tables.deleteRecursively(dir)
+  }
+
   test("compact line is valid minimal JSON shape with failed queries") {
     val results = names.map(_ -> -1.0)
     val line = Bench.compactLine(0.0, -0.0, results, "sf", 1)

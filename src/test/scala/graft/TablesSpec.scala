@@ -14,7 +14,10 @@ import org.apache.spark.sql.types._
   * µs-aligned data.
   *
   * Also pins [[Tables.spread]]'s scale branch: it widens a narrow frame
-  * and leaves an already-wide one (multi-file tables at scale) untouched.
+  * and leaves an already-wide one (multi-file tables at scale) untouched,
+  * and the schema memo behind [[Tables.apply]]: later reads start no
+  * job, keep the inferred schema and fresh attribute ids, and a table
+  * rewritten in place is inferred again.
   */
 class TablesSpec extends SparkSpec {
 
@@ -26,9 +29,9 @@ class TablesSpec extends SparkSpec {
     c.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L + 123456L
   }
 
-  private def writeFixture(tsCol: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
+  private def writeFixture(tsCol: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+                           dir: String = java.nio.file.Files.createTempDirectory("graft_tables_spec").toString): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_spec").toString
     val base = Seq(
       (1L, BaseUs, 10L, "click", 1.0, """{"k":1}"""),
       (2L, BaseUs + 3600L * 1000000L, 11L, "view", 2.0, null: String))
@@ -112,6 +115,66 @@ class TablesSpec extends SparkSpec {
       assert(spark.conf.getOption(flag) == before,
         "µs read must restore the caller's conf (ADVICE: no session-wide side effect)")
     } finally prev.foreach(spark.conf.set(flag, _))
+  }
+
+  /** Spark jobs started while `body` runs. The count is read only after a
+    * sentinel job's end has been delivered: the listener bus is ordered,
+    * so every earlier job's start has been counted by then. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val Sentinel = "graft.tables.spec.sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) sentinelId.set(e.jobId)
+        else started.incrementAndGet(): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelId.get) sentinelDone.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Sentinel, null)
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job end never delivered")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a table read after the first starts no job, keeps the inferred schema and fresh ids") {
+    Tables.customer(spark, sfDir)
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { second = Tables.customer(spark, sfDir) } == 0,
+      "a second read in the session must not infer the schema again")
+    assert(second.schema == spark.read.parquet(s"$sfDir/customer.parquet").schema)
+    // only the schema is memoized: two reads are two relations with
+    // distinct attribute ids, so a self-join resolves both sides
+    val a = Tables.customer(spark, sfDir)
+    val b = Tables.customer(spark, sfDir)
+    val ids = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert((ids(a) intersect ids(b)).isEmpty)
+    assert(a.join(b, a("c_custkey") === b("c_custkey")).count() == a.count())
+  }
+
+  test("a table rewritten in place is inferred again: events takes the µs branch after ns") {
+    val dir = writeFixture(_.withColumn("ts", col("us") * 1000L))
+    try {
+      val ns = Tables.events(spark, dir)
+      assert(ns.schema.fieldNames.toSeq ==
+        Seq("event_id", "ts_ns", "user_id", "event_type", "value", "props", "ts"), "ns branch")
+      writeFixture(_.withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType)), dir)
+      val us = Tables.events(spark, dir)
+      assert(us.schema.fieldNames.toSeq ==
+        Seq("event_id", "ts", "user_id", "event_type", "value", "props", "ts_ns"),
+        "the rewritten file must be inferred again and take the µs branch")
+      assert(us.orderBy("event_id").select("ts_ns").collect().map(_.getLong(0)).toSeq ==
+        Seq(BaseUs * 1000L, (BaseUs + 3600L * 1000000L) * 1000L))
+    } finally Tables.deleteRecursively(new java.io.File(dir))
   }
 
   test("spread round-robins a frame with too few partitions to defaultParallelism") {

@@ -390,6 +390,20 @@ class EventStreamsSpec extends SparkSpec {
     assert(got.map(_._1).distinct.length == got.length, "one row per key after upsert")
   }
 
+  test("drain read-backs carry the schema inference gives: q111 sink, q161 serving table") {
+    import org.apache.spark.sql.functions.col
+    // the drains pass the schema they planned instead of inferring it;
+    // it must match inference over the same files field for field —
+    // names, types and nullability
+    for (q <- Seq(EventStreams.q111StreamingHighs, EventStreams.q161ForeachBatchMerge)) {
+      val df = q.run(spark, graft.TestSession.sfDir)
+      assert(df.inputFiles.nonEmpty, s"${q.name} reads no files")
+      val inferred = spark.read.parquet(df.inputFiles.toSeq: _*)
+        .select(df.columns.toSeq.map(col): _*).schema
+      assert(df.schema == inferred, s"${q.name}: ${df.schema} != inferred $inferred")
+    }
+  }
+
   test("q225: BinnedRangeJoin rewrites the stream-static interval join per micro-batch") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
