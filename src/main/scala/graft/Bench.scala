@@ -65,6 +65,26 @@ object Bench {
       if (p.waitFor() == 0 && out.matches("[0-9a-f]{40,64}")) Some(out) else None
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** The drift pass's reference figures in a Bench record (`json`): its
+    * positive per-query warm figures, but only when the record states it
+    * ran at `cpus`. A figure taken at another cpu count is no reference
+    * for this run (a 4-cpu run re-timed q111 against an 8-cpu figure), and
+    * a record without `cpus` — every record before the header existed —
+    * gives none. Unparseable JSON gives none. */
+  def driftReference(json: String, cpus: Int): Map[String, Double] =
+    try {
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      val qn = root.get("queries")
+      val recCpus = root.get("cpus")
+      if (qn == null || recCpus == null || !recCpus.isInt || recCpus.asInt != cpus) Map.empty
+      else {
+        import scala.jdk.CollectionConverters._
+        qn.properties().asScala
+          .map(e => e.getKey -> e.getValue.asDouble)
+          .filter(_._2 > 0).toMap
+      }
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
   /** Compact JSON number: `dp` decimals, trailing zeros stripped. */
   private def fmt(v: Double, dp: Int): String =
     if (v < 0) "-1"
@@ -242,24 +262,14 @@ object Bench {
     // its committed value is far more likely a box stall than a real
     // regression (r11: uniform 2-40x stalls on unchanged code), so those
     // queries get re-timed with leftover budget and keep the better
-    // figure. Missing/unparseable file (round 1, renamed queries) =>
-    // empty map, no second pass — the feature degrades to the old shape.
+    // figure. Missing/unparseable file (round 1, renamed queries) or a
+    // record taken at another cpu count => empty map, no second pass.
     val priorFigures: Map[String, Double] =
       try {
         val p = Paths.get("BENCH.json")
         if (!Files.exists(p)) Map.empty
-        else {
-          val root = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(Files.readAllBytes(p))
-          val qn = root.get("queries")
-          if (qn == null) Map.empty
-          else {
-            import scala.jdk.CollectionConverters._
-            qn.properties().asScala
-              .map(e => e.getKey -> e.getValue.asDouble)
-              .filter(_._2 > 0).toMap
-          }
-        }
+        else driftReference(new String(Files.readAllBytes(p), "UTF-8"),
+          spark.sparkContext.defaultParallelism)
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
     // dev-only: comma-separated query-name filter for isolated timings;

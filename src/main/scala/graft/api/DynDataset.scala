@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.language.dynamics
@@ -91,16 +91,16 @@ object DynDataset {
     * collection exactly as they do over a typed one.
     *
     * Scale note: inference walks the DRIVER-side seq (from_sequence is a
-    * driver-side constructor in the reference too); the resulting frame
-    * is a normal distributed DataFrame. For a 100 TB variant corpus the
+    * driver-side constructor in the reference too); the rows are then
+    * encoded and sliced as [[ObjDataset.apply]] does it, so the resulting
+    * frame is a normal distributed DataFrame. For a 100 TB variant corpus the
     * same union-schema shape comes from the storage layer (e.g. parquet
     * mergeSchema), not from this entry point. */
   def fromAny(s: SparkSession, items: Seq[Any]): DynDataset = {
     val schema = items.map(i => structOf(fieldsOf(i)))
       .foldLeft(new StructType())((a, b) => unify(a, b).asInstanceOf[StructType])
     val rows = items.map(i => toRow(fieldsOf(i), schema))
-    import scala.jdk.CollectionConverters._
-    new DynDataset(s.createDataFrame(rows.asJava, schema), None)
+    new DynDataset(ObjDataset.encoded(s, rows, None)(Encoders.row(schema)), None)
   }
 
   /** An item's (name, value) fields: case-class fields by name, Map

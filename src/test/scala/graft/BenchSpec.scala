@@ -108,6 +108,23 @@ class BenchSpec extends AnyFunSuite {
     } finally Tables.deleteRecursively(dir)
   }
 
+  test("drift reference: only a record taken at the session's cpu count gives figures") {
+    val queries = """"queries":{"q01_filter_project":0.25,"q02_group_agg":1.5,"q03_frequencies":-1}"""
+    val same = Bench.driftReference(s"""{"metric":"total",$queries,"cpus":4,"git_rev":null}""", 4)
+    assert(same == Map("q01_filter_project" -> 0.25, "q02_group_agg" -> 1.5),
+      "positive figures only: a failed query (-1) is no reference")
+    assert(Bench.driftReference(s"""{"metric":"total",$queries,"cpus":8,"git_rev":null}""", 4).isEmpty,
+      "a record taken at another cpu count is no reference")
+    assert(Bench.driftReference(s"""{"metric":"total",$queries}""", 4).isEmpty,
+      "a record that does not state its cpu count is no reference")
+    assert(Bench.driftReference("not json", 4).isEmpty)
+    // the committed record: r13's, taken before records stated their cpus
+    val committed = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("BENCH.json")), "UTF-8")
+    val recCpus = Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(committed).get("cpus"))
+    for (c <- Seq(4, 8, 32))
+      assert(Bench.driftReference(committed, c).nonEmpty == recCpus.exists(_.asInt == c), s"cpus $c")
+  }
+
   test("compact line is valid minimal JSON shape with failed queries") {
     val results = names.map(_ -> -1.0)
     val line = Bench.compactLine(0.0, -0.0, results, "sf", 1)

@@ -26,4 +26,32 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
+
+  /** Spark jobs started while `body` runs. The count is read only after a
+    * sentinel job's end has been delivered: the listener bus is ordered,
+    * so every earlier job's start has been counted by then. */
+  protected def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val Sentinel = "graft.spec.sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) sentinelId.set(e.jobId)
+        else started.incrementAndGet(): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelId.get) sentinelDone.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Sentinel, null)
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job end never delivered")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -90,4 +90,14 @@ class DynDatasetSpec extends SparkSpec {
     val d = DynDataset.fromAny(spark, Seq(Person("ada", 36), Map("age" -> 5)))
     assert((d.age + 1).compute().toSet == Set(37L, 6L))
   }
+
+  test("fromAny builds an encoded-rows leaf, not a LocalRelation") {
+    val d = DynDataset.fromAny(spark, Seq(P("ada", 36), Map("name" -> "bob"), 7))
+    val analyzed = d.df.queryExecution.analyzed
+    assert(analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isEmpty, analyzed.toString)
+    assert(d.df.count() == 3)
+    assert(d.name.compute().toSet == Set("ada", "bob", null))
+  }
 }
