@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, FlatMapGroupsWithState,
+  LogicalPlan, TransformWithState}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
@@ -230,48 +232,11 @@ object EventStreams {
       }
   }
 
-  /** q64: the streaming ENGINE under the DuckDB oracle. q30 oracle-checks
-    * the tumbling-window SEMANTICS via a batch twin; this query runs the
-    * actual streaming path — a file-source stream (`readStream.parquet`)
-    * over the events table, `Trigger.AvailableNow`, [[tumblingCounts]]
-    * (watermark + windowed state), Append mode into a real parquet sink
-    * with a checkpoint — and returns the sink contents, which must
-    * hash-match the SAME oracle SQL as q30.
-    *
-    * Append mode only emits a window once the watermark passes its end,
-    * and emission happens in the batch AFTER the one that advanced the
-    * watermark — so a bare replay of a bounded file would never flush the
-    * final window(s) (measured: exactly the last hour's rows missing).
-    * The stream therefore reads a staged copy of the events file followed
-    * by TWO sentinel rows (2 h and 4 h past the corpus max) in separate
-    * files, with `maxFilesPerTrigger = 1` and explicit modification-time
-    * ordering forcing one batch each: the data batch sets the watermark,
-    * sentinel-1's batch flushes every window up to (max − delay),
-    * sentinel-2's batch flushes the rest — every REAL window's end is ≤
-    * sentinel-1 − delay. The sentinels' own windows stay unemitted (ends
-    * beyond the final watermark) and are filtered by event_type anyway —
-    * exactly how a production bounded-backfill drain works.
-    *
-    * Every invocation stages into fresh temp dirs (source, sink,
-    * checkpoint), so Verify and repeated Bench runs are independent. */
-  /** The q64/q82 drain harness: stage the events parquet plus two
-    * watermark-advancing sentinel files into a fresh source dir, run
-    * `plan(stream)` through a REAL parquet sink (`Trigger.AvailableNow`,
-    * Append mode, checkpoint), await, clean the scratch, and return the
-    * sink frame — sentinel groups still present (the sentinel must reach
-    * the watermark tracker inside the streaming plan; callers filter
-    * their own group keys on the bounded sink read instead).
-    *
-    * Sentinels: data ≺ s1 ≺ s2 by explicit PAST mtimes with
-    * `maxFilesPerTrigger = 1` forcing one batch each — the data batch
-    * sets the watermark, s1's batch (max + 2 h) flushes every real
-    * window/session, s2's batch (max + 4 h) flushes s1's own groups; s2's
-    * never emit and are filtered by the caller anyway. Exactly how a
-    * production bounded-backfill drain works. */
   /** Shuffle (= state store) partition count pinned into every bounded
     * drain's checkpoint. Each stateful operator commits one state store
-    * per shuffle partition PER BATCH, so the drain's 3 tiny micro-batches
-    * pay O(parts) fixed commit cost — the dominant term at bench scale.
+    * per shuffle partition PER BATCH, so a drain's tiny micro-batches (one
+    * or three, see [[drainAvailableNow]]) pay O(parts) fixed commit cost
+    * each — the dominant term at bench scale.
     * The right value is scale-dependent: a production unbounded stream
     * with large keyspaces wants O(cores×executors); a bounded drain of a
     * small backfill wants just enough partitions to spread the state.
@@ -292,7 +257,8 @@ object EventStreams {
     * facts are IDENTICAL for every drain over the same (session, dir) —
     * all 7 streaming oracle queries and every bench repeat reuse one
     * staging instead of re-running the max-ts job and two sentinel
-    * writes each time (a [[graft.SessionFrames.memo]] entry). */
+    * writes each time (a [[graft.SessionFrames.memo]] entry). The stage
+    * dir lives as long as the JVM ([[keptDir]]). */
   private def stagedSource(s: SparkSession, d: String): Staged =
     graft.SessionFrames.memo(s, ("stagedSource", d))(buildStage(s, d))
 
@@ -314,7 +280,7 @@ object EventStreams {
       else raw.agg(max(unix_micros(col("ts")
         .cast(org.apache.spark.sql.types.TimestampType)))).head().getLong(0) * 1000L
 
-    val stage = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val stage = keptDir("graft_stream_src")
     val dataCopy = stage.resolve("a-data.parquet")
     java.nio.file.Files.copy(java.nio.file.Paths.get(srcFile), dataCopy)
     // explicit PAST mtimes (never future — the file source must consider
@@ -344,6 +310,7 @@ object EventStreams {
       java.nio.file.Files.move(part, dst)
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t0 + 60000L * i))
+      graft.Tables.deleteRecursively(sub.toFile)
     }
     Staged(schema, tsIsNs, stage.toString)
   }
@@ -351,10 +318,13 @@ object EventStreams {
   /** File-source stream over a staged dir, normalized to the same
     * logical schema as [[graft.Tables.events]] (`ts` TimestampType +
     * `ts_ns` BIGINT) whichever physical ts type the staged parquet
-    * carries — shared by every drain variant. */
-  private def stagedEventStream(s: SparkSession, staged: Staged): DataFrame = {
-    val stream0 = s.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", "1")
+    * carries — shared by every drain variant. `perFile` reads one staged
+    * file per micro-batch (data, then each sentinel, in mtime order);
+    * otherwise the whole dir is one micro-batch. */
+  private def stagedEventStream(s: SparkSession, staged: Staged,
+                                perFile: Boolean): DataFrame = {
+    val reader = s.readStream.schema(staged.schema)
+    val stream0 = (if (perFile) reader.option("maxFilesPerTrigger", "1") else reader)
       .parquet(staged.stageDir)
     if (staged.tsIsNs)
       stream0.withColumnRenamed("ts", "ts_ns")
@@ -365,52 +335,104 @@ object EventStreams {
         .withColumn("ts_ns", unix_micros(col("ts")) * 1000L)
   }
 
-  private def drainAvailableNow(s: SparkSession, d: String,
-                                rocksDb: Boolean = false)
-                               (plan: DataFrame => DataFrame): DataFrame = {
+  /** Whether a drain of `plan` needs the per-file batches: the plan holds
+    * an event-time watermark, or a stateful operator whose timeouts or
+    * timers run on a clock (event or processing time). Only a batch
+    * AFTER the data batch can advance that clock past the data — the
+    * sentinel batches' whole purpose. */
+  private[streaming] def drainsPerFile(plan: LogicalPlan): Boolean = plan.exists {
+    case _: EventTimeWatermark => true
+    case f: FlatMapGroupsWithState => f.timeout != GroupStateTimeout.NoTimeout
+    case t: TransformWithState => t.timeMode != TimeMode.None()
+    case _ => false
+  }
+
+  /** `plan` over the staged stream of (session, dir), reading the whole
+    * dir as one micro-batch unless the plan [[drainsPerFile]]; then `plan`
+    * is applied again to the stream that reads one staged file per batch
+    * (planning only analyzes; no job runs). */
+  private def plannedDrain(s: SparkSession, d: String)
+                          (plan: DataFrame => DataFrame): DataFrame = {
     val staged = stagedSource(s, d)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val stream = stagedEventStream(s, staged)
-    // NOTE: the sentinel must NOT be filtered inside the streaming plan —
-    // its keys are grouping columns, so Catalyst would push the filter
-    // below the aggregation into the parquet scan, and the sentinel's
-    // event time would never reach the watermark tracker (measured: the
-    // watermark then never advances and the final windows never flush).
-    // the stateful agg creates one state-store partition per shuffle
-    // partition PER BATCH — at this drain's 3 tiny batches the commit
-    // overhead dominates, so run the stream at 8 partitions (the setting
-    // is pinned into the checkpoint at query start; batch queries are
-    // unaffected — the session conf is restored right after start())
+    val oneBatch = plan(stagedEventStream(s, staged, perFile = false))
+    if (drainsPerFile(oneBatch.queryExecution.logical))
+      plan(stagedEventStream(s, staged, perFile = true))
+    else oneBatch
+  }
+
+  /** Starts a drain with the drain confs set: [[StreamParts]] shuffle
+    * (= state store) partitions and, for `rocksDb`, the RocksDB state
+    * store that `transformWithState` requires. Both are pinned into the
+    * checkpoint at query start, so the session confs are restored right
+    * after `start` returns; batch queries are unaffected. */
+  private def withDrainConfs[A](s: SparkSession, rocksDb: Boolean = false)(start: => A): A = {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamParts)
-    // transformWithState requires the RocksDB store; the provider (like
-    // the partition count) is pinned into the checkpoint at query start,
-    // so the session conf can be restored right after start()
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = s.conf.getOption(providerKey)
     if (rocksDb) s.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val (q, sinkSchema) =
-      try {
-        val planned = plan(stream)
-        (planned.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start(), planned.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        if (rocksDb) prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
-      }
-    q.awaitTermination()
-    // the checkpoint is per-invocation scratch; the staged source is
-    // session-cached (stagedSource) and the sink must outlive the call
-    // (the returned frame reads it lazily)
-    Seq(java.nio.file.Paths.get(ckpt)).foreach { root =>
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+    try start
+    finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      if (rocksDb) prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
     }
+  }
+
+  /** A fresh temp dir that must outlive the call — the session memo holds
+    * a stage dir, and a returned frame reads its sink or serving dir
+    * lazily — so Spark's shutdown hook deletes it when the JVM exits. */
+  private def keptDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    org.apache.spark.sql.graftext.Bridge.deleteAtExit(dir.toFile)
+    dir
+  }
+
+  /** The drain harness of the parquet-sink streaming queries: run
+    * `plan(stream)` over the staged events source ([[stagedSource]]: the
+    * events parquet plus two watermark-advancing sentinel files) through
+    * a REAL parquet sink (`Trigger.AvailableNow`, Append mode,
+    * checkpoint), await, delete the checkpoint, and return the sink frame
+    * — sentinel groups still present (a sentinel must reach the
+    * watermark tracker inside the streaming plan; callers filter their
+    * own group keys on the bounded sink read instead).
+    *
+    * The plan decides how many micro-batches the drain runs
+    * ([[drainsPerFile]]):
+    *  - a plan with an event-time watermark, or with a timeout or timer
+    *    clock (q64, q82, q96, q98, q108, q121, q134, q163, q268), reads the
+    *    staged files with `maxFilesPerTrigger = 1` in mtime order,
+    *    data ≺ s1 ≺ s2: the data batch sets the watermark, s1's batch
+    *    (max + 2 h) flushes every real window/session/timer, s2's batch
+    *    (max + 4 h) flushes s1's own groups; s2's never emit and are
+    *    filtered by the caller anyway. Exactly how a production
+    *    bounded-backfill drain works.
+    *  - any other plan (q111, q200, q225, q238, q263) has no clock for the
+    *    sentinels to advance, so the whole staged dir is ONE micro-batch:
+    *    one state commit, one offset/commit-log write, one sink commit.
+    *    The sentinel rows still flow through the plan, and the callers
+    *    drop them on the sink read as before. */
+  private def drainAvailableNow(s: SparkSession, d: String,
+                                rocksDb: Boolean = false)
+                               (plan: DataFrame => DataFrame): DataFrame = {
+    val outDir = keptDir("graft_stream_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+    // NOTE: the sentinel must NOT be filtered inside a watermarked
+    // streaming plan — its keys are grouping columns, so Catalyst would
+    // push the filter below the aggregation into the parquet scan, and
+    // the sentinel's event time would never reach the watermark tracker
+    // (measured: the watermark then never advances and the final windows
+    // never flush).
+    val (q, sinkSchema) = withDrainConfs(s, rocksDb) {
+      val planned = plannedDrain(s, d)(plan)
+      (planned.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt.toString)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start(), planned.schema)
+    }
+    q.awaitTermination()
+    graft.Tables.deleteRecursively(ckpt.toFile)
     s.read.schema(nullable(sinkSchema)).parquet(outDir)
   }
 
@@ -711,11 +733,12 @@ object EventStreams {
     *
     * Determinism: a group's batch iterator is ARRIVAL-ordered, not
     * time-ordered, so the handler sorts each batch's rows by
-    * (ts_us, event_id) before folding — with the drain's single data
-    * file every real event is in batch 1 and the fold order is total,
-    * making the emitted set identical to the batch window formulation
-    * the oracle runs (MAX OVER preceding rows). The sentinel batches
-    * only touch their own negative keys, filtered on the sink read.
+    * (ts_us, event_id) before folding — the plan has no watermark and no
+    * timeout, so the drain reads it as ONE micro-batch: every event is
+    * in that batch and the fold order is total, making the emitted set
+    * identical to the batch window formulation the oracle runs (MAX OVER
+    * preceding rows). The sentinel rows ride in the same batch under
+    * their own negative keys, filtered on the sink read.
     *
     * 100 TB/day shape: state scales with live keys (8 bytes each), the
     * shuffle is the same user-keyed exchange as q32's sessions, and the
@@ -804,7 +827,7 @@ object EventStreams {
     * how a JDBC/Delta MERGE sink behaves. */
   private def drainForeachBatchMerge(s: SparkSession, d: String): DataFrame = {
     val staged = stagedSource(s, d)
-    val agg = stagedEventStream(s, staged)
+    val agg = stagedEventStream(s, staged, perFile = true)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(floor(col("value") * 10.0 + 0.5).cast(LongType)).as("sv_x10"))
@@ -815,17 +838,22 @@ object EventStreams {
     * updated keys upsert (last-write-wins) into the latest version — the
     * q161 mechanics, parametrized over the aggregate and its key so any
     * incrementally-maintained state (per-user totals, q212's sketch
-    * registers) reuses one audited drain. */
+    * registers) reuses one audited drain.
+    *
+    * Unlike [[drainAvailableNow]], this drain always runs the per-file
+    * batches (its callers stream with `perFile = true`), although no
+    * upsert plan has a watermark: only a batch after the first finds a
+    * previous version, so the sentinel batches are what run the merge
+    * branch (`left_anti` + `unionByName` against it). One batch would
+    * write `v0` and never merge. */
   private def drainUpsert(s: SparkSession, agg: DataFrame,
                           keys: Seq[String]): DataFrame = {
-    val serve = java.nio.file.Files.createTempDirectory("graft_serve").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_ckpt").toString
+    val serve = keptDir("graft_serve").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_ckpt")
     val served = nullable(agg.schema)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamParts)
-    val q =
-      try agg.writeStream
-        .option("checkpointLocation", ckpt)
+    val q = withDrainConfs(s) {
+      agg.writeStream
+        .option("checkpointLocation", ckpt.toString)
         .outputMode(OutputMode.Update())
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -844,15 +872,12 @@ object EventStreams {
           ()
         }
         .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     q.awaitTermination()
     val last = Iterator.from(0).map(v => new java.io.File(s"$serve/v$v"))
       .takeWhile(_.exists()).toSeq
       .filter(f => new java.io.File(f, "_SUCCESS").exists()).last
-    Seq(java.nio.file.Paths.get(ckpt)).foreach { root =>
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.Tables.deleteRecursively(ckpt.toFile)
     s.read.schema(served).parquet(last.toString)
   }
 
@@ -890,7 +915,7 @@ object EventStreams {
   private def drainStreamingTopK(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val staged = stagedSource(s, d)
-    val agg = stagedEventStream(s, staged)
+    val agg = stagedEventStream(s, staged, perFile = true)
       .select(col("event_type"),
         floor(col("value") * 10.0 + 0.5).cast(LongType).as("v_x10"),
         col("event_id"))
@@ -1052,7 +1077,7 @@ object EventStreams {
     (s, d) => {
       val staged = stagedSource(s, d)
       val regsStream = graft.operators.MiningOps.hllRegisters(
-        stagedEventStream(s, staged), "event_type", col("user_id"))
+        stagedEventStream(s, staged, perFile = true), "event_type", col("user_id"))
       val regs = drainUpsert(s, regsStream, Seq("event_type", "bucket"))
         .filter(col("event_type") =!= "__sentinel__")
       import graft.operators.MiningOps.{HllAlphaX1m, HllBuckets}
@@ -1366,26 +1391,20 @@ object EventStreams {
   /** [[drainAvailableNow]]'s table-sink twin: the plan streams into a
     * catalog TABLE (`writeStream.toTable`) instead of a parquet dir —
     * exercising the DSv2 `StreamingWrite` path (per-epoch task
-    * buffering + the epoch high-water mark that makes replays no-ops). */
+    * buffering + the epoch high-water mark that makes replays no-ops).
+    * The plan decides the batch count exactly as there. */
   private def drainToTable(s: SparkSession, d: String, table: String)
                           (plan: DataFrame => DataFrame): DataFrame = {
-    val staged = stagedSource(s, d)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val stream = stagedEventStream(s, staged)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamParts)
-    val q =
-      try plan(stream).writeStream
-        .option("checkpointLocation", ckpt)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+    val q = withDrainConfs(s) {
+      plannedDrain(s, d)(plan).writeStream
+        .option("checkpointLocation", ckpt.toString)
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .toTable(table)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    Seq(java.nio.file.Paths.get(ckpt)).foreach { root =>
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
+    q.awaitTermination()
+    graft.Tables.deleteRecursively(ckpt.toFile)
     s.table(table)
   }
 

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * (`SparkSessionExtensions`, `experimental.extraStrategies`) but keeps
   * `Dataset.ofRows` and `Dataset[T](session, plan)` package-private, so
   * every plan-level extension library ships exactly this bridge — a
-  * sub-package of `org.apache.spark.sql` sees `private[sql]` members.
-  * Nothing else in graft lives outside the `graft` namespace.
+  * sub-package of `org.apache.spark.sql` sees `private[sql]` (and
+  * `private[spark]`) members. Nothing else in graft lives outside the
+  * `graft` namespace.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -25,4 +26,9 @@ object Bridge {
     * `LogicalRDD` take. */
   def session(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
+
+  /** Registers `dir` with Spark's shutdown hook, which deletes it and
+    * everything under it when the JVM exits. */
+  def deleteAtExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
 
@@ -14,6 +15,30 @@ class EventStreamsSpec extends SparkSpec {
   import EventStreams.Ev
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+
+  /** Runs `q` and returns the micro-batch count of the one streaming query
+    * it starts, with that query's analyzed plan. Progress events reach the
+    * listener in order on the listener bus, so every batch has been
+    * counted once the query's termination event arrives. */
+  private def drainOf(q: graft.QueryDef): (Int, LogicalPlan) = {
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+    import StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    val batches = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      // delivered synchronously on the stream's thread, while the query is active
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.set(spark.streams.get(e.id))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = batches.incrementAndGet(): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      q.run(spark, sfDir).collect()
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS), s"${q.name}: no termination event")
+      (batches.get, started.get.asInstanceOf[StreamingQueryWrapper].streamingQuery.analyzedPlan)
+    } finally spark.streams.removeListener(listener)
+  }
 
   test("tumbling window counts with watermark drops late data") {
     implicit val sqlCtx = spark.sqlContext
@@ -443,5 +468,50 @@ class EventStreamsSpec extends SparkSpec {
       assert(got.exists(_._2 == -1L),
         "fixture must produce unmatched points — the null-pad is the point of the test")
     } finally spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+  }
+
+  test("drain batch counts: q111 one micro-batch, q64 per-file, q161 per-file merge") {
+    // q111's plan has no watermark and no timeout: the whole staged dir
+    // is one batch — one state commit, one sink commit
+    assert(drainOf(EventStreams.q111StreamingHighs)._1 == 1)
+    // q64's watermark needs the data batch, both sentinel batches and the
+    // no-data batch that emits what the last watermark closed
+    assert(drainOf(EventStreams.q64StreamingTumbling)._1 == 4)
+    // the upsert drain keeps its per-file batches: only the batches after
+    // the first find a previous serving version to merge into
+    val (mergeBatches, _) = drainOf(EventStreams.q161ForeachBatchMerge)
+    assert(mergeBatches == 3)
+    val served = EventStreams.q161ForeachBatchMerge.run(spark, sfDir).inputFiles
+    assert(served.nonEmpty && served.forall(_.contains(s"/v${mergeBatches - 1}/")),
+      s"final serving version must be the last batch's merge: ${served.toSeq}")
+  }
+
+  test("drainsPerFile: watermark-free plans drain in one batch, clocked plans per file") {
+    for (q <- Seq(EventStreams.q200StreamingRateLimit, EventStreams.q225StreamingIntervalLookup,
+        EventStreams.q238StreamingMapState, EventStreams.q263StreamingListState)) {
+      val (batches, plan) = drainOf(q)
+      assert(!EventStreams.drainsPerFile(plan), s"${q.name} needs no sentinel batches")
+      assert(batches == 1, s"${q.name}: $batches batches")
+    }
+    // q268: a watermark through two chained aggregations; q134: event-time timers
+    for (q <- Seq(EventStreams.q268ChainedStateful, EventStreams.q134StreamingTimers)) {
+      val (batches, plan) = drainOf(q)
+      assert(EventStreams.drainsPerFile(plan), s"${q.name} needs the sentinel batches")
+      assert(batches == 4, s"${q.name}: $batches batches")
+    }
+  }
+
+  test("a drain that stages its source leaves no sentinel scratch dir in java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def dirs(prefix: String): Set[String] =
+      Option(tmp.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix)).map(_.getName).toSet
+    val srcBefore = dirs("graft_stream_src")
+    val sentBefore = dirs("graft_stream_sent")
+    // the staged source is memoized per session: a new session stages again
+    EventStreams.q111StreamingHighs.run(spark.newSession(), sfDir).collect()
+    assert((dirs("graft_stream_src") -- srcBefore).nonEmpty, "the call staged no source")
+    assert((dirs("graft_stream_sent") -- sentBefore).isEmpty,
+      s"leaked: ${dirs("graft_stream_sent") -- sentBefore}")
   }
 }
