@@ -24,7 +24,6 @@ import org.apache.spark.sql.functions._
 object FsScaleSmoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkEntry.session()
-    graft.sources.GraftCatalog.register(spark)
 
     val report = scala.collection.mutable.LinkedHashMap[String, Any]()
     val heapMax = Runtime.getRuntime.maxMemory()

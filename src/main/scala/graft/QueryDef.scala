@@ -17,6 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     name: String,
-    run: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String]
-)
+) {
+  /** Sets `s` up for graft ([[Setup]]), then runs the query's body: every
+    * caller gets a graft-ready session, however it reached the query. */
+  def run(s: SparkSession, dir: String): DataFrame = {
+    Setup(s)
+    body(s, dir)
+  }
+}

@@ -40,7 +40,6 @@ object ScaleSmoke {
     val nBase = 5000L
     val replicas = 8
     val spark = SparkEntry.session()
-    graft.functions.GraftFunctions.register(spark)
 
     // doc i: 320 chars of md5-derived hex seeded by i (fully distributed
     // generation — no driver-side text); copy k appends "~k"
@@ -759,7 +758,6 @@ object ScaleSmoke {
     // counted separately via the id range).
     val nRjPts = 5000000L
     val nRjIvs = 100000L
-    graft.plans.BinnedRangeJoin.install(spark)
     spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "50000")
     try {
       val rjPts = spark.range(nRjPts).select(col("id").as("pid"),
@@ -904,7 +902,6 @@ object ScaleSmoke {
     // and the planted interval matches its 100 planted points.
     val nFoPts = 2000000L
     val nFoIvs = 50000L
-    graft.plans.BinnedRangeJoin.install(spark)
     spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "50000")
     try {
       val foPts = spark.range(nFoPts).select(col("id").as("pid"),
@@ -988,7 +985,6 @@ object ScaleSmoke {
     // (fat commits split WITHIN a version → ~32 batches, bounding the
     // consumer's per-batch memory). Exactly-once is asserted by closed
     // form on both: count and Σk must match the committed range.
-    graft.sources.GraftCatalog.register(spark)
     spark.sql("DROP TABLE IF EXISTS graft.mem_cf_smoke")
     val cfRows = 10000000L
     val cfVersions = 8

@@ -27,7 +27,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> (q.run _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
@@ -40,7 +40,8 @@ object SparkEntry {
 
   /** The one session every main runs on: `local[SPARK_GRAFT_CPUS]`
     * (default 4) with as many shuffle partitions, UTC, AQE on,
-    * `nanosAsLong` for ns-encoded events, no UI, log level WARN.
+    * `nanosAsLong` for ns-encoded events, no UI, log level WARN, set up
+    * for graft ([[Setup]]) for the mains that plan outside a [[QueryDef]].
     *
     * Specs never call this: they share `TestSession`, and `getOrCreate`
     * on that live session would rewrite its SQL confs under every other
@@ -66,6 +67,7 @@ object SparkEntry {
     org.apache.log4j.Logger
       .getLogger("org.apache.spark.sql.execution.window.WindowExec")
       .setLevel(org.apache.log4j.Level.ERROR)
+    Setup(spark)
     spark
   }
 }

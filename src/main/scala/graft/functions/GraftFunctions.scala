@@ -1,22 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.call_function
 
-/** Registration for graft's native Catalyst expressions.
+/** graft's native Catalyst expressions and their Column-API sugar.
   *
-  * Two paths:
-  *  - [[GraftFunctions.register]]: imperative, per-session (used by the
-  *    query pack and tests);
-  *  - [[GraftExtensions]]: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    injects the same functions at session build, making them available
-  *    to pure-SQL users (`SELECT cosine_sim(a, b)`).
+  * [[fns]] is the list of (name, class, builder) that [[graft.Setup]]
+  * registers on a session; `QueryDef.run` and `SparkEntry.session()` call
+  * it, so pure-SQL users of a set-up session can also write
+  * `SELECT cosine_sim(a, b)`.
   */
 object GraftFunctions {
 
-  private val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+  private[graft] val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", classOf[CosineSimilarity].getName,
       children => CosineSimilarity(children(0), children(1))),
     ("array_agree_count", classOf[ArrayAgreeCount].getName,
@@ -68,29 +65,12 @@ object GraftFunctions {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children(0), children(1)))
   )
 
-  /** Idempotently register all graft functions on a session. */
-  def register(spark: SparkSession): Unit = synchronized {
-    val reg = spark.sessionState.functionRegistry
-    fns.foreach { case (name, className, builder) =>
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id))
-        reg.registerFunction(id, new ExpressionInfo(className, name), builder)
-    }
-  }
-
-  /** Inject the same functions at session build (see [[GraftExtensions]]). */
-  def injectAll(ext: SparkSessionExtensions): Unit =
-    fns.foreach { case (name, className, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(className, name), builder))
-    }
-
   /** Bloom membership test against a constant serialized filter (see
     * [[graft.operators.ScaleTools.bloomPrunedJoin]]). */
   def mightContain(bloom: Column, value: Column): Column =
     call_function("might_contain", bloom, value)
 
-  /** Column-API sugar (requires the function registered on the session). */
+  /** Column-API sugar (resolves on a session set up by [[graft.Setup]]). */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** Integer dot product over two long arrays (quantized similarity). */
@@ -139,15 +119,4 @@ object GraftFunctions {
   /** Unrestricted Damerau-Levenshtein distance (see [[StringSim]]). */
   def damerauLevenshtein(a: Column, b: Column): Column =
     call_function("damerau_levenshtein", a, b)
-}
-
-/** For `spark.sql.extensions` (SparkSessionExtensions injection point):
-  * the native functions plus the banded-levenshtein optimizer rule. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.injectAll(ext)
-    ext.injectOptimizerRule(_ => graft.plans.BandedLevenshtein)
-    ext.injectOptimizerRule(_ => graft.plans.BinnedRangeJoin)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-  }
 }

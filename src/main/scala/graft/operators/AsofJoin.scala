@@ -56,15 +56,12 @@ object AsofJoin {
     * [[graft.plans.AsofJoinPlan]] for the full design and the 100 TB
     * argument (each side shuffles in its own schema, two small sorts, a
     * one-row-of-state merge-sweep instead of window group buffering).
-    * Installs [[graft.plans.AsofJoinStrategy]] idempotently through the
-    * PUBLIC `experimental.extraStrategies` hook so it works on any
-    * session; `GraftExtensions` also injects it at session build. */
+    * A library entry point: it runs [[graft.Setup]], which installs
+    * [[graft.plans.AsofJoinStrategy]], so it plans on any session. */
   def asofJoinNative(left: DataFrame, right: DataFrame, leftKey: String,
                      leftTs: String, rightKey: String, rightTs: String): DataFrame = {
     val spark = left.sparkSession
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsofJoinStrategy
+    graft.Setup(spark)
     org.apache.spark.sql.graftext.Bridge.ofRows(spark,
       graft.plans.AsofJoinPlan.resolve(
         left.queryExecution.analyzed, right.queryExecution.analyzed,

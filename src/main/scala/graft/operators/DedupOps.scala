@@ -182,7 +182,7 @@ object DedupOps {
 
   def verifiedPairs(s: SparkSession, d: String, cap: Long): DataFrame =
     SessionFrames.frame(s, ("pairs", d, cap)) {
-      graft.functions.GraftFunctions.register(s)
+      graft.Setup(s)
       val bnd = banded(s, d, cap)
       // Agreement count via the codegen'd [[graft.functions.ArrayAgreeCount]]
       // primitive — one fused loop per collision row. See that class for
@@ -740,7 +740,6 @@ object DedupOps {
   val q91EditDistSql = QueryDef(
     "q91_editdist_sql",
     (s, d) => {
-      graft.plans.BandedLevenshtein.install(s)
       Tables.spread(Tables.documents(s, d)
         .filter(col("doc_id") < OracleCap)
         .select("doc_id", "text", "n_chars"))

@@ -2219,7 +2219,6 @@ object EventOps {
   val q270BitmapRetention = QueryDef(
     "q270_bitmap_retention",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val weekly = Tables.events(s, d)
         .select(expr("(ts_ns DIV 1000) DIV 604800000000").as("wk"), col("user_id"))
@@ -2269,7 +2268,6 @@ object EventOps {
   val q276ChurnMembers = QueryDef(
     "q276_churn_members",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val weekly = Tables.events(s, d)
         .filter(col("event_type") === "purchase")

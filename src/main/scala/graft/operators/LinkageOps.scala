@@ -54,7 +54,6 @@ object LinkageOps {
   val q135JaroLinkage = QueryDef(
     "q135_jaro_linkage",
     (s, d) => {
-      GraftFunctions.register(s)
       val r = ranked(s, d)
       val right = r.select(col("block"), col("rn").as("rn2"),
         col("title").as("title2"), col("doc_id").as("doc2"))
@@ -92,7 +91,6 @@ object LinkageOps {
   val q136DamerauPairs = QueryDef(
     "q136_damerau_pairs",
     (s, d) => {
-      GraftFunctions.register(s)
       val r = ranked(s, d)
       val right = r.select(col("block"), col("rn").as("rn2"),
         col("title").as("title2"), col("doc_id").as("doc2"))

@@ -1913,7 +1913,6 @@ object MiningOps {
   val q262BitmapSegments = QueryDef(
     "q262_bitmap_segments",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val bm = Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("priority"))
@@ -2151,7 +2150,6 @@ object MiningOps {
   val q277BitmapCube = QueryDef(
     "q277_bitmap_cube",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions._
       val finest = Tables.events(s, d)
         .select(col("event_type"),

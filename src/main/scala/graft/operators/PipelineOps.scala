@@ -740,7 +740,6 @@ object PipelineOps {
   val q259QuotaSample = QueryDef(
     "q259_quota_sample",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val ranked = Tables.documents(s, d).select(col("lang"), col("doc_id"),
         pmod(conv(substring(md5(concat(lit("qs#"), col("doc_id").cast("string"))),
           1, 15), 16, 10).cast(LongType), lit(1000000000L)).as("rank"))

@@ -866,7 +866,6 @@ object Relational {
   val q222IntervalJoin = QueryDef(
     "q222_interval_join_binned",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
       try {
         def md5int(c: Column): Column =
@@ -924,7 +923,6 @@ object Relational {
   val q243LeftOuterIntervalJoin = QueryDef(
     "q243_interval_join_left_outer",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
       try {
         def md5int(c: Column): Column =
@@ -989,7 +987,6 @@ object Relational {
   val q246FullOuterIntervalJoin = QueryDef(
     "q246_interval_join_full_outer",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
       try {
         def md5int(c: Column): Column =
@@ -1052,7 +1049,6 @@ object Relational {
   val q247DeadWindows = QueryDef(
     "q247_interval_anti_dead_windows",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
       try {
         def md5int(c: Column): Column =
@@ -1165,7 +1161,6 @@ object Relational {
   val q252GroupedTopK = QueryDef(
     "q252_grouped_topk",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).groupBy("lang")
         .agg(graft.functions.GraftFunctions.topKAgg(
           struct(col("n_chars"), col("doc_id")), lit(3)).as("top"))
@@ -1201,7 +1196,6 @@ object Relational {
   val q265RatioBandJoin = QueryDef(
     "q265_ratio_band_join",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "512")
       try {
         def cents(c: Column): Column =

@@ -63,7 +63,7 @@ object ScaleTools {
     * (`BloomFilterMightContain`), not a scala UDF. */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String, dimKey: String,
                       expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    graft.functions.GraftFunctions.register(fact.sparkSession)
+    graft.Setup(fact.sparkSession)
     // Both sides go through xxhash64 so the technique is key-type-agnostic
     // (strings, dates, structs): the bloom holds hashes and the probe
     // hashes the fact key with the same function — the construction

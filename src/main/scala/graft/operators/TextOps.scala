@@ -1424,7 +1424,6 @@ object TextOps {
   val q239NgramUdtf = QueryDef(
     "q239_ngram_udtf",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("graft_q239_docs")
       s.sql("""SELECT ngram, COUNT(*) AS cnt
               |FROM graft_q239_docs
@@ -1461,7 +1460,6 @@ object TextOps {
   val q249GroupedHeavyHitters = QueryDef(
     "q249_grouped_heavy_hitters",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val tok = Tables.documents(s, d)
         .select(col("lang"), explode(tokens(lower(col("text")))).as("t"))
       val cand = tok.groupBy("lang")

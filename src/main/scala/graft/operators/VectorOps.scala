@@ -47,7 +47,6 @@ object VectorOps {
   val q27CosineTopK = QueryDef(
     "q27_cosine_topk",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0).select(toD(col("embedding")).as("qv"))
       emb.filter(col("vec_id") =!= 0)
@@ -97,7 +96,7 @@ object VectorOps {
     * of the corpus. Random uncorrelated embeddings (this synthetic set)
     * need a bigger radius than real clustered embeddings would. */
   def annLshQuery(s: SparkSession, d: String, radius: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+    graft.Setup(s)
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), toD(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v")))
@@ -159,7 +158,6 @@ object VectorOps {
   val q56AnnIvf = QueryDef(
     "q56_ann_ivf",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), toD(col("embedding")).as("v"))
       val cents = emb.filter(col("vec_id").between(1, 8))
@@ -207,7 +205,6 @@ object VectorOps {
   val q29CosinePairs = QueryDef(
     "q29_cosine_pairs",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .filter(col("vec_id") < 500)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
@@ -233,7 +230,6 @@ object VectorOps {
   val q38BatchAnn = QueryDef(
     "q38_batch_ann",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), toD(col("embedding")).as("qv"))
@@ -276,7 +272,6 @@ object VectorOps {
   val q62QuantizedAnn = QueryDef(
     "q62_quantized_ann",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // amax is hoisted to its own column: referenced from inside the
       // transform lambda it would be re-evaluated per ELEMENT (64× per
       // row — Spark does not CSE across lambda boundaries)
@@ -377,7 +372,6 @@ object VectorOps {
   val q68EmbeddingLshPairs = QueryDef(
     "q68_embedding_lsh_pairs",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val base = Tables.embeddings(s, d)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
       val planted = base.filter(col("vec_id") % 20 === 0)
@@ -418,7 +412,6 @@ object VectorOps {
   val q78SemanticDedup = QueryDef(
     "q78_semantic_dedup",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), toD(col("embedding")).as("v"))
       val cents = emb.filter(col("vec_id").between(1, 8))
@@ -494,7 +487,6 @@ object VectorOps {
   val q86KMeans = QueryDef(
     "q86_kmeans",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val toDi = (c: Column) => transform(c, x => x.cast(DoubleType))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), transform(toD(col("embedding")),
@@ -613,7 +605,6 @@ object VectorOps {
   val q97PqAnn = QueryDef(
     "q97_pq_ann",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), transform(toD(col("embedding")),
           x => floor(x * lit(1000000.0) + lit(0.5)).cast(LongType)).as("iv"))
@@ -704,7 +695,6 @@ object VectorOps {
   val q140MatryoshkaRecall = QueryDef(
     "q140_matryoshka_recall",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
@@ -823,7 +813,6 @@ object VectorOps {
   val q150DensityLabels = QueryDef(
     "q150_density_labels",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .filter(col("vec_id") < 500)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
@@ -895,7 +884,6 @@ object VectorOps {
   val q153RrfFusion = QueryDef(
     "q153_rrf_fusion",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
@@ -993,7 +981,6 @@ object VectorOps {
   val q157KCenterCoreset = QueryDef(
     "q157_kcenter_coreset",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), transform(toD(col("embedding")),
           x => floor(x * 100000.0 + 0.5).cast(LongType)).as("iv"))
@@ -1076,7 +1063,6 @@ object VectorOps {
   val q165TripletMining = QueryDef(
     "q165_triplet_mining",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), transform(toD(col("embedding")),
           x => floor(x * 100000.0 + 0.5).cast(LongType)).as("iv"))
@@ -1147,7 +1133,6 @@ object VectorOps {
   val q214MmrRerank = QueryDef(
     "q214_mmr_rerank",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), transform(toD(col("embedding")),
           x => floor(x * 100000.0 + 0.5).cast(LongType)).as("iv"))
@@ -1317,7 +1302,6 @@ object VectorOps {
   val q226IvfRecallSweep = QueryDef(
     "q226_ivf_recall_sweep",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
       val cents = emb.filter(col("vec_id").between(1, 8))

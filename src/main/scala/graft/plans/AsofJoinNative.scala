@@ -91,11 +91,10 @@ object AsofJoinPlan {
   }
 }
 
-/** Plans [[AsofJoinPlan]] to [[AsofJoinExec]]. Registered two ways:
-  * `GraftExtensions` (`injectPlannerStrategy`) for extension-configured
-  * sessions, and idempotently via `spark.experimental.extraStrategies`
-  * (public API) by [[graft.operators.AsofJoin.asofJoinNative]] so the
-  * operator works on any session. */
+/** Plans [[AsofJoinPlan]] to [[AsofJoinExec]]. [[graft.Setup]] adds it to
+  * the session's planner strategies; `QueryDef.run` and
+  * [[graft.operators.AsofJoin.asofJoinNative]] call that, so the operator
+  * plans on any session. */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsofJoinPlan =>

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -34,8 +33,8 @@ import org.apache.spark.sql.types.IntegerType
   * that make the predicate constant (k < 0, and k = 0 for ≥/<) are left
   * alone — `ConstantFolding` territory, not banding's.
   *
-  * Install via `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (session build) or [[BandedLevenshtein.install]] (live session).
+  * [[graft.Setup]] adds it to the session's user-provided optimizer
+  * rules, so every `QueryDef.run` plans with it.
   *
   * Reference scope: the reference exposes no optimizer at all (its plan
   * is a replayed attribute chain, expr.py:259-435); this is extension-
@@ -81,13 +80,4 @@ object BandedLevenshtein extends Rule[LogicalPlan] {
       case EqualTo(Bound(k), l @ Levenshtein(_, _, None)) if k >= 0 =>
         EqualTo(banded(l, k), Literal(k))
     }
-
-  /** Idempotently install on a live session — the imperative twin of
-    * `GraftExtensions`' `injectOptimizerRule` (extraOptimizations run in
-    * the same user-rules batch). */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }

@@ -56,7 +56,6 @@ object FsQueries {
   val q289FsRoundtrip = graft.QueryDef(
     "q289_fs_write_roundtrip",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -87,7 +86,6 @@ object FsQueries {
   val q290FsUpdate = graft.QueryDef(
     "q290_fs_update",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"),
@@ -117,7 +115,6 @@ object FsQueries {
   val q291FsMerge = graft.QueryDef(
     "q291_fs_merge",
     (s, d) => {
-      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -173,7 +170,6 @@ object FsQueries {
   val q292FsdDeltaMerge = graft.QueryDef(
     "q292_fsd_delta_merge",
     (s, d) => {
-      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(count(lit(1)).as("n"),
@@ -236,7 +232,6 @@ object FsQueries {
   val q293FsEvolution = graft.QueryDef(
     "q293_fs_schema_evolution",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("int").as("cust"))
@@ -302,7 +297,6 @@ object FsQueries {
   val q294FsdCdfBatch = graft.QueryDef(
     "q294_fsd_cdf_batch",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"))
@@ -347,7 +341,6 @@ object FsQueries {
   val q295FsdCdfStream = graft.QueryDef(
     "q295_fsd_cdf_stream",
     (s, d) => {
-      GraftCatalog.register(s)
       val tgt = graft.Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").cast("long").as("k"))
         .agg(sum(col("l_quantity").cast("long")).as("sq"))
@@ -413,7 +406,6 @@ object FsQueries {
   val q296FsTimestampTravel = graft.QueryDef(
     "q296_fs_timestamp_travel",
     (s, d) => {
-      GraftCatalog.register(s)
       val t0 = 1700000000000L // fixed, deterministic epoch ms
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
@@ -466,7 +458,6 @@ object FsQueries {
   val q297FsFeedBytes = graft.QueryDef(
     "q297_fs_feed_bytes",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         md5(col("o_orderkey").cast("string")).as("payload"))
@@ -518,7 +509,6 @@ object FsQueries {
   val q299FsZoneSkip = graft.QueryDef(
     "q299_fs_zone_skip",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -553,7 +543,6 @@ object FsQueries {
   val q300FsColumnPrune = graft.QueryDef(
     "q300_fs_column_prune",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast("long").as("k"),
         col("p_size").cast("long").as("sz"),
@@ -585,7 +574,6 @@ object FsQueries {
   val q301FsStreamingSink = graft.QueryDef(
     "q301_fs_streaming_sink",
     (s, d) => {
-      GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.fs_ssink")
       s.sql("CREATE TABLE graft.fs_ssink (doc_id BIGINT, h BIGINT, bucket BIGINT)")
       val ckpt = java.nio.file.Files
@@ -631,7 +619,6 @@ object FsQueries {
   val q302FsWideTypes = graft.QueryDef(
     "q302_fs_wide_types",
     (s, d) => {
-      GraftCatalog.register(s)
       val base = 1700000000000000L // epoch µs, fixed
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
@@ -676,7 +663,6 @@ object FsQueries {
   val q303FsColStats = graft.QueryDef(
     "q303_fs_colstats",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         floor(col("l_extendedprice") * 100.0 + 0.5).cast(LongType).as("cents"),
@@ -723,7 +709,6 @@ object FsQueries {
   val q304FsSpjJoin = graft.QueryDef(
     "q304_fs_spj_join",
     (s, d) => {
-      GraftCatalog.register(s)
       val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -791,7 +776,6 @@ object FsQueries {
   val q305FsCompact = graft.QueryDef(
     "q305_fs_compact",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -844,7 +828,6 @@ object FsQueries {
   val q306FsAggPushdown = graft.QueryDef(
     "q306_fs_agg_pushdown",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"),
@@ -884,7 +867,6 @@ object FsQueries {
   val q307FsRuntimePrune = graft.QueryDef(
     "q307_fs_runtime_prune",
     (s, d) => {
-      GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.fs_rtf")
       s.sql("""CREATE TABLE graft.fs_rtf (k BIGINT, qty BIGINT)
               |PARTITIONED BY (bucket(8, k))""".stripMargin)
@@ -932,7 +914,6 @@ object FsQueries {
   val q308FsBloomSkip = graft.QueryDef(
     "q308_fs_bloom_skip",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         md5(col("o_orderkey").cast("long").cast("string").cast("binary")).as("tag"),
@@ -1002,7 +983,6 @@ object FsQueries {
   val q309FsZorder = graft.QueryDef(
     "q309_fs_zorder",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("x"),
@@ -1091,7 +1071,6 @@ object FsQueries {
   val q310FsWapBranch = graft.QueryDef(
     "q310_fs_wap_branch",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1151,7 +1130,6 @@ object FsQueries {
   val q311FsRebucket = graft.QueryDef(
     "q311_fs_rebucket",
     (s, d) => {
-      GraftCatalog.register(s)
       val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -1222,7 +1200,6 @@ object FsQueries {
   val q312FsMetaTables = graft.QueryDef(
     "q312_fs_meta_tables",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1282,7 +1259,6 @@ object FsQueries {
   val q313FsNullSkip = graft.QueryDef(
     "q313_fs_null_skip",
     (s, d) => {
-      GraftCatalog.register(s)
       val li = graft.Tables.lineitem(s, d).select(
         col("l_orderkey").cast("long").as("k"),
         col("l_quantity").cast("long").as("qty"))
@@ -1346,7 +1322,6 @@ object FsQueries {
   val q314FsCurationWap = graft.QueryDef(
     "q314_fs_curation_wap",
     (s, d) => {
-      GraftCatalog.register(s)
       import org.apache.spark.sql.expressions.Window
       val curated = graft.Tables.documents(s, d)
         .withColumn("digest", sha2(col("text"), 256))
@@ -1414,7 +1389,6 @@ object FsQueries {
   val q315FsMatViewIvm = graft.QueryDef(
     "q315_fs_matview_ivm",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 24).cast(LongType).as("grp"),
@@ -1479,7 +1453,6 @@ object FsQueries {
   val q316FsTxnPublish = graft.QueryDef(
     "q316_fs_txn_publish",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         col("o_custkey").cast(LongType).as("cust"),
@@ -1551,7 +1524,6 @@ object FsQueries {
   val q317FsNgramSkip = graft.QueryDef(
     "q317_fs_ngram_skip",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         concat(lit("s3://corpus/tenant"), col("o_custkey") % 20,
@@ -1611,7 +1583,6 @@ object FsQueries {
   val q318FsMatViewDelta = graft.QueryDef(
     "q318_fs_matview_delta",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast(LongType).as("k"),
         (col("p_partkey") % 24).cast(LongType).as("grp"),
@@ -1680,7 +1651,6 @@ object FsQueries {
   val q319FsBinaryPayload = graft.QueryDef(
     "q319_fs_binary_payload",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.documents(s, d).select(
         col("doc_id").cast(LongType).as("doc_id"),
         col("lang"),
@@ -1733,7 +1703,6 @@ object FsQueries {
   val q320FsCloneRestore = graft.QueryDef(
     "q320_fs_clone_restore",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.customer(s, d).select(
         col("c_custkey").cast(LongType).as("k"),
         col("c_mktsegment").as("seg"),
@@ -1824,7 +1793,6 @@ object FsQueries {
   val q321FsMatViewNulls = graft.QueryDef(
     "q321_fs_matview_nulls",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 20).cast(LongType).as("grp"),
@@ -1885,7 +1853,6 @@ object FsQueries {
   val q322FsMatViewMinMax = graft.QueryDef(
     "q322_fs_matview_minmax",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.part(s, d).select(
         col("p_partkey").cast(LongType).as("k"),
         (col("p_partkey") % 16).cast(LongType).as("grp"),
@@ -1947,7 +1914,6 @@ object FsQueries {
   val q323FsDatePartition = graft.QueryDef(
     "q323_fs_date_partition",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"), col("event_type"), col("value").as("v"))
@@ -2011,7 +1977,6 @@ object FsQueries {
   val q324FsCompositePartition = graft.QueryDef(
     "q324_fs_composite_partition",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"),
@@ -2086,7 +2051,6 @@ object FsQueries {
   val q325FsMatViewMultiGroup = graft.QueryDef(
     "q325_fs_matview_multigroup",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.orders(s, d).select(
         col("o_orderkey").cast(LongType).as("k"),
         (col("o_custkey") % 6).cast(LongType).as("g1"),
@@ -2180,7 +2144,6 @@ object FsQueries {
   val q326FsNestedStruct = graft.QueryDef(
     "q326_fs_nested_struct",
     (s, d) => {
-      GraftCatalog.register(s)
       val src = graft.Tables.events(s, d).select(
         col("event_id").cast(LongType).as("event_id"),
         col("ts"),
@@ -2244,7 +2207,6 @@ object FsQueries {
   val q327FsBucketValueSpj = graft.QueryDef(
     "q327_fs_bucket_value_spj",
     (s, d) => {
-      GraftCatalog.register(s)
       val o = graft.Tables.orders(s, d)
       s.sql("DROP TABLE IF EXISTS graft.fs_bvl")
       s.sql("DROP TABLE IF EXISTS graft.fs_bvr")

@@ -913,7 +913,6 @@ object EventStreams {
     * group: ≤ k entries, the streaming-leaderboard recipe that never
     * grows with the stream. */
   private def drainStreamingTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val staged = stagedSource(s, d)
     val agg = stagedEventStream(s, staged, perFile = true)
       .select(col("event_type"),
@@ -1136,7 +1135,6 @@ object EventStreams {
   val q225StreamingIntervalLookup = graft.QueryDef(
     "q225_streaming_interval_lookup",
     (s, d) => {
-      graft.plans.BinnedRangeJoin.install(s)
       s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey,
         graft.operators.Relational.RangeBinWidth.toString)
       try {
@@ -1423,7 +1421,6 @@ object EventStreams {
   val q274StreamingTableSink = graft.QueryDef(
     "q274_streaming_table_sink",
     (s, d) => {
-      graft.sources.GraftCatalog.register(s)
       s.sql("DROP TABLE IF EXISTS graft.mem_ssink")
       s.sql("""CREATE TABLE graft.mem_ssink
               |(w_start TIMESTAMP, event_type STRING, cnt BIGINT,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** The one `private[sql]` doorway graft's custom plan nodes need: turning
   * a hand-built [[LogicalPlan]] back into a user-facing [[DataFrame]] or
   * typed [[Dataset]]. Spark exposes every other extension point publicly
-  * (`SparkSessionExtensions`, `experimental.extraStrategies`) but keeps
+  * (`SparkSessionExtensions`, the experimental strategy list) but keeps
   * `Dataset.ofRows` and `Dataset[T](session, plan)` package-private, so
   * every plan-level extension library ships exactly this bridge — a
   * sub-package of `org.apache.spark.sql` sees `private[sql]` (and

@@ -4,7 +4,6 @@ object KernelBench {
   def main(args: Array[String]): Unit = {
     val spark = TestSession.spark
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = 2000000L
     val vecs = spark.range(n).select(col("id"),
       expr("transform(sequence(1, 64), i -> xxhash64(id, i) % 100000)").as("iv"))

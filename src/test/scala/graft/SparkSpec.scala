@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs (one JVM per `sbt test` fork). */
+/** Shared local SparkSession for all specs (one JVM per `sbt test` fork),
+  * set up for graft once ([[Setup]]). */
 object TestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -18,6 +19,7 @@ object TestSession {
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Setup(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"

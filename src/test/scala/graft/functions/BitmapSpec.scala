@@ -20,7 +20,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("bitmap_count(bitmap_build) ≡ countDistinct across partitionings") {
-    GraftFunctions.register(spark)
     val exact = fixture.groupBy("g").agg(countDistinct(col("k")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     for (parts <- Seq(1, 3, 16)) {
@@ -33,7 +32,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("binary encoding is deterministic: same set, any partitioning, same bytes") {
-    GraftFunctions.register(spark)
     val images = Seq(1, 5, 32).map { parts =>
       fixture.repartition(parts).filter(col("g") === "a")
         .agg(GraftFunctions.bitmapBuild(col("k"), lit(1024)).as("bm"))
@@ -44,7 +42,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("and/or algebra matches reference set intersection/union") {
-    GraftFunctions.register(spark)
     val bm = fixture.groupBy("g")
       .agg(GraftFunctions.bitmapBuild(col("k"), lit(1024)).as("bm"))
     val a = bm.filter(col("g") === "a").select(col("bm").as("bm_a"))
@@ -72,7 +69,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("positions and and_not recover exact members (difference algebra)") {
-    GraftFunctions.register(spark)
     val bm = fixture.groupBy("g")
       .agg(GraftFunctions.bitmapBuild(col("k"), lit(1024)).as("bm"))
     val b = bm.filter(col("g") === "b").select(col("bm").as("bm_b"))
@@ -96,7 +92,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("bitmap_merge: split-and-merge equals the whole-corpus build (mergeability)") {
-    GraftFunctions.register(spark)
     import graft.TestSession.spark.implicits._
     val df = (0L until 3000L).map(k => (k % 5, k % 700)).toDF("g", "k")
     // whole-corpus build per group
@@ -123,7 +118,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("out-of-domain keys fail loudly instead of wrapping") {
-    GraftFunctions.register(spark)
     import graft.TestSession.spark.implicits._
     val err = intercept[Exception] {
       Seq(5L, 1024L).toDF("k")
@@ -139,7 +133,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("SQL-registered: the whole algebra is reachable from pure SQL") {
-    GraftFunctions.register(spark)
     import graft.TestSession.spark.implicits._
     Seq(1L, 2L, 2L, 3L).toDF("k").createOrReplaceTempView("bm_sql_t")
     val n = spark.sql(

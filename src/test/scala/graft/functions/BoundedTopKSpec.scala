@@ -18,7 +18,6 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("equals the window-rank answer under 1/4/16 partitionings") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("g").orderBy(col("score").desc, col("id").desc)
     val expect = fixture.withColumn("rnk", row_number().over(w))
@@ -37,7 +36,6 @@ class BoundedTopKSpec extends SparkSpec {
 
   test("k larger than the group returns the whole group, descending") {
     import graft.TestSession.spark.implicits._
-    GraftFunctions.register(spark)
     val got = Seq(("a", 3L), ("a", 1L), ("a", 2L)).toDF("g", "v")
       .groupBy("g").agg(GraftFunctions.topKAgg(col("v"), lit(10)).as("top"))
       .select(explode(col("top"))).collect().map(_.getLong(0)).toSeq
@@ -46,7 +44,6 @@ class BoundedTopKSpec extends SparkSpec {
 
   test("duplicates are kept (multiset top-k), nulls ignored, strings orderable") {
     import graft.TestSession.spark.implicits._
-    GraftFunctions.register(spark)
     val df = (Seq.fill(3)(Some("zz")) ++ Seq(Some("aa"), Some("mm"), None))
       .toDF("v").repartition(4)
     val got = df.agg(GraftFunctions.topKAgg(col("v"), lit(4)).as("top"))
@@ -55,7 +52,6 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("SQL registration + state bound: array is never longer than k") {
-    GraftFunctions.register(spark)
     fixture.createOrReplaceTempView("topk_fixture")
     val sizes = spark.sql(
       "SELECT size(topk_agg(struct(score, id), 7)) AS s FROM topk_fixture GROUP BY g")

@@ -17,7 +17,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("superset guarantee: every key with f > n/(m+1) survives any partitioning") {
-    GraftFunctions.register(spark)
     val exact = skewed.groupBy("t").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum
@@ -36,7 +35,6 @@ class MisraGriesSpec extends SparkSpec {
 
   test("grouped: the guarantee holds independently per group") {
     import graft.TestSession.spark.implicits._
-    GraftFunctions.register(spark)
     // group a: heavy = x (60%); group b: heavy = y (75%); both tails
     val df = (Seq.fill(60)(("a", "x")) ++ (1 to 40).map(i => ("a", s"a$i")) ++
       Seq.fill(75)(("b", "y")) ++ (1 to 25).map(i => ("b", s"b$i")))
@@ -50,7 +48,6 @@ class MisraGriesSpec extends SparkSpec {
 
   test("long keys work; nulls are ignored like every aggregate") {
     import graft.TestSession.spark.implicits._
-    GraftFunctions.register(spark)
     val df = (Seq.fill(50)(Some(7L)) ++ (1L to 30L).map(Some(_)) ++
       Seq.fill(10)(None: Option[Long])).toDF("k").repartition(5)
     val ks = df.agg(GraftFunctions.mgTopK(col("k"), lit(3)).as("ks"))
@@ -60,7 +57,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("propose/verify: sketch + exact recount equals the exact heavy-hitter set") {
-    GraftFunctions.register(spark)
     val m = 8
     val cand = skewed.repartition(13)
       .agg(GraftFunctions.mgTopK(col("t"), lit(m)).as("ks"))
@@ -80,7 +76,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("SQL registration: mg_topk callable from pure SQL") {
-    GraftFunctions.register(spark)
     skewed.createOrReplaceTempView("mg_skewed")
     val ks = spark.sql("SELECT explode(mg_topk(t, 5)) AS t FROM mg_skewed")
       .collect().map(_.getString(0)).toSet

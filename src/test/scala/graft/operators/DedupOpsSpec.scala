@@ -101,7 +101,6 @@ class DedupOpsSpec extends SparkSpec {
 
   test("array_agree_count equals the zip_with formulation (randomized) and handles nulls") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val r = new scala.util.Random(7)
     // small value domain forces plenty of positional agreements
     val rows = Seq.fill(500)((

@@ -45,7 +45,6 @@ class LinkageOpsSpec extends SparkSpec {
   }
 
   test("expression eval == codegen kernel over a corpus slice") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val pairs = Seq(("martha", "marhta"), ("teh quick", "the quick"),
       ("column query agg", "column slow agg"), ("", "x")).toDF("a", "b")

@@ -165,7 +165,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("q239: native generator ≡ the explode composition; Generate in the plan") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("g239_docs")
     // bigram form must reproduce q39's declarative composition EXACTLY
     val viaUdtf = spark.sql(

@@ -35,7 +35,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("native cosine_sim is registered for SQL users") {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS s, " +
       "cosine_sim(array(1.0d, 0.0d), array(0.0d, 1.0d)) AS o").head()
@@ -181,7 +180,6 @@ class VectorOpsSpec extends SparkSpec {
 
   test("long_dot/long_sqdist kernels ≡ the declarative folds they replace; codegen, no UDF") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id",
         "transform(embedding, x -> cast(floor(cast(x as double) * 100000.0 + 0.5) as bigint)) iv")
@@ -200,7 +198,6 @@ class VectorOpsSpec extends SparkSpec {
 
   test("long_dot/long_sqdist edge guards ≡ the folds: length mismatch, null element, null array") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // a malformed-ingest fixture: matched pair, truncated pair, null
     // element on either side, a whole-array null — the fold NULLs all of
     // them and the kernel must agree row-by-row

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class BinnedRangeJoinSpec extends SparkSpec {
 
   private def withRule[A](w: Long)(body: => A): A = {
-    BinnedRangeJoin.install(spark)
     spark.conf.set(BinnedRangeJoin.BinWidthKey, w.toString)
     try body finally spark.conf.set(BinnedRangeJoin.BinWidthKey, "0")
   }
@@ -196,7 +195,6 @@ class BinnedRangeJoinSpec extends SparkSpec {
       assert(!p.contains("graft_ptbin"), s"equi joins must not be rewritten:\n$p")
     }
     // disabled (width 0): the BNLJ plan is what Spark natively produces
-    BinnedRangeJoin.install(spark)
     val off = points.join(intervals, col("pt") >= col("lo") && col("pt") <= col("hi"))
     val p0 = off.queryExecution.executedPlan.toString
     assert(p0.contains("BroadcastNestedLoopJoin") || p0.contains("CartesianProduct"))

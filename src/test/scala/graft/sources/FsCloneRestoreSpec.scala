@@ -9,15 +9,13 @@ import org.apache.spark.sql.functions._
 class FsCloneRestoreSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
-  private def cat(): Unit =
-    GraftCatalog.register(spark)
   private def drop(t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft.$t")
     if (FsStore.exists(t)) FsStore.drop(t)
   }
 
   test("clone: shares bytes, keeps history, and survives source vacuum, expiry, and drop") {
-    cat(); drop("fs_cl1"); drop("fs_cl2")
+    drop("fs_cl1"); drop("fs_cl2")
     val src = (0L until 300L).map(k => (k, k % 7)).toDF("k", "v")
     src.filter($"k" < 150L).writeTo("graft.fs_cl1").create()
     src.filter($"k" >= 150L).writeTo("graft.fs_cl1").append()
@@ -44,7 +42,7 @@ class FsCloneRestoreSpec extends SparkSpec {
   }
 
   test("clone: versions loaded by a transaction stay readable after the txn marker expires") {
-    cat(); drop("fs_cl3"); drop("fs_cl4"); drop("fs_cl3d")
+    drop("fs_cl3"); drop("fs_cl4"); drop("fs_cl3d")
     spark.sql("CREATE TABLE graft.fs_cl3 (k BIGINT, v BIGINT)")
     (0L until 80L).map(k => (k, k % 5)).toDF("k", "v")
       .writeTo("graft.fs_cl3d").create()
@@ -68,7 +66,7 @@ class FsCloneRestoreSpec extends SparkSpec {
   }
 
   test("restore: logical rollback with travel to the botched era intact; refusal edges") {
-    cat(); drop("fs_rs1")
+    drop("fs_rs1")
     val src = (0L until 100L).map(k => (k, k % 5)).toDF("k", "v")
     src.writeTo("graft.fs_rs1").create()
     val vGood = FsStore.currentVersion("fs_rs1")
@@ -93,7 +91,7 @@ class FsCloneRestoreSpec extends SparkSpec {
   }
 
   test("restore: a merge-on-read table's masks roll back with the snapshot") {
-    cat(); drop("fsd_rs2")
+    drop("fsd_rs2")
     val src = (0L until 200L).map(k => (k, k % 9)).toDF("k", "v")
     src.writeTo("graft.fsd_rs2").create()
     spark.sql("DELETE FROM graft.fsd_rs2 WHERE k % 4 = 1") // masked delete

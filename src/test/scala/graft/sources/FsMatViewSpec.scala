@@ -11,8 +11,6 @@ import org.apache.spark.sql.functions._
 class FsMatViewSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
-  private def cat(): Unit =
-    GraftCatalog.register(spark)
   private def drop(t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft.$t")
     if (FsStore.exists(t)) FsStore.drop(t)
@@ -30,7 +28,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: seed + append/update/delete refreshes track the base exactly, O(changes) windows") {
-    cat(); drop("fsd_ivb"); drop("fs_ivv"); drop("fs_ivv__ivm")
+    drop("fsd_ivb"); drop("fs_ivv"); drop("fs_ivv__ivm")
     val src = (0L until 600L).map(k => (k, k % 7, k % 13)).toDF("k", "g", "v")
     src.filter($"k" < 200L).writeTo("graft.fsd_ivb").create()
     val seeded = FsMatView.create(spark, "fs_ivv", "fsd_ivb", Seq("g"), Seq("v"))
@@ -70,7 +68,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: definition survives sessions on disk; non-integral SUM and MIN/MAX shapes are refused") {
-    cat(); drop("fs_ivb2"); drop("fs_ivv2")
+    drop("fs_ivb2"); drop("fs_ivv2")
     val src = (0L until 50L).map(k => (k, k % 3, k.toDouble)).toDF("k", "g", "d")
     src.writeTo("graft.fs_ivb2").create()
     // double SUM refused: delta algebra exact only for integral sums
@@ -86,7 +84,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: crashed refresh (scratch left behind) recovers; adopt replay installs nothing") {
-    cat(); drop("fs_ivb3"); drop("fs_ivv3"); drop("fs_ivv3__ivm")
+    drop("fs_ivb3"); drop("fs_ivv3"); drop("fs_ivv3__ivm")
     val src = (0L until 120L).map(k => (k, k % 5, k % 9)).toDF("k", "g", "v")
     src.filter($"k" < 60L).writeTo("graft.fs_ivb3").create()
     FsMatView.create(spark, "fs_ivv3", "fs_ivb3", Seq("g"), Seq("v"))
@@ -107,7 +105,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm delta mode: O(changed groups) writes, repeated masks, death, NULL-group refusal, auto policy") {
-    cat(); drop("fsd_ivd"); drop("fs_ivd")
+    drop("fsd_ivd"); drop("fs_ivd")
     val src = (0L until 1000L).map(k => (k, k % 200, k % 11)).toDF("k", "g", "v")
     src.writeTo("graft.fsd_ivd").create()
     FsMatView.create(spark, "fs_ivd", "fsd_ivd", Seq("g"), Seq("v"))
@@ -160,7 +158,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm chaining: a view over a view stays incremental through the upstream view's CDF") {
-    cat(); drop("fsd_ivc"); drop("fs_ivc1"); drop("fs_ivc2")
+    drop("fsd_ivc"); drop("fs_ivc1"); drop("fs_ivc2")
     val src = (0L until 400L).map(k => (k, k % 40, 1L)).toDF("k", "g", "v")
     src.writeTo("graft.fsd_ivc").create()
     // v1: per-group counts; v2 over v1: how many groups have each size
@@ -182,7 +180,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: NULL values in SUM columns stay SQL-exact through delta AND replace refreshes") {
-    cat(); drop("fsd_ivs"); drop("fs_ivs")
+    drop("fsd_ivs"); drop("fs_ivs")
     // group 0 starts all-NULL (SUM must serve NULL); group 1 mixed
     Seq((1L, 0L, Option.empty[Long]), (2L, 0L, Option.empty[Long]),
       (3L, 1L, Option(5L)), (4L, 1L, Option.empty[Long]))
@@ -216,7 +214,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: auto mode falls back to replace (never throws) when a small window touches the NULL group") {
-    cat(); drop("fsd_ivng"); drop("fs_ivng")
+    drop("fsd_ivng"); drop("fs_ivng")
     (0L until 400L).map(k => (k, Option(k % 40), k % 7))
       .toDF("k", "g", "v").writeTo("graft.fsd_ivng").create()
     FsMatView.create(spark, "fs_ivng", "fsd_ivng", Seq("g"), Seq("v"))
@@ -231,7 +229,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm min/max: inserts fold in incrementally; deletes of the extreme recompute only stale groups") {
-    cat(); drop("fsd_ivm"); drop("fs_ivm")
+    drop("fsd_ivm"); drop("fs_ivm")
     val src = (0L until 300L).map(k => (k, k % 6, k % 50))
       .toDF("k", "g", "v")
     src.writeTo("graft.fsd_ivm").create()
@@ -285,7 +283,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm: endingVersion pins the CDF window against concurrent base commits") {
-    cat(); drop("fs_ivb4")
+    drop("fs_ivb4")
     val src = (0L until 90L).map(k => (k, k % 4)).toDF("k", "v")
     src.filter($"k" < 30L).writeTo("graft.fs_ivb4").create() // v0+v1
     src.filter($"k" >= 30L && $"k" < 60L).writeTo("graft.fs_ivb4").append() // v2
@@ -305,7 +303,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm multi-column groups: canonical gkey masks NULL-bearing tuples; MIN rides append deltas; stale extremes fall back") {
-    cat(); drop("fsd_ivg"); drop("fs_ivg")
+    drop("fsd_ivg"); drop("fs_ivg")
     // 2-column group with NULLs in BOTH columns — the shape single-col
     // masks could never key; gkey (to_json of the group struct) can
     val src = (0L until 600L).map { k =>
@@ -366,7 +364,7 @@ class FsMatViewSpec extends SparkSpec {
   }
 
   test("ivm multi-column groups: gkey distinguishes ambiguous tuple serializations") {
-    cat(); drop("fsd_ivj"); drop("fs_ivj")
+    drop("fsd_ivj"); drop("fs_ivj")
     // adversarial string groups: ("a,b", "c") vs ("a", "b,c") — any
     // naive concat collides; JSON escaping must keep them apart
     Seq((1L, "a,b", "c", 1L), (2L, "a", "b,c", 2L),

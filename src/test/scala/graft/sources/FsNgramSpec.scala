@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
 class FsNgramSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
-  private def cat(): Unit =
-    GraftCatalog.register(spark)
   private def drop(t: String): Unit = spark.sql(s"DROP TABLE IF EXISTS graft.$t")
 
   private def mkTable(name: String): Long = {
-    cat(); drop(name)
+    drop(name)
     // 8 tenants, clustered one per file: tenant grams are file-local
     val src = (0L until 800L).map { k =>
       (k, s"s3://c/tenant${k % 8}.example/obj$k", k % 8)
@@ -103,7 +101,7 @@ class FsNgramSpec extends SparkSpec {
   }
 
   test("binary columns: arbitrary bytes round-trip exactly through write, update, and compaction") {
-    cat(); drop("fs_byt")
+    drop("fs_byt")
     // bytes no string can hold: NULs, high bit, invalid UTF8 sequences
     val rows = (0 until 64).map { i =>
       (i.toLong, Array[Byte](0, -1, i.toByte, -128, (i * 7).toByte))
@@ -146,7 +144,7 @@ class FsNgramSpec extends SparkSpec {
     assert(q.queryExecution.executedPlan.toString.contains("ngramProbes=1"))
     drop("fs_ng4")
     // non-string declaration is refused loudly
-    cat(); drop("fs_ng5")
+    drop("fs_ng5")
     val e = intercept[Exception] {
       spark.sql("""CREATE TABLE graft.fs_ng5 (k BIGINT, v BIGINT)
                   |TBLPROPERTIES ('ngram_blooms'='v')""".stripMargin)

@@ -14,8 +14,6 @@ import org.apache.spark.sql.streaming.Trigger
 class FsTableSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
-  private def cat(): Unit =
-    GraftCatalog.register(spark)
   private def drop(t: String): Unit = spark.sql(s"DROP TABLE IF EXISTS graft.$t")
 
   /** Every parquet file under the table dir (data files only). */
@@ -30,7 +28,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: two-phase parquet commit — create/append round-trip, files on disk, no rows on the driver") {
-    cat(); drop("fs_rt")
+    drop("fs_rt")
     val src = (0L until 1000L).map(k => (k, k * 3 % 97, s"s$k")).toDF("k", "v", "tag")
     src.filter($"k" % 2 === 0).writeTo("graft.fs_rt").create()
     src.filter($"k" % 2 === 1).writeTo("graft.fs_rt").append()
@@ -50,7 +48,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: a failed write job leaves NO files and the committed version intact") {
-    cat(); drop("fs_ab")
+    drop("fs_ab")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_ab").create()
     val before = dataFiles("fs_ab")
     val verBefore = FsStore.currentVersion("fs_ab")
@@ -72,7 +70,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: abort stress — repeated planted-failure appends leave zero orphans under parallel load") {
-    cat(); drop("fs_abst"); drop("fs_abst2")
+    drop("fs_abst"); drop("fs_abst2")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_abst").create()
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_abst2").create()
     val before = dataFiles("fs_abst")
@@ -108,7 +106,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: copy-on-write UPDATE and metadata-free DELETE rewrite through new files") {
-    cat(); drop("fs_cow")
+    drop("fs_cow")
     (0L until 500L).map(k => (k, k % 10)).toDF("k", "v").writeTo("graft.fs_cow").create()
     spark.sql("UPDATE graft.fs_cow SET v = v + 100 WHERE k % 5 = 0")
     spark.sql("DELETE FROM graft.fs_cow WHERE k % 7 = 0")
@@ -121,7 +119,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fsd: merge-on-read delta MERGE — key files mask old data files, no rewrite") {
-    cat(); drop("fsd_mor")
+    drop("fsd_mor")
     (0L until 400L).map(k => (k, k % 13)).toDF("k", "v").writeTo("graft.fsd_mor").create()
     val baseFiles = FsStore.current("fsd_mor").files.map(_.path).toSet
     Seq.tabulate(100)(i => (i * 4L, 999L)) // 100 updates (k % 4 == 0)
@@ -151,7 +149,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fsd: batch CDF reconstructs exact pre/post images at read, startingVersion slices") {
-    cat(); drop("fsd_cdf")
+    drop("fsd_cdf")
     (0L until 300L).map(k => (k, k % 11)).toDF("k", "v").writeTo("graft.fsd_cdf").create()
     Seq.tabulate(30)(i => (i * 10L, -1L)).toDF("k", "v")
       .createOrReplaceTempView("fsd_cdf_src")
@@ -174,7 +172,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: schema evolution — ADD, WIDEN int->bigint, VERSION AS OF keeps the narrow type, DROP cannot resurrect") {
-    cat(); drop("fs_evo")
+    drop("fs_evo")
     // int value column: the widening target
     (0 until 200).map(k => (k.toLong, k % 7)).toDF("k", "v").writeTo("graft.fs_evo").create()
     val vNarrow = FsStore.currentVersion("fs_evo")
@@ -221,7 +219,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF under the injectable commit clock (fs and mem); clock-free tables refuse") {
-    cat(); drop("fs_tt"); drop("mem_tt")
+    drop("fs_tt"); drop("mem_tt")
     try {
       GraftClock.set(1000000L, 1000L) // ms: v0=1000000, each commit +1s
       (0L until 50L).map(k => (k, 1L)).toDF("k", "v").writeTo("graft.fs_tt").create()
@@ -256,7 +254,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs change feed: plain feed paces one version per batch; byte budget splits a fat commit") {
-    cat(); drop("fs_feed")
+    drop("fs_feed")
     // incompressible-ish payload (md5 hex per row) so the manifest's
     // parquet byte counts actually scale with rows
     val src = (0L until 3000L).map(k =>
@@ -293,7 +291,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("mem change feed: composed row+byte budgets — wide rows split on bytes, totals intact") {
-    cat(); drop("mem_fat")
+    drop("mem_fat")
     val fat = (0L until 400L).map(k => (k, "y" * 500)).toDF("k", "payload")
     fat.writeTo("graft.mem_fat").create() // one fat commit, ~500B+ rows
     val q = spark.readStream
@@ -313,7 +311,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: plain feed refuses non-append history; __changes serves it typed") {
-    cat(); drop("fs_ref")
+    drop("fs_ref")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_ref").create()
     spark.sql("UPDATE graft.fs_ref SET v = 0 WHERE k % 2 = 0") // CoW: non-append
     val q = spark.readStream.table("graft.fs_ref")
@@ -335,7 +333,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: snapshot expiry + vacuum — expired versions error loudly, orphans reclaimed, shared files survive") {
-    cat(); drop("fs_gc")
+    drop("fs_gc")
     (0L until 300L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_gc").create()
     (300L until 600L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_gc").append()
     (600L until 900L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_gc").append()
@@ -364,7 +362,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: expiry + vacuum reclaim files once their last referencing version expires (CoW history)") {
-    cat(); drop("fs_gc2")
+    drop("fs_gc2")
     (0L until 200L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_gc2").create()
     val oldFiles = FsStore.current("fs_gc2").files.map(_.path)
     spark.sql("UPDATE graft.fs_gc2 SET v = 0 WHERE k >= 0") // v2 CoW: new files
@@ -388,7 +386,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: zone-map skipping and column pruning are plan-visible; masked prune strips the internal key") {
-    cat(); drop("fs_zp")
+    drop("fs_zp")
     (0L until 800L).map(k => (k, k % 13, s"pay$k"))
       .toDF("k", "v", "pay")
       .repartitionByRange(8, $"k")
@@ -438,7 +436,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs streaming sink: manifest epoch high-water mark makes replays no-ops that delete their files") {
-    cat(); drop("fs_ep")
+    drop("fs_ep")
     spark.sql("CREATE TABLE graft.fs_ep (k BIGINT)")
     import org.apache.spark.sql.catalyst.InternalRow
     def fileOf(tag: String, ks: Seq[Long]): FsStore.FileRef = {
@@ -467,7 +465,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: NULL values round-trip through the parquet files (optional fields)") {
-    cat(); drop("fs_null")
+    drop("fs_null")
     val src = (0L until 200L).map { k =>
       (k,
         if (k % 3 == 0) None else Some(k * 2),
@@ -485,7 +483,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: concurrent commits — appends all serialize via optimistic retry; snapshot-dependent losers stay loud, orphans vacuumable") {
-    cat(); drop("fs_race")
+    drop("fs_race")
     spark.sql("CREATE TABLE graft.fs_race (k BIGINT)")
     import org.apache.spark.sql.catalyst.InternalRow
     val threads = 8
@@ -566,7 +564,7 @@ class FsTableSpec extends SparkSpec {
     // sized so same-id contention is the COMMON case (16 threads hammering
     // one table) and asserts BOTH head == total and that no thread died
     // with any uncaught throwable.
-    cat(); drop("fs_storm")
+    drop("fs_storm")
     spark.sql("CREATE TABLE graft.fs_storm (k BIGINT)")
     import org.apache.spark.sql.catalyst.InternalRow
     val threads = 16
@@ -608,7 +606,7 @@ class FsTableSpec extends SparkSpec {
   // (companion helpers at the bottom of the file)
 
   test("fs: TRUNCATE + catalog listing + unsupported column type refused at create") {
-    cat(); drop("fs_misc")
+    drop("fs_misc")
     (0L until 10L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_misc").create()
     assert(spark.sql("SHOW TABLES IN graft").collect()
       .map(_.getString(1)).contains("fs_misc"))
@@ -630,7 +628,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: nested struct/map columns — leaf zone maps prune, nested evolution by field id, row ≡ columnar, masked MoR") {
-    cat(); drop("fs_nest")
+    drop("fs_nest")
     val src = spark.range(0, 40000).select(
       $"id".as("k"),
       struct(
@@ -744,7 +742,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: vectorized scan — ColumnarToRow in the plan, row ≡ columnar across pruning/evolution/count(*)/masks") {
-    cat(); drop("fs_vec")
+    drop("fs_vec")
     val src = (0L until 50000L)
       .map(k => (k, (k % 1000).toInt, k * 0.5, s"name$k", k % 3 == 0))
       .toDF("k", "c", "x", "nm", "flag")
@@ -831,7 +829,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fsd: string-keyed masks — compact Strings shape, exact under columnar AND row readers") {
-    cat(); drop("fsd_skey")
+    drop("fsd_skey")
     val src = (0L until 20000L).map(k => (f"uuid-$k%08d-suffix", k))
       .toDF("id", "v")
     src.writeTo("graft.fsd_skey").create()
@@ -872,7 +870,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: row-group scan splits — one skewed file fans out to many tasks, masks/evolution intact, row ≡ columnar") {
-    cat(); drop("fsd_split")
+    drop("fsd_split")
     // manufacture ONE skewed multi-group file: tiny row groups + one
     // writer task (at production sizes: a 10 GB compaction output with
     // 128 MB groups)
@@ -924,7 +922,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: composite partition spec — days(ts) x identity(shard) tuple routing + conjunctive pruning; hours/months/years granularities") {
-    cat(); drop("fs_comp")
+    drop("fs_comp")
     // 3 days x 4 shards (+ a NULL-shard sliver): the date+shard fact
     // layout the r11 verdict named as the second-most-common spec
     val t0us = 1709251200000000L // 2024-03-01 00:00:00 UTC in µs
@@ -1048,7 +1046,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: identity/days partitioning — per-value routing, NULL partition, pruning, rewrite keeps layout") {
-    cat(); drop("fs_idp")
+    drop("fs_idp")
     // identity over a nullable group column: one file per value per
     // task, plus a dedicated (never value-pruned) NULL-partition file
     val src = (0L until 900L)
@@ -1099,7 +1097,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: per-column zone maps — non-key conjuncts skip files, NaN/NULL stay sound, stats survive rename") {
-    cat(); drop("fs_zm2")
+    drop("fs_zm2")
     // cluster on the NON-key column v so first-column key ranges overlap
     // but v windows are disjoint per file
     val src = (0L until 40000L).map(k => (k % 1000, k, s"u${k % 7}"))
@@ -1161,7 +1159,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: warehouse types — decimal/timestamp/date/array round-trip on both read paths, timestamp zone maps skip") {
-    cat(); drop("fs_types")
+    drop("fs_types")
     val src = spark.range(0, 20000).select(
       $"id".as("k"),
       ($"id" % 1000).cast("decimal(12,2)").as("price"),
@@ -1208,7 +1206,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: bucket x value composition + truncate(w) — SPJ stays exchange-free while windows prune") {
-    cat(); drop("fs_bv1"); drop("fs_bv2")
+    drop("fs_bv1"); drop("fs_bv2")
     // the fact layout at scale: bucket(4, k) for exchange-free joins,
     // days(ts) for time-window pruning — composed in one spec
     val t0us = 1709251200000000L // 2024-03-01 UTC µs
@@ -1282,7 +1280,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: bucket partition spec — fs-fs join exchange-free, CoW keeps buckets, point lookups prune, fsd refused") {
-    cat(); drop("fs_bk1"); drop("fs_bk2")
+    drop("fs_bk1"); drop("fs_bk2")
     spark.sql("CREATE TABLE graft.fs_bk1 (k BIGINT, v BIGINT) PARTITIONED BY (bucket(4, k))")
     spark.sql("CREATE TABLE graft.fs_bk2 (k BIGINT, w BIGINT) PARTITIONED BY (bucket(4, k))")
     (0L until 20000L).map(k => (k, k * 3 % 101)).toDF("k", "v")
@@ -1345,7 +1343,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: compaction — streaming-sink small files bin-pack, epochs/replay/time-travel intact, old files vacuum after expiry") {
-    cat(); drop("fs_cpk")
+    drop("fs_cpk")
     spark.sql("CREATE TABLE graft.fs_cpk (k BIGINT, v BIGINT)")
     import org.apache.spark.sql.catalyst.InternalRow
     def fileOf(tag: String, ks: Seq[Long]): FsStore.FileRef = {
@@ -1402,7 +1400,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs CDF: whole-change key-filtered slices plan file-parallel; budget-cut partial slices stay sequential") {
-    cat(); drop("fsd_par")
+    drop("fsd_par")
     (0L until 8000L).map(k => (k, k % 13)).toDF("k", "v")
       .repartition(4).writeTo("graft.fsd_par").create() // 4 base files
     spark.sql("DELETE FROM graft.fsd_par WHERE k % 9 = 2") // v2: delta keys
@@ -1444,7 +1442,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs CDF: append-only windows read COLUMNAR with constant metadata vectors; a masked window falls back") {
-    cat(); drop("fsd_cdfc")
+    drop("fsd_cdfc")
     val src = (0L until 500L).map(k => (k, k % 13)).toDF("k", "v")
     src.filter($"k" < 200L).writeTo("graft.fsd_cdfc").create() // v0+v1
     src.filter($"k" >= 200L).writeTo("graft.fsd_cdfc").append() // v2
@@ -1474,7 +1472,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: aggregate pushdown answers COUNT/MIN/MAX from the manifest; grouping/SUM/filters/statless/masks decline") {
-    cat(); drop("fs_agp2")
+    drop("fs_agp2")
     val src = (0L until 30000L)
       .map(k => (k, k * 7 % 1009, s"t${k % 97}", Option.empty[java.lang.Long]))
       .toDF("k", "v", "tag", "nul")
@@ -1524,7 +1522,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: runtime filtering — a broadcast join's key set prunes fact files by bucket and zone map") {
-    cat(); drop("fs_rtp")
+    drop("fs_rtp")
     spark.sql("CREATE TABLE graft.fs_rtp (k BIGINT, v BIGINT) PARTITIONED BY (bucket(8, k))")
     (0L until 80000L).map(k => (k, k * 3 % 1009)).toDF("k", "v")
       .writeTo("graft.fs_rtp").append()
@@ -1555,7 +1553,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: LIMIT-abandoned scans leak no parquet file handles (reader close propagates)") {
-    cat(); drop("fs_fd")
+    drop("fs_fd")
     val src = (0L until 20000L).map(k => (k, k * 7 % 101)).toDF("k", "v")
       .repartition(4)
     src.writeTo("graft.fs_fd").create()
@@ -1579,7 +1577,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: TIMESTAMP AS OF resolves retained versions after expiry; pre-history stays loud") {
-    cat(); drop("fs_ttx")
+    drop("fs_ttx")
     val t0 = 1700000000000L
     GraftClock.set(t0, 60000L)
     try {
@@ -1600,7 +1598,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: a commit racing a concurrent ALTER fails loudly instead of mis-tagging files") {
-    cat(); drop("fs_alt")
+    drop("fs_alt")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_alt").create()
     val staleSchemaId = FsStore.current("fs_alt").schemaId
     spark.sql("ALTER TABLE graft.fs_alt ADD COLUMN extra BIGINT") // schema moves on
@@ -1620,7 +1618,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: vacuum's retention window spares young unreferenced files (in-flight write safety)") {
-    cat(); drop("fs_vr")
+    drop("fs_vr")
     (0L until 10L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_vr").create()
     // simulate an in-flight two-phase write: a task file exists, its
     // manifest does not yet
@@ -1637,7 +1635,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs change feed: a post-ALTER append fails with the explicit restart error, not IndexOutOfBounds") {
-    cat(); drop("fs_cfalt")
+    drop("fs_cfalt")
     (0L until 30L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_cfalt").create()
     val feed = new FsChangeFeed("fs_cfalt", cdf = false, startingVersion = None,
       maxRowsPerBatch = Long.MaxValue, maxBytesPerBatch = Long.MaxValue)
@@ -1655,7 +1653,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: bloom-filter skipping — point lookups prune scattered files, absent probes read nothing, NULL/overflow sound") {
-    cat(); drop("fs_bl")
+    drop("fs_bl")
     import FsTableSpec.md5Hex
     // scattered high-cardinality string + long columns: every file's
     // zone map spans ~the whole value space, only blooms can prune
@@ -1732,7 +1730,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fsd: bloom skipping composes with merge-on-read masks; vacuum spares referenced sidecars") {
-    cat(); drop("fsd_bl")
+    drop("fsd_bl")
     import FsTableSpec.md5Hex
     spark.sql("""CREATE TABLE graft.fsd_bl (k BIGINT, tag STRING)
                 |TBLPROPERTIES ('blooms'='tag')""".stripMargin)
@@ -1764,7 +1762,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: z-order rewrite — a 2-D box opens ≤4 of 16 files, contents and time travel intact, refusals loud") {
-    cat(); drop("fs_zo")
+    drop("fs_zo")
     // exact 64×64 grid scaled to the upper value range: a box aligned to
     // the curve's quarters lands in ONE contiguous z-slice
     val grid = (0L until 4096L).map { i =>
@@ -1857,7 +1855,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: WAP branches — staged commits isolated, fast-forward publish atomic, diverged main refuses, vacuum honors refs") {
-    cat(); drop("fs_wb")
+    drop("fs_wb")
     FsStore.branchesOf("fs_wb").foreach(FsStore.drop)
     (0L until 400L).map(k => (k, k % 9)).toDF("k", "v")
       .writeTo("graft.fs_wb").create()
@@ -1930,7 +1928,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: rebucket — partition evolution flips the spec, the evolved table joins exchange- and sort-free, time travel keeps the old layout") {
-    cat(); drop("fs_pe1"); drop("fs_pe2")
+    drop("fs_pe1"); drop("fs_pe2")
     spark.sql("CREATE TABLE graft.fs_pe1 (k BIGINT, v BIGINT)") // unbucketed
     spark.sql("CREATE TABLE graft.fs_pe2 (k BIGINT, w BIGINT) PARTITIONED BY (bucket(4, k))")
     (0L until 8000L).map(k => (k, k * 3 % 101)).toDF("k", "v")
@@ -1994,7 +1992,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: sorted compaction — bin-packed buckets k-way merge, the OPTIMIZEd table keeps its sort-free SPJ") {
-    cat(); drop("fs_sc1"); drop("fs_sc2")
+    drop("fs_sc1"); drop("fs_sc2")
     spark.sql("CREATE TABLE graft.fs_sc1 (k BIGINT, v BIGINT) PARTITIONED BY (bucket(4, k))")
     spark.sql("CREATE TABLE graft.fs_sc2 (k BIGINT, w BIGINT) PARTITIONED BY (bucket(4, k))")
     // two appends whose keys INTERLEAVE inside every bucket (bucket b
@@ -2045,7 +2043,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: metadata relations — __history labels every commit shape, __files mirrors the manifest, branch reads via VERSION AS OF '<name>'") {
-    cat(); drop("fsd_mh")
+    drop("fsd_mh")
     // merge-on-read table: create → append → MERGE → DELETE → ALTER
     (0L until 200L).map(k => (k, k % 7)).toDF("k", "v")
       .writeTo("graft.fsd_mh").create()
@@ -2107,7 +2105,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: CDF startingTimestamp — the feed starts at the first version committed at or after t (Delta's contract)") {
-    cat(); drop("fs_st")
+    drop("fs_st")
     GraftClock.set(1000L, 100L)
     try {
       (0L until 10L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_st").create()
@@ -2136,7 +2134,7 @@ class FsTableSpec extends SparkSpec {
   }
 
   test("fs: null-count skipping — IS NULL opens only null-bearing files, all-NULL files drop from ordinary scans via implicit IsNotNull") {
-    cat(); drop("fs_nl")
+    drop("fs_nl")
     // 8 range-clustered files; v is NULL on the first quarter of keys
     // (range boundaries are sampled, so the null region must span whole
     // files with margin for at least one to be provably all-NULL)

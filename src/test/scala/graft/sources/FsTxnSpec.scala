@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class FsTxnSpec extends SparkSpec {
   import graft.TestSession.spark.implicits._
 
-  private def cat(): Unit =
-    GraftCatalog.register(spark)
   private def drop(t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft.$t")
     if (FsStore.exists(t)) FsStore.drop(t)
@@ -21,7 +19,7 @@ class FsTxnSpec extends SparkSpec {
   private def count(t: String): Long = spark.table(s"graft.$t").count()
 
   private def mkTables(fact: String, summ: String): Unit = {
-    cat(); drop(fact); drop(summ)
+    drop(fact); drop(summ)
     (0L until 100L).map(k => (k, k % 10)).toDF("k", "v")
       .writeTo(s"graft.$fact").create()
     (0L until 10L).map(g => (g, 10L)).toDF("g", "n")

@@ -432,7 +432,6 @@ class EventStreamsSpec extends SparkSpec {
   test("q225: BinnedRangeJoin rewrites the stream-static interval join per micro-batch") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.BinnedRangeJoin.install(spark)
     spark.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "100")
     try {
       val ivs = Seq((1L, 50L, 149L), (2L, 300L, 420L), (3L, 900L, 950L))
