@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * the planner strategy [[graft.plans.AsofJoinStrategy]] and the `graft`
   * catalog ([[graft.sources.GraftCatalog]]).
   *
-  * Idempotent and cheap (17 registry lookups, two `contains`, one conf
+  * Idempotent and cheap (16 registry lookups, two `contains`, one conf
   * set), so [[QueryDef.run]] calls it on every run and a query's plan does
   * not depend on which queries ran before it. `synchronized` makes each
   * read-modify-write of the session's rule and strategy lists atomic. The

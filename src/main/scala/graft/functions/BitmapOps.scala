@@ -19,7 +19,8 @@ import org.apache.spark.sql.types._
   * `ceil(domain/64)*8` of them, so the binary value — and any hash of
   * it — is independent of partitioning and input order). The scalar
   * companions then give exact set algebra WITHOUT re-touching the fact
-  * table: `bitmap_count` popcounts, `bitmap_and`/`bitmap_or`
+  * table: `bitmap_count` (Spark's builtin, which popcounts the same
+  * bytes) counts, `bitmap_and`/`bitmap_or`
   * intersect/union — so "users in BOTH segments" is arithmetic over two
   * aggregated values instead of a self-join of the fact table.
   *
@@ -256,23 +257,6 @@ case class BitmapPositions(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "bitmap_positions"
-}
-
-/** Popcount of a bitmap's set bits (exact distinct count). */
-case class BitmapCount(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bitmap_count expects binary, got ${other.sql}")
-  }
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any): Any =
-    BitmapAlg.countBytes(a.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.BitmapAlg.countBytes($a)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "bitmap_count"
 }
 
 abstract class BitmapBinaryAlg extends BinaryExpression {

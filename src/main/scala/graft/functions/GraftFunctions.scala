@@ -41,8 +41,6 @@ object GraftFunctions {
     // domain distinct sets, O(domain/8) state per group (see BitmapOps)
     ("bitmap_build", classOf[BitmapBuild].getName,
       children => BitmapBuild(children(0), children(1))),
-    ("bitmap_count", classOf[BitmapCount].getName,
-      children => BitmapCount(children(0))),
     ("bitmap_and", classOf[BitmapAnd].getName,
       children => BitmapAnd(children(0), children(1))),
     ("bitmap_or", classOf[BitmapOr].getName,
@@ -93,7 +91,8 @@ object GraftFunctions {
   def bitmapBuild(key: Column, domain: Column): Column =
     call_function("bitmap_build", key, domain)
 
-  /** Popcount of a bitmap (exact distinct count). */
+  /** Popcount of a bitmap (exact distinct count): Spark's builtin
+    * `bitmap_count`, which counts the set bits of any binary. */
   def bitmapCount(b: Column): Column = call_function("bitmap_count", b)
 
   /** Bitmap intersection. */

@@ -154,8 +154,8 @@ object DedupOps {
     *     join's output — 64 integer ops per collision row, evaluated
     *     BEFORE any further exchange. Band buckets are heavy-tailed (a
     *     globally common min-shingle can put a large corpus fraction in
-    *     one bucket: measured 47M collision rows for 10k synthetic docs,
-    *     ScaleSmoke), so collision multiplicity must never be shuffled or
+    *     one bucket: measured 47M collision rows for 10k synthetic docs),
+    *     so collision multiplicity must never be shuffled or
     *     joined: no broadcast (scale-capped), no signature re-join
     *     (shuffles the collision rows) — the payload-carrying join is the
     *     construction ml's approxSimilarityJoin uses, and the only wide
@@ -171,7 +171,7 @@ object DedupOps {
     * equals the exact answer. */
   /** Banded rows (doc_id, sigv, bhash): one row per (doc, band), carrying
     * the full signature array — the band join's input. Shared by
-    * [[verifiedPairs]] and the ScaleSmoke bucket-health probe so a band
+    * [[verifiedPairs]] and the [[graft.Scale]] bucket-health probe so a band
     * retuning cannot silently diverge the two. */
   def banded(s: SparkSession, d: String, cap: Long): DataFrame =
     signatures(s, d, cap).select(
@@ -496,7 +496,7 @@ object DedupOps {
     * Jaccard 0.16 — degrades it toward quadratic while recall stays
     * exact. That trade is the point of having BOTH this and MinHash. */
   /** The candidate ENGINE on any distinct (doc_id, sh) frame — exposed so
-    * ScaleSmoke can drive the same plan at 200k+ docs with its own
+    * [[graft.Scale]] can drive the same plan at scale with its own
     * (large-space) shingle definition. `tenths` is the Jaccard threshold
     * ×10; prefix length is sz − ⌈t·sz⌉ + 1 (⌈t₁₀·sz/10⌉ = (t₁₀·sz+9) div
     * 10, integer-exact). */
@@ -579,7 +579,7 @@ object DedupOps {
     * containee's shingles can sit anywhere in the container's rarity
     * order). Exact recall by the same lemma as q87. */
   /** The containment candidate ENGINE on any distinct (doc_id, sh) frame
-    * (exposed for ScaleSmoke, like [[prefixCandidatesOf]]). */
+    * (exposed for [[graft.Scale]], like [[prefixCandidatesOf]]). */
   private[graft] def containCandidatesOf(sh: DataFrame, tenths: Int): DataFrame = {
     val freq = sh.groupBy("sh").agg(count(lit(1)).as("f"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))

@@ -1904,9 +1904,8 @@ object MiningOps {
     * the same counts from DISTINCT + IN and the hashes must match.
     * Domain 2^18 (32 KB/group) covers the custkey space at every SF
     * with the out-of-domain guard failing loudly if data outgrows it.
-    * ScaleSmoke phase 17 (`bm_*`): 50M rows × 8 groups over a 2^24
-    * domain — bitmap 1.9 s vs COUNT(DISTINCT)'s two-shuffle Expand
-    * 7.6 s, counts identical;
+    * The [[graft.Scale]] `bm` phase times it against COUNT(DISTINCT)'s
+    * two-shuffle Expand at scale, counts identical;
     * BitmapSpec pins build ≡ countDistinct across partitionings, the
     * algebra against set ops, merge determinism of the binary
     * encoding, and the guard. */

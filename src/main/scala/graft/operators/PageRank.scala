@@ -704,7 +704,7 @@ object PageRank {
 
   /** Final labels after [[LpaRounds]] synchronous mode-label rounds over
     * the (v, u) neighbor relation — shared by q160, q170 and the
-    * ScaleSmoke community phase. */
+    * [[graft.Scale]] `lpa` phase. */
   def lpaLabels(nbr: DataFrame): DataFrame = {
     var labels = nbr.select(col("v")).distinct()
       .withColumn("lbl", col("v")).localCheckpoint()

@@ -118,7 +118,7 @@ object PipelineOps {
     * shuffles total, both on keys that grow linearly with the corpus. */
   /** The q74 engine on any (doc_id, text) frame: per doc — total spans,
     * surviving (corpus-first-occurrence) spans, and the reassembled text.
-    * Exposed for [[graft.ScaleSmoke]]'s million-doc phase. */
+    * Exposed for the [[graft.Scale]] `span` phase. */
   def spanDedup(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // zero-token guard: sequence(0, floor(-1/8)) would yield a DESCENDING
     // [0,-1] — two phantom empty spans — where the oracle's range(0,0) is
@@ -536,8 +536,8 @@ object PipelineOps {
     * + exact rescan of flagged grams only, the q132 sketch-proposes/
     * rescan-disposes discipline). Islands re-shuffle only FLAGGED
     * positions, keyed by doc. */
-  /** The q138 engine on any (doc_id, text) frame — exposed for
-    * [[graft.ScaleSmoke]]'s planted-slogan phase. */
+  /** The q138 engine on any (doc_id, text) frame — exposed for the
+    * [[graft.Scale]] `sub` phase. */
   def substringDedup(docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val K = SubstrK
     val docs = docsIn

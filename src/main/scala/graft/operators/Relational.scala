@@ -979,11 +979,9 @@ object Relational {
     * kind (matched / point_only / iv_only) — so dropping either unmatched
     * branch, double-counting a bin, or breaking multiplicity is a hash
     * mismatch, not a plan regression. Oracle: DuckDB's plain FULL JOIN
-    * theta over the same frames. ScaleSmoke `fo_*`: 2M points × 50k
-    * intervals (1e11-pair nested loop naively) → 999,989 matched /
-    * 1,213,689 pt-only / 0 iv-only in 5.3 s, both sides proven to tile
-    * exactly (padded + distinct-matched = side cardinality) and the
-    * planted interval exact. */
+    * theta over the same frames. The [[graft.Scale]] `fo` phase runs the
+    * same rewrite at scale and checks that both sides tile exactly
+    * (padded + distinct-matched = side cardinality). */
   val q246FullOuterIntervalJoin = QueryDef(
     "q246_interval_join_full_outer",
     (s, d) => {
@@ -1143,8 +1141,8 @@ object Relational {
     *
     * Honest batch-perf note: since 3.5 Spark's own WindowGroupLimit
     * prunes rank-filter windows map-side too, so on a pure batch top-k
-    * the two plans measure comparably (ScaleSmoke `tk_*`: 10M rows ×
-    * 1k groups, heap-agg ≈ window on local[32]). The aggregate's
+    * the two plans measure comparably (the [[graft.Scale]] `tk` phase
+    * times both). The aggregate's
     * structural advantages are what the window form cannot do at all:
     * it COMPOSES with other aggregates in the same `agg(...)` pass
     * (one scan instead of window-then-join), carries no sort, and its

@@ -337,8 +337,8 @@ object VectorOps {
     * (1 − 0.98^16)^16 ≈ 1e-9; a random pair collides somewhere with
     * probability 16/2^16 ≈ 0.02%, all killed by the verify — the output
     * equals the exact quadratic answer, which IS the oracle. */
-  /** q68's engine, reusable at any scale (ScaleSmoke phase 3 drives it at
-    * 200k+ vectors): banded LSH near-dup pairs over (vec_id, v) rows with
+  /** q68's engine, reusable at any scale (the [[graft.Scale]] `vnd` phase
+    * drives it): banded LSH near-dup pairs over (vec_id, v) rows with
     * an inline exact-cosine verify at `threshold`. */
   def lshNearDupPairs(allv: DataFrame, threshold: Double): DataFrame = {
     val bandHashes = (0 until PairBands).map { b =>
@@ -1297,7 +1297,7 @@ object VectorOps {
     * rungs — per rung the candidate filter is a semi-join against ≤ 8
     * probe cids and the rankings window over candidate lists, never the
     * corpus. The production analogue partition-prunes by cid
-    * (`partitionBy(cid)` layout, ScaleSmoke phase 2's 6.8%-of-rows
+    * (`partitionBy(cid)` layout, the [[graft.Scale]] `ann` phase's
     * probe), with identical semantics. */
   val q226IvfRecallSweep = QueryDef(
     "q226_ivf_recall_sweep",

@@ -490,12 +490,7 @@ object FsStore {
 
   // ---------------------------------------------------------------- root
 
-  @volatile private var rootOverride: Option[String] = None
-  private lazy val defaultRoot =
-    Files.createTempDirectory("graft_fs").toString
-  /** Test/smoke hook: relocate the store (e.g. a per-phase scratch dir). */
-  def setRoot(path: String): Unit = rootOverride = Some(path)
-  def root: String = rootOverride.getOrElse(defaultRoot)
+  lazy val root: String = Files.createTempDirectory("graft_fs").toString
 
   def tableDir(name: String): JPath = Paths.get(root, name)
   /** Directory listing that CLOSES the stream: `Files.list` holds an OS

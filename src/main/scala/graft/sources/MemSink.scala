@@ -127,13 +127,14 @@ object MemStore {
     * from the latest version, append with the next version id, expire
     * past [[MaxVersions]]. If `next` throws mid-derivation, `compute`
     * rethrows and the mapping is left UNCHANGED — a failed commit never
-    * exposes a partial version and never burns a version id. */
-  private def install(name: String)(next: MemVersion =>
+    * exposes a partial version and never burns a version id. `cap` is
+    * [[MaxCommittedRows]]; the spec passes a tiny one to force the gate. */
+  private[sources] def install(name: String, cap: Long = MaxCommittedRows)(next: MemVersion =>
       (StructType, Vector[InternalRow], Vector[(String, InternalRow)])): Unit =
     tables.compute(name, (_, prev) => {
       val last = prev.last
       val (schema, rows, changes) = next(last)
-      requireCapacity(name, rows.size.toLong)
+      requireCapacity(name, rows.size.toLong, cap)
       (prev :+ MemVersion(last.id + 1, schema, rows, changes,
         GraftClock.next()))
         .takeRight(MaxVersions)
@@ -273,7 +274,7 @@ object MemStore {
       if (epochId <= lastEpoch.getOrDefault(key, -1L)) prev // replay: no-op
       else {
         val next = last.rows ++ rows
-        requireCapacity(name, next.size.toLong)
+        requireCapacity(name, next.size.toLong, MaxCommittedRows)
         lastEpoch.put(key, epochId) // inside compute: serialized per table
         (prev :+ MemVersion(last.id + 1, last.schema, next,
           rows.iterator.map((OpInsert, _)).toVector,
@@ -281,10 +282,10 @@ object MemStore {
       }
     })
 
-  private def requireCapacity(name: String, wouldBe: Long): Unit =
-    require(wouldBe <= MaxCommittedRows,
+  private def requireCapacity(name: String, wouldBe: Long, cap: Long): Unit =
+    require(wouldBe <= cap,
       s"graft_mem($name): commit would install $wouldBe rows > " +
-        s"MaxCommittedRows=$MaxCommittedRows — the in-memory sink is " +
+        s"MaxCommittedRows=$cap — the in-memory sink is " +
         "driver-bounded by design; write a file-backed table instead")
 }
 

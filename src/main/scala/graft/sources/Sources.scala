@@ -27,11 +27,6 @@ object Sources {
   def readCsv(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.schema(schema).option("header", "true").csv(path)
 
-  /** Schema-less CSV ingest (inference forces an extra pass — only for
-    * exploration, never at scale). */
-  def readCsvInfer(s: SparkSession, path: String): DataFrame =
-    s.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   def readJson(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.schema(schema).json(path)
 

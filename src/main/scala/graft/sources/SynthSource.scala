@@ -1226,10 +1226,9 @@ object SynthSource {
     * recorded at commit): a delete served as an append stream would
     * silently corrupt downstream aggregates (SourcesSpec pins the
     * refusal and the ≥3-batch pacing; the `__changes` relation streams
-    * typed history instead — q280). Scale story: ScaleSmoke phase 18
-    * drains a 10M-row / 8-commit history (`cf_*` keys in
-    * SCALE_SMOKE.json — rows/sec, version-paced vs 400k-row-budget
-    * batch counts).
+    * typed history instead — q280). Scale story: the [[graft.Scale]]
+    * `cf` phase drains a 10M-row / 8-commit history version-paced and
+    * row-budgeted (`cf_*` figures in SCALE_SMOKE.json).
     *
     * Cost floor (round-8 profile): build ~0.8 s warm (memoized across
     * bench repeats — the measured subject is the DRAIN) + 3 stateless

@@ -45,14 +45,6 @@ object EventStreams {
       .select(col("window.start").as("w_start"), col("event_type"), col("cnt"),
         col("sum_dec").cast(DecimalType(18, 4)).cast(DoubleType).as("sum_value"))
 
-  /** Sliding windows (1h every 30m). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("w_start"), col("cnt"))
-
   /** Session windows with a 30-min inactivity gap per user — the streaming
     * twin of EventOps.q32 (same end-exclusive gap semantics). */
   def sessionAgg(events: DataFrame, gap: String = "30 minutes"): DataFrame =

@@ -18,7 +18,7 @@ class SetupSpec extends SparkSpec {
   private val functionNames = Seq(
     "cosine_sim", "array_agree_count", "word_ngrams", "long_dot", "long_sqdist",
     "jaro_winkler", "damerau_levenshtein", "mg_topk", "topk_agg",
-    "bitmap_build", "bitmap_count", "bitmap_and", "bitmap_or", "bitmap_merge",
+    "bitmap_build", "bitmap_and", "bitmap_or", "bitmap_merge",
     "bitmap_and_not", "bitmap_positions", "might_contain")
 
   private def exists(s: SparkSession, name: String): Boolean =

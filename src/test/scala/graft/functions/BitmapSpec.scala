@@ -31,6 +31,18 @@ class BitmapSpec extends SparkSpec {
     }
   }
 
+  test("bitmap_count resolves to Spark's builtin and popcounts graft-built bitmaps like BitmapAlg") {
+    val counted = fixture.groupBy("g")
+      .agg(GraftFunctions.bitmapBuild(col("k"), lit(1024)).as("bm"))
+      .select(col("bm"), GraftFunctions.bitmapCount(col("bm")).as("n"))
+    val resolved = counted.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case e if e.prettyName == "bitmap_count" => e.getClass.getName })
+    assert(resolved == Seq("org.apache.spark.sql.catalyst.expressions.BitmapCount"))
+    val rows = counted.collect()
+    assert(rows.length == 2)
+    rows.foreach(r => assert(r.getLong(1) == BitmapAlg.countBytes(r.getAs[Array[Byte]](0))))
+  }
+
   test("binary encoding is deterministic: same set, any partitioning, same bytes") {
     val images = Seq(1, 5, 32).map { parts =>
       fixture.repartition(parts).filter(col("g") === "a")

@@ -149,7 +149,7 @@ class PipelineOpsSpec extends SparkSpec {
     // prefix there; exactness still holds, which is q87's oracle claim).
     // Measure selectivity where the technique operates: a gibberish corpus
     // with background Jaccard ~0 and planted near-dup copies — the same
-    // experimental design as ScaleSmoke.
+    // experimental design as the graft.Scale `sub` phase.
     import org.apache.spark.sql.functions._
     val n = 1000L
     val body = concat_ws("", (0 until 5).map(c =>

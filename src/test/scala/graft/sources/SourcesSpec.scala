@@ -1041,6 +1041,25 @@ class SourcesSpec extends SparkSpec {
     MemStore.drop(name)
   }
 
+  test("MemStore capacity gate: a commit at the cap installs, one past it is refused whole") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val name = "mem_capspec"
+    def append(ks: Long*)(v: MemStore.MemVersion) =
+      (v.schema, v.rows ++ ks.map(InternalRow(_)), Vector.empty[(String, InternalRow)])
+    MemStore.drop(name)
+    MemStore.create(name, StructType(Seq(StructField("k", LongType))))
+    MemStore.install(name, cap = 3)(append(1L, 2L))
+    MemStore.install(name, cap = 3)(append(3L))
+    val v = MemStore.currentVersion(name)
+    assert(MemStore.rows(name).map(_.getLong(0)) == Vector(1L, 2L, 3L), "a commit at the cap installs")
+    val e = intercept[IllegalArgumentException](MemStore.install(name, cap = 3)(append(4L)))
+    assert(e.getMessage.contains("would install 4 rows > MaxCommittedRows=3"), e.getMessage)
+    assert(MemStore.currentVersion(name) == v && MemStore.rows(name).map(_.getLong(0)) == Vector(1L, 2L, 3L),
+      "a refused commit keeps the previous version and its rows")
+    MemStore.drop(name)
+  }
+
   test("custom DSv2 connector: Int/Short-typed range literals are absorbed, not residual") {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan, EqualTo}
     // untyped SQL paths can hand the builder an Int-typed literal; the
