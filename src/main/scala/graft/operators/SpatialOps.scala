@@ -142,11 +142,11 @@ object SpatialOps {
     * facilities do, ×9, and |F| ≪ |P|); pass 2 touches only the
     * fallback slice with a broadcast of the (metadata-sized) facility
     * table. Per-facility report is one hash agg. */
-  /** The q231 two-pass assignment core: points (event_id, px, py) × facilities (fid, fx, fy) →
-    * (event_id, fid, d2) with fid the TRUE squared-L2 argmin (fid
-    * tie-break). Pass 1 probes the 3×3 cell ring and keeps a winner
-    * only when provably global (d² ≤ CellW²); pass 2 brute-forces the
-    * rest against the broadcast facility table. */
+  /** The q231 two-pass assignment core: points (event_id, px, py) ×
+    * facilities (fid, fx, fy) → (event_id, fid, d2) with fid the TRUE
+    * squared-L2 argmin (fid tie-break). Pass 1 probes the 3×3 cell
+    * ring and keeps a winner only when provably global (d² ≤ CellW²);
+    * pass 2 brute-forces the rest against the broadcast facility table. */
   private def nearestFacilityAssign(pts: DataFrame, fac0: DataFrame): DataFrame = {
     val fac = fac0.localCheckpoint()
     val d2 = (ax: Column, ay: Column, bx: Column, by: Column) =>

@@ -382,6 +382,9 @@ class AnalyticsOpsSpec extends SparkSpec {
     // 0→2→1 (2) beats the direct w5 edge; 0→2→1→3 (3) beats 0→2→3 (11)
     assert(got == Map(0L -> 0L, 1L -> 2L, 2L -> 1L, 3L -> 3L))
     assert(rounds <= 8, "fixpoint within the bound")
+    // the other side of the round cap: 0→2→1→3 needs 3 rounds
+    val capped = intercept[IllegalArgumentException](PageRank.sssp(e, seeds, maxRounds = 1))
+    assert(capped.getMessage.contains("did not converge within 1 rounds"))
     // unit weights: sssp ≡ bfs hop distances on the q113 trade graph
     val rel = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_suppkey")
       .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
