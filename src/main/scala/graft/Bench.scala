@@ -181,9 +181,9 @@ object Bench {
 
   /** The between-run residue sweep, run outside every timer (Bench's
     * loops, ProfileQuery). It sweeps dead localCheckpoint blocks out of
-    * the block manager. Every run of a checkpointing query (25
-    * localCheckpoint sites in the iterative operators) persists RDD
-    * blocks that only die when the JVM happens to GC the owning
+    * the block manager. Every run of a checkpointing query (the graph
+    * loops' [[Fixpoint.ckpt]] and the other operators' localCheckpoint
+    * sites) persists RDD blocks that only die when the JVM happens to GC the owning
     * reference — on a 48g heap that can be hundreds of queries later,
     * and by the string-sorted tail (q13… runs after the whole q1xx
     * block) the accumulated blocks were inflating medians 4–7× vs
@@ -200,9 +200,10 @@ object Bench {
     * DELIBERATE cross-query session frames, which live in the
     * CacheManager and are not locally checkpointed. (`isCheckpointed`
     * is the public probe — it is true for materialized local/reliable
-    * checkpoints and false for CacheManager buffer RDDs; the bench never
-    * sets a reliable checkpoint dir, so everything it matches here is a
-    * local one.)
+    * checkpoints and false for CacheManager buffer RDDs.) The bench never
+    * sets a checkpoint dir, and that is what keeps every graph loop's
+    * [[Fixpoint.ckpt]] local, so everything matched here is a local
+    * checkpoint.
     * The r7 bench proved the checkpoint sweep alone is NOT enough: the
     * stateful DSv2/streaming q2xx block (string-sorted right before
     * q28…q99) left residue that inflated nine untouched queries' warm

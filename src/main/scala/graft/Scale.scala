@@ -1,9 +1,15 @@
 package graft
 
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
+import javax.management.{NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import com.sun.management.GarbageCollectionNotificationInfo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,10 +29,11 @@ import graft.sources.{FsKeyMask, FsMatView, FsStore}
   * `graft.Scale [phase ...]` runs the named phases (all by default) at
   * their recorded sizes on [[SparkEntry.session]] and writes
   * `SCALE_SMOKE.json` in the working directory: [[Bench.header]] (cpus,
-  * git revision), the heap max, and per phase its size, seconds, heap
-  * peak, figures, claim, precondition and whether the claim held. Every
-  * phase runs even when one fails; the failures are recorded and then
-  * thrown. A full run needs an explicit heap small enough for the `fsc`
+  * git revision), the heap max, and per phase its size, seconds, live
+  * heap peak (the most any collection left; null if none ran), figures,
+  * claim, precondition and whether the claim held. Every phase runs
+  * even when one fails; the failures are recorded and then thrown. A
+  * full run needs an explicit heap small enough for the `fsc`
   * precondition (`build.sbt` defaults `-Xmx` to 48g), e.g.
   * `SPARK_DRIVER_MEM=4g SPARK_GRAFT_CPUS=4 sbt "runMain graft.Scale"`.
   * ScaleSpec runs every phase at a tiny size. */
@@ -54,21 +61,29 @@ object Scale {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def heapUsed(): Long = {
-    val r = Runtime.getRuntime
-    r.totalMemory - r.freeMemory
-  }
-
-  /** Runs `body` while a daemon thread samples heap use every 50 ms. */
-  private def withHeapPeak[A](body: => A): (A, Long) = {
-    val peak = new java.util.concurrent.atomic.AtomicLong(heapUsed())
-    val sampler = new Thread(() =>
-      try while (true) { peak.accumulateAndGet(heapUsed(), (a, b) => math.max(a, b)); Thread.sleep(50) }
-      catch { case _: InterruptedException => () })
-    sampler.setDaemon(true)
-    sampler.start()
-    try { val a = body; (a, math.max(peak.get, heapUsed())) }
-    finally { sampler.interrupt(); sampler.join() }
+  /** Runs `body` and returns the largest heap live set any garbage
+    * collection during it left behind: the sum of the heap pools' usage
+    * right after the collection, from the collectors' notifications. Heap
+    * used between collections counts garbage not yet collected, and a
+    * pool's own `getCollectionUsage` does not serve either: JDK 17's G1
+    * updates its old gen's only on a full collection. None when no
+    * collection ran. */
+  private def withLiveHeapPeak[A](body: => A): (A, Option[Long]) = {
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    val peak = new AtomicLong(-1L)
+    val listener: NotificationListener = (n, _) =>
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val after = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+          .getGcInfo.getMemoryUsageAfterGc.asScala
+        peak.accumulateAndGet(after.collect { case (p, u) if heapPools(p) => u.getUsed }.sum,
+          (a, b) => math.max(a, b))
+      }
+    val collectors = ManagementFactory.getGarbageCollectorMXBeans.asScala.collect {
+      case e: NotificationEmitter => e }
+    collectors.foreach(_.addNotificationListener(listener, null, null))
+    try { val a = body; (a, Some(peak.get).filter(_ >= 0)) }
+    finally collectors.foreach(_.removeNotificationListener(listener))
   }
 
   private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
@@ -78,7 +93,6 @@ object Scale {
   }
 
   private def deleteTree(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
   }
@@ -295,7 +309,8 @@ object Scale {
   /** PageRank (q77's engine) over `n` nodes with 4 random out-edges each,
     * made undirected, plus a hub every 100th node links to: the hub
     * ranks first and rank mass is conserved to the floor-division bound.
-    * Reliable checkpoints in `dir` exercise the non-local path. */
+    * A checkpoint dir under `dir`, set for the phase only, makes every
+    * round's [[Fixpoint.ckpt]] reliable. */
   private def pagerank(spark: SparkSession, n: Long, dir: Path): Figures = {
     val base = spark.range(n).toDF("src")
     val raw = randomEdges(base, n, 0 until 4)
@@ -304,9 +319,14 @@ object Scale {
     val edges = undirected(raw)
     val nDirEdges = edges.count()
     val ((top, mass, nodes), secs) = timed {
-      val pr = PageRank.ranks(edges, Some(dir.resolve("ckpt").toString)).cache()
-      (pr.orderBy(col("rank").desc, col("id").asc).limit(1).head(),
-        pr.agg(sum("rank")).head().getLong(0), pr.count())
+      val sc = spark.sparkContext
+      val prev = sc.getCheckpointDir
+      sc.setCheckpointDir(dir.resolve("ckpt").toString)
+      try {
+        val pr = PageRank.pprRanks(edges, lit(true)).cache()
+        (pr.orderBy(col("rank").desc, col("id").asc).limit(1).head(),
+          pr.agg(sum("rank")).head().getLong(0), pr.count())
+      } finally sc.setCheckpointDir(prev.orNull)
     }
     val cap = nodes * PageRank.Unit
     val lossBound = (nDirEdges + nodes) * PageRank.Iterations * 2
@@ -656,7 +676,6 @@ object Scale {
     val row = spark.table(sink).head()
     assert(row.getLong(1) == rows && row.getLong(2) == rows * (rows - 1) / 2,
       s"feed drain must deliver every committed row exactly once, got $row")
-    import scala.jdk.CollectionConverters._
     val progress = q.recentProgress.toSeq
     (secs, progress.filter(_.numInputRows > 0).map(_.numInputRows),
       progress.flatMap(_.durationMs.asScala).groupMapReduce(_._1)(_._2.longValue)(_ + _))
@@ -898,14 +917,14 @@ object Scale {
     val phaseNodes = root.putObject("phases")
     val failed = plan.flatMap { case (p, n) =>
       val dir = Files.createTempDirectory(s"graft_scale_${p.name}")
-      val ((result, secs), peak) = withHeapPeak(timed(Try(p.body(spark, n, dir))))
+      val ((result, secs), peak) = withLiveHeapPeak(timed(Try(p.body(spark, n, dir))))
       spark.catalog.clearCache()
       deleteTree(dir)
       val node = phaseNodes.putObject(p.name)
       node.put("size", p.size)
       node.put("ran_at", n)
       put(node, "secs", secs)
-      node.put("heap_peak_bytes", peak)
+      peak.fold(node.putNull("heap_live_peak_bytes"))(node.put("heap_live_peak_bytes", _))
       node.put("claim", p.claim)
       node.put("precondition", p.precondition)
       val held = result match {

@@ -229,13 +229,18 @@ final class ObjDataset[T](val ds: Dataset[T]) {
   def min()(implicit ord: Ordering[T]): T = ds.rdd.min()
   def max()(implicit ord: Ordering[T]): T = ds.rdd.max()
 
-  /** One-pass (n, Σx, Σx²) moments → mean/variance/stddev. */
-  private def moments(implicit num: Numeric[T]): (Long, Double, Double) =
-    ds.rdd.mapPartitions { it =>
+  private var momentsMemo: Option[(Long, Double, Double)] = None
+
+  /** One-pass (n, Σx, Σx²) moments → mean/variance/stddev, run once per
+    * instance: `mean` then `variance` of one collection is one pass. */
+  private def moments(implicit num: Numeric[T]): (Long, Double, Double) = synchronized {
+    if (momentsMemo.isEmpty) momentsMemo = Some(ds.rdd.mapPartitions { it =>
       var n = 0L; var s = 0.0; var s2 = 0.0
       it.foreach { t => val x = num.toDouble(t); n += 1; s += x; s2 += x * x }
       Iterator.single((n, s, s2))
-    }.reduce { case ((n1, s1, q1), (n2, s2, q2)) => (n1 + n2, s1 + s2, q1 + q2) }
+    }.reduce { case ((n1, s1, q1), (n2, s2, q2)) => (n1 + n2, s1 + s2, q1 + q2) })
+    momentsMemo.get
+  }
 
   def mean(implicit num: Numeric[T]): Double = { val (n, s, _) = moments; s / n }
   def variance(implicit num: Numeric[T]): Double = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.{QueryDef, SessionFrames, Tables}
+import graft.{Fixpoint, QueryDef, SessionFrames, Tables}
 
 /** Connected components over near-duplicate candidate pairs — the final
   * stage of near-dup deduplication (SURVEY.md §2.5 "connected components
@@ -16,16 +16,9 @@ import graft.{QueryDef, SessionFrames, Tables}
   * convergence is O(log diameter) instead of O(diameter): a 1000-node path
   * graph converges in ~10 rounds, not 1000.
   *
-  * Per-round cost is ONE Spark job: the round's result is materialized by
-  * an eager checkpoint whose tasks also feed a `changed` accumulator, so
-  * convergence detection rides the materialization instead of a second
-  * join+count action. (Task retries can only over-count the accumulator —
-  * an over-count costs one extra no-op round, never a wrong answer.)
-  *
-  * Checkpointing: `localCheckpoint` by default (fast, executor-local) — an
-  * executor loss during the loop fails the job and the caller retries. For
-  * long chains on a real cluster pass `checkpointDir` to use reliable
-  * `checkpoint()` into shared storage instead.
+  * Per-round cost is the round's checkpoint ([[graft.Fixpoint.ckpt]])
+  * and nothing else: the count of labels that changed is observed on that
+  * checkpoint's own job, so convergence needs no second join+count action.
   *
   * At 100 TB the edge list after LSH+verify is orders of magnitude
   * smaller than the corpus (only near-dup members appear), so the loop
@@ -35,33 +28,25 @@ object Components {
 
   /** Min-label connected components: `edges` (src,dst), `vertices` (id) →
     * (id, component) where component = min reachable id. Ids are cast to
-    * long (the accumulator-carrying convergence check is typed). */
+    * long. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          maxIter: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val spark = vertices.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+                          maxIter: Int = 50): DataFrame = {
     // eager materialization between rounds keeps the plan bounded AND gives
     // each round fresh attribute ids — joining `e` against a frame derived
     // from it would otherwise hit Spark's cross-lineage column-resolution
     // ambiguity and silently mis-join.
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-
     // undirected: both directions
-    val e = ckpt(edges
+    val e = Fixpoint.ckpt(edges
       .select(col("src").cast(LongType), col("dst").cast(LongType))
       .union(edges.select(col("dst").cast(LongType).as("src"), col("src").cast(LongType).as("dst")))
       .distinct())
-    var labels = ckpt(vertices.select(col("id").cast(LongType),
+    val init = Fixpoint.ckpt(vertices.select(col("id").cast(LongType),
       col("id").cast(LongType).as("component")))
-
-    val acc = spark.sparkContext.longAccumulator("graft.cc.changed")
-    val track = udf((oldC: Long, newC: Long) => { if (newC != oldC) acc.add(1L); newC })
-
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // Never return silently-wrong labels: pointer jumping converges in
+    // O(log diameter) rounds (maxIter = 50 covers diameter ~2^50), so
+    // hitting the bound means the input or the loop is broken — converge
+    // fails loud.
+    val (labels, _) = Fixpoint.converge(init, maxIter, "connectedComponents") { labels =>
       // neighbor minimum per node, all joins on freshly-named columns
       val viaNeighbor = e.select(col("src").as("n_id"), col("dst").as("n_nbr"))
         .join(labels.select(col("id").as("n_nbr"), col("component").as("n_comp")), Seq("n_nbr"))
@@ -71,27 +56,19 @@ object Components {
       val viaParent = labels.select(col("id").as("p_id"), col("component").as("p_comp"))
         .join(labels.select(col("id").as("p_comp"), col("component").as("p_comp2")), Seq("p_comp"))
         .select(col("p_id").as("id"), col("p_comp2").as("pmin"))
-      acc.reset()
-      val next = labels
+      // the round's checkpoint keeps the previous label beside the new one,
+      // so the labels that changed are counted in its own job
+      val (next, changed) = Fixpoint.ckpt(labels.select("id", "component")
         .join(viaNeighbor, Seq("id"), "left_outer")
         .join(viaParent, Seq("id"), "left_outer")
-        .select(col("id"),
-          track(col("component"),
-            least(col("component"),
-              coalesce(col("nmin"), col("component")),
-              coalesce(col("pmin"), col("component")))).as("component"))
-      labels = ckpt(next) // the round's single action; fills `acc`
-      converged = acc.value == 0L
-      iter += 1
+        .select(col("id"), col("component").as("prev"),
+          least(col("component"),
+            coalesce(col("nmin"), col("component")),
+            coalesce(col("pmin"), col("component"))).as("component")),
+        count(when(col("component") =!= col("prev"), 1)).as("changed"))
+      (next, changed.getLong(0) > 0)
     }
-    // Never return silently-wrong labels: pointer jumping converges in
-    // O(log diameter) rounds (maxIter = 50 covers diameter ~2^50), so
-    // hitting the bound means the input or the loop is broken — fail loud.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"(${acc.value} labels still changing) — labels would be wrong")
-    labels
+    labels.select("id", "component")
   }
 
   /** Hybrid dispatch: the edge list after LSH + exact verify is candidate
@@ -100,11 +77,10 @@ object Components {
     * to union-find on the driver (milliseconds, zero jobs per round) and
     * join the labels back; above it, run the distributed loop. */
   def connectedComponentsAuto(vertices: DataFrame, edges: DataFrame,
-                              localThreshold: Long = 1000000L,
-                              checkpointDir: Option[String] = None): DataFrame = {
+                              localThreshold: Long = 1000000L): DataFrame = {
     val n = edges.count()
     if (n > localThreshold)
-      return connectedComponents(vertices, edges, checkpointDir = checkpointDir)
+      return connectedComponents(vertices, edges)
     val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map[Long, Long]()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.{QueryDef, SessionFrames, Tables}
+import graft.{Fixpoint, QueryDef, SessionFrames, Tables}
 
 /** Link-analysis operator — fixed-iteration PageRank, the graph-quality
   * prior web-scale corpus pipelines attach to crawled documents (host
@@ -60,52 +60,25 @@ object PageRank {
         .distinct()
     }
 
-  /** (id, rank) after [[Iterations]] rounds over `edges` (src, dst —
-    * already directed both ways), starting every node at [[Unit]].
-    *
-    * The graph frames are eagerly checkpointed ONCE (the [[Components]]
-    * pattern): without it every unrolled round re-derives edges + degrees
-    * from the base tables (4× the scan/distinct work) and the lineage
-    * quadruples; with it each round is exactly one share-join + one hash
-    * agg + one outer join over materialized metadata-sized frames, and
-    * the per-round labels checkpoint keeps the final plan bounded at one
-    * round's depth.
-    *
-    * `localCheckpoint` by default (fast, executor-local) — an executor
-    * loss mid-computation fails the job and the caller retries. On a real
-    * cluster pass `checkpointDir` (shared storage) for reliable
-    * `checkpoint()`: lost partitions then recompute from durable files
-    * instead of silently restarting from nothing — same knob and
-    * trade-off as [[Components.connectedComponents]]. */
-  def ranks(edges: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val e = ckpt(edges)
-    val deg = ckpt(e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg")))
-    // outdeg RIDES the rank frame: the per-round r ⋈ deg share join the
-    // old shape paid (one extra exchange/broadcast per iteration) is a
-    // projection here — each round is exactly one share join + one hash
-    // agg + one outer join (guide §2.4)
-    var r = deg.select(col("id"), col("outdeg"), lit(Unit).as("rank"))
-    (1 to Iterations).foreach { i =>
-      val contrib = e
-        .join(r.select(col("id").as("src"),
-          expr("rank div outdeg").as("share")), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("share")).as("inflow"))
-      r = deg
-        .join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), col("outdeg"),
-          expr(s"(15 * ${Unit}L + $Damping * coalesce(inflow, 0L)) div 100").as("rank"))
-      // checkpoint every OTHER round: two rounds of lineage stay bounded
-      // and half the eager materializations disappear from the critical
-      // path (on a real cluster: same cadence trade as Components)
-      if (i % 2 == 0 && i < Iterations) r = ckpt(r)
-    }
-    r.select(col("id"), col("rank"))
+  /** [[tradeRel]] taken in both directions (src, dst): the undirected
+    * trade graph q77, q113 and q156 walk. */
+  private def tradeEdges(s: SparkSession, d: String): DataFrame = {
+    val rel = tradeRel(s, d)
+    rel.select(col("cust").as("src"), col("supp").as("dst"))
+      .union(rel.select(col("supp").as("src"), col("cust").as("dst")))
+  }
+
+  /** The q102/q160/q170/q229 deterministic md5-bridge friendship graph:
+    * canonical undirected edges (a < b, distinct). */
+  private def friendEdges(s: SparkSession, d: String): DataFrame = {
+    val h = conv(substring(md5(concat(lit("tri#"), col("src"), lit("#"), col("k"))),
+      1, 15), 16, 10).cast(LongType)
+    Tables.documents(s, d).filter(col("doc_id") < 500)
+      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
+      .withColumn("dst", pmod(h, lit(500L)))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") < col("b")).distinct()
   }
 
   /** q77: PageRank top-20 over the trade graph — node type, key and
@@ -114,10 +87,7 @@ object PageRank {
   val q77PageRank = QueryDef(
     "q77_pagerank",
     (s, d) => {
-      val rel = tradeRel(s, d)
-      val edges = rel.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(rel.select(col("supp").as("src"), col("cust").as("dst")))
-      ranks(edges)
+      pprRanks(tradeEdges(s, d), lit(true))
         .select(
           when(col("id") >= 1000000L, "supplier").otherwise("customer").as("node_type"),
           when(col("id") >= 1000000L, col("id") - 1000000L).otherwise(col("id")).as("key"),
@@ -173,14 +143,7 @@ object PageRank {
   val q102Triangles = QueryDef(
     "q102_triangles",
     (s, d) => {
-      val h = conv(substring(md5(concat(lit("tri#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
-      val e = Tables.documents(s, d).filter(col("doc_id") < 500)
-        .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
-        .withColumn("dst", pmod(h, lit(500L)))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") < col("b")).distinct()
+      val e = friendEdges(s, d)
       val bc = e.select(col("a").as("b"), col("b").as("c"))
       val ac = e.select(col("a"), col("b").as("c"))
       e.join(bc, Seq("b")).join(ac, Seq("a", "c"))
@@ -207,28 +170,22 @@ object PageRank {
     * both directions for undirected). Frontier expansion: each hop is ONE
     * equi-join frontier⋈edges plus an anti-join against the visited set —
     * the textbook iterative-join BFS, every step a bounded shuffle keyed
-    * by vertex. `localCheckpoint` per hop severs the growing lineage
-    * (same rationale as [[ranks]]); `checkpointDir` upgrades to reliable
-    * checkpoints for cluster fault-tolerance.
+    * by vertex. A [[graft.Fixpoint.ckpt]] per hop severs the growing
+    * lineage.
     *
     * Plan shape at 100 TB: the frontier is never larger than the vertex
     * set, the visited set grows monotonically and joins as the SMALL side
     * (broadcast-able for most real frontier profiles), and each hop's
     * exchange is keyed by vertex id — parallelism scales with graph size,
     * hop count bounds the number of shuffles. */
-  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-          checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val e = ckpt(edges.select(col("src"), col("dst")))
-    var visited = ckpt(seeds.select(col("id")).distinct()
+  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    val e = Fixpoint.ckpt(edges.select(col("src"), col("dst")))
+    var visited = Fixpoint.ckpt(seeds.select(col("id")).distinct()
       .withColumn("hops", lit(0L)))
     var frontier = visited.select("id")
     var h = 1
     while (h <= maxHops) {
-      val next = ckpt(frontier.join(e, frontier("id") === e("src"))
+      val next = Fixpoint.ckpt(frontier.join(e, frontier("id") === e("src"))
         .select(e("dst").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
         .withColumn("hops", lit(h.toLong)))
@@ -254,11 +211,8 @@ object PageRank {
   val q113BfsHops = QueryDef(
     "q113_bfs_hops",
     (s, d) => {
-      val rel = tradeRel(s, d)
-      val edges = rel.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(rel.select(col("supp").as("src"), col("cust").as("dst")))
-      val seeds = rel.filter(col("cust") % 500 === 0).select(col("cust").as("id"))
-      bfs(edges, seeds, maxHops = 3).orderBy("id")
+      val seeds = tradeRel(s, d).filter(col("cust") % 500 === 0).select(col("cust").as("id"))
+      bfs(tradeEdges(s, d), seeds, maxHops = 3).orderBy("id")
     },
     Some("""WITH RECURSIVE rel AS (
            |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cust,
@@ -284,14 +238,15 @@ object PageRank {
     * weight over all ≤ r-edge paths from any seed. Each round is ONE
     * equi-join dist⋈edges (keyed by src) plus ONE min-agg (keyed by
     * vertex) — the weighted generalization of [[bfs]], which this
-    * reduces to when every weight is 1. `localCheckpoint` per round
-    * severs lineage ([[ranks]]'s rationale).
+    * reduces to when every weight is 1. A [[graft.Fixpoint.ckpt]] per
+    * round severs lineage.
     *
     * Convergence is detected from TWO monotone scalars — node count
     * (non-decreasing) and Σdist (non-increasing per node) — equal across
     * a round iff the round was a fixpoint: no relaxation can raise a
     * distance, so (count, sum) unchanged ⇒ no node added AND no distance
-    * lowered. One metadata agg per round, no frame diff join.
+    * lowered. Both are observed on the round's checkpoint: no job of
+    * their own, no frame diff join.
     *
     * Plan shape at 100 TB: the frontier never exceeds the vertex set and
     * both per-round exchanges are keyed by vertex id, so parallelism
@@ -301,26 +256,17 @@ object PageRank {
     * is the documented refinement when the changed set shrinks much
     * faster than the reached set. */
   def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edges.select(col("src"), col("dst"), col("w")))
-    var dist = ckpt(seeds.select(col("id")).distinct().withColumn("dist", lit(0L)))
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    val e = Fixpoint.ckpt(edges.select(col("src"), col("dst"), col("w")))
+    val fp = Seq(count(lit(1)).as("n"), sum("dist").as("total"))
+    val init = Fixpoint.ckpt(seeds.select(col("id")).distinct().withColumn("dist", lit(0L)), fp: _*)
+    val ((dist, _), rounds) = Fixpoint.converge(init, maxRounds, "Bellman-Ford") {
+      case (dist, seen) =>
+        val relaxed = dist.join(e, dist("id") === e("src"))
+          .select(e("dst").as("id"), (dist("dist") + e("w")).as("dist"))
+        val next = Fixpoint.ckpt(dist.unionByName(relaxed)
+          .groupBy("id").agg(min("dist").as("dist")), fp: _*)
+        (next, next._2 != seen)
     }
-    var fp = fingerprint(dist)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val relaxed = dist.join(e, dist("id") === e("src"))
-        .select(e("dst").as("id"), (dist("dist") + e("w")).as("dist"))
-      val next = ckpt(dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist").as("dist")))
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      dist = next; fp = nfp; rounds += 1
-    }
-    require(converged, s"Bellman-Ford did not converge within $maxRounds rounds")
     (dist, rounds)
   }
 
@@ -395,10 +341,10 @@ object PageRank {
     * fixpoint — the standard graph-density peel (community cores, spam
     * farms, the "delete the long tail" step before expensive per-node
     * analytics). Each round is one induced-edge double semi-join + one
-    * degree agg, `localCheckpoint`ed to sever lineage ([[ranks]]'s
-    * rationale); the loop is driver-bounded with one metadata count per
-    * round, and the result is the surviving nodes with their final
-    * induced degree.
+    * degree agg, checkpointed by [[graft.Fixpoint.ckpt]] to sever
+    * lineage; the loop stops when the node count observed on that
+    * checkpoint stops falling, and the result is the surviving nodes with
+    * their final induced degree.
     *
     * Plan shape at 100 TB: every round's exchanges are keyed by node id
     * (degree agg) or edge endpoint (induced filter) — the peel deletes
@@ -407,8 +353,7 @@ object PageRank {
     * per-round checkpoint keeping lineage flat exactly like
     * [[Components]]. */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int): (DataFrame, Int) = {
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edges.select(col("a"), col("b")))
+    val e = Fixpoint.ckpt(edges.select(col("a"), col("b")))
     def degrees(nodes: DataFrame): DataFrame = {
       val induced = e
         .join(nodes.select(col("id").as("a")), Seq("a"), "left_semi")
@@ -417,18 +362,14 @@ object PageRank {
         .unionAll(induced.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
     }
-    var nodes = ckpt(e.select(col("a").as("id"))
-      .union(e.select(col("b").as("id"))).distinct())
-    var nNodes = nodes.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = ckpt(degrees(nodes).filter(col("deg") >= k).select("id"))
-      val nNext = next.count()
-      converged = nNext == nNodes
-      nodes = next; nNodes = nNext; rounds += 1
+    val n = count(lit(1)).as("n")
+    val init = Fixpoint.ckpt(e.select(col("a").as("id"))
+      .union(e.select(col("b").as("id"))).distinct(), n)
+    val ((nodes, _), rounds) = Fixpoint.converge(init, maxRounds, "k-core") {
+      case (nodes, size) =>
+        val next = Fixpoint.ckpt(degrees(nodes).filter(col("deg") >= k).select("id"), n)
+        (next, next._2 != size)
     }
-    require(converged, s"k-core did not converge within $maxRounds rounds")
     (degrees(nodes).filter(col("deg") >= k), rounds)
   }
 
@@ -492,7 +433,7 @@ object PageRank {
     * usual L2 normalization keeps every intermediate an exact BIGINT
     * (scores only feed RANKING, and ranking is normalization-invariant),
     * so the fixed-round result agrees bit-for-bit with the oracle's
-    * chained CTEs — the [[ranks]] determinism idea without the division.
+    * chained CTEs — the [[pprRanks]] determinism idea without the division.
     * Growth is bounded by (max_in·max_out)^rounds ≈ 200³ here — far
     * inside Long for any bounded-degree graph.
     *
@@ -505,9 +446,8 @@ object PageRank {
     // iters == 0 would leave hAgg null below (the all-ones initialization
     // never aggregates), so refuse instead of NPE-ing at the output join
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edges.select(col("src"), col("dst")))
-    val nodes = ckpt(e.select(col("src").as("id"))
+    val e = Fixpoint.ckpt(edges.select(col("src"), col("dst")))
+    val nodes = Fixpoint.ckpt(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     // A zero score is algebraically identical to an ABSENT row inside the
     // iteration (it contributes nothing to either sum), so the per-round
@@ -525,7 +465,7 @@ object PageRank {
       // h output — checkpoint severs the duplicated lineage (and bounds
       // plan depth at one round, the old cadence); that holds for EVERY
       // round including iters == 1, so checkpoint unconditionally
-      hAgg = ckpt(hAgg)
+      hAgg = Fixpoint.ckpt(hAgg)
       a = e.join(hAgg.select(col("id").as("src"), col("hsum")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("hsum")).as("a"))
     }
@@ -585,28 +525,32 @@ object PageRank {
     }
   )
 
-  /** q156: personalized (topic-sensitive) PageRank — q77's integer power
-    * iteration with the teleport mass restarting at a SEED SET (every
-    * 500th customer) instead of spreading uniformly: rank becomes
-    * proximity-to-the-seeds, the graph prior behind "quality flows
-    * outward from a trusted whitelist" (TrustRank) and seed-anchored
-    * crawl frontier scoring — q113's reachability with decay replacing
-    * the hop cutoff. Same determinism argument as [[ranks]]: integer
-    * 1e-12 units, floor division, four unrolled rounds ≡ the oracle's
-    * chained CTEs bit-for-bit; non-seed nodes get rank ONLY through
-    * inflow, so mass concentrates near seeds instead of equalizing.
+  /** (id, rank) after [[Iterations]] rounds of integer PageRank over
+    * `edges` (src, dst — already directed both ways), with the teleport
+    * mass restarting only at the nodes where `isSeed` holds. Every node a
+    * seed (`lit(true)`) is q77's uniform PageRank: each starts at [[Unit]]
+    * and the update is the same integer expression. Otherwise (q156,
+    * personalized/topic-sensitive PageRank) rank becomes proximity to the
+    * seeds, the graph prior behind "quality flows outward from a trusted
+    * whitelist" (TrustRank) and seed-anchored crawl frontier scoring —
+    * q113's reachability with decay replacing the hop cutoff: non-seed
+    * nodes get rank ONLY through inflow, so mass concentrates near seeds
+    * instead of equalizing. Integer 1e-12 units and floor division keep
+    * four unrolled rounds ≡ the oracle's chained CTEs bit-for-bit.
     *
-    * Plan shape at 100 TB: identical to q77 — per round one share join +
-    * one (node, contrib) hash agg; the seed indicator is a PROJECTION on
+    * The graph frames are checkpointed ONCE: without it every unrolled
+    * round re-derives edges + degrees from the base tables (4× the
+    * scan/distinct work) and the lineage quadruples; with it each round
+    * is exactly one share join + one (node, contrib) hash agg + one outer
+    * join over materialized frames. The seed indicator is a PROJECTION on
     * the degree frame (id predicate), never a join. */
   def pprRanks(edges: DataFrame, isSeed: Column): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edges)
-    val deg = ckpt(e.groupBy(col("src").as("id"))
+    val e = Fixpoint.ckpt(edges)
+    val deg = Fixpoint.ckpt(e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
       .withColumn("s", when(isSeed, 1L).otherwise(0L)))
-    // outdeg + seed flag ride the rank frame ([[ranks]]'s rationale): the
-    // per-round r ⋈ deg join becomes a projection
+    // outdeg and the seed flag RIDE the rank frame: the per-round r ⋈ deg
+    // share join is a projection here (guide §2.4)
     var r = deg.select(col("id"), col("outdeg"), col("s"),
       (col("s") * Unit).as("rank"))
     (1 to Iterations).foreach { i =>
@@ -619,7 +563,9 @@ object PageRank {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"), col("outdeg"), col("s"),
           expr(s"(15 * ${Unit}L * s + $Damping * coalesce(inflow, 0L)) div 100").as("rank"))
-      if (i % 2 == 0 && i < Iterations) r = ckpt(r)
+      // checkpoint every OTHER round: two rounds of lineage stay bounded
+      // and half the eager materializations leave the critical path
+      if (i % 2 == 0 && i < Iterations) r = Fixpoint.ckpt(r)
     }
     r.select(col("id"), col("rank"))
   }
@@ -627,10 +573,7 @@ object PageRank {
   val q156Ppr = QueryDef(
     "q156_ppr",
     (s, d) => {
-      val rel = tradeRel(s, d)
-      val edges = rel.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(rel.select(col("supp").as("src"), col("cust").as("dst")))
-      pprRanks(edges, col("id") < 1000000L && col("id") % 500 === 0)
+      pprRanks(tradeEdges(s, d), col("id") < 1000000L && col("id") % 500 === 0)
         .filter(col("rank") > 0)
         .select(
           when(col("id") >= 1000000L, "supplier").otherwise("customer").as("node_type"),
@@ -671,49 +614,18 @@ object PageRank {
   /** Synchronous label-propagation rounds q160 runs. */
   val LpaRounds = 3
 
-  /** q160: label-propagation community detection (Raghavan et al. 2007)
-    * over q102's deterministic md5-bridge friendship graph — the
-    * near-linear community finder pipelines run where modularity
-    * methods (Louvain) don't scale: labels start as vertex ids, each
-    * SYNCHRONOUS round every vertex adopts the most frequent label among
-    * its neighbors (tie → smallest label), [[LpaRounds]] fixed rounds
-    * unrolled so both engines walk the identical deterministic sequence.
-    * Complements q44/q71 (connected components = structure-only
-    * clusters) and q143 (k-core density): LPA finds DENSITY-coherent
-    * groups inside one component.
-    *
-    * Plan shape at 100 TB: each round is one vertex-keyed equi-join
-    * (neighbor lists ⋈ labels) + one (v, lbl) hash agg + one
-    * row_number window PARTITIONED BY VERTEX — every step keyed by
-    * vertex id, parallelism scales with the vertex set, no global
-    * ordering anywhere; per-round localCheckpoint severs the growing
-    * lineage (the q77 discipline). The community roll-up at the end is
-    * label-keyed and community-sized. */
-  /** The q102/q160/q170 deterministic md5-bridge friendship graph:
-    * canonical undirected edges (a < b, distinct). */
-  private def friendEdges(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(concat(lit("tri#"), col("src"), lit("#"), col("k"))),
-      1, 15), 16, 10).cast(LongType)
-    Tables.documents(s, d).filter(col("doc_id") < 500)
-      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
-      .withColumn("dst", pmod(h, lit(500L)))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-  }
-
   /** Final labels after [[LpaRounds]] synchronous mode-label rounds over
     * the (v, u) neighbor relation — shared by q160, q170 and the
     * [[graft.Scale]] `lpa` phase. */
   def lpaLabels(nbr: DataFrame): DataFrame = {
-    var labels = nbr.select(col("v")).distinct()
-      .withColumn("lbl", col("v")).localCheckpoint()
+    var labels = Fixpoint.ckpt(nbr.select(col("v")).distinct()
+      .withColumn("lbl", col("v")))
     val w = Window.partitionBy("v").orderBy(col("cnt").desc, col("lbl").asc)
     for (_ <- 1 to LpaRounds) {
-      labels = nbr.join(labels.withColumnRenamed("v", "u"), Seq("u"))
+      labels = Fixpoint.ckpt(nbr.join(labels.withColumnRenamed("v", "u"), Seq("u"))
         .groupBy("v", "lbl").agg(count(lit(1)).as("cnt"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("v", "lbl").localCheckpoint()
+        .select("v", "lbl"))
     }
     labels
   }
@@ -742,12 +654,30 @@ object PageRank {
             |      PARTITION BY v ORDER BY cnt DESC, lbl ASC) AS rn FROM g$i)
             |  WHERE rn = 1)""".stripMargin).mkString(",\n")}""".stripMargin
 
+  /** q160: label-propagation community detection (Raghavan et al. 2007)
+    * over q102's deterministic md5-bridge friendship graph — the
+    * near-linear community finder pipelines run where modularity
+    * methods (Louvain) don't scale: labels start as vertex ids, each
+    * SYNCHRONOUS round every vertex adopts the most frequent label among
+    * its neighbors (tie → smallest label), [[LpaRounds]] fixed rounds
+    * unrolled so both engines walk the identical deterministic sequence.
+    * Complements q44/q71 (connected components = structure-only
+    * clusters) and q143 (k-core density): LPA finds DENSITY-coherent
+    * groups inside one component.
+    *
+    * Plan shape at 100 TB: each round is one vertex-keyed equi-join
+    * (neighbor lists ⋈ labels) + one (v, lbl) hash agg + one
+    * row_number window PARTITIONED BY VERTEX — every step keyed by
+    * vertex id, parallelism scales with the vertex set, no global
+    * ordering anywhere; a per-round [[graft.Fixpoint.ckpt]] severs the
+    * growing lineage. The community roll-up at the end is
+    * label-keyed and community-sized. */
   val q160LabelProp = QueryDef(
     "q160_label_prop",
     (s, d) => {
       val e = friendEdges(s, d)
-      val nbr = e.select(col("a").as("v"), col("b").as("u"))
-        .unionByName(e.select(col("b").as("v"), col("a").as("u"))).localCheckpoint()
+      val nbr = Fixpoint.ckpt(e.select(col("a").as("v"), col("b").as("u"))
+        .unionByName(e.select(col("b").as("v"), col("a").as("u"))))
       lpaLabels(nbr).groupBy("lbl")
         .agg(count(lit(1)).as("csize"), min(col("v")).as("min_member"))
         .orderBy(col("csize").desc, col("lbl").asc)
@@ -777,9 +707,9 @@ object PageRank {
   val q170Modularity = QueryDef(
     "q170_modularity",
     (s, d) => {
-      val e = friendEdges(s, d).localCheckpoint()
-      val nbr = e.select(col("a").as("v"), col("b").as("u"))
-        .unionByName(e.select(col("b").as("v"), col("a").as("u"))).localCheckpoint()
+      val e = Fixpoint.ckpt(friendEdges(s, d))
+      val nbr = Fixpoint.ckpt(e.select(col("a").as("v"), col("b").as("u"))
+        .unionByName(e.select(col("b").as("v"), col("a").as("u"))))
       val labels = lpaLabels(nbr)
       val m = e.agg(count(lit(1)).as("m"))
       val internal = e
@@ -922,13 +852,13 @@ object PageRank {
         1, 15), 16, 10).cast(LongType)
       val nodes = Tables.documents(s, d).filter(col("doc_id") < 500)
         .select(col("doc_id").as("id"))
-      val edges = nodes.filter(col("id") % 5 =!= 0) // ≡0 (mod 5) → sinks
+      val edges = Fixpoint.ckpt(nodes.filter(col("id") % 5 =!= 0) // ≡0 (mod 5) → sinks
         .select(col("id").as("src"), explode(sequence(lit(1), lit(4))).as("k"))
         .withColumn("dst", pmod(h, lit(500L)))
         .filter(col("src") =!= col("dst"))
-        .select("src", "dst").distinct().localCheckpoint()
-      val deg = edges.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg")).localCheckpoint()
+        .select("src", "dst").distinct())
+      val deg = Fixpoint.ckpt(edges.groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("outdeg")))
       val n = nodes.count() // metadata: 500
       var r = nodes.select(col("id"), lit(Unit).as("rank"))
       (1 to Iterations).foreach { i =>
@@ -947,7 +877,7 @@ object PageRank {
         // checkpoint EVERY round (500-row frames — materialization is
         // free): the dangling agg consumes r twice per round, so without
         // it the unrolled plan text compounds past the sweep budget
-        if (i < Iterations) r = r.localCheckpoint()
+        if (i < Iterations) r = Fixpoint.ckpt(r)
       }
       r.select(col("id"), col("rank"), (col("id") % 5 === 0).as("is_sink"))
         .orderBy(col("rank").desc, col("id").asc).limit(20)
@@ -1005,14 +935,7 @@ object PageRank {
   val q229LinkPrediction = QueryDef(
     "q229_link_prediction",
     (s, d) => {
-      val h = conv(substring(md5(concat(lit("tri#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
-      val e = Tables.documents(s, d).filter(col("doc_id") < 500)
-        .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
-        .withColumn("dst", pmod(h, lit(500L)))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") < col("b")).distinct().localCheckpoint()
+      val e = Fixpoint.ckpt(friendEdges(s, d))
       val adj = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       val deg = adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))

@@ -29,6 +29,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
 
+  /** Runs `body` with a fresh reliable checkpoint dir set on the shared
+    * SparkContext, and unsets it afterwards so no later spec in the JVM
+    * inherits reliable checkpoints. Returns the dir and the result. */
+  protected def withCheckpointDir[A](body: => A): (java.io.File, A) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir.toString)
+    try (dir, body) finally sc.setCheckpointDir(null)
+  }
+
   /** Spark jobs started while `body` runs. The count is read only after a
     * sentinel job's end has been delivered: the listener bus is ordered,
     * so every earlier job's start has been counted by then. */

@@ -117,6 +117,16 @@ class ObjDatasetSpec extends SparkSpec {
     assert(e == 0)
   }
 
+  test("mean then variance of one collection is one moments pass") {
+    val xs = (1 to 500).map(_.toDouble)
+    val v = objs(xs)
+    var m, va = Double.NaN
+    assert(jobsDuring { m = v.mean; va = v.variance } == 1)
+    val mu = xs.sum / xs.size
+    assert(math.abs(m - mu) < 1e-9)
+    assert(math.abs(va - xs.map(x => (x - mu) * (x - mu)).sum / xs.size) < 1e-6)
+  }
+
   test("the source leaf holds no LocalRelation and states its row count; a small join side broadcasts") {
     val people = objs(Seq(P("ada", 36), P("grace", 45)))
     val qe = people.ds.queryExecution

@@ -144,6 +144,16 @@ class BitmapSpec extends SparkSpec {
       s"expected the domain-guard message, got $err")
   }
 
+  test("the domain cap: 2^26 analyzes, one past it fails analysis") {
+    import graft.TestSession.spark.implicits._
+    val keys = Seq(5L).toDF("k")
+    def build(domain: Long) = keys.agg(GraftFunctions.bitmapBuild(col("k"), lit(domain)))
+    assert(BitmapAlg.MaxDomain == 67108864L)
+    build(67108864L).queryExecution.assertAnalyzed()
+    val err = intercept[org.apache.spark.sql.AnalysisException](build(67108865L))
+    assert(err.getMessage.contains("domain must be in [1, 67108864]"), err.getMessage)
+  }
+
   test("SQL-registered: the whole algebra is reachable from pure SQL") {
     import graft.TestSession.spark.implicits._
     Seq(1L, 2L, 2L, 3L).toDF("k").createOrReplaceTempView("bm_sql_t")

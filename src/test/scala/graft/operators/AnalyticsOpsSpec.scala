@@ -235,6 +235,17 @@ class AnalyticsOpsSpec extends SparkSpec {
       assert(r.getLong(2) == want, s"u7($d)")
     }
   }
+  /** q143's skewed-degree md5 graph (a < b, distinct). */
+  private def q143Edges = {
+    val h = conv(substring(md5(concat(lit("core#"), col("src"), lit("#"), col("k"))), 1, 15), 16, 10).cast("long")
+    graft.Tables.documents(spark, sfDir).filter(col("doc_id") < 500)
+      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(12))).as("k"))
+      .filter(col("k") <= lit(1) + col("src") % 12)
+      .withColumn("dst", pmod(h, lit(500L)))
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") < col("b")).distinct()
+  }
+
   test("q143: k-core is a fixpoint — every survivor holds k induced neighbors; peel removed nodes") {
     val out = PageRank.q143KCore.run(spark, sfDir).cache()
     val rows = out.collect()
@@ -242,20 +253,24 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(rows.forall(_.getLong(1) >= PageRank.CoreK), "core degrees are >= k by definition")
     // fixpoint: running the peel AGAIN on the surviving induced subgraph
     // must keep every node (otherwise the first run stopped early)
-    import graft.TestSession.spark.implicits._
     val ids = rows.map(_.getLong(0)).toSet
-    val h = conv(substring(md5(concat(lit("core#"), col("src"), lit("#"), col("k"))), 1, 15), 16, 10).cast("long")
-    val e = graft.Tables.documents(spark, sfDir).filter(col("doc_id") < 500)
-      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(12))).as("k"))
-      .filter(col("k") <= lit(1) + col("src") % 12)
-      .withColumn("dst", pmod(h, lit(500L)))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+    val e = q143Edges
       .filter(col("a").isin(ids.toSeq: _*) && col("b").isin(ids.toSeq: _*))
     val (again, rounds) = PageRank.kcore(e, PageRank.CoreK, PageRank.CoreMaxRounds)
     assert(rounds == 1, "induced core must be stable in one pass")
     assert(again.count() == rows.length, "re-peeling the core removes nothing")
     out.unpersist()
+  }
+
+  test("q143: k-core on each side of its round cap") {
+    // the peel cascades over several rounds; one round fewer must fail
+    // loud rather than return a half-peeled core
+    val (core, rounds) = PageRank.kcore(q143Edges, PageRank.CoreK, PageRank.CoreMaxRounds)
+    assert(rounds > 1 && rounds <= PageRank.CoreMaxRounds)
+    assert(core.count() > 0)
+    val capped = intercept[IllegalStateException](
+      PageRank.kcore(q143Edges, PageRank.CoreK, rounds - 1))
+    assert(capped.getMessage.contains("did not converge"))
   }
 
   test("q145: arms partition each event type; A/A calibration keeps |z| small") {
@@ -383,7 +398,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(got == Map(0L -> 0L, 1L -> 2L, 2L -> 1L, 3L -> 3L))
     assert(rounds <= 8, "fixpoint within the bound")
     // the other side of the round cap: 0→2→1→3 needs 3 rounds
-    val capped = intercept[IllegalArgumentException](PageRank.sssp(e, seeds, maxRounds = 1))
+    val capped = intercept[IllegalStateException](PageRank.sssp(e, seeds, maxRounds = 1))
     assert(capped.getMessage.contains("did not converge within 1 rounds"))
     // unit weights: sssp ≡ bfs hop distances on the q113 trade graph
     val rel = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_suppkey")
@@ -401,6 +416,28 @@ class AnalyticsOpsSpec extends SparkSpec {
     val (udist, _) = PageRank.sssp(edges, bseeds, maxRounds = 8)
     val um = udist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(um == hops, "unit-weight Bellman-Ford must equal BFS hop labels")
+  }
+
+  test("sssp: a converging round costs no job beyond its checkpoint") {
+    import graft.TestSession.spark.implicits._
+    import graft.Fixpoint
+    val e = Seq((0L, 1L, 5L), (0L, 2L, 1L), (2L, 1L, 1L), (1L, 3L, 1L), (2L, 3L, 10L))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(0L).toDF("id")
+    var rounds = 0
+    val observed = jobsDuring { rounds = PageRank.sssp(e, seeds, maxRounds = 8)._2 }
+    // the same checkpoints, round for round, with nothing observed
+    val alone = jobsDuring {
+      val ce = Fixpoint.ckpt(e.select(col("src"), col("dst"), col("w")))
+      var dist = Fixpoint.ckpt(seeds.select(col("id")).distinct().withColumn("dist", lit(0L)))
+      for (_ <- 1 to rounds) {
+        val relaxed = dist.join(ce, dist("id") === ce("src"))
+          .select(ce("dst").as("id"), (dist("dist") + ce("w")).as("dist"))
+        dist = Fixpoint.ckpt(dist.unionByName(relaxed).groupBy("id").agg(min("dist").as("dist")))
+      }
+    }
+    assert(rounds == 4)
+    assert(observed == alone, s"sssp ran $observed jobs, its checkpoints alone $alone")
   }
 
   test("q223: dangling term conserves total mass; dropping it leaks the sinks' share") {

@@ -58,12 +58,24 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("reliable checkpoint path produces the same labels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     val verts = (0L until 20L).toDF("id")
     val edges = (0L until 19L by 2).map(i => (i, i + 1)).toDF("src", "dst")
-    val reliable = labelsOf(Components.connectedComponents(verts, edges, checkpointDir = Some(dir)))
-    val local = labelsOf(Components.connectedComponentsAuto(verts, edges))
+    val (_, reliable) = withCheckpointDir(labelsOf(Components.connectedComponents(verts, edges)))
+    val local = labelsOf(Components.connectedComponents(verts, edges))
     assert(reliable == local)
+    assert(reliable == labelsOf(Components.connectedComponentsAuto(verts, edges)))
+  }
+
+  test("Fixpoint.ckpt checkpoints reliably only while the context has a checkpoint dir") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rddOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
+    val frame = (0L until 10L).toDF("id")
+    val (dir, reliable) = withCheckpointDir(rddOf(graft.Fixpoint.ckpt(frame)))
+    assert(reliable.isCheckpointed && reliable.getCheckpointFile.exists(_.contains(dir.getName)))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "the dir must be unset afterwards")
+    val local = rddOf(graft.Fixpoint.ckpt(frame))
+    assert(local.isCheckpointed && local.getCheckpointFile.isEmpty)
   }
 
   test("singletons label themselves") {

@@ -199,7 +199,7 @@ class PipelineOpsSpec extends SparkSpec {
       .distinct()
     val e2 = edges.select(col("cust").as("src"), col("supp").as("dst"))
       .union(edges.select(col("supp").as("src"), col("cust").as("dst")))
-    val r = PageRank.ranks(e2)
+    val r = PageRank.pprRanks(e2, lit(true))
     val n = r.count()
     val total = r.select(sum("rank").cast("long")).head.getLong(0)
     val cap = n * PageRank.Unit
@@ -210,8 +210,8 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("pagerank: reliable-checkpoint mode produces bit-identical ranks to localCheckpoint mode") {
     // same tiny planted-hub graph in both modes; integer arithmetic means
-    // the results must agree exactly, and the reliable run must actually
-    // write checkpoint files into the supplied directory
+    // the results must agree exactly, and the reliable run (checkpoint dir
+    // set on the context) must actually write checkpoint files into it
     val n = 200L
     val base = spark.range(n).toDF("src")
     val raw = (0 until 3).map(k =>
@@ -219,13 +219,13 @@ class PipelineOpsSpec extends SparkSpec {
       .reduce(_ unionByName _)
       .filter(col("src") =!= col("dst")).distinct()
     val edges = raw.unionByName(raw.select(col("dst").as("src"), col("src").as("dst")))
-    val local = PageRank.ranks(edges).orderBy("id").collect()
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_ckpt").toString
-    val reliable = PageRank.ranks(edges, Some(dir)).orderBy("id").collect()
+    val local = PageRank.pprRanks(edges, lit(true)).orderBy("id").collect()
+    val (dir, reliable) = withCheckpointDir(
+      PageRank.pprRanks(edges, lit(true)).orderBy("id").collect())
     assert(local.toSeq == reliable.toSeq, "checkpoint modes diverged")
     def countFiles(p: java.io.File): Int =
       if (p.isDirectory) p.listFiles.map(countFiles).sum else 1
-    assert(countFiles(new java.io.File(dir)) > 0, "no reliable checkpoint files written")
+    assert(countFiles(dir) > 0, "no reliable checkpoint files written")
   }
 
   test("q80: every z-order bucket is a 32x32 rectangle of (part, supp) space") {
