@@ -34,8 +34,7 @@ object Fixpoint {
     * included). Throws when `maxRounds` rounds still changed something:
     * a capped loop's state is wrong, never an answer. */
   def converge[S](init: S, maxRounds: Int, what: String)(step: S => (S, Boolean)): (S, Int) = {
-    var (state, changed) = (init, true)
-    var rounds = 0
+    var (state, changed, rounds) = (init, true, 0)
     while (changed) {
       if (rounds == maxRounds)
         throw new IllegalStateException(s"$what did not converge within $maxRounds rounds")

@@ -906,8 +906,9 @@ object Scale {
 
   /** Runs each `(phase, n)` in order, writes the record to `out` and then
     * throws if any phase failed. Each phase gets a scratch dir, deleted
-    * afterwards, and the session's cache is cleared between phases so a
-    * phase measures itself, not its predecessor's frames. */
+    * afterwards, and the session's cache and checkpoint blocks are swept
+    * between phases ([[Bench.sweep]]) so a phase measures itself, not
+    * its predecessor's frames. */
   def run(spark: SparkSession, plan: Seq[(Phase, Long)], out: Path): Unit = {
     val mapper = new ObjectMapper()
     val root = mapper.readTree(
@@ -919,6 +920,7 @@ object Scale {
       val dir = Files.createTempDirectory(s"graft_scale_${p.name}")
       val ((result, secs), peak) = withLiveHeapPeak(timed(Try(p.body(spark, n, dir))))
       spark.catalog.clearCache()
+      Bench.sweep(spark)
       deleteTree(dir)
       val node = phaseNodes.putObject(p.name)
       node.put("size", p.size)

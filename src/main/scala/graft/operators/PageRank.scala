@@ -70,31 +70,42 @@ object PageRank {
 
   /** The q102/q160/q170/q229 deterministic md5-bridge friendship graph:
     * canonical undirected edges (a < b, distinct). */
-  private def friendEdges(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(concat(lit("tri#"), col("src"), lit("#"), col("k"))),
-      1, 15), 16, 10).cast(LongType)
+  private def friendEdges(s: SparkSession, d: String): DataFrame =
+    canonical(md5Draws(s, d, "tri#", 6))
+
+  /** The md5-bridge draws behind the synthetic graphs (both engines share
+    * the hash): for every doc id `src` < 500 and `k` in 1..`fanout`, `h`
+    * is the POSITIVE 60-bit word md5(salt ‖ src ‖ "#" ‖ k) and `dst` =
+    * h mod 500. Derive from `h` with integer DIV only, never `/` (double
+    * division drops low bits past 2^53). */
+  private def md5Draws(s: SparkSession, d: String, salt: String, fanout: Int): DataFrame =
     Tables.documents(s, d).filter(col("doc_id") < 500)
-      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
-      .withColumn("dst", pmod(h, lit(500L)))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
+      .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(fanout))).as("k"))
+      .withColumn("h", conv(substring(md5(concat(lit(salt), col("src"), lit("#"), col("k"))),
+        1, 15), 16, 10).cast(LongType))
+      .withColumn("dst", pmod(col("h"), lit(500L)))
+
+  /** (src, dst) pairs as canonical undirected edges (a < b, distinct). */
+  private def canonical(e: DataFrame): DataFrame =
+    e.select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b")).distinct()
-  }
+
+  /** q77/q156's readout: the top-20 nodes of `ranks` (id, rank), typed
+    * and keyed. */
+  private def topNodes(ranks: DataFrame): DataFrame =
+    ranks.select(
+        when(col("id") >= 1000000L, "supplier").otherwise("customer").as("node_type"),
+        when(col("id") >= 1000000L, col("id") - 1000000L).otherwise(col("id")).as("key"),
+        col("rank"))
+      .orderBy(col("rank").desc, col("node_type").asc, col("key").asc)
+      .limit(20)
 
   /** q77: PageRank top-20 over the trade graph — node type, key and
     * integer rank after 4 rounds; suppliers dominate (100 suppliers
     * absorb the mass of 1500 customers). */
   val q77PageRank = QueryDef(
     "q77_pagerank",
-    (s, d) => {
-      pprRanks(tradeEdges(s, d), lit(true))
-        .select(
-          when(col("id") >= 1000000L, "supplier").otherwise("customer").as("node_type"),
-          when(col("id") >= 1000000L, col("id") - 1000000L).otherwise(col("id")).as("key"),
-          col("rank"))
-        .orderBy(col("rank").desc, col("node_type").asc, col("key").asc)
-        .limit(20)
-    },
+    (s, d) => topNodes(pprRanks(tradeEdges(s, d), lit(true))),
     Some(s"""WITH rel AS (
            |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cust,
            |    CAST(l_suppkey AS BIGINT) + 1000000 AS supp
@@ -183,8 +194,7 @@ object PageRank {
     var visited = Fixpoint.ckpt(seeds.select(col("id")).distinct()
       .withColumn("hops", lit(0L)))
     var frontier = visited.select("id")
-    var h = 1
-    while (h <= maxHops) {
+    for (h <- 1 to maxHops) {
       val next = Fixpoint.ckpt(frontier.join(e, frontier("id") === e("src"))
         .select(e("dst").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
@@ -196,7 +206,6 @@ object PageRank {
       // redundant materializations spill to disk)
       visited = visited.union(next)
       frontier = next.select("id")
-      h += 1
     }
     visited
   }
@@ -296,15 +305,8 @@ object PageRank {
   val q213Sssp = QueryDef(
     "q213_weighted_sssp",
     (s, d) => {
-      val h = conv(substring(md5(concat(lit("sp#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
-      val e = Tables.documents(s, d).filter(col("doc_id") < 500)
-        .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(6))).as("k"))
-        .withColumn("h", h)
-        .select(col("src"), pmod(col("h"), lit(500L)).as("dst"),
-          // h is a POSITIVE 60-bit value: integer DIV, never `/` (double
-          // division drops low bits past 2^53)
-          expr("1L + (h DIV 500) % 2").as("w"))
+      val e = md5Draws(s, d, "sp#", 6)
+        .select(col("src"), col("dst"), expr("1L + (h DIV 500) % 2").as("w"))
         .filter(col("src") =!= col("dst"))
         .groupBy("src", "dst").agg(min("w").as("w"))
       val seeds = Tables.documents(s, d)
@@ -382,15 +384,7 @@ object PageRank {
   val q143KCore = QueryDef(
     "q143_kcore",
     (s, d) => {
-      val h = conv(substring(md5(concat(lit("core#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
-      val e = Tables.documents(s, d).filter(col("doc_id") < 500)
-        .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(12))).as("k"))
-        .filter(col("k") <= lit(1) + col("src") % 12)
-        .withColumn("dst", pmod(h, lit(500L)))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") < col("b")).distinct()
+      val e = canonical(md5Draws(s, d, "core#", 12).filter(col("k") <= lit(1) + col("src") % 12))
       val (core, _) = kcore(e, CoreK, CoreMaxRounds)
       core.orderBy("id")
     },
@@ -485,13 +479,8 @@ object PageRank {
   val q148Hits = QueryDef(
     "q148_hits",
     (s, d) => {
-      val hfn = conv(substring(md5(concat(lit("hits#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
-      val e = Tables.documents(s, d).filter(col("doc_id") < 500)
-        .select(col("doc_id").as("src"), explode(sequence(lit(1), lit(8))).as("k"))
-        .filter(col("k") <= lit(1) + col("src") % 8)
-        .withColumn("dst", pmod(hfn, lit(500L)))
-        .filter(col("src") =!= col("dst"))
+      val e = md5Draws(s, d, "hits#", 8)
+        .filter(col("k") <= lit(1) + col("src") % 8 && col("src") =!= col("dst"))
         .select("src", "dst").distinct()
       val (nodes, h, a) = hits(e, HitsIterations)
       nodes.join(h, Seq("id")).join(a, Seq("id")).orderBy("id")
@@ -572,16 +561,8 @@ object PageRank {
 
   val q156Ppr = QueryDef(
     "q156_ppr",
-    (s, d) => {
-      pprRanks(tradeEdges(s, d), col("id") < 1000000L && col("id") % 500 === 0)
-        .filter(col("rank") > 0)
-        .select(
-          when(col("id") >= 1000000L, "supplier").otherwise("customer").as("node_type"),
-          when(col("id") >= 1000000L, col("id") - 1000000L).otherwise(col("id")).as("key"),
-          col("rank"))
-        .orderBy(col("rank").desc, col("node_type").asc, col("key").asc)
-        .limit(20)
-    },
+    (s, d) => topNodes(pprRanks(tradeEdges(s, d), col("id") < 1000000L && col("id") % 500 === 0)
+      .filter(col("rank") > 0)),
     Some(s"""WITH rel AS (
            |  SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cust,
            |    CAST(l_suppkey AS BIGINT) + 1000000 AS supp
@@ -848,14 +829,10 @@ object PageRank {
   val q223DanglingPagerank = QueryDef(
     "q223_dangling_pagerank",
     (s, d) => {
-      val h = conv(substring(md5(concat(lit("dp#"), col("src"), lit("#"), col("k"))),
-        1, 15), 16, 10).cast(LongType)
       val nodes = Tables.documents(s, d).filter(col("doc_id") < 500)
         .select(col("doc_id").as("id"))
-      val edges = Fixpoint.ckpt(nodes.filter(col("id") % 5 =!= 0) // ≡0 (mod 5) → sinks
-        .select(col("id").as("src"), explode(sequence(lit(1), lit(4))).as("k"))
-        .withColumn("dst", pmod(h, lit(500L)))
-        .filter(col("src") =!= col("dst"))
+      val edges = Fixpoint.ckpt(md5Draws(s, d, "dp#", 4)
+        .filter(col("src") % 5 =!= 0 && col("src") =!= col("dst")) // ≡0 (mod 5) → sinks
         .select("src", "dst").distinct())
       val deg = Fixpoint.ckpt(edges.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("outdeg")))
