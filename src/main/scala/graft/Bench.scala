@@ -183,8 +183,8 @@ object Bench {
     * loops, ProfileQuery). It sweeps dead localCheckpoint blocks out of
     * the block manager. Every run of a checkpointing query (the graph
     * loops' [[Fixpoint.ckpt]] and the other operators' localCheckpoint
-    * sites) persists RDD blocks that only die when the JVM happens to GC the owning
-    * reference — on a 48g heap that can be hundreds of queries later,
+    * sites) persists RDD blocks that only die when the JVM happens to GC
+    * the owning reference — on a 48g heap that can be hundreds of queries later,
     * and by the string-sorted tail (q13… runs after the whole q1xx
     * block) the accumulated blocks were inflating medians 4–7× vs
     * isolated runs (measured: q13 4.14 s in-harness, 0.56 s isolated).
