@@ -27,3 +27,27 @@ final case class QueryDef(
     body(s, dir)
   }
 }
+
+object QueryDef {
+  /** Runs `body` with the session confs `kvs` set, then restores each
+    * key to what it was before: its prior value, or unset where it had
+    * none. A query that needs a conf only while its frame plans or
+    * materializes wraps exactly that span. */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
+  /** Storage-partitioned join confs: bucketed DSv2 scans report their
+    * layout, and no broadcast bypasses the partition alignment. */
+  val SpjConfs: Seq[(String, String)] = Seq(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /** The RocksDB state store, which `transformWithState` requires. */
+  val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+}

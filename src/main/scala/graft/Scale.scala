@@ -86,12 +86,6 @@ object Scale {
     finally collectors.foreach(_.removeNotificationListener(listener))
   }
 
-  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-  }
-
   private def deleteTree(p: Path): Unit = {
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
@@ -575,7 +569,7 @@ object Scale {
     * interval join Spark would nested-loop; the rule must rewrite it and
     * the planted interval must match its 100 planted points. */
   private def rangeJoin(spark: SparkSession, n: Long, dir: Path): Figures =
-    withConf(spark, graft.plans.BinnedRangeJoin.BinWidthKey, "50000") {
+    QueryDef.withConf(spark, graft.plans.BinnedRangeJoin.BinWidthKey -> "50000") {
       val (pts, ivs) = rangeSides(spark, n, n / 50, 13L, 49999L)
       val plan = pts.join(ivs, inRange).queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -595,7 +589,7 @@ object Scale {
     * padded plus distinct-matched rows tile each side, and the planted
     * interval matches its 100 points. */
   private def fullOuter(spark: SparkSession, n: Long, dir: Path): Figures =
-    withConf(spark, graft.plans.BinnedRangeJoin.BinWidthKey, "50000") {
+    QueryDef.withConf(spark, graft.plans.BinnedRangeJoin.BinWidthKey -> "50000") {
       val nIvs = n / 40
       val (pts, ivs) = rangeSides(spark, n, nIvs, 33L, 9999L)
       val plan = pts.join(ivs, inRange, "full_outer").queryExecution.executedPlan.toString
@@ -664,7 +658,7 @@ object Scale {
   private def drain(spark: SparkSession, table: String, rows: Long,
       opts: Map[String, String]): (Double, Seq[Long], Map[String, Long]) = {
     val sink = s"scale_sink_${System.nanoTime()}"
-    val (q, secs) = withConf(spark, "spark.sql.shuffle.partitions", "1") {
+    val (q, secs) = QueryDef.withConf(spark, "spark.sql.shuffle.partitions" -> "1") {
       timed {
       val q = opts.foldLeft(spark.readStream)((b, kv) => b.option(kv._1, kv._2)).table(table)
         .groupBy(lit(1).as("g")).agg(count(lit(1)).as("n"), sum("k").as("s"))

@@ -866,8 +866,7 @@ object Relational {
   val q222IntervalJoin = QueryDef(
     "q222_interval_join_binned",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
-      try {
+      QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> RangeBinWidth.toString) {
         def md5int(c: Column): Column =
           pmod(conv(substring(md5(c), 1, 15), 16, 10).cast(LongType),
             lit(1000000000L))
@@ -885,7 +884,7 @@ object Relational {
             max("pt").as("last_pt"))
           .localCheckpoint()
           .orderBy("iid")
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some(s"""WITH pts AS (
            |  SELECT event_id,
@@ -923,8 +922,7 @@ object Relational {
   val q243LeftOuterIntervalJoin = QueryDef(
     "q243_interval_join_left_outer",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
-      try {
+      QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> RangeBinWidth.toString) {
         def md5int(c: Column): Column =
           pmod(conv(substring(md5(c), 1, 15), 16, 10).cast(LongType),
             lit(1000000000L))
@@ -944,7 +942,7 @@ object Relational {
             min("event_id").as("first_ev"), max("event_id").as("last_ev"))
           .localCheckpoint()
           .orderBy("cov")
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some(s"""WITH pts AS (
            |  SELECT event_id,
@@ -985,8 +983,7 @@ object Relational {
   val q246FullOuterIntervalJoin = QueryDef(
     "q246_interval_join_full_outer",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
-      try {
+      QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> RangeBinWidth.toString) {
         def md5int(c: Column): Column =
           pmod(conv(substring(md5(c), 1, 15), 16, 10).cast(LongType),
             lit(1000000000L))
@@ -1010,7 +1007,7 @@ object Relational {
             coalesce(sum("iid"), lit(0L)).as("iid_sum"))
           .localCheckpoint()
           .orderBy("kind")
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some(s"""WITH pts AS (
            |  SELECT event_id,
@@ -1047,8 +1044,7 @@ object Relational {
   val q247DeadWindows = QueryDef(
     "q247_interval_anti_dead_windows",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, RangeBinWidth.toString)
-      try {
+      QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> RangeBinWidth.toString) {
         def md5int(c: Column): Column =
           pmod(conv(substring(md5(c), 1, 15), 16, 10).cast(LongType),
             lit(1000000000L))
@@ -1064,7 +1060,7 @@ object Relational {
             coalesce(sum("iid"), lit(0L)).as("iid_sum"),
             min("iid").as("first_dead"), max("iid").as("last_dead"))
           .localCheckpoint()
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some(s"""WITH pts AS (
            |  SELECT CAST(('0x' || substr(md5('pt#' || event_id), 1, 15)) AS BIGINT)
@@ -1194,8 +1190,7 @@ object Relational {
   val q265RatioBandJoin = QueryDef(
     "q265_ratio_band_join",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "512")
-      try {
+      QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> "512") {
         def cents(c: Column): Column =
           floor(c * 100.0 + 0.5).cast(LongType)
         val a = Tables.part(s, d).filter(col("p_brand") === "Brand#11")
@@ -1210,7 +1205,7 @@ object Relational {
             max("pb").as("max_pb"))
           .localCheckpoint()
           .orderBy("ka")
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some("""WITH a AS (
            |  SELECT p_partkey AS ka,

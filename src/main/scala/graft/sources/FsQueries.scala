@@ -13,11 +13,14 @@ import org.apache.spark.sql.types.LongType
   * batch + streamed CDF with read-time pre-image reconstruction,
   * timestamp time travel under the injectable [[GraftClock]], and
   * byte-budget feed admission. Each query rebuilds its table from DROP
-  * (the cost is in the timing — honest), and every result is the same
-  * DuckDB-functional oracle shape as its mem twin, so a protocol
-  * difference between the row-backed and file-backed stores is a hash
-  * mismatch. Reference analog: none (dask-obj has no storage layer);
-  * this is the [X] tier's demonstrated 100 TB story (BASELINE.json:6).
+  * (the cost is in the timing — honest). The twins of the heap queries
+  * — UPDATE (q290), the ledger MERGE (q291, q292) and the streamed typed
+  * CDF (q295) — run the SAME scenario code and oracle as their mem
+  * twins ([[TwinVerbs]]) with their own table, view and constants, so a
+  * protocol difference between the row-backed and file-backed stores is
+  * a hash mismatch. Reference analog: none (dask-obj has no storage
+  * layer); this is the [X] tier's demonstrated 100 TB story
+  * (BASELINE.json:6).
   */
 object FsQueries {
 
@@ -83,143 +86,46 @@ object FsQueries {
     * rewrite's tasks write NEW parquet files and the truncate-install
     * swaps the manifest — one atomic version, old files untouched on
     * disk (time travel still serves them). */
-  val q290FsUpdate = graft.QueryDef(
-    "q290_fs_update",
-    (s, d) => {
-      val src = graft.Tables.lineitem(s, d).select(
-        col("l_orderkey").cast("long").as("k"),
-        col("l_quantity").cast("long").as("qty"),
-        col("l_returnflag").as("flag"))
-      s.sql("DROP TABLE IF EXISTS graft.fs_upd")
-      src.writeTo("graft.fs_upd").create()
-      s.sql("""UPDATE graft.fs_upd SET qty = qty * 3
-              |WHERE flag = 'A' AND k % 4 = 0""".stripMargin)
-      s.table("graft.fs_upd")
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum("qty").as("sum_qty"),
-          sum("k").as("sum_k"))
-        .orderBy("flag")
-    },
-    Some("""SELECT l_returnflag AS flag, CAST(COUNT(*) AS BIGINT) AS n,
-           |  CAST(SUM(CASE WHEN l_returnflag = 'A' AND l_orderkey % 4 = 0
-           |    THEN CAST(l_quantity AS BIGINT) * 3
-           |    ELSE CAST(l_quantity AS BIGINT) END) AS BIGINT) AS sum_qty,
-           |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_k
-           |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin)
-  )
+  val q290FsUpdate = {
+    val verb = TwinVerbs.Update(factor = 3, flag = "A", every = 4)
+    graft.QueryDef("q290_fs_update",
+      (s, d) => verb.run(s, d, "fs_upd"), Some(verb.oracle))
+  }
 
   /** q291: fs MERGE, all three clause kinds through the copy-on-write
     * file rewrite (q267's shape): matched UPDATE, not-matched INSERT
     * with sentinel n = −1, not-matched-by-source conditional DELETE —
     * recomputed into new files and swapped in one manifest install. */
-  val q291FsMerge = graft.QueryDef(
-    "q291_fs_merge",
-    (s, d) => {
-      val tgt = graft.Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey").cast("long").as("k"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      s.sql("DROP TABLE IF EXISTS graft.fs_mg")
-      tgt.writeTo("graft.fs_mg").create()
-      graft.Tables.orders(s, d)
-        .filter(col("o_orderkey") % 6 === 0)
-        .select(col("o_orderkey").cast("long").as("k"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-        .createOrReplaceTempView("fsmg_src")
-      s.sql("""MERGE INTO graft.fs_mg t USING fsmg_src s ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET t.sum_qty = t.sum_qty + 3000000
-              |WHEN NOT MATCHED THEN INSERT (k, n, sum_qty) VALUES (s.k, -1, s.pc)
-              |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 5 THEN DELETE
-              |""".stripMargin)
-      s.table("graft.fs_mg")
-        .groupBy((col("k") % 16).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"), sum("n").as("sum_n"),
-          sum("sum_qty").as("sum_sq"), min("k").as("min_k"),
-          max("k").as("max_k"))
-        .orderBy("bucket")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 6 = 0),
-           |fin AS (
-           |  SELECT li.k, li.n,
-           |    li.sum_qty + CASE WHEN src.k IS NOT NULL THEN 3000000 ELSE 0 END
-           |      AS sum_qty
-           |  FROM li LEFT JOIN src USING (k)
-           |  WHERE NOT (src.k IS NULL AND li.k % 10 = 5)
-           |  UNION ALL
-           |  SELECT k, CAST(-1 AS BIGINT), pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT k % 16 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(n) AS BIGINT) AS sum_n,
-           |  CAST(SUM(sum_qty) AS BIGINT) AS sum_sq,
-           |  CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-           |FROM fin GROUP BY 1 ORDER BY bucket""".stripMargin)
-  )
+  val q291FsMerge = {
+    val verb = TwinVerbs.LedgerMerge(every = 6, bump = 3000000, gone = 5)
+    graft.QueryDef("q291_fs_merge",
+      (s, d) => {
+        verb.create(s, d, "fs_mg")
+        verb.merge(s, d, "fs_mg", "fsmg_src")
+        verb.ledger(s, "fs_mg")
+      },
+      Some(verb.oracle))
+  }
 
   /** q292: fsd MERGE-ON-READ delta MERGE (q272's verb on files): the
     * delta writers ship key/update/insert FILES sized by the CHANGE, the
     * base files are never rewritten (the manifest proves it — asserted
     * in-query), and the scan merges masks at read. This is the write
     * path that makes a 0.1% UPDATE on 100 TB cost 0.1%. */
-  val q292FsdDeltaMerge = graft.QueryDef(
-    "q292_fsd_delta_merge",
-    (s, d) => {
-      val tgt = graft.Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey").cast("long").as("k"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      s.sql("DROP TABLE IF EXISTS graft.fsd_mg")
-      tgt.writeTo("graft.fsd_mg").create()
-      val baseFiles = FsStore.current("fsd_mg").files.map(_.path).toSet
-      graft.Tables.orders(s, d)
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey").cast("long").as("k"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-        .createOrReplaceTempView("fsdmg_src")
-      s.sql("""MERGE INTO graft.fsd_mg t USING fsdmg_src s ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET t.sum_qty = t.sum_qty + 4000000
-              |WHEN NOT MATCHED THEN INSERT (k, n, sum_qty) VALUES (s.k, -1, s.pc)
-              |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 9 THEN DELETE
-              |""".stripMargin)
-      val ver = FsStore.current("fsd_mg")
-      require(baseFiles.subsetOf(ver.files.map(_.path).toSet) && ver.masks.nonEmpty,
-        "fsd_mg: merge-on-read must keep base files and install a key mask")
-      s.table("graft.fsd_mg")
-        .groupBy((col("k") % 16).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"), sum("n").as("sum_n"),
-          sum("sum_qty").as("sum_sq"), min("k").as("min_k"),
-          max("k").as("max_k"))
-        .orderBy("bucket")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 7 = 0),
-           |fin AS (
-           |  SELECT li.k, li.n,
-           |    li.sum_qty + CASE WHEN src.k IS NOT NULL THEN 4000000 ELSE 0 END
-           |      AS sum_qty
-           |  FROM li LEFT JOIN src USING (k)
-           |  WHERE NOT (src.k IS NULL AND li.k % 10 = 9)
-           |  UNION ALL
-           |  SELECT k, CAST(-1 AS BIGINT), pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT k % 16 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(n) AS BIGINT) AS sum_n,
-           |  CAST(SUM(sum_qty) AS BIGINT) AS sum_sq,
-           |  CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-           |FROM fin GROUP BY 1 ORDER BY bucket""".stripMargin)
-  )
+  val q292FsdDeltaMerge = {
+    val verb = TwinVerbs.LedgerMerge(every = 7, bump = 4000000, gone = 9)
+    graft.QueryDef("q292_fsd_delta_merge",
+      (s, d) => {
+        verb.create(s, d, "fsd_mg")
+        val baseFiles = FsStore.current("fsd_mg").files.map(_.path).toSet
+        verb.merge(s, d, "fsd_mg", "fsdmg_src")
+        val ver = FsStore.current("fsd_mg")
+        require(baseFiles.subsetOf(ver.files.map(_.path).toSet) && ver.masks.nonEmpty,
+          "fsd_mg: merge-on-read must keep base files and install a key mask")
+        verb.ledger(s, "fsd_mg")
+      },
+      Some(verb.oracle))
+  }
 
   /** q293: fs SCHEMA EVOLUTION with TYPE WIDENING — the ALTER a year-two
     * table actually wants: `cust` starts INT, widens to BIGINT
@@ -338,64 +244,15 @@ object FsQueries {
     * stream out of the same read-time reconstruction as q294 — the
     * sequential-slice fallback for filtered changes, file-parallel for
     * insert/post-image slices. */
-  val q295FsdCdfStream = graft.QueryDef(
-    "q295_fsd_cdf_stream",
-    (s, d) => {
-      val tgt = graft.Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey").cast("long").as("k"))
-        .agg(sum(col("l_quantity").cast("long")).as("sq"))
-      s.sql("DROP TABLE IF EXISTS graft.fsd_cfs")
-      tgt.writeTo("graft.fsd_cfs").create() // v0+v1: inserts
-      graft.Tables.orders(s, d)
-        .filter(col("o_orderkey") % 6 === 0)
-        .select(col("o_orderkey").cast("long").as("k"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-        .createOrReplaceTempView("fscfs_src")
-      s.sql("""MERGE INTO graft.fsd_cfs t USING fscfs_src s ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET t.sq = t.sq + 888
-              |WHEN NOT MATCHED THEN INSERT (k, sq) VALUES (s.k, s.pc)
-              |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 4 THEN DELETE
-              |""".stripMargin) // v2: delta commit
-      val q = s.readStream.table("graft.fsd_cfs__changes")
-        .writeStream.outputMode("append").format("memory")
-        .queryName("q295_sink")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("q295_sink")
-        .groupBy(col("_change_type").as("op"))
-        .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
-          sum("sq").as("sum_sq"))
-        .orderBy("op")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sq
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 6 = 0),
-           |ch AS (
-           |  SELECT 'insert' AS op, k, sq FROM li
-           |  UNION ALL
-           |  SELECT 'update_preimage', li.k, li.sq
-           |  FROM li JOIN src ON li.k = src.k
-           |  UNION ALL
-           |  SELECT 'update_postimage', li.k, li.sq + 888
-           |  FROM li JOIN src ON li.k = src.k
-           |  UNION ALL
-           |  SELECT 'delete', li.k, li.sq
-           |  FROM li LEFT JOIN src ON li.k = src.k
-           |  WHERE src.k IS NULL AND li.k % 10 = 4
-           |  UNION ALL
-           |  SELECT 'insert', k, pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT op, CAST(COUNT(*) AS BIGINT) AS n,
-           |  CAST(SUM(k) AS BIGINT) AS sum_k,
-           |  CAST(SUM(sq) AS BIGINT) AS sum_sq
-           |FROM ch GROUP BY op ORDER BY op""".stripMargin)
-  )
+  val q295FsdCdfStream = {
+    val verb = TwinVerbs.CdfMerge(every = 6, bump = 888, gone = 4)
+    graft.QueryDef("q295_fsd_cdf_stream",
+      (s, d) => {
+        verb.build(s, d, "fsd_cfs", "fscfs_src")
+        verb.readout(s, "fsd_cfs", "q295_sink")
+      },
+      Some(verb.oracle))
+  }
 
   /** q296: `TIMESTAMP AS OF` under the injectable commit clock — the
     * common time-travel syntax, kept deterministic: [[GraftClock]]
@@ -709,11 +566,7 @@ object FsQueries {
   val q304FsSpjJoin = graft.QueryDef(
     "q304_fs_spj_join",
     (s, d) => {
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.QueryDef.withConf(s, graft.QueryDef.SpjConfs: _*) {
         s.sql("DROP TABLE IF EXISTS graft.fs_spj1")
         s.sql("DROP TABLE IF EXISTS graft.fs_spj2")
         s.sql("""CREATE TABLE graft.fs_spj1 (k BIGINT, sq BIGINT)
@@ -742,10 +595,6 @@ object FsQueries {
             sum("pc").as("sum_pc"))
           .localCheckpoint()
           .orderBy("bucket")
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        prevBk.fold(s.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
       }
     },
     Some("""WITH li AS (
@@ -1130,11 +979,7 @@ object FsQueries {
   val q311FsRebucket = graft.QueryDef(
     "q311_fs_rebucket",
     (s, d) => {
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.QueryDef.withConf(s, graft.QueryDef.SpjConfs: _*) {
         s.sql("DROP TABLE IF EXISTS graft.fs_rb1")
         s.sql("DROP TABLE IF EXISTS graft.fs_rb2")
         // born unpartitioned — the legacy-table shape
@@ -1164,10 +1009,6 @@ object FsQueries {
             sum("pc").as("sum_pc"))
           .localCheckpoint()
           .orderBy("bucket")
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        prevBk.fold(s.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
       }
     },
     Some("""WITH li AS (
@@ -2226,10 +2067,7 @@ object FsQueries {
       require(head.bucketN == 8 && head.files.forall(f =>
         f.bucket >= 0 && f.parts.size == 1 && f.parts(0).nonEmpty),
         "composed files must carry BOTH the bucket and the year tuple")
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.QueryDef.withConf(s, graft.QueryDef.SpjConfs: _*) {
         val q = s.table("graft.fs_bvl")
           .filter(col("ts") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
             col("ts") < lit("1998-01-01 00:00:00").cast("timestamp"))
@@ -2261,9 +2099,6 @@ object FsQueries {
             s"no files= fraction on the fs_bvl scan: $plan")
         }
         out
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
       }
     },
     Some("""SELECT o_orderpriority AS prio, CAST(COUNT(*) AS BIGINT) AS n,

@@ -10,6 +10,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -370,7 +371,8 @@ object FsParquet {
   * Versions are retained indefinitely (the testbed never needs expiry);
   * a production deployment bounds history with snapshot expiry + vacuum
   * of unreferenced files — the same knob Iceberg/Delta expose. */
-object FsStore {
+object FsStore extends VersionedStore {
+  val tag = "graft_fs"
   val OpInsert = MemStore.OpInsert
   val OpDelete = MemStore.OpDelete
   val OpUpdatePre = MemStore.OpUpdatePre
@@ -911,6 +913,52 @@ object FsStore {
   def versionAt(name: String, v: Long): Version = readManifest(name, v)
   def current(name: String): Version = versionAt(name, currentVersion(name))
   def schemaOf(name: String): StructType = current(name).schema
+  def schemaAt(name: String, v: Long): StructType = versionAt(name, v).schema
+  def appendOnly(name: String, v: Long): Boolean = versionAt(name, v).appendOnly
+  def open(name: String, pinnedVersion: Option[Long], delta: Boolean,
+      changes: Boolean): org.apache.spark.sql.connector.catalog.Table =
+    new FsTable(name, pinnedVersion, delta, changes)
+
+  /** The file change log: file-referenced change entries, rows sized by
+    * the version's manifest average (bytes / rows, no file reads), and
+    * each slice cut per change entry by [[FsScanPlanner.slicePartitions]].
+    * The lineage is pinned at stream start; a metadata-only ALTER slips
+    * past the append-only check (empty change list), so a post-ALTER
+    * append carries a schemaId beyond it — refused with the explicit
+    * restart error, not an opaque IndexOutOfBounds in the reader. */
+  def feedLog(name: String, cdf: Boolean): FeedLog = new FeedLog {
+    private val start = current(name)
+    private val lineage = start.lineage
+    private val dataSchema = start.schema
+    def sliceLen(v: Long): Long = versionAt(name, v).changes.map(_.rows).sum
+    def rowBytes(v: Long): Long => Long = {
+      val cs = versionAt(name, v).changes
+      val rows = cs.map(_.rows).sum
+      val perRow =
+        if (rows <= 0) 1L else math.max(1L, cs.flatMap(_.files).map(_.bytes).sum / rows)
+      _ => perRow
+    }
+    def partitions(slices: Seq[FeedSlice]): Array[InputPartition] =
+      slices.iterator.flatMap { case FeedSlice(v, from, until) =>
+        val ver = versionAt(name, v)
+        ver.changes.iterator.flatMap(c => c.files.iterator ++ c.keys.iterator)
+          .find(_.schemaId >= lineage.length)
+          .foreach(_ => throw new IllegalStateException(
+            s"graft_fs($name): version $v was written under a schema that " +
+              "evolved after this stream started — restart the stream to " +
+              "pick up the new schema"))
+        // walk this version's changes with cumulative counts, slicing
+        // each overlapping entry
+        ver.changes.zip(ver.changes.scanLeft(0L)(_ + _.rows)).flatMap { case (c, cum) =>
+          val (cFrom, cUntil) = (math.max(from, cum), math.min(until, cum + c.rows))
+          if (cUntil <= cFrom) Nil
+          else FsScanPlanner.slicePartitions(c, v, lineage, dataSchema,
+            cdf, cFrom - cum, cUntil - cFrom)
+        }
+      }.toArray
+    // feed slices need per-row logic
+    def readerFactory: PartitionReaderFactory = new FsReaderFactory(columnar = false)
+  }
 
   /** Newest RETAINED version whose commit timestamp is ≤ `tsMs`. Walks
     * lazily head→oldest and stops at the first hit, so a lookup reads

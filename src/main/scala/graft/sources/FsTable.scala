@@ -39,74 +39,22 @@ import FsStore.{Change, DeltaMask, FileRef}
   * (BASELINE.json:6). */
 class FsTable(name: String, pinnedVersion: Option[Long] = None,
     delta: Boolean = false, changes: Boolean = false)
-    extends Table with SupportsRead with SupportsWrite
-    with TruncatableTable with SupportsRowLevelOperations {
-
-  override def name(): String = pinnedVersion match {
-    case Some(v) => s"graft_fs($name@v$v)"
-    case None if changes => s"graft_fs($name#changes)"
-    case None => s"graft_fs($name)"
-  }
-
-  override def schema(): StructType = {
-    val base = pinnedVersion.map(FsStore.versionAt(name, _).schema)
-      .getOrElse(FsStore.schemaOf(name))
-    val typed =
-      if (!delta) base
-      else StructType(base.fields.head.copy(nullable = false) +: base.fields.tail)
-    if (changes) MemCdf.withCdfColumns(typed) else typed
-  }
-
-  private def requireWritable(verb: String): Unit = {
-    require(pinnedVersion.isEmpty,
-      s"graft_fs($name): cannot $verb a time-travel relation")
-    require(!changes,
-      s"graft_fs($name): cannot $verb the __changes relation — it is a " +
-        "read-only view of the commit history")
-  }
+    extends VersionedTable(FsStore, name, pinnedVersion, delta, changes) {
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
 
-  override def newRowLevelOperationBuilder(
-      info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    if (delta) () => new RowLevelOperation with SupportsDelta {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def description(): String = s"graft_fs($name) delta ${info.command()}"
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new FsScanBuilder(name, pinnedVersion, cdf = false, options,
-          allowPushdown = false)
-      override def rowId(): Array[expressions.NamedReference] =
-        Array(expressions.Expressions.column(schema().fieldNames.head))
-      override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder = {
-        requireWritable(s"${info.command()} on")
-        new DeltaWriteBuilder {
-          override def build(): DeltaWrite = new DeltaWrite {
-            override def toBatch: DeltaBatchWrite = new FsDeltaBatchWrite(name)
-          }
-        }
-      }
-    }
-    else () => new RowLevelOperation {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def description(): String =
-        s"graft_fs($name) copy-on-write ${info.command()}"
-      // NO pushdown on the rewrite scan: a group-based CoW recomputation
-      // must read EVERY row of the replaced group — a zone-map skip here
-      // would silently drop the skipped rows from the rewritten table
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new FsScanBuilder(name, pinnedVersion, cdf = false, options,
-          allowPushdown = false)
-      override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder = {
-        requireWritable(s"${info.command()} on")
-        new WriteBuilder {
-          override def build(): Write =
-            new FsWrite(name, truncate = true, winfo.queryId())
-        }
-      }
-    }
+  // NO pushdown on the rewrite scan: a group-based CoW recomputation
+  // must read EVERY row of the replaced group — a zone-map skip here
+  // would silently drop the skipped rows from the rewritten table
+  override protected def rowLevelScan(options: CaseInsensitiveStringMap): ScanBuilder =
+    new FsScanBuilder(name, pinnedVersion, cdf = false, options,
+      allowPushdown = false)
+  override protected def deltaWrite(): DeltaBatchWrite = new FsDeltaBatchWrite(name)
+  override protected def rewrite(info: LogicalWriteInfo): Write =
+    new FsWrite(name, truncate = true, info.queryId())
 
   /** The declared partition spec ([[FsStore.Version.bucketN]]): what
     * `DESCRIBE` shows and what write distribution/SPJ planning resolve. */
@@ -921,9 +869,11 @@ class FsScan(name: String, cdf: Boolean, snapVersion: Long,
   override def createReaderFactory(): PartitionReaderFactory =
     new FsReaderFactory(columnar = allColumnar || cdfAllColumnar)
 
+  /** The change feed, sized by the manifests' per-file byte counts (no
+    * file reads on the driver). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new FsChangeFeed(name, cdf, startingVersion,
+    new ChangeFeed(FsStore, name, cdf, startingVersion,
       maxRowsPerBatch, maxBytesPerBatch)
 }
 
@@ -1415,140 +1365,6 @@ class FsReaderFactory(columnar: Boolean = false) extends PartitionReaderFactory 
       override def get(): InternalRow = cur
       override def close(): Unit = if (live != null) live.close()
     }
-}
-
-/** The fs change feed: [[MemChangeFeed]]'s (version, pos) offsets over
-  * file-referenced change logs, with BOTH row- and byte-budget admission
-  * (`maxRowsPerBatch` / `maxBytesPerBatch` options, and Spark's
-  * ReadMaxRows / ReadMaxBytes / composite limits): one wide-row commit
-  * can no longer force one huge batch — the byte budget splits it using
-  * the manifests' per-file byte counts (no file reads on the driver).
-  * A version boundary is always a batch boundary. */
-class FsChangeFeed(name: String, cdf: Boolean, startingVersion: Option[Long],
-    maxRowsPerBatch: Long, maxBytesPerBatch: Long)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming._
-
-  private val startVersion = FsStore.currentVersion(name)
-  private val lineage = FsStore.versionAt(name, startVersion).lineage
-  // fixed at stream start, like every graft feed: a mid-stream ALTER
-  // widens reads only after a restart
-  private val dataSchema = FsStore.versionAt(name, startVersion).schema
-  private def outSchema =
-    if (cdf) MemCdf.withCdfColumns(dataSchema) else dataSchema
-
-  private def versionOf(v: Long) = FsStore.versionAt(name, v)
-  private def sliceLen(v: Long): Long = versionOf(v).changes.map(_.rows).sum
-  /** Manifest-estimated bytes per row of version `v`'s change stream. */
-  private def bytesPerRow(v: Long): Long = {
-    val cs = versionOf(v).changes
-    val rows = cs.map(_.rows).sum
-    val bytes = cs.flatMap(_.files).map(_.bytes).sum
-    if (rows <= 0) 1L else math.max(1L, bytes / rows)
-  }
-
-  override def prepareForTriggerAvailableNow(): Unit = ()
-  override def initialOffset(): Offset = {
-    val from = startingVersion.getOrElse(FsStore.oldestVersion(name))
-    FsStore.versionAt(name, from) // validate: expired/unknown → range error
-    MemOffset(from, 0L)
-  }
-  override def deserializeOffset(json: String): Offset = MemOffset.parse(json)
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "admission-controlled source: use latestOffset(Offset, ReadLimit)")
-  override def getDefaultReadLimit: ReadLimit = {
-    val hasRows = maxRowsPerBatch != Long.MaxValue
-    val hasBytes = maxBytesPerBatch != Long.MaxValue
-    if (hasRows && hasBytes) ReadLimit.compositeLimit(
-      Array(ReadLimit.maxRows(maxRowsPerBatch), ReadLimit.maxBytes(maxBytesPerBatch)))
-    else if (hasBytes) ReadLimit.maxBytes(maxBytesPerBatch)
-    else ReadLimit.maxRows(maxRowsPerBatch)
-  }
-  private def budgetsOf(limit: ReadLimit): (Long, Long) = limit match {
-    case r: ReadMaxRows => (r.maxRows(), Long.MaxValue)
-    case b: ReadMaxBytes => (Long.MaxValue, b.maxBytes())
-    case c: CompositeReadLimit =>
-      c.getReadLimits.foldLeft((Long.MaxValue, Long.MaxValue)) {
-        case ((r0, b0), r: ReadMaxRows) => (math.min(r0, r.maxRows()), b0)
-        case ((r0, b0), b: ReadMaxBytes) => (r0, math.min(b0, b.maxBytes()))
-        case (acc, _) => acc
-      }
-    case _ => (maxRowsPerBatch, maxBytesPerBatch)
-  }
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[MemOffset]
-    val head = FsStore.currentVersion(name)
-    limit match {
-      case _: ReadAllAvailable => MemOffset(head, sliceLen(head))
-      case other =>
-        val (rowB, byteB) = budgetsOf(other)
-        advance(s, head, rowB, byteB)
-    }
-  }
-  private def advance(s: MemOffset, head: Long, rowBudget: Long,
-      byteBudget: Long): MemOffset = {
-    val (v, pos) =
-      if (s.pos < sliceLen(s.version)) (s.version, s.pos)
-      else if (s.version < head) (s.version + 1, 0L)
-      else return s
-    val len = sliceLen(v)
-    val perRow = bytesPerRow(v)
-    // at least one row per batch (progress guarantee), then admit rows
-    // while BOTH budgets hold — a version boundary still bounds the batch
-    val byRows = math.max(1L, rowBudget)
-    val byBytes = math.max(1L, byteBudget / perRow)
-    MemOffset(v, math.min(len, pos + math.min(byRows, byBytes)))
-  }
-  override def reportLatestOffset(): Offset = {
-    val head = FsStore.currentVersion(name)
-    MemOffset(head, sliceLen(head))
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[MemOffset], end.asInstanceOf[MemOffset])
-    (s.version to e.version).iterator.flatMap { v =>
-      val ver = versionOf(v)
-      val from = if (v == s.version) s.pos else 0L
-      val until = if (v == e.version) e.pos else sliceLen(v)
-      if (until <= from) Iterator.empty
-      else {
-        if (!cdf) require(ver.appendOnly,
-          s"graft_fs($name): version $v is a non-append commit — the plain " +
-            "change feed serves append slices only; read the " +
-            s"${name}__changes relation to stream typed _change_type rows")
-        // lineage is pinned at stream start; a metadata-only ALTER slips
-        // past the appendOnly check (empty change list), so a post-ALTER
-        // append carries a schemaId beyond the pinned lineage — the same
-        // explicit restart error the mem feed throws, not an opaque
-        // IndexOutOfBounds in the reader
-        ver.changes.iterator.flatMap(c => c.files.iterator ++ c.keys.iterator)
-          .find(_.schemaId >= lineage.length)
-          .foreach(f => throw new IllegalStateException(
-            s"graft_fs($name): version $v was written under a schema that " +
-              "evolved after this stream started — restart the stream to " +
-              "pick up the new schema"))
-        // walk this version's changes with cumulative counts, slicing
-        // each overlapping entry
-        val out = Seq.newBuilder[InputPartition]
-        var cum = 0L
-        ver.changes.foreach { c =>
-          val cFrom = math.max(from, cum)
-          val cUntil = math.min(until, cum + c.rows)
-          if (cUntil > cFrom)
-            out ++= FsScanPlanner.slicePartitions(c, v, lineage, dataSchema,
-              cdf, cFrom - cum, cUntil - cFrom)
-          cum += c.rows
-        }
-        out.result()
-      }
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FsReaderFactory(columnar = false) // feed slices need per-row logic
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** One task's manifest entries: the parquet file(s) it wrote — one for

@@ -35,7 +35,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
   }
   override def name(): String = catalogName
 
-  /** `SHOW TABLES IN graft`: the live `mem_*`/`memd_*` tables. The
+  /** `SHOW TABLES IN graft`: the live versioned tables of both stores
+    * (`mem_*`/`memd_*` on the heap, `fs_*`/`fsd_*` on files). The
     * `synth_*` family is parameter-encoded (an infinite generator
     * namespace, `synth_<rows>_<parts>`), so it cannot be enumerated —
     * the same reason a JDBC catalog doesn't list every possible query
@@ -49,81 +50,63 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     else (MemStore.tableNames ++ FsStore.tableNames)
       .map(Identifier.of(Array.empty[String], _)).toArray
 
-  /** `synth_<rows>_<parts>` (bucketed), `synth_<rows>_<parts>_flat`, or a
-    * writable in-memory `mem_<name>` ([[MemTable]]; `memd_<name>` = the
-    * DELTA flavor whose row-level operations plan merge-on-read
-    * `WriteDelta` keyed by the first column instead of group rewrites). */
+  /** `synth_<rows>_<parts>` (bucketed), `synth_<rows>_<parts>_flat`, a
+    * versioned table of either store ([[GraftCatalog.Flavour]]), its
+    * `__changes` change-data-feed relation, or an fs table's
+    * `__history`/`__files` metadata relation. */
   override def loadTable(ident: Identifier): Table = ident.name() match {
     case GraftCatalog.TablePat(rows, parts, flat) =>
       new SynthTable(rows.toLong, parts.toInt, bucketed = flat == null)
-    // `<table>__changes`: the read-only change-data-feed relation of a
-    // mem table — per-commit `_change_type`/`_commit_version` rows
-    // (Delta's `table_changes`, SQL Server's CDC shadow table). The CDF
-    // columns must be on the TABLE schema (analysis resolves columns
-    // before any scan exists), hence a relation suffix, not an option.
-    case m if m.endsWith("__changes") =>
-      val base = m.stripSuffix("__changes")
-      if ((base.startsWith("mem_") || base.startsWith("memd_")) && MemStore.exists(base))
-        new MemTable(base, delta = base.startsWith("memd_"), changes = true)
-      else if ((base.startsWith("fs_") || base.startsWith("fsd_")) && FsStore.exists(base))
-        new FsTable(base, delta = base.startsWith("fsd_"), changes = true)
-      else throw new NoSuchTableException(ident)
     // `<table>__history` / `<table>__files`: manifest-only metadata
     // inspection relations of an fs table (Iceberg's t$history/t$files) —
     // read-only, zero data files opened
     case m if m.endsWith("__history") || m.endsWith("__files") =>
       val kind = if (m.endsWith("__history")) "history" else "files"
       val base = m.stripSuffix(s"__$kind")
-      if ((base.startsWith("fs_") || base.startsWith("fsd_")) && FsStore.exists(base))
-        new FsMetaTable(base, kind)
-      else throw new NoSuchTableException(ident)
-    case m if m.startsWith("memd_") && MemStore.exists(m) =>
-      new MemTable(m, delta = true)
-    case m if m.startsWith("mem_") && MemStore.exists(m) => new MemTable(m)
-    case m if m.startsWith("fsd_") && FsStore.exists(m) =>
-      new FsTable(m, delta = true)
-    case m if m.startsWith("fs_") && FsStore.exists(m) => new FsTable(m)
-    case _ => throw new NoSuchTableException(ident)
+      GraftCatalog.Flavour.of(base)
+        .filter(f => f.store == FsStore && !f.changes && FsStore.exists(base))
+        .map(_ => new FsMetaTable(base, kind))
+        .getOrElse(throw new NoSuchTableException(ident))
+    case _ => live(ident, allowChanges = true).open()
   }
 
-  private def isMem(m: String): Boolean =
-    m.startsWith("mem_") || m.startsWith("memd_")
-  private def isFs(m: String): Boolean =
-    m.startsWith("fs_") || m.startsWith("fsd_")
+  /** The flavour of an existing table of either store, else
+    * NoSuchTableException. Only a plain load may name the `__changes`
+    * relation: time travel and ALTER address a table, not its change
+    * log. */
+  private def live(ident: Identifier, allowChanges: Boolean = false): GraftCatalog.Flavour =
+    GraftCatalog.Flavour.of(ident.name())
+      .filter(f => (allowChanges || !f.changes) && f.store.exists(f.base))
+      .getOrElse(throw new NoSuchTableException(ident))
 
-  /** `VERSION AS OF v` time travel on `mem_*` tables: every commit on a
-    * [[MemTable]] installs a new immutable (versionId, rows) snapshot
-    * ([[MemStore.MaxVersions]] retained), and this hook pins a scan to
-    * one of them — Spark routes `SELECT ... VERSION AS OF v` here, the
-    * same contract Iceberg/Delta fulfil with snapshot ids. Unknown or
-    * expired versions fail at load with the retained range (never a
-    * silent remap); the pinned relation refuses writes. */
-  override def loadTable(ident: Identifier, version: String): Table =
-    ident.name() match {
-      case m if isMem(m) && MemStore.exists(m) =>
-        val v = try version.toLong catch {
-          case _: NumberFormatException => throw new NoSuchTableException(ident)
+  /** `VERSION AS OF v` time travel on either store: every commit
+    * installs a new immutable version (the heap retains
+    * [[MemStore.MaxVersions]], files keep their manifests until
+    * expiry), and this hook pins a scan to one of them — Spark routes
+    * `SELECT ... VERSION AS OF v` here, the same contract Iceberg/Delta
+    * fulfil with snapshot ids. Unknown or expired versions fail at load
+    * with the retained range (never a silent remap); the pinned
+    * relation refuses writes. On an fs table a non-numeric version
+    * names a branch. */
+  override def loadTable(ident: Identifier, version: String): Table = {
+    val f = live(ident)
+    version.toLongOption match {
+      case Some(v) =>
+        f.store.schemaAt(f.base, v) // validate at load: expired → range error
+        f.open(Some(v))
+      case None if f.store == FsStore =>
+        // `VERSION AS OF '<branch>'`: Iceberg's branch read — a
+        // READ-ONLY pin of the branch's current head (the audit
+        // query's surface while a WAP load is staged)
+        val shadow = try FsStore.branchTableName(f.base, version) catch {
+          case _: IllegalArgumentException => throw new NoSuchTableException(ident)
         }
-        MemStore.rowsAt(m, v) // validate at load: expired → range error
-        new MemTable(m, Some(v), delta = m.startsWith("memd_"))
-      case m if isFs(m) && FsStore.exists(m) =>
-        version.toLongOption match {
-          case Some(v) =>
-            FsStore.versionAt(m, v) // validate at load: unknown → range error
-            new FsTable(m, Some(v), delta = m.startsWith("fsd_"))
-          case None =>
-            // `VERSION AS OF '<branch>'`: Iceberg's branch read — a
-            // READ-ONLY pin of the branch's current head (the audit
-            // query's surface while a WAP load is staged)
-            val shadow = try FsStore.branchTableName(m, version) catch {
-              case _: IllegalArgumentException => throw new NoSuchTableException(ident)
-            }
-            if (!FsStore.exists(shadow)) throw new NoSuchTableException(ident)
-            new FsTable(shadow, Some(FsStore.currentVersion(shadow)),
-              delta = m.startsWith("fsd_"))
-        }
-      case _ => throw new NoSuchTableException(ident)
+        if (!FsStore.exists(shadow)) throw new NoSuchTableException(ident)
+        FsStore.open(shadow, Some(FsStore.currentVersion(shadow)), f.delta,
+          changes = false)
+      case None => throw new NoSuchTableException(ident)
     }
+  }
 
   /** `TIMESTAMP AS OF t` — served when the history was committed under
     * the injectable [[GraftClock]] (deterministic, monotonic commit
@@ -134,32 +117,26 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     * default so the DuckDB oracle is deterministic. Spark hands the
     * timestamp in MICROSECONDS. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val tMs = timestamp / 1000L
-    ident.name() match {
-      case m if isMem(m) && MemStore.exists(m) =>
-        new MemTable(m, Some(MemStore.versionAsOfTimestamp(m, tMs)),
-          delta = m.startsWith("memd_"))
-      case m if isFs(m) && FsStore.exists(m) =>
-        new FsTable(m, Some(FsStore.versionAsOfTimestamp(m, tMs)),
-          delta = m.startsWith("fsd_"))
-      case _ => throw new NoSuchTableException(ident)
-    }
+    val f = live(ident)
+    f.open(Some(f.store.versionAsOfTimestamp(f.base, timestamp / 1000L)))
   }
 
-  /** Only `mem_*` tables are creatable — the synth family is generated. */
+  /** `mem_*`/`memd_*` and `fs_*`/`fsd_*` tables are creatable; the
+    * synth family is generated. */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table =
-    ident.name() match {
-      case m if isMem(m) =>
+    GraftCatalog.Flavour.of(ident.name()) match {
+      case Some(f) if f.store == MemStore =>
         require(partitions.isEmpty, "mem tables are unpartitioned")
-        require(!m.endsWith("__changes"),
+        require(!f.changes,
           "the __changes suffix is reserved for the change-data-feed relation")
-        MemStore.create(m, schema)
-        new MemTable(m, delta = m.startsWith("memd_"))
-      case m if isFs(m) =>
-        require(!m.endsWith("__changes"),
+        MemStore.create(f.base, schema)
+        f.open()
+      case Some(f) =>
+        require(!f.changes,
           "the __changes suffix is reserved for the change-data-feed relation")
+        val m = f.base
         // fs_* tables accept a bucket transform, a composite VALUE-
         // partition spec, or BOTH (the SPJ + pruning fact layout):
         //  - bucket(n, <first column>): the layout FsScan reports as
@@ -177,7 +154,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
         val BucketPat = """bucket\((\d+),\s*(.+)\)""".r
         val TruncPat = """truncate\((\d+),\s*(.+)\)""".r
         if (partitions.nonEmpty)
-          require(!m.startsWith("fsd_"),
+          require(!f.delta,
             s"graft catalog: $m is a merge-on-read table — " +
               "partitioning lives on the copy-on-write fs_* flavor")
         var bucketN = 0
@@ -219,10 +196,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
           .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
         FsStore.create(m, schema, bucketN, bloomCols, ngramCols,
           partFields.toList)
-        new FsTable(m, delta = m.startsWith("fsd_"))
-      case other =>
+        f.open()
+      case None =>
         throw new UnsupportedOperationException(
-          s"cannot create $other: only mem_*/memd_*/fs_*/fsd_* tables are writable")
+          s"cannot create ${ident.name()}: only mem_*/memd_*/fs_*/fsd_* tables are writable")
     }
   /** Schema evolution on `mem_*`/`memd_*` tables — metadata-only, the
     * Iceberg contract: ALTER installs a new VERSION carrying the new
@@ -239,10 +216,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     * not (a widened INT slot re-read as LONG is byte-level corruption
     * without per-row era tags — the fs lineage is that tag, per file). */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
+    if (live(ident).store == FsStore) return alterFsTable(ident, changes)
     val name = ident.name()
-    if (isFs(name) && FsStore.exists(name)) return alterFsTable(ident, changes)
-    if (!(isMem(name) && MemStore.exists(name)))
-      throw new NoSuchTableException(ident)
     val base = MemStore.schemaOf(name)
     var schema = base
     changes.foreach {
@@ -385,12 +360,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     loadTable(ident)
   }
 
-  override def dropTable(ident: Identifier): Boolean = {
-    val m = ident.name()
-    if (isMem(m) && MemStore.exists(m)) { MemStore.drop(m); true }
-    else if (isFs(m) && FsStore.exists(m)) { FsStore.drop(m); true }
-    else false
-  }
+  override def dropTable(ident: Identifier): Boolean =
+    GraftCatalog.Flavour.of(ident.name())
+      .filter(f => !f.changes && f.store.exists(f.base))
+      .exists { f => f.store.drop(f.base); true }
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
     throw new UnsupportedOperationException("graft catalog tables cannot be renamed")
 
@@ -403,6 +376,35 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
 
 object GraftCatalog {
   private val TablePat = "synth_([0-9]+)_([0-9]+)(_flat)?".r
+
+  /** Store and flavour of a versioned-table identifier, decided here
+    * and nowhere else: `mem_`/`memd_` live on the heap ([[MemStore]]),
+    * `fs_`/`fsd_` on files ([[FsStore]]); the `d` prefixes are the delta
+    * flavour, whose row-level operations plan merge-on-read `WriteDelta`
+    * keyed by the first column instead of group rewrites; a `__changes`
+    * suffix names the read-only change-data-feed relation of `base` —
+    * per-commit `_change_type`/`_commit_version` rows (Delta's
+    * `table_changes`). The CDF columns must be on the TABLE schema
+    * (analysis resolves columns before any scan exists), hence a
+    * relation suffix, not an option. */
+  final case class Flavour(store: VersionedStore, base: String,
+      delta: Boolean, changes: Boolean) {
+    def open(pinned: Option[Long] = None): Table =
+      store.open(base, pinned, delta, changes)
+  }
+  object Flavour {
+    private val Pat = "(mem|memd|fs|fsd)_.*".r
+    def of(ident: String): Option[Flavour] = {
+      val base = ident.stripSuffix("__changes")
+      base match {
+        case Pat(prefix) =>
+          val store = if (prefix.startsWith("mem")) MemStore else FsStore
+          Some(Flavour(store, base, delta = prefix.endsWith("d"),
+            changes = base != ident))
+        case _ => None
+      }
+    }
+  }
 
   /** `bucket(n, id) = id mod n` — EXACTLY the value each
     * [[SynthBucketPartition]] reports via `HasPartitionKey`, which is

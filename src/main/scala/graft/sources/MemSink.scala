@@ -5,7 +5,6 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -32,7 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * and manifests — reduced to its semantics so the commit/abort
   * behavior itself is testable in-process.
   */
-object MemStore {
+object MemStore extends VersionedStore {
+  val tag = "graft_mem"
+
   /** Capacity gate, the `Components.localThreshold` pattern: the store
     * IS driver memory — that is the point of the sink (the two-phase
     * commit protocol reduced to in-process testable semantics), not an
@@ -111,6 +112,36 @@ object MemStore {
     versionAt(name, version).rows
   def schemaAt(name: String, version: Long): StructType =
     versionAt(name, version).schema
+  def appendOnly(name: String, version: Long): Boolean =
+    versionAt(name, version).appendOnly
+  def open(name: String, pinnedVersion: Option[Long], delta: Boolean,
+      changes: Boolean): Table = new MemTable(name, pinnedVersion, delta, changes)
+
+  /** The heap change log: rows are sized exactly from their UnsafeRow
+    * encoding (commits serialize through UnsafeRow; rows of other
+    * representations fall back to the schema estimate), and a run of
+    * slices is cut into [[MemPartition]] blobs like any snapshot. */
+  def feedLog(name: String, cdf: Boolean): FeedLog = new FeedLog {
+    private val dataSchema = schemaOf(name)
+    private val outSchema =
+      if (cdf) MemCdf.withCdfColumns(dataSchema) else dataSchema
+    def sliceLen(v: Long): Long = versionAt(name, v).changes.size.toLong
+    def rowBytes(v: Long): Long => Long = {
+      val changes = versionAt(name, v).changes
+      i => changes(i.toInt)._2 match {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+          u.getSizeInBytes.toLong
+        case _ => dataSchema.defaultSize.toLong + 8L
+      }
+    }
+    def partitions(slices: Seq[FeedSlice]): Array[InputPartition] =
+      MemPartition.split(slices.iterator.flatMap { sl =>
+        val (from, until) = (sl.from.toInt, sl.until.toInt)
+        if (cdf) MemCdf.changeRows(name, dataSchema, sl.version).slice(from, until)
+        else versionAt(name, sl.version).changes.slice(from, until).map(_._2)
+      }.toVector, outSchema)
+    def readerFactory: PartitionReaderFactory = new MemReaderFactory(outSchema)
+  }
 
   def drop(name: String): Unit = {
     tables.remove(name)
@@ -291,39 +322,8 @@ object MemStore {
 
 class MemTable(name: String, pinnedVersion: Option[Long] = None,
     delta: Boolean = false, changes: Boolean = false)
-    extends Table with SupportsRead with SupportsWrite
-    with TruncatableTable with SupportsDelete
-    with SupportsRowLevelOperations {
-  override def name(): String = pinnedVersion match {
-    case Some(v) => s"graft_mem($name@v$v)"
-    case None if changes => s"graft_mem($name#changes)"
-    case None => s"graft_mem($name)"
-  }
-  /** Delta tables declare their first column (the row id) NON-NULL —
-    * Spark refuses a nullable row id for `WriteDelta` plans, and a memd
-    * table's id is a key by contract. A pinned (VERSION AS OF) relation
-    * reports the schema AS OF that version — the old column set before
-    * an ALTER, which is what version-consistent reads mean. The
-    * `__changes` relation appends `_change_type`/`_commit_version` —
-    * the columns MUST live on the TABLE (not just the scan): Spark
-    * resolves a query's columns from `Table.schema()` during analysis,
-    * before any ScanBuilder exists, which is why CDF is a relation
-    * suffix here rather than a read option. */
-  override def schema(): StructType = {
-    val base = pinnedVersion.map(MemStore.schemaAt(name, _))
-      .getOrElse(MemStore.schemaOf(name))
-    val typed =
-      if (!delta) base
-      else StructType(base.fields.head.copy(nullable = false) +: base.fields.tail)
-    if (changes) MemCdf.withCdfColumns(typed) else typed
-  }
-  private def requireWritable(verb: String): Unit = {
-    require(pinnedVersion.isEmpty,
-      s"graft_mem($name): cannot $verb a time-travel (VERSION AS OF) relation")
-    require(!changes,
-      s"graft_mem($name): cannot $verb the __changes relation — it is a " +
-        "read-only view of the commit history")
-  }
+    extends VersionedTable(MemStore, name, pinnedVersion, delta, changes)
+    with SupportsDelete {
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
@@ -350,74 +350,20 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
       row => !filters.forall(MemFilterEval.eval(_, row, schema())))
   }
 
-  /** ROW-LEVEL OPERATIONS (`SupportsRowLevelOperations`) — the verbs
-    * `SupportsDelete`'s metadata path cannot express: UPDATE and MERGE
-    * (and DELETE whose condition the filter evaluator refuses), planned
-    * by Spark as GROUP-BASED copy-on-write. Spark rewrites the statement
-    * into `ReplaceData`: the operation's SCAN reads the affected groups'
-    * FULL contents, the rewritten query recomputes them (copied-over
-    * unmatched rows ∪ updated/merged rows), and the operation's WRITE
-    * replaces exactly those groups. This table exposes no sub-table
-    * group granularity (`requiredMetadataAttributes` empty — the whole
-    * table is one group, the in-memory reduction of "rewrite the
-    * affected files"), so the scan is the full snapshot and the
-    * replacement write is a truncate-install: ONE atomic version swap
-    * through the same two-phase commit as every other write — a reader
-    * can never observe the delete-half of an UPDATE without its
-    * insert-half, and an aborted job keeps the committed version
-    * (SourcesSpec pins it). q266/q267 put UPDATE and MERGE under the
-    * DuckDB oracle. At 100 TB the same contract holds with file groups:
-    * the scan prunes to matched files and the write swaps only those —
-    * the granularity lives entirely in the connector, which is the
-    * point of the DSv2 design. */
-  override def newRowLevelOperationBuilder(
-      info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    if (delta) () => new RowLevelOperation with SupportsDelta {
-      // DELTA (merge-on-read) flavor — `memd_*` tables: instead of
-      // rewriting whole groups, Spark plans `WriteDelta`, streaming
-      // per-row DELETE / UPDATE / INSERT operations KEYED BY [[rowId]]
-      // (the table's first column, the natural key of a memd table) to
-      // a [[DeltaWriter]]. The Iceberg merge-on-read shape: at 100 TB
-      // an UPDATE touching 0.1% of rows ships only that 0.1% as
-      // keyed deltas instead of copying every affected group — the
-      // write cost tracks the CHANGE size, the read side pays the
-      // merge. Here the store applies the deltas at commit (one atomic
-      // version install, same two-phase protocol), and a delta
-      // referencing an id absent from the snapshot fails the whole
-      // commit rather than papering over a scan/write disagreement.
-      override def command(): RowLevelOperation.Command = info.command()
-      override def description(): String =
-        s"graft_mem($name) delta ${info.command()}"
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        MemTable.this.newScanBuilder(options)
-      override def rowId(): Array[expressions.NamedReference] =
-        Array(expressions.Expressions.column(schema().fieldNames.head))
-      override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder = {
-        requireWritable(s"${info.command()} on")
-        new DeltaWriteBuilder {
-          override def build(): DeltaWrite = new DeltaWrite {
-            override def toBatch: DeltaBatchWrite = new MemDeltaBatchWrite(name)
-          }
-        }
-      }
-    }
-    else () => new RowLevelOperation {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def description(): String =
-        s"graft_mem($name) copy-on-write ${info.command()}"
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        MemTable.this.newScanBuilder(options)
-      override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder = {
-        requireWritable(s"${info.command()} on")
-        new WriteBuilder {
-          override def build(): Write = new Write {
-            // group-based replacement over the single whole-table group
-            // (the writer strips the __row_operation marker per row)
-            override def toBatch: BatchWrite = new MemBatchWrite(name, truncate = true)
-          }
-        }
-      }
-    }
+  /** Row-level operations on the heap: the copy-on-write group is the
+    * whole snapshot and its replacement a truncate-install; the delta
+    * flavour's keyed operations apply at commit ([[MemStore.commitDelta]]).
+    * q266/q267/q272 put UPDATE and both MERGE flavours under the DuckDB
+    * oracle. At 100 TB the same contract holds with file groups — the
+    * [[FsTable]] twin. */
+  override protected def rowLevelScan(options: CaseInsensitiveStringMap): ScanBuilder =
+    newScanBuilder(options)
+  override protected def deltaWrite(): DeltaBatchWrite = new MemDeltaBatchWrite(name)
+  // group-based replacement over the single whole-table group (the
+  // writer strips the __row_operation marker per row)
+  override protected def rewrite(info: LogicalWriteInfo): Write = new Write {
+    override def toBatch: BatchWrite = new MemBatchWrite(name, truncate = true)
+  }
 
   /** Scan options (Delta's CDF read surface, reduced — the CDF rowset
     * itself is selected by loading the `<table>__changes` relation,
@@ -486,21 +432,11 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
       override def createReaderFactory(): PartitionReaderFactory =
         new MemReaderFactory(readSchema())
 
-      /** CHANGE-FEED streaming read (`readStream.table`): offsets are
-        * (version, position) pairs over the per-commit change logs —
-        * the version history doubling as a change log (Delta's
-        * change-data-feed shape). Admission control paces whole
-        * versions by default, `maxRowsPerBatch` splits within one;
-        * `ReadAllAvailable` (how Trigger.AvailableNow pins its target)
-        * returns the head. On the plain table the feed REFUSES a
-        * non-append commit in range (per-version flag, recorded at
-        * commit) — serving a delete/update as an append stream would
-        * silently corrupt every downstream aggregate; on the
-        * `__changes` relation those commits stream as typed
-        * `_change_type` rows instead. */
+      /** CHANGE-FEED streaming read (`readStream.table`), sized by the
+        * exact UnsafeRow bytes of each change row. */
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new MemChangeFeed(name, cdf, startingVersion, maxRowsPerBatch,
+        new ChangeFeed(MemStore, name, cdf, startingVersion, maxRowsPerBatch,
           maxBytesPerBatch)
     }
   }
@@ -783,158 +719,6 @@ object MemCdf {
       g: InternalRow
     }
   }
-}
-
-/** (version, position-within-version) offset for the change feed:
-  * versions `< version` are fully delivered, plus the first `pos`
-  * change rows of `version` itself. */
-case class MemOffset(version: Long, pos: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"$version:$pos"
-}
-object MemOffset {
-  def parse(json: String): MemOffset =
-    json.split(":", 2) match {
-      case Array(v, p) => MemOffset(v.toLong, p.toLong)
-      case _ =>
-        // a checkpoint from the pre-(version:pos) offset format: the old
-        // single number meant "version fully delivered", but the slice
-        // length it implied is not recoverable here — refuse with the
-        // incompatibility spelled out instead of an opaque MatchError
-        throw new IllegalStateException(
-          s"mem change feed: offset '$json' uses the legacy single-number " +
-            "format; this checkpoint predates (version:pos) offsets — " +
-            "restart the stream from a fresh checkpoint")
-    }
-}
-
-/** The mem table's change feed (see `toMicroBatchStream`): per-commit
-  * change-log slices, one version per micro-batch by default,
-  * `maxRowsPerBatch` rows at most per batch within a version. In plain
-  * mode only append commits are servable (per-version flag recorded at
-  * commit time — not the r7 O(rows) prefix re-scan); in CDF mode every
-  * commit streams as typed `_change_type` rows. New readers start at
-  * the OLDEST RETAINED version (history expiry must not brick fresh
-  * consumers that only want what is still retained), or at an explicit
-  * `startingVersion`. */
-class MemChangeFeed(name: String, cdf: Boolean,
-    startingVersion: Option[Long], maxRowsPerBatch: Long,
-    maxBytesPerBatch: Long = Long.MaxValue)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxRows}
-
-  // the stream's data schema is fixed at start (current table schema);
-  // a mid-stream ALTER widens future reads only after restart — the
-  // same contract a file-backed CDF reader keeps per stream instance
-  private val dataSchema = MemStore.schemaOf(name)
-
-  private def sliceLen(v: Long): Long =
-    MemStore.versionAt(name, v).changes.size.toLong
-
-  /** Exact byte size of one committed change row: commits serialize
-    * through UnsafeRow, so the size is just read off the blob encoding;
-    * rows of other representations fall back to the schema estimate. */
-  private def rowBytes(r: InternalRow): Long = r match {
-    case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-      u.getSizeInBytes.toLong
-    case _ => dataSchema.defaultSize.toLong + 8L
-  }
-
-  override def prepareForTriggerAvailableNow(): Unit = ()
-  override def initialOffset(): Offset = {
-    val from = startingVersion.getOrElse(MemStore.oldestVersion(name))
-    MemStore.versionAt(name, from) // validate: expired/unknown → range error
-    // (from, 0): version `from`'s own changes are the first batch served
-    MemOffset(from, 0L)
-  }
-  override def deserializeOffset(json: String): Offset = MemOffset.parse(json)
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "admission-controlled source: use latestOffset(Offset, ReadLimit)")
-  // the default limit is what paces PER-BATCH advance (AvailableNow
-  // passes it each batch; ReadAllAvailable appears only when the
-  // wrapper pins its final target). The budget applies WITHIN a
-  // version; a version boundary is always a batch boundary — a batch
-  // never mixes two commits' rows. Rows and bytes COMPOSE: one
-  // wide-row commit cannot defeat a pure row budget (the Delta/Kafka
-  // admission shape), and UnsafeRow sizes make the byte budget exact.
-  override def getDefaultReadLimit: ReadLimit = {
-    val hasRows = maxRowsPerBatch != Long.MaxValue
-    val hasBytes = maxBytesPerBatch != Long.MaxValue
-    if (hasRows && hasBytes) ReadLimit.compositeLimit(
-      Array(ReadLimit.maxRows(maxRowsPerBatch), ReadLimit.maxBytes(maxBytesPerBatch)))
-    else if (hasBytes) ReadLimit.maxBytes(maxBytesPerBatch)
-    else ReadLimit.maxRows(maxRowsPerBatch)
-  }
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[MemOffset]
-    val head = MemStore.currentVersion(name)
-    limit match {
-      case _: ReadAllAvailable => MemOffset(head, sliceLen(head))
-      case r: ReadMaxRows => advance(s, head, r.maxRows, maxBytesPerBatch)
-      case b: ReadMaxBytes => advance(s, head, maxRowsPerBatch, b.maxBytes)
-      case c: CompositeReadLimit =>
-        val (rB, bB) = c.getReadLimits.foldLeft((Long.MaxValue, Long.MaxValue)) {
-          case ((r0, b0), r: ReadMaxRows) => (math.min(r0, r.maxRows), b0)
-          case ((r0, b0), b: ReadMaxBytes) => (r0, math.min(b0, b.maxBytes))
-          case (acc, _) => acc
-        }
-        advance(s, head, rB, bB)
-      case _ => advance(s, head, maxRowsPerBatch, maxBytesPerBatch)
-    }
-  }
-  private def advance(s: MemOffset, head: Long, rowBudget: Long,
-      byteBudget: Long): MemOffset = {
-    val (v, pos) =
-      if (s.pos < sliceLen(s.version)) (s.version, s.pos)
-      else if (s.version < head) (s.version + 1, 0L)
-      else return s
-    val changes = MemStore.versionAt(name, v).changes
-    // an empty change set (a metadata-only ALTER) is its own empty
-    // batch — the offset still has to cross it one version at a time
-    if (changes.isEmpty) return MemOffset(v, 0L)
-    // at least one row per batch (progress), then admit while BOTH
-    // budgets hold; exact per-row sizes from the UnsafeRow encoding
-    var p = pos + 1
-    var bytes = rowBytes(changes(pos.toInt)._2)
-    while (p < changes.size && (p - pos) < math.max(1L, rowBudget) && {
-      val b = rowBytes(changes(p.toInt)._2)
-      if (bytes + b <= byteBudget) { bytes += b; true } else false
-    }) p += 1
-    MemOffset(v, p)
-  }
-  override def reportLatestOffset(): Offset = {
-    val head = MemStore.currentVersion(name)
-    MemOffset(head, sliceLen(head))
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[MemOffset], end.asInstanceOf[MemOffset])
-    val rows = (s.version to e.version).iterator.flatMap { v =>
-      val ver = MemStore.versionAt(name, v)
-      val from = if (v == s.version) s.pos.toInt else 0
-      val until = if (v == e.version) e.pos.toInt else ver.changes.size
-      if (until <= from) Iterator.empty
-      else if (cdf)
-        MemCdf.changeRows(name, dataSchema, v).slice(from, until).iterator
-      else {
-        require(ver.appendOnly,
-          s"graft_mem($name): version $v is a non-append commit — the " +
-            "plain change feed serves append slices only (delete/update " +
-            "history cannot be replayed as an append stream); read the " +
-            s"${name}__changes relation to stream typed _change_type rows")
-        ver.changes.slice(from, until).iterator.map(_._2)
-      }
-    }.toVector
-    MemPartition.split(rows,
-      if (cdf) MemCdf.withCdfColumns(dataSchema) else dataSchema)
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MemReaderFactory(
-      if (cdf) MemCdf.withCdfColumns(dataSchema) else dataSchema)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 case class MemCommitMessage(rows: Array[Array[Byte]]) extends WriterCommitMessage

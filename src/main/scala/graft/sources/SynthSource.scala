@@ -658,11 +658,7 @@ object SynthSource {
   val q215SpjJoin = graft.QueryDef(
     "q215_dsv2_spj_join",
     (s, d) => {
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevBk = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.QueryDef.withConf(s, graft.QueryDef.SpjConfs: _*) {
         def rd = s.table(s"graft.synth_${Rows}_8")
         val probe = rd.filter(col("doc_id") >= RLo && col("doc_id") < RHi)
           .select(col("doc_id"), col("h").as("h_probe"))
@@ -674,10 +670,6 @@ object SynthSource {
           .agg(count(lit(1)).as("n"), sum(col("h") + col("h_probe")).as("sum_hh"))
           .localCheckpoint()
           .orderBy("bucket")
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        prevBk.fold(s.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-          s.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
       }
     },
     Some(s"""WITH t AS (
@@ -997,30 +989,11 @@ object SynthSource {
     * proving the path handles arbitrary predicates. DuckDB applies the
     * update functionally; a lost unmatched row, a double-applied
     * update, or a partial commit breaks the hash. */
-  val q266Dsv2Update = graft.QueryDef(
-    "q266_dsv2_update",
-    (s, d) => {
-      val src = graft.Tables.lineitem(s, d).select(
-        col("l_orderkey").cast("long").as("k"),
-        col("l_quantity").cast("long").as("qty"),
-        col("l_returnflag").as("flag"))
-      s.sql("DROP TABLE IF EXISTS graft.mem_upd")
-      src.writeTo("graft.mem_upd").create()
-      s.sql("""UPDATE graft.mem_upd SET qty = qty * 2
-              |WHERE flag = 'R' AND k % 3 = 0""".stripMargin)
-      s.table("graft.mem_upd")
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"), sum("qty").as("sum_qty"),
-          sum("k").as("sum_k"))
-        .orderBy("flag")
-    },
-    Some("""SELECT l_returnflag AS flag, CAST(COUNT(*) AS BIGINT) AS n,
-           |  CAST(SUM(CASE WHEN l_returnflag = 'R' AND l_orderkey % 3 = 0
-           |    THEN CAST(l_quantity AS BIGINT) * 2
-           |    ELSE CAST(l_quantity AS BIGINT) END) AS BIGINT) AS sum_qty,
-           |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_k
-           |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin)
-  )
+  val q266Dsv2Update = {
+    val verb = TwinVerbs.Update(factor = 2, flag = "R", every = 3)
+    graft.QueryDef("q266_dsv2_update",
+      (s, d) => verb.run(s, d, "mem_upd"), Some(verb.oracle))
+  }
 
   /** q267: DSv2 MERGE under the oracle — all three clause kinds in one
     * statement through the copy-on-write path: MATCHED → UPDATE
@@ -1034,55 +1007,16 @@ object SynthSource {
     * misclassifies any row (matched vs not, by-source vs not),
     * drops an unmatched row, or applies a clause twice lands in a
     * different bucket total. */
-  val q267Dsv2Merge = graft.QueryDef(
-    "q267_dsv2_merge",
-    (s, d) => {
-      val tgt = graft.Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey").cast("long").as("k"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      s.sql("DROP TABLE IF EXISTS graft.mem_mg")
-      tgt.writeTo("graft.mem_mg").create()
-      graft.Tables.orders(s, d)
-        .filter(col("o_orderkey") % 4 === 0)
-        .select(col("o_orderkey").cast("long").as("k"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-        .createOrReplaceTempView("mg_src")
-      s.sql("""MERGE INTO graft.mem_mg t USING mg_src s ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET t.sum_qty = t.sum_qty + 1000000
-              |WHEN NOT MATCHED THEN INSERT (k, n, sum_qty) VALUES (s.k, -1, s.pc)
-              |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 7 THEN DELETE
-              |""".stripMargin)
-      s.table("graft.mem_mg")
-        .groupBy((col("k") % 16).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"), sum("n").as("sum_n"),
-          sum("sum_qty").as("sum_sq"), min("k").as("min_k"),
-          max("k").as("max_k"))
-        .orderBy("bucket")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 4 = 0),
-           |fin AS (
-           |  SELECT li.k, li.n,
-           |    li.sum_qty + CASE WHEN src.k IS NOT NULL THEN 1000000 ELSE 0 END
-           |      AS sum_qty
-           |  FROM li LEFT JOIN src USING (k)
-           |  WHERE NOT (src.k IS NULL AND li.k % 10 = 7)
-           |  UNION ALL
-           |  SELECT k, CAST(-1 AS BIGINT), pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT k % 16 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(n) AS BIGINT) AS sum_n,
-           |  CAST(SUM(sum_qty) AS BIGINT) AS sum_sq,
-           |  CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-           |FROM fin GROUP BY 1 ORDER BY bucket""".stripMargin)
-  )
+  val q267Dsv2Merge = {
+    val verb = TwinVerbs.LedgerMerge(every = 4, bump = 1000000, gone = 7)
+    graft.QueryDef("q267_dsv2_merge",
+      (s, d) => {
+        verb.create(s, d, "mem_mg")
+        verb.merge(s, d, "mem_mg", "mg_src")
+        verb.ledger(s, "mem_mg")
+      },
+      Some(verb.oracle))
+  }
 
   /** q272: DELTA (merge-on-read) row-level MERGE under the oracle — the
     * OTHER DSv2 row-level path: where q267's copy-on-write rewrites the
@@ -1100,55 +1034,16 @@ object SynthSource {
     * lands in a different bucket total. (SourcesSpec additionally pins
     * the WriteDelta plan node, per-verb contents, single-version
     * installs, and the failed-job abort path.) */
-  val q272DeltaMerge = graft.QueryDef(
-    "q272_dsv2_delta_merge",
-    (s, d) => {
-      val tgt = graft.Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey").cast("long").as("k"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      s.sql("DROP TABLE IF EXISTS graft.memd_mg")
-      tgt.writeTo("graft.memd_mg").create()
-      graft.Tables.orders(s, d)
-        .filter(col("o_orderkey") % 5 === 0)
-        .select(col("o_orderkey").cast("long").as("k"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-        .createOrReplaceTempView("dmg_src")
-      s.sql("""MERGE INTO graft.memd_mg t USING dmg_src s ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET t.sum_qty = t.sum_qty + 2000000
-              |WHEN NOT MATCHED THEN INSERT (k, n, sum_qty) VALUES (s.k, -1, s.pc)
-              |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 3 THEN DELETE
-              |""".stripMargin)
-      s.table("graft.memd_mg")
-        .groupBy((col("k") % 16).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"), sum("n").as("sum_n"),
-          sum("sum_qty").as("sum_sq"), min("k").as("min_k"),
-          max("k").as("max_k"))
-        .orderBy("bucket")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 5 = 0),
-           |fin AS (
-           |  SELECT li.k, li.n,
-           |    li.sum_qty + CASE WHEN src.k IS NOT NULL THEN 2000000 ELSE 0 END
-           |      AS sum_qty
-           |  FROM li LEFT JOIN src USING (k)
-           |  WHERE NOT (src.k IS NULL AND li.k % 10 = 3)
-           |  UNION ALL
-           |  SELECT k, CAST(-1 AS BIGINT), pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT k % 16 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(n) AS BIGINT) AS sum_n,
-           |  CAST(SUM(sum_qty) AS BIGINT) AS sum_sq,
-           |  CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-           |FROM fin GROUP BY 1 ORDER BY bucket""".stripMargin)
-  )
+  val q272DeltaMerge = {
+    val verb = TwinVerbs.LedgerMerge(every = 5, bump = 2000000, gone = 3)
+    graft.QueryDef("q272_dsv2_delta_merge",
+      (s, d) => {
+        verb.create(s, d, "memd_mg")
+        verb.merge(s, d, "memd_mg", "dmg_src")
+        verb.ledger(s, "memd_mg")
+      },
+      Some(verb.oracle))
+  }
 
   /** q273: VERSION-DIFF CDC READ — the change-data-capture question
     * answered from the connector's OWN version history (q116 diffs
@@ -1215,8 +1110,8 @@ object SynthSource {
 
   /** q278: CHANGE-FEED STREAMING READ of the mem table — the version
     * history doubling as a change log: `readStream.table` plans
-    * [[MemChangeFeed]], whose offsets are VERSION ids and whose
-    * micro-batches each deliver the rows appended by exactly ONE commit
+    * [[ChangeFeed]] (the feed both stores share), whose offsets are
+    * (version, position) pairs and whose micro-batches each deliver the rows appended by exactly ONE commit
     * (admission control paces a version per batch; AvailableNow pins
     * the head via `ReadAllAvailable`). Three append commits build the
     * history; the streamed complete-mode aggregate over all batches
@@ -1346,68 +1241,17 @@ object SynthSource {
     * hash-match DuckDB deriving the same change set functionally — a
     * feed that replays, drops, or mistypes one change breaks a sum.
     * (SourcesSpec pins that the PLAIN feed still refuses this history.) */
-  val q280CdfStream = graft.QueryDef(
-    "q280_dsv2_cdf_stream",
-    (s, d) => {
-      ensureHistory(s, d, "memd_cfs", wantVersion = 2) {
-        val tgt = graft.Tables.lineitem(s, d)
-          .groupBy(col("l_orderkey").cast("long").as("k"))
-          .agg(sum(col("l_quantity").cast("long")).as("sq"))
-        tgt.writeTo("graft.memd_cfs").create() // v0+v1: inserts
-        graft.Tables.orders(s, d)
-          .filter(col("o_orderkey") % 5 === 0)
-          .select(col("o_orderkey").cast("long").as("k"),
-            floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType).as("pc"))
-          .createOrReplaceTempView("cfs_src")
-        s.sql("""MERGE INTO graft.memd_cfs t USING cfs_src s ON t.k = s.k
-                |WHEN MATCHED THEN UPDATE SET t.sq = t.sq + 777
-                |WHEN NOT MATCHED THEN INSERT (k, sq) VALUES (s.k, s.pc)
-                |WHEN NOT MATCHED BY SOURCE AND t.k % 10 = 3 THEN DELETE
-                |""".stripMargin) // v2: delta commit with pre/post images
-      }
-      // append-mode raw drain + batch aggregation (see q255's note):
-      // the subject is the TYPED FEED, and a mistyped/dropped/replayed
-      // change row breaks the batch aggregate of the sink identically
-      val q = s.readStream.table("graft.memd_cfs__changes")
-        .writeStream.outputMode("append").format("memory")
-        .queryName("q280_sink")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("q280_sink")
-        .groupBy(col("_change_type").as("op"))
-        .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
-          sum("sq").as("sum_sq"))
-        .orderBy("op")
-    },
-    Some("""WITH li AS (
-           |  SELECT l_orderkey AS k,
-           |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sq
-           |  FROM lineitem GROUP BY 1),
-           |src AS (
-           |  SELECT o_orderkey AS k,
-           |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS pc
-           |  FROM orders WHERE o_orderkey % 5 = 0),
-           |ch AS (
-           |  SELECT 'insert' AS op, k, sq FROM li
-           |  UNION ALL
-           |  SELECT 'update_preimage', li.k, li.sq
-           |  FROM li JOIN src ON li.k = src.k
-           |  UNION ALL
-           |  SELECT 'update_postimage', li.k, li.sq + 777
-           |  FROM li JOIN src ON li.k = src.k
-           |  UNION ALL
-           |  SELECT 'delete', li.k, li.sq
-           |  FROM li LEFT JOIN src ON li.k = src.k
-           |  WHERE src.k IS NULL AND li.k % 10 = 3
-           |  UNION ALL
-           |  SELECT 'insert', k, pc FROM src
-           |  WHERE k NOT IN (SELECT k FROM li))
-           |SELECT op, CAST(COUNT(*) AS BIGINT) AS n,
-           |  CAST(SUM(k) AS BIGINT) AS sum_k,
-           |  CAST(SUM(sq) AS BIGINT) AS sum_sq
-           |FROM ch GROUP BY op ORDER BY op""".stripMargin)
-  )
+  val q280CdfStream = {
+    val verb = TwinVerbs.CdfMerge(every = 5, bump = 777, gone = 3)
+    graft.QueryDef("q280_dsv2_cdf_stream",
+      (s, d) => {
+        ensureHistory(s, d, "memd_cfs", wantVersion = 2) {
+          verb.build(s, d, "memd_cfs", "cfs_src")
+        }
+        verb.readout(s, "memd_cfs", "q280_sink")
+      },
+      Some(verb.oracle))
+  }
 
   /** q281: BATCH change-data-feed (`table_changes`): the same per-commit
     * change logs served as a bounded read with `startingVersion`
@@ -1556,13 +1400,11 @@ object SynthSource {
         .createTempDirectory("graft_q286_ckpt").toString
       // 8 state partitions for 97 buckets (pinned into the checkpoint
       // at start, restored after — the EventStreams drain pattern)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       // the stream thread captures the conf asynchronously after start()
       // (session clone + OffsetSeqMetadata), so the pin must stay set
       // until awaitTermination — the first batch writes it into the
       // checkpoint, which pins it for every later run of this lineage
-      try {
+      graft.QueryDef.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = s.readStream.table("graft.synth_100000_8")
           .groupBy("bucket")
           .agg(count(lit(1)).as("n"), sum("h").as("sum_h"))
@@ -1572,7 +1414,7 @@ object SynthSource {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       val state = s.read.format("statestore").load(ckpt)
         .select(col("key.bucket").as("bucket"),
           col("value.count").as("n"), col("value.sum").as("sum_h"))
@@ -1613,13 +1455,8 @@ object SynthSource {
     (s, d) => {
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_q298_ckpt").toString
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = s.conf.getOption(providerKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.QueryDef.withConf(s, "spark.sql.shuffle.partitions" -> "8",
+          graft.QueryDef.RocksDbProvider) {
         import s.implicits._
         val q = s.readStream.table("graft.synth_100000_8")
           .select(col("bucket"), col("h")).as[(Long, Long)]
@@ -1634,9 +1471,6 @@ object SynthSource {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
       }
       val agg = s.read.format("statestore")
         .option("stateVarName", "agg").load(ckpt)

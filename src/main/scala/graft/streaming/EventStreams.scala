@@ -357,19 +357,9 @@ object EventStreams {
     * store that `transformWithState` requires. Both are pinned into the
     * checkpoint at query start, so the session confs are restored right
     * after `start` returns; batch queries are unaffected. */
-  private def withDrainConfs[A](s: SparkSession, rocksDb: Boolean = false)(start: => A): A = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamParts)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    if (rocksDb) s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try start
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      if (rocksDb) prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
-    }
-  }
+  private def withDrainConfs[A](s: SparkSession, rocksDb: Boolean = false)(start: => A): A =
+    graft.QueryDef.withConf(s, Seq("spark.sql.shuffle.partitions" -> StreamParts) ++
+      Option.when(rocksDb)(graft.QueryDef.RocksDbProvider): _*)(start)
 
   /** A fresh temp dir that must outlive the call — the session memo holds
     * a stage dir, and a returned frame reads its sink or serving dir
@@ -1127,9 +1117,7 @@ object EventStreams {
   val q225StreamingIntervalLookup = graft.QueryDef(
     "q225_streaming_interval_lookup",
     (s, d) => {
-      s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey,
-        graft.operators.Relational.RangeBinWidth.toString)
-      try {
+      graft.QueryDef.withConf(s, graft.plans.BinnedRangeJoin.BinWidthKey -> graft.operators.Relational.RangeBinWidth.toString) {
         def md5int(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
           pmod(conv(substring(md5(c), 1, 15), 16, 10)
             .cast(org.apache.spark.sql.types.LongType), lit(1000000000L))
@@ -1150,7 +1138,7 @@ object EventStreams {
           .agg(count(lit(1)).as("n_hits"), min("pt").as("first_pt"),
             max("pt").as("last_pt"))
           .orderBy("iid")
-      } finally s.conf.set(graft.plans.BinnedRangeJoin.BinWidthKey, "0")
+      }
     },
     Some(s"""WITH pts AS (
            |  SELECT event_id,

@@ -78,4 +78,19 @@ class SetupSpec extends SparkSpec {
     }))
     assert(bands == Seq(30), s"expected the banded form:\n${q.queryExecution.optimizedPlan}")
   }
+
+  test("conf windows restore what the session had: a set value comes back, an unset key stays unset") {
+    val bin = graft.plans.BinnedRangeJoin.BinWidthKey
+    val bucketing = "spark.sql.sources.v2.bucketing.enabled"
+    val s = spark.newSession()
+    s.conf.set(bin, "777")
+    s.conf.set(bucketing, "false")
+    graft.operators.Relational.q222IntervalJoin.run(s, sfDir).collect()
+    graft.sources.FsQueries.q327FsBucketValueSpj.run(s, sfDir).collect()
+    assert(s.conf.getAll.get(bin).contains("777"))
+    assert(s.conf.getAll.get(bucketing).contains("false"))
+    val fresh = spark.newSession()
+    graft.operators.Relational.q222IntervalJoin.run(fresh, sfDir).collect()
+    assert(!fresh.conf.getAll.contains(bin), fresh.conf.getAll.get(bin))
+  }
 }

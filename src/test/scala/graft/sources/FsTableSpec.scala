@@ -310,6 +310,59 @@ class FsTableSpec extends SparkSpec {
     drop("mem_fat")
   }
 
+  test("one change feed over both stores: the same appends drain in the same batches; non-append refused on both") {
+    val tables = Seq("mem_xfeed", "fs_xfeed")
+    tables.foreach(drop)
+    // create (v0, empty) + three appends of 250, 50 and 400 rows
+    val slices = Seq(0L until 250L, 250L until 300L, 300L until 700L)
+    for (t <- tables; (r, i) <- slices.zipWithIndex) {
+      val df = r.map(k => (k, k * 7)).toDF("k", "v")
+      if (i == 0) df.writeTo(s"graft.$t").create() else df.writeTo(s"graft.$t").append()
+    }
+    def drain(t: String): Seq[Seq[(Long, Long)]] = {
+      val got = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, Seq[(Long, Long)])]()
+      spark.readStream.option("maxRowsPerBatch", "100").table(s"graft.$t")
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          got.add((id, b.as[(Long, Long)].collect().toSeq.sorted)); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      import scala.jdk.CollectionConverters._
+      got.asScala.toSeq.sortBy(_._1).map(_._2).filter(_.nonEmpty)
+    }
+    val mem = drain("mem_xfeed")
+    val fs = drain("fs_xfeed")
+    assert(mem.map(_.size) == Seq(100, 100, 50, 50, 100, 100, 100, 100),
+      s"a version is a batch boundary and 100 rows the budget: ${mem.map(_.size)}")
+    assert(fs == mem, s"fs batches ${fs.map(_.size)} vs mem ${mem.map(_.size)}")
+    assert(mem.flatten == (0L until 700L).map(k => (k, k * 7)))
+    // a checkpoint in the legacy offset format names the table it is for
+    for ((store, t) <- Seq(MemStore -> "mem_xfeed", FsStore -> "fs_xfeed")) {
+      val feed = new ChangeFeed(store, t, cdf = false, startingVersion = None,
+        maxRowsPerBatch = 100L, maxBytesPerBatch = Long.MaxValue)
+      val e = intercept[IllegalStateException](feed.deserializeOffset("3"))
+      assert(e.getMessage.startsWith(s"${store.tag}($t) change feed: offset '3'"),
+        e.getMessage)
+    }
+    // a delete is not an append: both plain feeds refuse it by name
+    for (t <- tables) {
+      spark.sql(s"DELETE FROM graft.$t WHERE k < 10")
+      val q = spark.readStream.table(s"graft.$t")
+        .writeStream.format("memory").queryName(s"${t}_sink")
+        .trigger(Trigger.AvailableNow()).start()
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(x => Option(x.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("non-append commit") && m.contains(s"($t)")),
+        s"$t: ${msgs.headOption}")
+      spark.catalog.dropTempView(s"${t}_sink")
+    }
+    tables.foreach(drop)
+  }
+
   test("fs: plain feed refuses non-append history; __changes serves it typed") {
     drop("fs_ref")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_ref").create()
@@ -1408,15 +1461,15 @@ class FsTableSpec extends SparkSpec {
     val ver = FsStore.versionAt("fsd_par", v)
     assert(ver.changes.nonEmpty && ver.changes.head.keys.nonEmpty)
     val total = ver.changes.map(_.rows).sum
-    val feed = new FsChangeFeed("fsd_par", cdf = true, startingVersion = None,
+    val feed = new ChangeFeed(FsStore, "fsd_par", cdf = true, startingVersion = None,
       maxRowsPerBatch = Long.MaxValue, maxBytesPerBatch = Long.MaxValue)
     // a batch covering the WHOLE delete change: one task per base file —
     // pre-image reconstruction of a large delete no longer serializes
-    val whole = feed.planInputPartitions(MemOffset(v, 0L), MemOffset(v, total))
+    val whole = feed.planInputPartitions(FeedOffset(v, 0L), FeedOffset(v, total))
     assert(whole.length >= 4,
       s"whole-change filtered slice must be file-parallel, got ${whole.length}")
     // a budget-cut PARTIAL slice of the same change: sequential fallback
-    val partial = feed.planInputPartitions(MemOffset(v, 0L), MemOffset(v, 1L))
+    val partial = feed.planInputPartitions(FeedOffset(v, 0L), FeedOffset(v, 1L))
     assert(partial.length == 1,
       s"partial filtered slice must stay sequential, got ${partial.length}")
     // and the streamed drain (byte-budgeted so some batches ARE partial)
@@ -1637,7 +1690,7 @@ class FsTableSpec extends SparkSpec {
   test("fs change feed: a post-ALTER append fails with the explicit restart error, not IndexOutOfBounds") {
     drop("fs_cfalt")
     (0L until 30L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_cfalt").create()
-    val feed = new FsChangeFeed("fs_cfalt", cdf = false, startingVersion = None,
+    val feed = new ChangeFeed(FsStore, "fs_cfalt", cdf = false, startingVersion = None,
       maxRowsPerBatch = Long.MaxValue, maxBytesPerBatch = Long.MaxValue)
     // stream is "running": lineage pinned at construction. Now evolve and
     // append under the NEW schema
@@ -1645,8 +1698,8 @@ class FsTableSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.fs_cfalt VALUES (100, 100, 7)")
     val head = FsStore.currentVersion("fs_cfalt")
     val e = intercept[IllegalStateException] {
-      feed.planInputPartitions(MemOffset(head, 0L),
-        MemOffset(head, 1L))
+      feed.planInputPartitions(FeedOffset(head, 0L),
+        FeedOffset(head, 1L))
     }
     assert(e.getMessage.contains("restart the stream"))
     drop("fs_cfalt")
