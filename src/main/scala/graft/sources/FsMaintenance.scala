@@ -20,7 +20,12 @@ import FsStore.FileRef
   * serve retained versions' time travel until expiry + vacuum.
   * Masked files are NOT eligible (the rewritten copy would escape its
   * delta mask); compact an fsd table after its masks are applied by a
-  * CoW rewrite, or not at all. */
+  * CoW rewrite, or not at all.
+  *
+  * Every rewrite here writes through the shared task sink of an fs
+  * write ([[FsSinks]], driven by [[VersionedWrite.run]]): its files
+  * carry the write's job stamp, and a failed task or job deletes them,
+  * so a failed rewrite leaves no file behind. */
 object FsMaintenance {
 
   /** One rewrite unit: files of one bucket whose bytes fit one target. */
@@ -43,7 +48,8 @@ object FsMaintenance {
     * No-op (no version installed) when nothing qualifies. */
   def compact(spark: SparkSession, name: String,
       targetBytes: Long): (Int, Int, Int) = {
-    val head = FsStore.current(name)
+    val write = new FsWrite(name)
+    val head = write.version
     val eligible = head.files.filter(f =>
       f.bytes < targetBytes &&
         !head.masks.exists(_.version > f.addedVersion))
@@ -57,54 +63,48 @@ object FsMaintenance {
     if (bins.isEmpty) return (head.files.size, head.files.size, 0)
     val lineage: Vector[StructType] = head.lineage
     val schema = head.schema
-    // one Spark task per bin: read every bin file mapped by field id to
-    // the head schema, stream into one new file (zone maps/stats
-    // recomputed by the writer); rows never visit the driver
-    val bloomIds = head.bloomIds.toSet
-    val ngramIds = head.ngramIds.toSet
     val keyIntegral = schema.fields.head.dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    val added = spark.sparkContext
-      .parallelize(bins.zipWithIndex, bins.size)
-      .map { case (bin, i) =>
-        val w = new FsFileWriter(name, s"c$i", schema, bin.head.bucket,
-          bloomIds, ngramIds, bin.head.parts)
-        if (keyIntegral && bin.forall(_.sorted)) {
-          // all inputs key-sorted → K-WAY MERGE instead of concatenation:
-          // the compacted file stays sorted (the writer observes and
-          // re-claims it), so a bucket collapsing to one file KEEPS the
-          // reported ordering and the storage-partitioned join stays
-          // sort-free after OPTIMIZE — compaction must not un-earn what
-          // the clustered write paid for. Sorted inputs hold no NULL
-          // keys (a NULL breaks the writer's sorted claim).
-          val raw = bin.map(f =>
-            FsParquet.read(f.path, lineage(f.schemaId), schema))
-          val iters = raw.map(_.buffered)
-          try {
-            // accessor resolved ONCE — keyOf runs per key comparison
-            val keyOf: org.apache.spark.sql.catalyst.InternalRow => Long =
-              schema.fields.head.dataType match {
-                case org.apache.spark.sql.types.IntegerType => _.getInt(0).toLong
-                case _ => _.getLong(0)
-              }
-            var live = iters.filter(_.hasNext)
-            while (live.nonEmpty) {
-              val src = live.minBy(it => keyOf(it.head))
-              w.write(src.next())
-              if (!src.hasNext) live = live.filter(_.hasNext)
-            }
-          } finally raw.foreach(_.close())
-        } else bin.foreach { f =>
-          val it = FsParquet.read(f.path, lineage(f.schemaId), schema)
-          try it.foreach(w.write) finally it.close()
-        }
-        w.finish()
+    // one Spark task per bin: read every bin file mapped by field id to
+    // the head schema and stream it into one new file (the sink routes
+    // by the head's layout, which every file of a bin shares; zone
+    // maps/stats recomputed by the writer); rows never visit the driver
+    val binRows = spark.sparkContext.parallelize(bins, bins.size).flatMap { bin =>
+      def read(f: FileRef) = {
+        val it = FsParquet.read(f.path, lineage(f.schemaId), schema)
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit](_ => it.close())
+        it
       }
-      .collect().toVector.flatten
-    FsStore.commitRewrite(name, bins.flatten, added, head.schemaId)
+      if (keyIntegral && bin.forall(_.sorted)) {
+        // all inputs key-sorted → K-WAY MERGE instead of concatenation:
+        // the compacted file stays sorted (the writer observes and
+        // re-claims it), so a bucket collapsing to one file KEEPS the
+        // reported ordering and the storage-partitioned join stays
+        // sort-free after OPTIMIZE — compaction must not un-earn what
+        // the clustered write paid for. Sorted inputs hold no NULL
+        // keys (a NULL breaks the writer's sorted claim).
+        val keyOf: org.apache.spark.sql.catalyst.InternalRow => Long =
+          schema.fields.head.dataType match {
+            case org.apache.spark.sql.types.IntegerType => _.getInt(0).toLong
+            case _ => _.getLong(0)
+          }
+        var live = bin.map(read(_).buffered).filter(_.hasNext)
+        Iterator.continually(live).takeWhile(_.nonEmpty).map { ls =>
+          val src = ls.minBy(it => keyOf(it.head))
+          val row = src.next() // a fresh row: the reader never reuses one
+          if (!src.hasNext) live = ls.filter(_.hasNext)
+          row
+        }
+      } else bin.iterator.flatMap(read)
+    }
+    VersionedWrite.run(write, binRows, new RowWriterFactory(write.sinks)) { ms =>
+      FsStore.commitRewrite(name, bins.flatten, VersionedWrite.units(ms),
+        head.schemaId)
+    }
     val after = FsStore.current(name)
     (head.files.size, after.files.size, bins.size)
   }
@@ -140,7 +140,8 @@ object FsMaintenance {
     * the same rows wherever they land. Returns (files before, after). */
   def zorder(spark: SparkSession, name: String, cols: Seq[String],
       targetFiles: Int): (Int, Int) = {
-    val head = FsStore.current(name)
+    val write = new FsWrite(name)
+    val head = write.version
     require(cols.size >= 2,
       s"graft_fs($name): z-order needs ≥2 columns (one column is a plain sort)")
     require(targetFiles >= 1, "targetFiles must be ≥1")
@@ -199,23 +200,30 @@ object FsMaintenance {
       }
     }
 
-    val schema = head.schema
-    val bloomIds = head.bloomIds.toSet
-    val ngramIds = head.ngramIds.toSet
     val ordered = spark.table(s"graft.$name")
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      .select(head.schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("__z", z)
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    val added = ordered.queryExecution.toRdd
-      .mapPartitionsWithIndex { (i, rows) =>
-        val w = new FsFileWriter(name, s"z$i", schema, -1, bloomIds, ngramIds)
-        rows.foreach(w.write)
-        Iterator.single(w.finish())
-      }
-      .collect().toVector.flatten
-    FsStore.commitRewrite(name, head.files, added, head.schemaId)
+    // one file per range partition (the table is unbucketed and
+    // unpartitioned, so the sink writes exactly one)
+    rewriteAll(write, ordered.queryExecution.toRdd, write.sinks, -1)
+  }
+
+  /** Write `rows` through `sinks` and install them in place of every
+    * file of the write's head (`newBucketN` as in
+    * [[FsStore.commitRewrite]]). Returns (files before, files after). */
+  private def rewriteAll(write: FsWrite,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      sinks: FsSinks, newBucketN: Int): (Int, Int) = {
+    val head = write.version
+    val added = VersionedWrite.run(write, rows, new RowWriterFactory(sinks)) { ms =>
+      val added = VersionedWrite.units[FileRef](ms)
+      FsStore.commitRewrite(sinks.name, head.files, added,
+        head.schemaId, newBucketN)
+      added
+    }
     (head.files.size, added.size)
   }
 
@@ -238,7 +246,8 @@ object FsMaintenance {
     * a single spec. Returns (files before, files after). */
   def rebucket(spark: SparkSession, name: String, newN: Int): (Int, Int) = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val head = FsStore.current(name)
+    val write = new FsWrite(name)
+    val head = write.version
     require(newN >= 0, "newN must be ≥0 (0 drops the partition spec)")
     require(newN != head.bucketN,
       s"graft_fs($name): table is already bucketed to $newN")
@@ -257,45 +266,19 @@ object FsMaintenance {
         head.schemaId, newN)
       return (0, 0)
     }
-    val schema = head.schema
-    val bloomIds = head.bloomIds.toSet
-    val ngramIds = head.ngramIds.toSet
-    val keyIsInt = keyField.dataType == IntegerType
+    val all = spark.table(s"graft.$name")
+      .select(head.schema.fieldNames.map(col).toIndexedSeq: _*)
+    // tasks hold whole buckets after the pmod shuffle, and rows arrive
+    // bucket-grouped and key-ASC, so the sink writes one file per
+    // bucket a task received and each file claims its sorted flag
     val routed =
       if (newN > 0)
-        spark.table(s"graft.$name")
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-          .repartition(newN, pmod(col(keyField.name).cast("long"), lit(newN.toLong)))
+        all.repartition(newN, pmod(col(keyField.name).cast("long"), lit(newN.toLong)))
           .sortWithinPartitions(
             pmod(col(keyField.name).cast("long"), lit(newN.toLong)),
             col(keyField.name))
-      else
-        spark.table(s"graft.$name")
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val added = routed.queryExecution.toRdd
-      .mapPartitionsWithIndex { (i, rows) =>
-        // one writer per bucket this task received (tasks hold whole
-        // buckets after the pmod shuffle; rows arrive bucket-grouped and
-        // key-ASC, so each file claims its sorted flag)
-        val byBucket = scala.collection.mutable.LinkedHashMap[Int, FsFileWriter]()
-        rows.foreach { r =>
-          val b =
-            if (newN <= 0) -1
-            else {
-              require(!r.isNullAt(0),
-                s"graft_fs($name): bucketed tables key on the first " +
-                  "column — NULL row ids have no bucket")
-              val k = if (keyIsInt) r.getInt(0).toLong else r.getLong(0)
-              Math.floorMod(k, newN.toLong).toInt
-            }
-          byBucket.getOrElseUpdate(b,
-            new FsFileWriter(name, s"rb$i-b$b", schema, b, bloomIds,
-              ngramIds)).write(r)
-        }
-        Iterator.single(byBucket.valuesIterator.flatMap(_.finish()).toVector)
-      }
-      .collect().toVector.flatten
-    FsStore.commitRewrite(name, head.files, added, head.schemaId, newN)
-    (head.files.size, added.size)
+      else all
+    rewriteAll(write, routed.queryExecution.toRdd,
+      write.sinks.copy(bucketN = newN), newN)
   }
 }

@@ -433,8 +433,9 @@ object FsMatView {
 
   /** MERGE-ON-READ refresh: classify the delta against the current view
     * (insert / update / group-died-delete), write ONLY those groups as
-    * key + data files in one distributed pass (the
-    * [[FsDeltaWriterFactory]] file shapes), and install them with the
+    * key + data files in one distributed pass through the shared delta
+    * writer ([[DeltaSinkFactory]] over the view's [[FsSinks]], so a
+    * failed pass leaves no file), and install them with the
     * high-water mark in one [[FsStore.commitDeltaWithEpoch]] manifest.
     * Write cost is O(changed groups); unchanged view files are never
     * rewritten. Masks accumulate one per refresh — a periodic
@@ -447,7 +448,8 @@ object FsMatView {
   private def deltaContents(spark: SparkSession, view: String,
       d: ViewDef, delta: DataFrame, schema: StructType,
       baseVersion: Long): RefreshStats = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
     val g = d.groupCols
     val keyName = schema.fields.head.name // gkey, or the single group col
     val cur = spark.table(s"graft.$view")
@@ -494,37 +496,34 @@ object FsMatView {
           g.map(c => col(s"__dg_$c").as(c)) ++ Seq(newN) ++
           newSums ++ newNNs ++ newMins ++ newMaxs): _*)
       .filter(!(col("__op") === 2 && col("n_rows") === 0L))
-    val viewHead = FsStore.current(view)
-    val fields = schema.fields
-    val refs = out.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val keySchema = StructType(Array(fields.head))
-      val dels = new FsFileWriter(view, s"vk$pid", keySchema)
-      val updKs = new FsFileWriter(view, s"vuk$pid", keySchema)
-      val updRs = new FsFileWriter(view, s"vu$pid", StructType(fields))
-      val ins = new FsFileWriter(view, s"vi$pid", StructType(fields))
-      val dataProj = UnsafeProjection.create(
-        fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i + 1, f.dataType, f.nullable)
-        })
-      val keyProj = UnsafeProjection.create(IndexedSeq(
-        BoundReference(1, fields.head.dataType, fields.head.nullable)))
-      rows.foreach { r =>
-        r.getInt(0) match {
-          case 0 => dels.write(keyProj(r))
-          case 1 => updKs.write(keyProj(r)); updRs.write(dataProj(r))
-          case _ => ins.write(dataProj(r))
+    val write = new FsWrite(view)
+    val deltas = new DeltaSinkFactory(write.sinks)
+    val keySchema = StructType(schema.fields.take(1))
+    // each `(__op, view row)` becomes the delete / update / insert call
+    // of one shared delta writer
+    val writers: DataWriterFactory = (pid: Int, taskId: Long) => {
+      val w = deltas.createWriter(pid, taskId)
+      val dataProj = RowWriterFactory.skipMarker(schema)
+      val keyProj = RowWriterFactory.skipMarker(keySchema)
+      new DataWriter[InternalRow] {
+        override def write(r: InternalRow): Unit = r.getInt(0) match {
+          case 0 => w.delete(null, keyProj(r))
+          case 1 => w.update(null, keyProj(r), dataProj(r))
+          case _ => w.insert(dataProj(r))
         }
+        override def commit(): WriterCommitMessage = w.commit()
+        override def abort(): Unit = w.abort()
+        override def close(): Unit = w.close()
       }
-      Iterator((dels.finish(), updKs.finish(), updRs.finish(), ins.finish()))
-    }.collect()
-    val delKeys = refs.flatMap(_._1).toVector
-    val updKeys = refs.flatMap(_._2).toVector
-    val updRows = refs.flatMap(_._3).toVector
-    val inserts = refs.flatMap(_._4).toVector
-    val applied = FsStore.commitDeltaWithEpoch(view, delKeys, updKeys,
-      updRows, inserts, viewHead.schemaId, EpochKey, baseVersion)
-    if (!applied) // replayed mark: the just-written files are orphans
-      (delKeys ++ updKeys ++ updRows ++ inserts).foreach(FsStore.deleteRef)
+    }
+    val applied = VersionedWrite.run(write, out.queryExecution.toRdd, writers) { ms =>
+      val m = DeltaMessage.merge[FsStore.FileRef](ms)
+      val applied = FsStore.commitDeltaWithEpoch(view, m.deletes,
+        m.updateIds, m.updates, m.inserts, write.version.schemaId, EpochKey,
+        baseVersion)
+      if (!applied) write.discard(VersionedWrite.units(ms)) // replayed mark
+      applied
+    }
     RefreshStats(baseVersion, baseVersion, 0L,
       FsStore.current(view).rowCount, applied, incremental = true)
   }

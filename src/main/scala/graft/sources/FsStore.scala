@@ -1316,32 +1316,40 @@ object FsStore extends VersionedStore {
       writeSchemaId: Int): Unit = retryingConcurrent(name) {
     install(name) { v =>
       requireSchemaUnchanged(name, v, writeSchemaId)
-      val added = files.map(_.copy(schemaId = v.schemaId, addedVersion = v.id + 1))
-      Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage, v.maxFieldId,
-        v.files ++ added, v.masks,
-        added.map(f => Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
-        v.rowCount + added.map(_.rows).sum, v.epochs, v.bucketN, v.bloomIds, v.ngramIds)
+      withFiles(v, files, replace = false)
     }
   }
 
   /** Truncate-install (CoW row-level ops land here): the new snapshot is
-    * exactly `files`; the change log records the WHOLE previous snapshot
-    * as deletes (file-referenced pre-images) plus the new files as
-    * inserts — same vocabulary as [[MemStore.commitTruncate]]. */
+    * exactly `files`. */
   def commitTruncate(name: String, files: Vector[FileRef],
       writeSchemaId: Int): Unit =
     install(name) { v =>
       requireSchemaUnchanged(name, v, writeSchemaId)
-      val added = files.map(_.copy(schemaId = v.schemaId, addedVersion = v.id + 1))
-      val deleted =
-        if (v.rowCount == 0) Vector.empty
-        else Vector(Change(OpDelete, v.files, v.masks, Vector.empty, v.rowCount))
-      Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage, v.maxFieldId,
-        added, Vector.empty,
-        deleted ++ added.map(f =>
-          Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
-        added.map(_.rows).sum, v.epochs, v.bucketN, v.bloomIds, v.ngramIds)
+      withFiles(v, files, replace = true)
     }
+
+  /** The version that installs `files` on `v`: appended to its snapshot,
+    * or (`replace`) as the whole new snapshot, whose change log records
+    * the WHOLE previous snapshot as deletes (file-referenced pre-images)
+    * — same vocabulary as [[MemStore.commitTruncate]]. The files are
+    * stamped with the head's schema id and the new version id; the
+    * change log lists each as an insert. */
+  private def withFiles(v: Version, files: Vector[FileRef],
+      replace: Boolean): Version = {
+    val added = files.map(_.copy(schemaId = v.schemaId, addedVersion = v.id + 1))
+    val deleted =
+      if (replace && v.rowCount > 0)
+        Vector(Change(OpDelete, v.files, v.masks, Vector.empty, v.rowCount))
+      else Vector.empty
+    Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage, v.maxFieldId,
+      if (replace) added else v.files ++ added,
+      if (replace) Vector.empty else v.masks,
+      deleted ++ added.map(f =>
+        Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
+      (if (replace) 0L else v.rowCount) + added.map(_.rows).sum,
+      v.epochs, v.bucketN, v.bloomIds, v.ngramIds)
+  }
 
   /** MERGE-ON-READ delta commit: `delKeys`/`updKeys` become a read-side
     * mask over older files, `updRows`/`inserts` join the snapshot as
@@ -1358,10 +1366,8 @@ object FsStore extends VersionedStore {
   def commitDelta(name: String, delKeys: Vector[FileRef],
       updKeys: Vector[FileRef], updRows: Vector[FileRef],
       inserts: Vector[FileRef], writeSchemaId: Int): Unit =
-    install(name) { v =>
-      requireSchemaUnchanged(name, v, writeSchemaId)
-      deltaNext(name, v, delKeys, updKeys, updRows, inserts, None)
-    }
+    install(name)(deltaNext(name, _, delKeys, updKeys, updRows, inserts,
+      writeSchemaId))
 
   /** [[commitDelta]] with an epoch high-water mark stamped in the SAME
     * manifest — the exactly-once merge-on-read refresh commit
@@ -1370,23 +1376,36 @@ object FsStore extends VersionedStore {
   def commitDeltaWithEpoch(name: String, delKeys: Vector[FileRef],
       updKeys: Vector[FileRef], updRows: Vector[FileRef],
       inserts: Vector[FileRef], writeSchemaId: Int,
-      epochKey: String, epochVal: Long): Boolean = {
-    val head = current(name)
-    if (epochVal <= head.epochs.getOrElse(epochKey, -1L)) return false
+      epochKey: String, epochVal: Long): Boolean =
+    installMarked(name, epochKey, epochVal)(deltaNext(name, _, delKeys,
+      updKeys, updRows, inserts, writeSchemaId))
+
+  /** Install `next`'s version with the high-water mark `key -> value`
+    * stamped in the SAME manifest — unless the head's mark is already at
+    * or past `value` (past it, when `allowSame` accepts a commit at the
+    * current mark): then nothing is installed and the result is false
+    * (a replay). */
+  private def installMarked(name: String, key: String, value: Long,
+      allowSame: Boolean = false)(next: Version => Version): Boolean = {
+    def fresh(v: Version): Boolean = {
+      val mark = v.epochs.getOrElse(key, -1L)
+      value > mark || (allowSame && value == mark)
+    }
+    if (!fresh(current(name))) return false
     install(name) { v =>
-      require(epochVal > v.epochs.getOrElse(epochKey, -1L),
-        s"graft_fs($name): delta refresh to $epochKey=$epochVal raced a " +
-          "concurrent refresh that already applied it")
-      requireSchemaUnchanged(name, v, writeSchemaId)
-      deltaNext(name, v, delKeys, updKeys, updRows, inserts,
-        Some(epochKey -> epochVal))
+      require(fresh(v), s"graft_fs($name): $key=$value raced a concurrent " +
+        "commit that already applied it")
+      val n = next(v)
+      n.copy(epochs = n.epochs + (key -> value))
     }
     true
   }
 
+  /** The version a delta commit installs on `v`. */
   private def deltaNext(name: String, v: Version, delKeys: Vector[FileRef],
       updKeys: Vector[FileRef], updRows: Vector[FileRef],
-      inserts: Vector[FileRef], epoch: Option[(String, Long)]): Version = {
+      inserts: Vector[FileRef], writeSchemaId: Int): Version = {
+    requireSchemaUnchanged(name, v, writeSchemaId)
     val nextId = v.id + 1
     val delN = delKeys.map(_.rows).sum
     val updN = updKeys.map(_.rows).sum
@@ -1411,7 +1430,7 @@ object FsStore extends VersionedStore {
       if (maskFiles.isEmpty) v.masks else v.masks :+ DeltaMask(nextId, maskFiles),
       changes,
       v.rowCount - delN + insFiles.map(_.rows).sum,
-      epoch.fold(v.epochs)(v.epochs + _), v.bucketN, v.bloomIds, v.ngramIds)
+      v.epochs, v.bucketN, v.bloomIds, v.ngramIds)
   }
 
   /** COMPACTION install (the commit half of OPTIMIZE — see
@@ -1558,28 +1577,17 @@ object FsStore extends VersionedStore {
     * high-water mark, so a REPLAYED epoch installs no version and its
     * re-written files are reported back as orphans for the caller to
     * delete (the file sink's `_spark_metadata` log, as manifest state).
-    * Returns true iff the epoch committed (false = replay). */
+    * The version is [[commitAppend]]'s plus the mark. Returns true iff
+    * the epoch committed (false = replay). */
   def commitEpochAppend(name: String, queryId: String, epochId: Long,
       files: Vector[FileRef], writeSchemaId: Int): Boolean = {
     // append-class: retried like commitAppend — each attempt re-reads
     // the head, so a replay detected mid-retry still returns false
     var committed = false
     retryingConcurrent(name) {
-      val head = current(name)
-      if (epochId <= head.epochs.getOrElse(queryId, -1L)) committed = false
-      else {
-        install(name) { v =>
-          requireSchemaUnchanged(name, v, writeSchemaId)
-          require(epochId > v.epochs.getOrElse(queryId, -1L),
-            s"graft_fs($name): epoch $epochId raced a concurrent commit")
-          val added = files.map(_.copy(schemaId = v.schemaId, addedVersion = v.id + 1))
-          Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage, v.maxFieldId,
-            v.files ++ added, v.masks,
-            added.map(f => Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
-            v.rowCount + added.map(_.rows).sum,
-            v.epochs + (queryId -> epochId), v.bucketN, v.bloomIds, v.ngramIds)
-        }
-        committed = true
+      committed = installMarked(name, queryId, epochId) { v =>
+        requireSchemaUnchanged(name, v, writeSchemaId)
+        withFiles(v, files, replace = false)
       }
     }
     committed
@@ -1628,31 +1636,13 @@ object FsStore extends VersionedStore {
       s"graft_fs($name): adopt donor $donor carries delta masks — " +
         "adopted files get a fresh addedVersion, which would escape them")
     val relink = relinkInto(name, dataDir(donor).toString) _
-    val head = current(name)
-    val floor = head.epochs.getOrElse(epochKey, -1L)
-    if (epochVal < floor || (!allowSame && epochVal == floor)) return false
-    install(name) { v =>
-      require(epochVal > v.epochs.getOrElse(epochKey, -1L) ||
-        (allowSame && epochVal == v.epochs.getOrElse(epochKey, -1L)),
-        s"graft_fs($name): refresh to $epochKey=$epochVal raced a " +
-          "concurrent refresh that already applied it")
+    installMarked(name, epochKey, epochVal, allowSame) { v =>
       require(adoptCompatible(v.schema, d.schema),
         s"graft_fs($name): adopt donor schema ${d.schema.simpleString} " +
           s"does not match view schema ${v.schema.simpleString}")
-      val added = d.files.map(f => f.copy(path = relink(f.path),
-        bloom = f.bloom.map(relink), schemaId = v.schemaId,
-        addedVersion = v.id + 1))
-      val deleted =
-        if (v.rowCount == 0) Vector.empty
-        else Vector(Change(OpDelete, v.files, v.masks, Vector.empty, v.rowCount))
-      Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage, v.maxFieldId,
-        added, Vector.empty,
-        deleted ++ added.map(f =>
-          Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
-        added.map(_.rows).sum, v.epochs + (epochKey -> epochVal),
-        v.bucketN, v.bloomIds, v.ngramIds)
+      withFiles(v, d.files.map(f => f.copy(path = relink(f.path),
+        bloom = f.bloom.map(relink))), replace = true)
     }
-    true
   }
 
   /** TXN install (the prepare half of [[FsTxn]]): append — or, with
@@ -1677,22 +1667,10 @@ object FsStore extends VersionedStore {
         require(adoptCompatible(v.schema, d.schema),
           s"graft_fs($name): txn donor schema ${d.schema.simpleString} " +
             s"does not match table schema ${v.schema.simpleString}")
-        val added = d.files.map(f => f.copy(path = relink(f.path),
-          bloom = f.bloom.map(relink), schemaId = v.schemaId,
-          addedVersion = v.id + 1))
-        val deleted =
-          if (replace && v.rowCount > 0)
-            Vector(Change(OpDelete, v.files, v.masks, Vector.empty, v.rowCount))
-          else Vector.empty
         out = v.id + 1
-        Version(v.id + 1, GraftClock.next(), v.schemaId, v.lineage,
-          v.maxFieldId,
-          if (replace) added else v.files ++ added,
-          if (replace) Vector.empty else v.masks,
-          deleted ++ added.map(f =>
-            Change(OpInsert, Vector(f), Vector.empty, Vector.empty, f.rows)),
-          (if (replace) 0L else v.rowCount) + added.map(_.rows).sum,
-          v.epochs, v.bucketN, v.bloomIds, v.ngramIds, txnId = Some(txnId))
+        withFiles(v, d.files.map(f => f.copy(path = relink(f.path),
+          bloom = f.bloom.map(relink))), replace)
+          .copy(txnId = Some(txnId))
       }
     }
     out

@@ -15,15 +15,15 @@ import org.apache.spark.unsafe.types.UTF8String
 import FsStore.{Change, DeltaMask, FileRef}
 
 /** The FILE-BACKED DSv2 table over [[FsStore]] (`fs_*` / `fsd_*`
-  * identifiers in [[GraftCatalog]]): the [[MemTable]] protocol with rows
-  * replaced by parquet files end-to-end —
-  *  - batch write: each task streams its rows into ONE parquet data
-  *    file and ships a manifest-sized [[FsCommitMessage]] (path + row /
-  *    byte counts); the driver's `commit` installs a version manifest
-  *    referencing the files (atomic rename). Rows never visit the
-  *    driver, so there is no [[MemStore.MaxCommittedRows]] cap here.
+  * identifiers in [[GraftCatalog]]): the shared two-phase write
+  * ([[VersionedWrite]]) with parquet files as the unit of commit —
+  *  - write: each task streams its rows into parquet data files
+  *    ([[FsSinks]]) and ships their manifest entries (path + row / byte
+  *    counts); the driver installs a version manifest referencing the
+  *    files (atomic rename, [[FsWrite]]). Rows never visit the driver,
+  *    so there is no [[MemStore.MaxCommittedRows]] cap here.
   *  - abort (task or job) deletes the written files — a failed job
-  *    leaves NO files behind (SourcesSpec pins it).
+  *    leaves NO files behind (FsTableSpec pins it).
   *  - row-level ops: group-based copy-on-write for `fs_*` (the rewrite
   *    writes new files, truncate-install swaps the manifest), true
   *    MERGE-ON-READ deltas for `fsd_*` (delete/update keys become key
@@ -39,7 +39,7 @@ import FsStore.{Change, DeltaMask, FileRef}
   * (BASELINE.json:6). */
 class FsTable(name: String, pinnedVersion: Option[Long] = None,
     delta: Boolean = false, changes: Boolean = false)
-    extends VersionedTable(FsStore, name, pinnedVersion, delta, changes) {
+    extends VersionedTable[FileRef](FsStore, name, pinnedVersion, delta, changes) {
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -52,9 +52,7 @@ class FsTable(name: String, pinnedVersion: Option[Long] = None,
   override protected def rowLevelScan(options: CaseInsensitiveStringMap): ScanBuilder =
     new FsScanBuilder(name, pinnedVersion, cdf = false, options,
       allowPushdown = false)
-  override protected def deltaWrite(): DeltaBatchWrite = new FsDeltaBatchWrite(name)
-  override protected def rewrite(info: LogicalWriteInfo): Write =
-    new FsWrite(name, truncate = true, info.queryId())
+  override protected def storeWrite(): StoreWrite[FileRef] = new FsWrite(name)
 
   /** The declared partition spec ([[FsStore.Version.bucketN]]): what
     * `DESCRIBE` shows and what write distribution/SPJ planning resolve. */
@@ -82,79 +80,55 @@ class FsTable(name: String, pinnedVersion: Option[Long] = None,
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }
-      override def build(): Write = new FsWrite(name, doTruncate, info.queryId())
+      override def build(): Write =
+        new VersionedWrite(new FsWrite(name), doTruncate, info.queryId())
     }
   }
 }
 
-/** The fs table's Write: batch and streaming share the task file
-  * writers; a BUCKETED table additionally REQUESTS a clustered
-  * distribution on its bucket transform (`RequiresDistributionAndOrdering`
-  * — the write-side half of the SPJ contract: Spark shuffles incoming
-  * rows so each task holds whole buckets, and the task writer splits
-  * into one file per bucket it received). Unpartitioned tables request
-  * nothing. */
-class FsWrite(name: String, truncate: Boolean, queryId: String)
-    extends Write with RequiresDistributionAndOrdering {
+/** The file store's driver half of the write protocol: a unit is a
+  * [[FileRef]] a task wrote. The write-time version is pinned when the
+  * write is built — every install checks the head still carries its
+  * schema id, so an ALTER racing the write fails the install instead of
+  * mis-tagging the files. Discarded units are deleted with their bloom
+  * sidecars; abort's sweep removes every file carrying the write's job
+  * stamp, which covers attempts that died after writing but before
+  * their message was delivered. A BUCKETED table requests a clustered
+  * distribution on its bucket transform and a per-task sort by the key
+  * (the write-side half of the SPJ contract: Spark shuffles so each
+  * task holds whole buckets, every file is key-ASC, and the scan
+  * reports both); other tables request nothing. */
+final class FsWrite(name: String) extends StoreWrite[FileRef] {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  private val bucketN = FsStore.current(name).bucketN
-  override def requiredDistribution(): Distribution =
-    if (bucketN > 0)
-      Distributions.clustered(Array(expressions.Expressions.bucket(bucketN,
-        FsStore.schemaOf(name).fields.head.name)))
+  /** The head this write was built on. */
+  val version: FsStore.Version = FsStore.current(name)
+  val sinks: FsSinks = FsSinks(name, version.schema, version.bucketN,
+    version.bloomIds.toSet, version.ngramIds.toSet,
+    java.util.UUID.randomUUID().toString.take(8),
+    FsStore.resolvePartSpec(name, version.schema))
+  private val schemaId = version.schemaId
+  def append(units: Vector[FileRef]): Unit =
+    FsStore.commitAppend(name, units, schemaId)
+  def truncate(units: Vector[FileRef]): Unit =
+    FsStore.commitTruncate(name, units, schemaId)
+  def epoch(queryId: String, epochId: Long, units: Vector[FileRef]): Boolean =
+    FsStore.commitEpochAppend(name, queryId, epochId, units, schemaId)
+  def delta(m: DeltaMessage[FileRef]): Unit =
+    FsStore.commitDelta(name, m.deletes, m.updateIds, m.updates, m.inserts,
+      schemaId)
+  override def discard(units: Vector[FileRef]): Unit = units.foreach(FsStore.deleteRef)
+  override def sweep(epoch: Long): Unit =
+    FsStore.sweepJobFiles(name, sinks.stamp(epoch))
+  private def key = version.schema.fields.head.name
+  override def requiredDistribution: Distribution =
+    if (sinks.bucketN > 0)
+      Distributions.clustered(Array(expressions.Expressions.bucket(sinks.bucketN, key)))
     else Distributions.unspecified()
-  /** Bucketed tables also request a PER-TASK SORT by the key, so every
-    * written file is key-ASC — which lets the scan REPORT that order and
-    * the storage-partitioned join drop its per-partition sorts too. */
-  override def requiredOrdering(): Array[expressions.SortOrder] =
-    if (bucketN > 0)
-      Array(expressions.Expressions.sort(
-        expressions.Expressions.column(FsStore.schemaOf(name).fields.head.name),
+  override def requiredOrdering: Array[expressions.SortOrder] =
+    if (sinks.bucketN > 0)
+      Array(expressions.Expressions.sort(expressions.Expressions.column(key),
         expressions.SortDirection.ASCENDING))
     else Array.empty
-  override def requiredNumPartitions(): Int = 0
-
-  override def toBatch: BatchWrite = new FsBatchWrite(name, truncate)
-  /** `writeStream.toTable` on the file store: per-epoch task
-    * parquet files through the same two-phase shape, with the
-    * MANIFEST's per-query epoch high-water mark making replayed
-    * epochs no-ops — the replayed epoch's re-written files are
-    * deleted instead of committed (exactly-once under micro-batch
-    * retry; the mem twin is q274, the fs one q301). */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-      // write-time schema, pinned: a concurrent ALTER between epoch
-      // write and commit fails the install instead of mis-tagging
-      private val writeVer = FsStore.current(name)
-      private val schema = writeVer.schema
-      // per-query stamp; the factory appends the epoch so each epoch's
-      // abort sweeps exactly its own attempts (earlier epochs' committed
-      // files share the query stamp but not the epoch suffix)
-      private val jobId = java.util.UUID.randomUUID().toString.take(8)
-      private val partSpec = FsStore.resolvePartSpec(name, schema)
-      override def createStreamingWriterFactory(
-          info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-        new FsStreamingWriterFactory(name, schema, writeVer.bucketN,
-          writeVer.bloomIds.toSet, writeVer.ngramIds.toSet, jobId,
-          partSpec)
-      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-        val files = messages.iterator
-          .flatMap { case FsCommitMessage(fs) => fs }.toVector
-        val committed = FsStore.commitEpochAppend(name,
-          queryId, epochId, files, writeVer.schemaId)
-        if (!committed) // replayed epoch: its files are orphans
-          files.foreach(FsStore.deleteRef)
-      }
-      override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-        messages.foreach {
-          // entries for tasks that never committed are NULL
-          case FsCommitMessage(fs) =>
-            fs.foreach(FsStore.deleteRef)
-          case _ =>
-        }
-        FsStore.sweepJobFiles(name, s"$jobId-e$epochId")
-      }
-    }
 }
 
 /** The fs scan builder — COLUMN PRUNING and zone-map FILE SKIPPING from
@@ -186,19 +160,15 @@ class FsScanBuilder(name: String, pinnedVersion: Option[Long], cdf: Boolean,
   /** `startingVersion` (explicit) or `startingTimestamp` (ms, resolved
     * to the FIRST version committed at or after it — Delta's CDF
     * contract; both set is a loud conflict). */
-  private val startingVersion = {
-    val byVer = Option(options.get("startingVersion")).map(_.toLong)
+  private val feed = {
+    val opts = FeedOptions(options)
     val byTs = Option(options.get("startingTimestamp"))
       .map(ts => FsStore.versionSinceTimestamp(name, ts.toLong))
-    require(byVer.isEmpty || byTs.isEmpty,
+    require(opts.startingVersion.isEmpty || byTs.isEmpty,
       s"graft_fs($name): startingVersion and startingTimestamp are " +
         "mutually exclusive")
-    byVer.orElse(byTs)
+    opts.copy(startingVersion = opts.startingVersion.orElse(byTs))
   }
-  private val maxRowsPerBatch =
-    Option(options.get("maxRowsPerBatch")).map(_.toLong).getOrElse(Long.MaxValue)
-  private val maxBytesPerBatch =
-    Option(options.get("maxBytesPerBatch")).map(_.toLong).getOrElse(Long.MaxValue)
   /** `endingVersion` (CDF only — Delta's batch-CDF contract): pin the
     * feed's upper bound so an incremental consumer reads EXACTLY
     * (startingVersion-1, endingVersion] even while the table keeps
@@ -475,8 +445,7 @@ class FsScanBuilder(name: String, pinnedVersion: Option[Long], cdf: Boolean,
       new FsAggScan(name, snapVersion, StructType(fields.toIndexedSeq),
         values.toIndexedSeq, ver.files.size)
     case None => new FsScan(name, cdf, snapVersion, ver,
-      required, lo, hi, bounds.toMap, startingVersion, maxRowsPerBatch,
-      maxBytesPerBatch, allowRuntime = allowPushdown,
+      required, lo, hi, bounds.toMap, feed, allowRuntime = allowPushdown,
       bloomPreds = bloomPreds.result(), nullPreds = nullPreds.result(),
       ngramPreds = ngramPreds.result())
   }
@@ -511,8 +480,7 @@ class FsAggReaderFactory extends PartitionReaderFactory {
 class FsScan(name: String, cdf: Boolean, snapVersion: Long,
     ver: FsStore.Version, required: Option[StructType], lo: Long, hi: Long,
     colBounds: Map[Int, FsStore.ColWindow],
-    startingVersion: Option[Long], maxRowsPerBatch: Long,
-    maxBytesPerBatch: Long, allowRuntime: Boolean = true,
+    feed: FeedOptions, allowRuntime: Boolean = true,
     bloomPreds: Vector[(Int, String, Vector[Any])] = Vector.empty,
     nullPreds: Vector[(Int, Boolean)] = Vector.empty,
     ngramPreds: Vector[(Int, Vector[Long])] = Vector.empty)
@@ -752,7 +720,7 @@ class FsScan(name: String, cdf: Boolean, snapVersion: Long,
   override def estimateStatistics(): Statistics = new Statistics {
     private val (n, bytes) =
       if (cdf) {
-        val from = startingVersion.getOrElse(FsStore.oldestVersion(name))
+        val from = feed.from(FsStore, name)
         val vs = (from to snapVersion).map(FsStore.versionAt(name, _))
         (vs.iterator.flatMap(_.changes).map(_.rows).sum,
           vs.iterator.flatMap(_.changes).flatMap(_.files).map(_.bytes).sum)
@@ -766,7 +734,7 @@ class FsScan(name: String, cdf: Boolean, snapVersion: Long,
     if (cdf) {
       // default = oldest RETAINED version (expiry must not brick a
       // fresh consumer that only wants what is still retained)
-      val from = startingVersion.getOrElse(FsStore.oldestVersion(name))
+      val from = feed.from(FsStore, name)
       FsStore.versionAt(name, from) // validate: expired/unknown → range error
       (from to snapVersion).iterator.flatMap { v =>
         FsStore.versionAt(name, v).changes.flatMap(c =>
@@ -860,7 +828,7 @@ class FsScan(name: String, cdf: Boolean, snapVersion: Long,
     * the row reader (Spark requires all partitions to agree). */
   private def cdfAllColumnar: Boolean =
     FsVectorized.enabled && cdf && {
-      val from = startingVersion.getOrElse(FsStore.oldestVersion(name))
+      val from = feed.from(FsStore, name)
       (from to snapVersion).forall(v =>
         FsStore.versionAt(name, v).changes.forall(c =>
           c.op == FsStore.OpInsert && c.masks.isEmpty && c.keys.isEmpty))
@@ -873,8 +841,7 @@ class FsScan(name: String, cdf: Boolean, snapVersion: Long,
     * file reads on the driver). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ChangeFeed(FsStore, name, cdf, startingVersion,
-      maxRowsPerBatch, maxBytesPerBatch)
+    feed.feed(FsStore, name, cdf)
 }
 
 /** Plans file-parallel partitions for snapshot and CDF reads. A data
@@ -1367,14 +1334,6 @@ class FsReaderFactory(columnar: Boolean = false) extends PartitionReaderFactory 
     }
 }
 
-/** One task's manifest entries: the parquet file(s) it wrote — one for
-  * an unpartitioned table, one PER BUCKET it received rows for on a
-  * bucketed table (empty = the task received no rows). */
-case class FsCommitMessage(files: Seq[FileRef]) extends WriterCommitMessage
-case class FsDeltaCommitMessage(delKeys: Option[FileRef],
-    updKeys: Option[FileRef], updRows: Option[FileRef],
-    inserts: Option[FileRef]) extends WriterCommitMessage
-
 /** Task-side parquet writer shared by every fs write path: opens the
   * file lazily (empty tasks write nothing), counts rows, and on commit
   * returns the manifest entry; abort deletes the file — the two-phase
@@ -1382,7 +1341,7 @@ case class FsDeltaCommitMessage(delKeys: Option[FileRef],
 private[sources] class FsFileWriter(tableName: String, tag: String,
     schema: StructType, bucket: Int = -1, bloomIds: Set[Int] = Set.empty,
     ngramIds: Set[Int] = Set.empty,
-    parts: Vector[Option[Long]] = Vector.empty) {
+    parts: Vector[Option[Long]] = Vector.empty) extends UnitSink[FileRef] {
   import org.apache.spark.sql.types._
   private var path: String = _
   private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
@@ -1693,212 +1652,91 @@ private[sources] class FsFileWriter(tableName: String, tag: String,
   }
 }
 
-class FsBatchWrite(name: String, truncate: Boolean) extends BatchWrite {
-  // write-time schema, pinned at write build: the commit validates the
-  // head still carries this schemaId (a concurrent ALTER between write
-  // start and commit must fail the install, never mis-tag the files)
-  private val writeVer = FsStore.current(name)
-  private val schema = writeVer.schema
-  // per-job stamp in every file name: abort's sweep backstop for task
-  // attempts invisible to both abort levels (see FsStore.sweepJobFiles)
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-  // value-partition spec (identity + time transforms, possibly
-  // composite), resolved to write-schema column indexes by field id
-  // (survives renames/widening); resolution fails loudly on a missing id
-  private val partSpec = FsStore.resolvePartSpec(name, schema)
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new FsWriterFactory(name, schema, writeVer.bucketN,
-      writeVer.bloomIds.toSet, writeVer.ngramIds.toSet, jobId,
-      partSpec)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.iterator
-      .flatMap { case FsCommitMessage(fs) => fs }.toVector
-    if (truncate) FsStore.commitTruncate(name, files, writeVer.schemaId)
-    else FsStore.commitAppend(name, files, writeVer.schemaId)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.foreach {
-      // entries for tasks that never committed are NULL — skipping them
-      // must not skip deleting the files of the tasks that DID commit
-      case FsCommitMessage(fs) =>
-        fs.foreach(FsStore.deleteRef)
-      case _ =>
-    }
-    // an attempt that died after finish() but before its message was
-    // delivered is in NEITHER abort path — sweep the job's stamp
-    FsStore.sweepJobFiles(name, jobId)
-  }
-}
+/** The file store's task half of the write protocol: parquet through
+  * [[FsFileWriter]]s whose names lead with the write's job stamp
+  * `j<job>[-e<epoch>]-`, so abort can sweep the job's files by prefix.
+  * Table rows go to ONE file per task on an unpartitioned table, one PER
+  * BUCKET (`floorMod(firstCol, bucketN)`, the value
+  * [[GraftCatalog.BucketBound]] computes and
+  * [[FsScanPartition.partitionKey]] reports) on a bucketed one, and one
+  * per (bucket, partition TUPLE) on a value-partitioned one (identity +
+  * time/truncate transforms, possibly composite, possibly under a
+  * bucket spec — the SPJ + time-pruning fact layout; NULL entries get
+  * their own unpruned file, Iceberg's null-partition shape). `partSpec`
+  * is resolved to write-schema column indexes by field id. */
+final case class FsSinks(name: String, schema: StructType, bucketN: Int,
+    bloomIds: Set[Int], ngramIds: Set[Int], job: String,
+    partSpec: Seq[(String, Int)]) extends UnitSinks[FileRef] {
+  /** A streaming epoch gets its own stamp, so each epoch's abort sweeps
+    * exactly its own attempts (earlier epochs' committed files share the
+    * job but not the epoch). */
+  def stamp(epoch: Long): String = if (epoch < 0) job else s"$job-e$epoch"
 
-/** Serializes task rows into parquet data files — ONE for an
-  * unpartitioned table, one PER BUCKET (`floorMod(firstCol, bucketN)`,
-  * the same value [[GraftCatalog.BucketBound]] computes and
-  * [[FsScanPartition.partitionKey]] reports) on a bucketed table.
-  * Row-level rewrite jobs deliver `(__row_operation: int, data...)`
-  * rows (the MemWriter contract — see `ReplaceDataExec.writingTask`);
-  * the writer dispatches on arity and strips the marker. */
-class FsWriterFactory(name: String, schema: StructType, bucketN: Int = 0,
-    bloomIds: Set[Int] = Set.empty, ngramIds: Set[Int] = Set.empty,
-    jobId: String = "", partSpec: Seq[(String, Int)] = Nil)
-    extends DataWriterFactory {
-  // the job stamp leads the file name so abort can sweep by prefix
-  private def tag(partitionId: Int, b: Int): String =
-    if (jobId.isEmpty) s"d$partitionId-b$b" else s"j$jobId-d$partitionId-b$b"
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      private val skipOp = UnsafeProjection.create(
-        schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i + 1, f.dataType, f.nullable)
-        })
-      private val keyIsInt =
-        schema.fields.head.dataType == org.apache.spark.sql.types.IntegerType
-      private val byBucket =
-        scala.collection.mutable.Map[Int, FsFileWriter]()
-      private def writerFor(b: Int): FsFileWriter =
-        byBucket.getOrElseUpdate(b,
-          new FsFileWriter(name, tag(partitionId, b), schema, b, bloomIds,
-            ngramIds))
-      // value-partitioned layout (identity + time/truncate transforms,
-      // possibly composite, possibly UNDER a bucket spec — the SPJ +
-      // time-pruning fact layout): one file per (bucket, partition
-      // TUPLE) this task sees; NULL entries get their own (unpruned)
-      // file — Iceberg's null-partition shape
-      private val byPart =
-        scala.collection.mutable.Map[(Int, Vector[Option[Long]]), FsFileWriter]()
-      // per-spec-field physical accessor: Int-backed (int/date) vs Long
-      // (long/timestamp µs), decided once, not per row
-      private val partGetters: Vector[InternalRow => Option[Long]] =
-        partSpec.iterator.map { case (kind, idx) =>
-          val isInt = schema(idx).dataType match {
-            case org.apache.spark.sql.types.IntegerType |
-                 org.apache.spark.sql.types.DateType => true
-            case _ => false
-          }
-          (row: InternalRow) =>
-            if (row.isNullAt(idx)) None
-            else {
-              val raw = if (isInt) row.getInt(idx).toLong else row.getLong(idx)
-              Some(FsStore.partTransform(kind, raw))
-            }
-        }.toVector
-      private def partValue(row: InternalRow): Vector[Option[Long]] =
-        partGetters.map(_(row))
-      private def partWriterFor(b: Int, pv: Vector[Option[Long]]): FsFileWriter =
-        byPart.getOrElseUpdate((b, pv), {
-          val pTag = pv.map(_.map(_.toString).getOrElse("null"))
-            .mkString("p", "_", "")
-          val base =
-            if (b < 0) tag(partitionId, -1).replace("-b-1", s"-$pTag")
-            else s"${tag(partitionId, b)}-$pTag"
-          new FsFileWriter(name, base, schema, b, bloomIds, ngramIds, pv)
-        })
-      private def bucketOf(row: InternalRow): Int = {
-        require(!row.isNullAt(0),
-          s"graft_fs($name): bucketed tables key on the first column — " +
-            "NULL row ids have no bucket")
-        val k = if (keyIsInt) row.getInt(0).toLong else row.getLong(0)
-        Math.floorMod(k, bucketN.toLong).toInt
-      }
-      private def route(row: InternalRow): Unit =
-        if (partSpec.nonEmpty)
-          partWriterFor(if (bucketN > 0) bucketOf(row) else -1,
-            partValue(row)).write(row)
-        else if (bucketN <= 0) writerFor(-1).write(row)
-        else writerFor(bucketOf(row)).write(row)
-      override def write(row: InternalRow): Unit =
-        if (row.numFields == schema.length) route(row)
-        else if (row.numFields == schema.length + 1) route(skipOp(row))
-        else throw new IllegalStateException(
-          s"fs write: row arity ${row.numFields} vs table ${schema.length}")
-      override def commit(): WriterCommitMessage = {
-        // zombie guard: a kill that lands after the row loop (the job
-        // already failed) must not mint files the driver will never see —
-        // self-abort instead of committing. The residual window (kill
-        // arriving after this check) is covered by the driver abort's
-        // quiescent sweep over the job stamp.
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null && tc.isInterrupted()) {
-          (byBucket.valuesIterator ++ byPart.valuesIterator).foreach(_.abort())
-          throw new org.apache.spark.TaskKilledException("zombie write attempt")
+  // DATA files carry the bloom index; key files are mask plumbing the
+  // scan never bloom-probes
+  def delta(kind: String, ids: Boolean, pid: Int): UnitSink[FileRef] =
+    if (ids) new FsFileWriter(name, s"j$job-$kind$pid", StructType(Seq(schema.fields.head)))
+    else new FsFileWriter(name, s"j$job-$kind$pid", schema,
+      bloomIds = bloomIds, ngramIds = ngramIds)
+
+  def rows(pid: Int, epoch: Long): UnitSink[FileRef] = new UnitSink[FileRef] {
+    private val tag = s"j${stamp(epoch)}-d$pid"
+    private val keyIsInt =
+      schema.fields.head.dataType == org.apache.spark.sql.types.IntegerType
+    private val byBucket = scala.collection.mutable.Map[Int, FsFileWriter]()
+    private def writerFor(b: Int): FsFileWriter =
+      byBucket.getOrElseUpdate(b,
+        new FsFileWriter(name, s"$tag-b$b", schema, b, bloomIds, ngramIds))
+    private val byPart =
+      scala.collection.mutable.Map[(Int, Vector[Option[Long]]), FsFileWriter]()
+    // per-spec-field physical accessor: Int-backed (int/date) vs Long
+    // (long/timestamp µs), decided once, not per row
+    private val partGetters: Vector[InternalRow => Option[Long]] =
+      partSpec.iterator.map { case (kind, idx) =>
+        val isInt = schema(idx).dataType match {
+          case org.apache.spark.sql.types.IntegerType |
+               org.apache.spark.sql.types.DateType => true
+          case _ => false
         }
-        FsCommitMessage((byBucket.valuesIterator ++ byPart.valuesIterator)
-          .flatMap(_.finish()).toVector)
-      }
-      override def abort(): Unit =
-        (byBucket.valuesIterator ++ byPart.valuesIterator).foreach(_.abort())
-      override def close(): Unit = ()
+        (row: InternalRow) =>
+          if (row.isNullAt(idx)) None
+          else {
+            val raw = if (isInt) row.getInt(idx).toLong else row.getLong(idx)
+            Some(FsStore.partTransform(kind, raw))
+          }
+      }.toVector
+    private def partWriterFor(b: Int, pv: Vector[Option[Long]]): FsFileWriter =
+      byPart.getOrElseUpdate((b, pv), {
+        val pTag = pv.map(_.map(_.toString).getOrElse("null")).mkString("p", "_", "")
+        val base = if (b < 0) s"$tag-$pTag" else s"$tag-b$b-$pTag"
+        new FsFileWriter(name, base, schema, b, bloomIds, ngramIds, pv)
+      })
+    private def bucketOf(row: InternalRow): Int = {
+      require(!row.isNullAt(0),
+        s"graft_fs($name): bucketed tables key on the first column — " +
+          "NULL row ids have no bucket")
+      val k = if (keyIsInt) row.getInt(0).toLong else row.getLong(0)
+      Math.floorMod(k, bucketN.toLong).toInt
     }
-}
-
-/** Streaming adapter: same file-writing task writer, epoch handed by
-  * Spark (serializable top-level class — the task ships it). */
-class FsStreamingWriterFactory(name: String, schema: StructType,
-    bucketN: Int = 0, bloomIds: Set[Int] = Set.empty,
-    ngramIds: Set[Int] = Set.empty, jobId: String = "",
-    partSpec: Seq[(String, Int)] = Nil)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new FsWriterFactory(name, schema, bucketN, bloomIds, ngramIds,
-      if (jobId.isEmpty) "" else s"$jobId-e$epochId", partSpec)
-      .createWriter(partitionId, taskId)
-}
-
-/** The merge-on-read delta write: per task up to FOUR parquet files
-  * (delete keys, update keys, update rows, inserts); the driver installs
-  * them as a [[FsStore.DeltaMask]] + data files in one manifest. */
-class FsDeltaBatchWrite(name: String) extends DeltaBatchWrite {
-  private val writeVer = FsStore.current(name) // pinned write-time schema
-  private val schema = writeVer.schema
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new FsDeltaWriterFactory(name, schema, writeVer.bloomIds.toSet,
-      writeVer.ngramIds.toSet, jobId)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.iterator.map(_.asInstanceOf[FsDeltaCommitMessage]).toVector
-    FsStore.commitDelta(name,
-      ms.flatMap(_.delKeys), ms.flatMap(_.updKeys),
-      ms.flatMap(_.updRows), ms.flatMap(_.inserts), writeVer.schemaId)
+    private def writers = byBucket.valuesIterator ++ byPart.valuesIterator
+    def write(row: InternalRow): Unit =
+      if (partSpec.nonEmpty)
+        partWriterFor(if (bucketN > 0) bucketOf(row) else -1,
+          partGetters.map(_(row))).write(row)
+      else writerFor(if (bucketN > 0) bucketOf(row) else -1).write(row)
+    def finish(): IterableOnce[FileRef] = {
+      // zombie guard: a kill that lands after the row loop (the job
+      // already failed) must not mint files the driver will never see —
+      // self-abort instead of committing. The residual window (kill
+      // arriving after this check) is covered by the driver abort's
+      // quiescent sweep over the job stamp.
+      val tc = org.apache.spark.TaskContext.get()
+      if (tc != null && tc.isInterrupted()) {
+        abort()
+        throw new org.apache.spark.TaskKilledException("zombie write attempt")
+      }
+      writers.flatMap(_.finish()).toVector
+    }
+    def abort(): Unit = writers.foreach(_.abort())
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.foreach { case m: FsDeltaCommitMessage =>
-      (m.delKeys ++ m.updKeys ++ m.updRows ++ m.inserts)
-        .foreach(FsStore.deleteRef)
-    }
-    // unreported attempts (died after finish(), message never delivered)
-    FsStore.sweepJobFiles(name, jobId)
-  }
-}
-
-class FsDeltaWriterFactory(name: String, schema: StructType,
-    bloomIds: Set[Int] = Set.empty, ngramIds: Set[Int] = Set.empty,
-    jobId: String = "") extends DeltaWriterFactory {
-  private def tag(kind: String, partitionId: Int): String =
-    if (jobId.isEmpty) s"$kind$partitionId" else s"j$jobId-$kind$partitionId"
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new DeltaWriter[InternalRow] {
-      private val idSchema = StructType(Seq(schema.fields.head))
-      // DATA files carry the bloom index; key files are mask plumbing
-      // the scan never bloom-probes
-      private val dels = new FsFileWriter(name, tag("k", partitionId), idSchema)
-      private val updKs = new FsFileWriter(name, tag("uk", partitionId), idSchema)
-      private val updRs = new FsFileWriter(name, tag("u", partitionId), schema,
-        bloomIds = bloomIds, ngramIds = ngramIds)
-      private val ins = new FsFileWriter(name, tag("i", partitionId), schema,
-        bloomIds = bloomIds, ngramIds = ngramIds)
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        dels.write(id)
-      override def update(meta: InternalRow, id: InternalRow,
-          row: InternalRow): Unit = {
-        updKs.write(id); updRs.write(row)
-      }
-      override def insert(row: InternalRow): Unit = ins.write(row)
-      override def commit(): WriterCommitMessage = FsDeltaCommitMessage(
-        dels.finish(), updKs.finish(), updRs.finish(), ins.finish())
-      override def abort(): Unit = {
-        dels.abort(); updKs.abort(); updRs.abort(); ins.abort()
-      }
-      override def close(): Unit = ()
-    }
 }

@@ -3,29 +3,26 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The WRITE half of the custom-connector story (`SynthSource` is the
   * read half): an in-memory DSv2 table with the real two-phase commit
   * protocol, served through [[GraftCatalog]] (`mem_*` identifiers).
   *
-  *  - each task's [[MemDataWriter]] BUFFERS its rows and ships them back
-  *    only inside its `commit()` message — nothing a task writes is
-  *    visible before the DRIVER's [[MemBatchWrite.commit]] installs the
-  *    full message set atomically (one volatile swap);
-  *  - a failed/aborted job never mutates the store: `abort()` drops the
-  *    buffered messages on the floor, so readers keep the previous
-  *    committed version (spec: a mid-write exception leaves the first
-  *    write's content intact);
-  *  - speculative/retried tasks are handled the way every real sink
-  *    handles them: Spark passes `commit()` messages only for the task
-  *    attempts it chose, so duplicates never reach the store.
+  * The protocol itself is [[VersionedWrite]], shared with the file
+  * store: tasks buffer their rows and ship them back only inside their
+  * commit messages, the driver installs the whole message set as one
+  * version, and a failed or aborted job never mutates the store. The
+  * heap store supplies only its unit of commit — a row's UnsafeRow
+  * bytes ([[MemSinks]]) — and its installs ([[MemWrite]]), all through
+  * [[MemStore.install]] (one atomic swap per commit).
   *
   * This is the same protocol a parquet/Iceberg writer runs with files
   * and manifests — reduced to its semantics so the commit/abort
@@ -295,23 +292,20 @@ object MemStore extends VersionedStore {
     * keyed by (table, queryId) — epoch ids are monotone only WITHIN one
     * query's checkpoint lineage; a table-keyed mark would silently
     * no-op a second query's epoch 0 against the first query's
-    * high-water (SourcesSpec pins two writers interleaving). */
-  private val lastEpoch = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    * high-water (SourcesSpec pins two writers interleaving). The mark's
+    * check, the append install and the mark's advance are one step per
+    * (table, query): an install that fails leaves the mark where it
+    * was. Returns true iff the epoch committed (false = replay). */
+  private val lastEpoch =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def commitEpoch(name: String, queryId: String, epochId: Long,
-      rows: Seq[InternalRow]): Unit =
-    tables.compute(name, (_, prev) => {
-      val last = prev.last
-      val key = name + "#" + queryId
-      if (epochId <= lastEpoch.getOrDefault(key, -1L)) prev // replay: no-op
-      else {
-        val next = last.rows ++ rows
-        requireCapacity(name, next.size.toLong, MaxCommittedRows)
-        lastEpoch.put(key, epochId) // inside compute: serialized per table
-        (prev :+ MemVersion(last.id + 1, last.schema, next,
-          rows.iterator.map((OpInsert, _)).toVector,
-          GraftClock.next())).takeRight(MaxVersions)
-      }
-    })
+      rows: Seq[InternalRow]): Boolean = {
+    var committed = false
+    lastEpoch.compute(name + "#" + queryId, (_, mark) =>
+      if (mark != null && epochId <= mark) mark
+      else { commitAppend(name, rows); committed = true; Long.box(epochId) })
+    committed
+  }
 
   private def requireCapacity(name: String, wouldBe: Long, cap: Long): Unit =
     require(wouldBe <= cap,
@@ -322,7 +316,7 @@ object MemStore extends VersionedStore {
 
 class MemTable(name: String, pinnedVersion: Option[Long] = None,
     delta: Boolean = false, changes: Boolean = false)
-    extends VersionedTable(MemStore, name, pinnedVersion, delta, changes)
+    extends VersionedTable[Array[Byte]](MemStore, name, pinnedVersion, delta, changes)
     with SupportsDelete {
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -358,31 +352,17 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
     * [[FsTable]] twin. */
   override protected def rowLevelScan(options: CaseInsensitiveStringMap): ScanBuilder =
     newScanBuilder(options)
-  override protected def deltaWrite(): DeltaBatchWrite = new MemDeltaBatchWrite(name)
-  // group-based replacement over the single whole-table group (the
-  // writer strips the __row_operation marker per row)
-  override protected def rewrite(info: LogicalWriteInfo): Write = new Write {
-    override def toBatch: BatchWrite = new MemBatchWrite(name, truncate = true)
-  }
+  override protected def storeWrite(): StoreWrite[Array[Byte]] = new MemWrite(name)
 
   /** Scan options (Delta's CDF read surface, reduced — the CDF rowset
     * itself is selected by loading the `<table>__changes` relation,
     * because the `_change_type`/`_commit_version` columns must exist on
     * the TABLE schema for analysis; see [[schema]]):
-    *  - `startingVersion=v`: serve changes from version v onward
-    *    (default: the oldest retained version);
-    *  - `maxRowsPerBatch=n` (streaming): admission-control row budget
-    *    WITHIN a version — one fat commit spreads over several
-    *    micro-batches instead of forcing one huge batch. A version
-    *    boundary is always a batch boundary (a batch never mixes
-    *    commits). */
+    * [[FeedOptions]]: `startingVersion`, and the streaming row / byte
+    * budgets that split a fat commit over several micro-batches. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val cdf = changes
-    val startingVersion = Option(options.get("startingVersion")).map(_.toLong)
-    val maxRowsPerBatch =
-      Option(options.get("maxRowsPerBatch")).map(_.toLong).getOrElse(Long.MaxValue)
-    val maxBytesPerBatch =
-      Option(options.get("maxBytesPerBatch")).map(_.toLong).getOrElse(Long.MaxValue)
+    val feed = FeedOptions(options)
     () => new Scan with Batch with SupportsReportStatistics {
       // one consistent version per scan: the pinned snapshot for a
       // VERSION AS OF relation, else the latest committed version
@@ -405,8 +385,7 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
         new org.apache.spark.sql.connector.read.Statistics {
           private val n =
             if (cdf) {
-              val from = startingVersion.getOrElse(MemStore.oldestVersion(name))
-              (from to snapVersion).iterator
+              (feed.from(MemStore, name) to snapVersion).iterator
                 .map(v => MemStore.versionAt(name, v).changes.size.toLong).sum
             } else MemStore.rowsAt(name, snapVersion).size.toLong
           override def sizeInBytes(): java.util.OptionalLong =
@@ -422,7 +401,7 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
         * files. */
       override def planInputPartitions(): Array[InputPartition] =
         if (cdf) {
-          val from = startingVersion.getOrElse(MemStore.oldestVersion(name))
+          val from = feed.from(MemStore, name)
           MemStore.versionAt(name, from) // validate: expired → range error
           val rows = (from to snapVersion).iterator.flatMap { v =>
             MemCdf.changeRows(name, dataSchema, v)
@@ -436,8 +415,7 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
         * exact UnsafeRow bytes of each change row. */
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new ChangeFeed(MemStore, name, cdf, startingVersion, maxRowsPerBatch,
-          maxBytesPerBatch)
+        feed.feed(MemStore, name, cdf)
     }
   }
 
@@ -464,33 +442,9 @@ class MemTable(name: String, pinnedVersion: Option[Long] = None,
             filters.mkString(", "))
         replaceWhere = Some(filters); this
       }
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new MemBatchWrite(name, doTruncate, replaceWhere)
-        /** `writeStream.toTable` — the connector as a STREAMING SINK:
-          * per-epoch task buffering through the same two-phase shape,
-          * with [[MemStore.commitEpoch]]'s high-water mark making
-          * replayed epochs no-ops (exactly-once under micro-batch
-          * retry, q274 + SourcesSpec). */
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          new org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-            override def createStreamingWriterFactory(
-                info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-              new MemStreamingWriterFactory(MemStore.schemaOf(name))
-            override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-              val schema = MemStore.schemaOf(name)
-              val rows = messages.iterator.flatMap {
-                case MemCommitMessage(bs) => bs.iterator.map { bytes =>
-                  val r = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(schema.length)
-                  r.pointTo(bytes, bytes.length)
-                  r.copy(): InternalRow
-                }
-              }.toVector
-              MemStore.commitEpoch(name, info.queryId(), epochId, rows)
-            }
-            override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-          }
-      }
+      override def build(): Write = new VersionedWrite(
+        new MemWrite(name, replaceWhere), doTruncate || replaceWhere.isDefined,
+        info.queryId())
     }
   }
 }
@@ -721,140 +675,56 @@ object MemCdf {
   }
 }
 
-case class MemCommitMessage(rows: Array[Array[Byte]]) extends WriterCommitMessage
-
-case class MemDeltaCommitMessage(
-    deletes: Array[Array[Byte]],
-    updateIds: Array[Array[Byte]],
-    updateRows: Array[Array[Byte]],
-    inserts: Array[Array[Byte]]) extends WriterCommitMessage
-
-/** The delta write: task writers buffer keyed DELETE / UPDATE / INSERT
-  * operations; the driver applies the full set in ONE atomic version
-  * install ([[MemStore.commitDelta]]). Abort drops the buffers — the
-  * same two-phase contract as [[MemBatchWrite]]. */
-class MemDeltaBatchWrite(name: String) extends DeltaBatchWrite {
-  private val schema = MemStore.schemaOf(name)
-  private val idSchema = StructType(Seq(schema.fields.head))
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new MemDeltaWriterFactory(schema)
-
-  private def rowsOf(bs: Iterator[Array[Byte]], st: StructType): Iterator[InternalRow] =
-    bs.map { bytes =>
-      val r = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(st.length)
-      r.pointTo(bytes, bytes.length)
-      r.copy(): InternalRow
+/** The heap store's task half: each sink buffers its rows as UnsafeRow
+  * bytes (row ids alone for a delta's id sinks). */
+final case class MemSinks(schema: StructType) extends UnitSinks[Array[Byte]] {
+  def rows(pid: Int, epoch: Long): UnitSink[Array[Byte]] = sink(schema)
+  def delta(kind: String, ids: Boolean, pid: Int): UnitSink[Array[Byte]] =
+    sink(if (ids) StructType(Seq(schema.fields.head)) else schema)
+  private def sink(st: StructType): UnitSink[Array[Byte]] = new UnitSink[Array[Byte]] {
+    private val proj = UnsafeProjection.create(st)
+    private val buf = Vector.newBuilder[Array[Byte]]
+    def write(row: InternalRow): Unit = {
+      val u = proj(row)
+      val bytes = new Array[Byte](u.getSizeInBytes)
+      u.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+      buf += bytes
     }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.iterator.map(_.asInstanceOf[MemDeltaCommitMessage]).toSeq
-    val idType = idSchema.fields.head.dataType
-    def keyOfId(r: InternalRow): Any = r.get(0, idType)
-    val deletes = ms.iterator.flatMap(m => rowsOf(m.deletes.iterator, idSchema))
-      .map(keyOfId).toVector
-    val updates = ms.iterator.flatMap { m =>
-      rowsOf(m.updateIds.iterator, idSchema).map(keyOfId)
-        .zip(rowsOf(m.updateRows.iterator, schema))
-    }.toVector
-    val inserts = ms.iterator.flatMap(m => rowsOf(m.inserts.iterator, schema)).toVector
-    MemStore.commitDelta(name, r => r.get(0, idType), deletes, updates, inserts)
+    def finish(): IterableOnce[Array[Byte]] = buf.result()
+    def abort(): Unit = buf.clear()
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-class MemDeltaWriterFactory(schema: StructType) extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new DeltaWriter[InternalRow] {
-      import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      private val idSchema = StructType(Seq(schema.fields.head))
-      private val idProj = UnsafeProjection.create(idSchema)
-      private val rowProj = UnsafeProjection.create(schema)
-      private val dels = Vector.newBuilder[Array[Byte]]
-      private val updIds = Vector.newBuilder[Array[Byte]]
-      private val updRows = Vector.newBuilder[Array[Byte]]
-      private val ins = Vector.newBuilder[Array[Byte]]
-      private def bytes(p: UnsafeProjection, r: InternalRow): Array[Byte] = {
-        val u = p(r)
-        util.Arrays.copyOf(u.getBytes, u.getSizeInBytes)
-      }
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        dels += bytes(idProj, id)
-      override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-        updIds += bytes(idProj, id)
-        updRows += bytes(rowProj, row)
-      }
-      override def insert(row: InternalRow): Unit = ins += bytes(rowProj, row)
-      override def commit(): WriterCommitMessage = MemDeltaCommitMessage(
-        dels.result().toArray, updIds.result().toArray,
-        updRows.result().toArray, ins.result().toArray)
-      override def abort(): Unit = { dels.clear(); updIds.clear(); updRows.clear(); ins.clear() }
-      override def close(): Unit = ()
-    }
-}
-
-class MemBatchWrite(name: String, truncate: Boolean,
+/** The heap store's driver half: units decode with the schema the tasks
+  * wrote under (pinned when the write is built, so an ALTER landing
+  * between the tasks and the commit cannot change how their bytes
+  * read), and every commit shape installs through [[MemStore.install]],
+  * whose [[MemStore.MaxCommittedRows]] gate covers them all. A truncate
+  * with `replaceWhere` filters is the overwrite-by-filter install. */
+final class MemWrite(name: String,
     replaceWhere: Option[Array[org.apache.spark.sql.sources.Filter]] = None)
-  extends BatchWrite {
-  private val schema = MemStore.schemaOf(name)
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new MemWriterFactory(schema)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // deserialize on the driver; ONE atomic install for the whole job
-    val rows = messages.iterator.flatMap {
-      case MemCommitMessage(bs) => bs.iterator.map { bytes =>
-        val r = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(schema.length)
-        r.pointTo(bytes, bytes.length)
-        r.copy(): InternalRow
-      }
+    extends StoreWrite[Array[Byte]] {
+  val sinks: MemSinks = MemSinks(MemStore.schemaOf(name))
+  private val schema = sinks.schema
+  private def rows(units: Vector[Array[Byte]],
+      width: Int = schema.length): Vector[InternalRow] =
+    units.iterator.map { b =>
+      val r = new UnsafeRow(width)
+      r.pointTo(b, b.length)
+      r: InternalRow
     }.toVector
-    replaceWhere match {
-      case Some(fs) => MemStore.commitOverwrite(name,
-        row => fs.forall(MemFilterEval.eval(_, row, schema)), rows)
-      case None if truncate => MemStore.commitTruncate(name, rows)
-      case None => MemStore.commitAppend(name, rows)
-    }
+  def append(units: Vector[Array[Byte]]): Unit = MemStore.commitAppend(name, rows(units))
+  def truncate(units: Vector[Array[Byte]]): Unit = replaceWhere match {
+    case Some(fs) => MemStore.commitOverwrite(name,
+      row => fs.forall(MemFilterEval.eval(_, row, schema)), rows(units))
+    case None => MemStore.commitTruncate(name, rows(units))
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Streaming adapter: same buffering writer, epoch handed by Spark. */
-class MemStreamingWriterFactory(schema: StructType)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new MemWriterFactory(schema).createWriter(partitionId, taskId)
-}
-
-/** Serializes task rows to table-schema UnsafeRow bytes. Row-level
-  * (ReplaceData) jobs deliver rows as `(__row_operation: int, data...)`
-  * — Spark's group-based rewrite prepends the marker and, for a
-  * connector with no `requiredMetadataAttributes`, hands the raw row to
-  * `write()` (the projecting task only runs on the metadata path; see
-  * `ReplaceDataExec.writingTask`). The writer dispatches on arity:
-  * table-width rows serialize directly, width+1 rows skip the leading
-  * marker; anything else fails loudly. */
-class MemWriterFactory(schema: StructType) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-      private val direct = UnsafeProjection.create(schema)
-      private val skipOp = UnsafeProjection.create(
-        schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i + 1, f.dataType, f.nullable)
-        })
-      private val buf = Vector.newBuilder[Array[Byte]]
-      override def write(row: InternalRow): Unit = {
-        val proj =
-          if (row.numFields == schema.length) direct
-          else if (row.numFields == schema.length + 1) skipOp
-          else throw new IllegalStateException(
-            s"mem write: row arity ${row.numFields} vs table ${schema.length}")
-        val u = proj(row)
-        buf += util.Arrays.copyOf(u.getBytes, u.getSizeInBytes)
-      }
-      override def commit(): WriterCommitMessage = MemCommitMessage(buf.result().toArray)
-      override def abort(): Unit = buf.clear()
-      override def close(): Unit = ()
-    }
+  def epoch(queryId: String, epochId: Long, units: Vector[Array[Byte]]): Boolean =
+    MemStore.commitEpoch(name, queryId, epochId, rows(units))
+  def delta(m: DeltaMessage[Array[Byte]]): Unit = {
+    val idType = schema.fields.head.dataType
+    val key = (r: InternalRow) => r.get(0, idType)
+    MemStore.commitDelta(name, key, rows(m.deletes, 1).map(key),
+      rows(m.updateIds, 1).map(key).zip(rows(m.updates)), rows(m.inserts))
+  }
 }

@@ -1,18 +1,24 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog._
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** What the two versioned stores share: [[MemStore]] keeps committed
   * rows on the heap, [[FsStore]] keeps parquet files under manifests,
   * and both install every commit as one new immutable version. The
-  * table front ([[VersionedTable]]), the change feed ([[ChangeFeed]])
-  * and [[GraftCatalog]]'s dispatch are written once over this. */
+  * table front ([[VersionedTable]]), the change feed ([[ChangeFeed]]),
+  * the two-phase write ([[VersionedWrite]]) and [[GraftCatalog]]'s
+  * dispatch are written once over this. */
 trait VersionedStore {
   /** `graft_mem` / `graft_fs`: the prefix of every relation name and
     * error a table of this store reports. */
@@ -73,6 +79,26 @@ object FeedOffset {
             "format; this checkpoint predates (version:pos) offsets — " +
             "restart the stream from a fresh checkpoint")
     }
+}
+
+/** The read options both stores' scans take: `startingVersion` (the
+  * first version a change read serves; default the oldest retained) and
+  * the feed's per-batch `maxRowsPerBatch` / `maxBytesPerBatch` budgets
+  * (default unbounded). */
+final case class FeedOptions(startingVersion: Option[Long],
+    maxRowsPerBatch: Long, maxBytesPerBatch: Long) {
+  def from(store: VersionedStore, name: String): Long =
+    startingVersion.getOrElse(store.oldestVersion(name))
+  def feed(store: VersionedStore, name: String, cdf: Boolean): ChangeFeed =
+    new ChangeFeed(store, name, cdf, startingVersion, maxRowsPerBatch,
+      maxBytesPerBatch)
+}
+object FeedOptions {
+  def apply(options: CaseInsensitiveStringMap): FeedOptions = {
+    def budget(k: String) = Option(options.get(k)).map(_.toLong).getOrElse(Long.MaxValue)
+    FeedOptions(Option(options.get("startingVersion")).map(_.toLong),
+      budget("maxRowsPerBatch"), budget("maxBytesPerBatch"))
+  }
 }
 
 /** The change feed of a versioned table (`readStream.table`): offsets
@@ -198,8 +224,8 @@ final class ChangeFeed(store: VersionedStore, name: String, cdf: Boolean,
   * relation name, the schema (delta row id, `__changes` columns, pinned
   * version), the read-only guards, and the row-level operation
   * skeletons. A store's table supplies the scan a row-level operation
-  * reads and the two writes it commits. */
-abstract class VersionedTable(store: VersionedStore, name: String,
+  * reads and its half of the write protocol ([[StoreWrite]]). */
+abstract class VersionedTable[U](store: VersionedStore, name: String,
     pinnedVersion: Option[Long], delta: Boolean, changes: Boolean)
     extends Table with SupportsRead with SupportsWrite
     with TruncatableTable with SupportsRowLevelOperations {
@@ -240,10 +266,8 @@ abstract class VersionedTable(store: VersionedStore, name: String,
   /** The scan a row-level operation reads: every row of the group it
     * replaces. */
   protected def rowLevelScan(options: CaseInsensitiveStringMap): ScanBuilder
-  /** The keyed DELETE / UPDATE / INSERT write of the delta flavour. */
-  protected def deltaWrite(): DeltaBatchWrite
-  /** The copy-on-write replacement of the whole-table group. */
-  protected def rewrite(info: LogicalWriteInfo): Write
+  /** The store's half of one write, its schema pinned now. */
+  protected def storeWrite(): StoreWrite[U]
 
   /** ROW-LEVEL OPERATIONS (`SupportsRowLevelOperations`) — UPDATE and
     * MERGE (and DELETE outside a metadata-only path). The plain flavour
@@ -272,9 +296,7 @@ abstract class VersionedTable(store: VersionedStore, name: String,
       override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder = {
         requireWritable(s"${info.command()} on")
         new DeltaWriteBuilder {
-          override def build(): DeltaWrite = new DeltaWrite {
-            override def toBatch: DeltaBatchWrite = deltaWrite()
-          }
+          override def build(): DeltaWrite = new VersionedDeltaWrite(storeWrite())
         }
       }
     }
@@ -286,9 +308,226 @@ abstract class VersionedTable(store: VersionedStore, name: String,
         rowLevelScan(options)
       override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder = {
         requireWritable(s"${info.command()} on")
+        // the replacement of the single whole-table group: a truncate
+        // install (the task writer strips the __row_operation marker)
         new WriteBuilder {
-          override def build(): Write = rewrite(winfo)
+          override def build(): Write =
+            new VersionedWrite(storeWrite(), truncate = true, winfo.queryId())
         }
       }
+    }
+}
+
+// ---------------------------------------------------------------- writes
+
+/** One task's sink for one stream of rows: the rows become the store's
+  * units of commit (heap: UnsafeRow bytes; files: [[FsStore.FileRef]]s).
+  * `finish` yields the units for the task's commit message; `abort`
+  * throws away what the sink wrote. */
+trait UnitSink[U] {
+  def write(row: InternalRow): Unit
+  def finish(): IterableOnce[U]
+  def abort(): Unit
+}
+
+/** The task half a store supplies to the write protocol. Serializable:
+  * it ships inside the writer factories, so it carries the write
+  * schema pinned on the driver, never the store's driver state. */
+trait UnitSinks[U] extends Serializable {
+  def schema: StructType
+  /** Table rows of task `pid`; `epoch` is the streaming epoch, -1 in a
+    * batch job. */
+  def rows(pid: Int, epoch: Long): UnitSink[U]
+  /** One of a delta task's four sinks: row ids (`ids`: deletes `k`,
+    * update keys `uk`) or table rows (update images `u`, inserts `i`). */
+  def delta(kind: String, ids: Boolean, pid: Int): UnitSink[U]
+}
+
+/** The driver half a store supplies: one install per commit shape, and
+  * the cleanup of units that will never be installed. Built when the
+  * write is built, so the schema every task writes under is pinned once
+  * for batch, streaming-epoch and delta commits alike. */
+abstract class StoreWrite[U] {
+  val sinks: UnitSinks[U]
+  def append(units: Vector[U]): Unit
+  def truncate(units: Vector[U]): Unit
+  /** Append `units` as epoch `epochId` of query `queryId` unless that
+    * query's high-water mark already covers it: false = a replay, and
+    * nothing was installed. */
+  def epoch(queryId: String, epochId: Long, units: Vector[U]): Boolean
+  def delta(m: DeltaMessage[U]): Unit
+  /** Units of an aborted job or a replayed epoch. */
+  def discard(units: Vector[U]): Unit = ()
+  /** After an abort: remove what task attempts that never reported wrote
+    * (`epoch` -1 for a batch job). */
+  def sweep(epoch: Long): Unit = ()
+  final def abort(messages: Array[WriterCommitMessage], epoch: Long): Unit = {
+    discard(VersionedWrite.units(messages))
+    sweep(epoch)
+  }
+  def requiredDistribution: Distribution = Distributions.unspecified()
+  def requiredOrdering: Array[expressions.SortOrder] = Array.empty
+}
+
+/** A task's units (empty = the task received no rows). */
+final case class UnitsMessage[U](units: Vector[U]) extends WriterCommitMessage
+
+/** A delta task's units: row ids to delete, update ids with their new
+  * rows (in the same order), and inserted rows. */
+final case class DeltaMessage[U](deletes: Vector[U], updateIds: Vector[U],
+    updates: Vector[U], inserts: Vector[U]) extends WriterCommitMessage
+object DeltaMessage {
+  def merge[U](messages: Array[WriterCommitMessage]): DeltaMessage[U] = {
+    val ms = messages.map(_.asInstanceOf[DeltaMessage[U]]).toVector
+    DeltaMessage(ms.flatMap(_.deletes), ms.flatMap(_.updateIds),
+      ms.flatMap(_.updates), ms.flatMap(_.inserts))
+  }
+}
+
+/** The two-phase write both stores run (the single coordinated commit
+  * of a parallel load):
+  *  - each task writes through its store's sinks and hands its units to
+  *    the driver only inside its commit message — nothing it wrote is
+  *    visible before the driver installs the whole message set as ONE
+  *    new version (append, truncate, or a per-query epoch);
+  *  - a failed job never installs: abort discards every delivered unit,
+  *    then the store sweeps what unreported attempts wrote, so readers
+  *    keep the previous version and no file outlives the job;
+  *  - speculative and retried attempts never reach the store: Spark
+  *    delivers commit messages only for the attempts it chose;
+  *  - a streaming epoch replayed after a restart comes back under the
+  *    same id; the store's per-query high-water mark turns it into a
+  *    no-op, and its units are discarded (exactly-once per query). */
+final class VersionedWrite[U](store: StoreWrite[U], truncate: Boolean,
+    queryId: String) extends RequiresDistributionAndOrdering
+    with BatchWrite with StreamingWrite {
+  override def requiredDistribution(): Distribution = store.requiredDistribution
+  override def requiredOrdering(): Array[expressions.SortOrder] = store.requiredOrdering
+  override def useCommitCoordinator(): Boolean = true
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new RowWriterFactory(store.sinks)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    if (truncate) store.truncate(VersionedWrite.units(messages))
+    else store.append(VersionedWrite.units(messages))
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    store.abort(messages, -1L)
+
+  override def createStreamingWriterFactory(
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new RowWriterFactory(store.sinks)
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val units = VersionedWrite.units[U](messages)
+    if (!store.epoch(queryId, epochId, units)) store.discard(units)
+  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    store.abort(messages, epochId)
+}
+
+object VersionedWrite {
+  /** Every delivered unit; a task that never committed delivers null. */
+  def units[U](messages: Array[WriterCommitMessage]): Vector[U] =
+    messages.iterator.flatMap {
+      case m: UnitsMessage[U @unchecked] => m.units
+      case m: DeltaMessage[U @unchecked] =>
+        m.deletes ++ m.updateIds ++ m.updates ++ m.inserts
+      case _ => Nil
+    }.toVector
+
+  /** The protocol outside a DSv2 write (fs maintenance rewrites, the
+    * view's delta refresh): one `factory` writer per partition of
+    * `rows`, then `commit` on the driver over the delivered messages. A
+    * failed task aborts its writer; a failed job, or a commit that
+    * throws, gets the abort a DSv2 job gets from Spark. */
+  def run[U, R](store: StoreWrite[U], rows: RDD[InternalRow],
+      factory: DataWriterFactory)(commit: Array[WriterCommitMessage] => R): R = {
+    var messages = Array.empty[WriterCommitMessage]
+    try {
+      messages = rows.mapPartitionsWithIndex { (pid, it) =>
+        val w = factory.createWriter(pid, 0L)
+        val m = try { it.foreach(w.write); w.commit() }
+        catch { case t: Throwable => w.abort(); throw t }
+        finally w.close()
+        Iterator.single(m)
+      }.collect()
+      commit(messages)
+    } catch {
+      case t: Throwable => store.abort(messages, -1L); throw t
+    }
+  }
+}
+
+/** The task writer of every batch and streaming write. Row-level
+  * (ReplaceData) jobs deliver `(__row_operation: int, data...)` rows:
+  * Spark's group-based rewrite prepends the marker and, for a connector
+  * with no `requiredMetadataAttributes`, hands the raw row to `write()`
+  * (see `ReplaceDataExec.writingTask`). The writer dispatches on arity:
+  * table-width rows go to the sink as they are, width+1 rows without
+  * the leading marker; anything else fails loudly. */
+final class RowWriterFactory[U](sinks: UnitSinks[U])
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(pid: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(pid, -1L)
+  override def createWriter(pid: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] = writer(pid, epochId)
+  private def writer(pid: Int, epoch: Long): DataWriter[InternalRow] =
+    new DataWriter[InternalRow] {
+      private val width = sinks.schema.length
+      private val sink = sinks.rows(pid, epoch)
+      private val skipOp = RowWriterFactory.skipMarker(sinks.schema)
+      override def write(row: InternalRow): Unit =
+        if (row.numFields == width) sink.write(row)
+        else if (row.numFields == width + 1) sink.write(skipOp(row))
+        else throw new IllegalStateException(
+          s"write: row arity ${row.numFields} vs table $width")
+      override def commit(): WriterCommitMessage =
+        UnitsMessage(sink.finish().iterator.toVector)
+      override def abort(): Unit = sink.abort()
+      override def close(): Unit = ()
+    }
+}
+
+object RowWriterFactory {
+  /** Projects `(marker, row...)` to the `schema`-wide row after the
+    * leading marker column. */
+  def skipMarker(schema: StructType): UnsafeProjection =
+    UnsafeProjection.create(schema.fields.toIndexedSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i + 1, f.dataType, f.nullable)
+    })
+}
+
+/** The delta (merge-on-read) write: each task's keyed DELETE / UPDATE /
+  * INSERT operations go to four sinks, and the driver applies the whole
+  * set in ONE version install through [[StoreWrite.delta]]. */
+final class VersionedDeltaWrite[U](store: StoreWrite[U])
+    extends DeltaWrite with DeltaBatchWrite {
+  override def toBatch: DeltaBatchWrite = this
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new DeltaSinkFactory(store.sinks)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    store.delta(DeltaMessage.merge(messages))
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    store.abort(messages, -1L)
+}
+
+final class DeltaSinkFactory[U](sinks: UnitSinks[U]) extends DeltaWriterFactory {
+  override def createWriter(pid: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new DeltaWriter[InternalRow] {
+      private val dels = sinks.delta("k", ids = true, pid)
+      private val updIds = sinks.delta("uk", ids = true, pid)
+      private val upds = sinks.delta("u", ids = false, pid)
+      private val ins = sinks.delta("i", ids = false, pid)
+      override def delete(meta: InternalRow, id: InternalRow): Unit = dels.write(id)
+      override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
+        updIds.write(id); upds.write(row)
+      }
+      override def insert(row: InternalRow): Unit = ins.write(row)
+      private def units(s: UnitSink[U]) = s.finish().iterator.toVector
+      override def commit(): WriterCommitMessage =
+        DeltaMessage(units(dels), units(updIds), units(upds), units(ins))
+      override def abort(): Unit = Seq(dels, updIds, upds, ins).foreach(_.abort())
+      override def close(): Unit = ()
     }
 }

@@ -69,6 +69,91 @@ class FsTableSpec extends SparkSpec {
     drop("fs_ab")
   }
 
+  test("fs rebucket: a NULL row id fails the rewrite, which leaves NO files and the version intact") {
+    drop("fs_rbnull")
+    spark.range(0, 200).selectExpr("id AS k", "id AS v")
+      .union(spark.sql("SELECT CAST(NULL AS BIGINT) AS k, 7L AS v"))
+      .repartition(4).writeTo("graft.fs_rbnull").create()
+    val before = dataFiles("fs_rbnull")
+    val verBefore = FsStore.currentVersion("fs_rbnull")
+    val e = intercept[Exception](FsMaintenance.rebucket(spark, "fs_rbnull", 4))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(x => Option(x.getMessage)).toSeq
+    assert(msgs.exists(_.contains("NULL row ids have no bucket")), msgs.headOption)
+    assert(FsStore.currentVersion("fs_rbnull") == verBefore,
+      "a failed rewrite must not install a version")
+    assert(dataFiles("fs_rbnull") == before,
+      "a failed rewrite must delete every file its tasks wrote")
+    assert(spark.table("graft.fs_rbnull").count() == 201)
+    drop("fs_rbnull")
+  }
+
+  test("one write protocol over both stores: the same writes leave the same rows and version ids; a replay and a failed append burn none") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsWrite}
+    import org.apache.spark.sql.connector.write.LogicalWriteInfo
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val pairs = Seq("mem_xw" -> "fs_xw", "memd_xw" -> "fsd_xw")
+    val tables = pairs.flatMap(p => Seq(p._1, p._2))
+    tables.foreach(drop)
+    def rows(ks: Range) = ks.map(k => (k.toLong, k * 10L)).toDF("k", "v")
+    /** One streaming epoch driven straight through the table's write. */
+    def epoch(t: String, id: Long, ks: Seq[Long]): Unit = {
+      val table = new GraftCatalog().loadTable(Identifier.of(Array.empty[String], t))
+        .asInstanceOf[SupportsWrite]
+      val info = new LogicalWriteInfo {
+        override def queryId(): String = s"q-$t"
+        override def schema() = table.schema()
+        override def options() = CaseInsensitiveStringMap.empty()
+      }
+      val sw = table.newWriteBuilder(info).build().toStreaming
+      val w = sw.createStreamingWriterFactory(() => 1).createWriter(0, 0L, id)
+      ks.foreach(k => w.write(InternalRow(k, k * 10L)))
+      sw.commit(id, Array(w.commit()))
+    }
+    def version(t: String) =
+      if (t.startsWith("mem")) MemStore.currentVersion(t) else FsStore.currentVersion(t)
+    rows(0 until 50).createOrReplaceTempView("xw_src")
+    for (t <- tables) {
+      rows(0 until 100).writeTo(s"graft.$t").create()
+      rows(100 until 150).writeTo(s"graft.$t").append()
+      rows(200 until 300).writeTo(s"graft.$t").overwrite(lit(true))
+      spark.sql(s"""MERGE INTO graft.$t t USING xw_src s ON t.k = s.k + 200
+                   |WHEN MATCHED AND s.k % 3 = 0 THEN DELETE
+                   |WHEN MATCHED THEN UPDATE SET t.v = s.v
+                   |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k + 200, -1)
+                   |""".stripMargin)
+      epoch(t, 0L, 400L until 420L)
+      val (v, files) = (version(t), dataFiles(t))
+      epoch(t, 0L, 400L until 420L) // a restart re-delivers epoch 0
+      assert(version(t) == v, s"$t: a replayed epoch must not burn a version")
+      assert(dataFiles(t) == files, s"$t: a replayed epoch's files are deleted")
+      val boom = udf((k: Long) => {
+        if (k == 517L) throw new RuntimeException("planted failure"); k
+      })
+      intercept[Exception] {
+        rows(500 until 600).repartition(4).select(boom($"k").as("k"), $"v")
+          .writeTo(s"graft.$t").append()
+      }
+      assert(version(t) == v && dataFiles(t) == files,
+        s"$t: a failed append must install nothing and leave no file")
+    }
+    val want = (200L until 300L).flatMap { k =>
+      if (k < 250L && k % 3 == 2) None // 200 + s.k with s.k % 3 == 0
+      else Some((k, if (k < 250L) (k - 200L) * 10L else k * 10L))
+    } ++ (400L until 420L).map(k => (k, k * 10L))
+    for ((m, f) <- pairs) {
+      val got = Seq(m, f).map(t =>
+        spark.table(s"graft.$t").as[(Long, Long)].collect().toSeq.sorted)
+      assert(got(0) == want.sorted, s"$m rows")
+      assert(got(1) == got(0), s"$f rows differ from $m")
+      assert(version(m) == version(f) && version(m) == 5L,
+        s"version ids: $m ${version(m)}, $f ${version(f)}")
+    }
+    tables.foreach(drop)
+    spark.catalog.dropTempView("xw_src")
+  }
+
   test("fs: abort stress — repeated planted-failure appends leave zero orphans under parallel load") {
     drop("fs_abst"); drop("fs_abst2")
     (0L until 100L).map(k => (k, k)).toDF("k", "v").writeTo("graft.fs_abst").create()

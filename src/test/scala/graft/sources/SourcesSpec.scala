@@ -590,6 +590,37 @@ class SourcesSpec extends SparkSpec {
     spark.sql("DROP TABLE graft.mem_epoch")
   }
 
+  test("DSv2 streaming write: an ALTER between an epoch's tasks and its commit reads the new column NULL, the old ones intact") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.catalog.SupportsWrite
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    spark.sql("DROP TABLE IF EXISTS graft.mem_salter")
+    spark.sql("CREATE TABLE graft.mem_salter (k BIGINT, v BIGINT)")
+    val table = MemStore.open("mem_salter", None, delta = false, changes = false)
+      .asInstanceOf[SupportsWrite]
+    val info = new LogicalWriteInfo {
+      override def queryId(): String = "q-salter"
+      override def schema() = table.schema()
+      override def options() = CaseInsensitiveStringMap.empty()
+    }
+    val sw = table.newWriteBuilder(info).build().toStreaming
+    val w = sw.createStreamingWriterFactory(new PhysicalWriteInfo {
+      override def numPartitions(): Int = 1
+    }).createWriter(0, 0L, 0L)
+    w.write(InternalRow(1L, 10L))
+    w.write(InternalRow(2L, 20L))
+    val message = w.commit()
+    // the tasks wrote two-column rows; the commit lands after the ALTER
+    spark.sql("ALTER TABLE graft.mem_salter ADD COLUMN extra BIGINT")
+    sw.commit(0L, Array(message))
+    val got = spark.table("graft.mem_salter").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2))).toSeq
+    assert(got == Seq((1L, 10L, true), (2L, 20L, true)),
+      s"rows must decode with the schema their tasks wrote under: $got")
+    spark.sql("DROP TABLE graft.mem_salter")
+  }
+
   test("DSv2 change feed: one version per micro-batch; non-append history refused") {
     spark.sql("DROP TABLE IF EXISTS graft.mem_cfspec")
     spark.range(0, 10).selectExpr("id AS k").writeTo("graft.mem_cfspec").create()
