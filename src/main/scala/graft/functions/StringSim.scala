@@ -86,43 +86,86 @@ object StringSim {
 
   /** Unrestricted Damerau-Levenshtein (Lowrance-Wagner): insert, delete,
     * substitute, and transpose — where a transposed pair may be edited
-    * again (unlike optimal string alignment). O(n·m) time, O(n·m) space
-    * for the full matrix plus a last-occurrence map; string operands here
-    * are names/titles (≤ a few hundred chars), not documents. */
-  def damerauLevenshtein(lu: UTF8String, ru: UTF8String): Int = {
-    val s = lu.toString; val t = ru.toString
+    * again (unlike optimal string alignment), over UTF-16 code units.
+    * O(n·m) time and space; string operands here are names/titles (≤ a
+    * few hundred chars), not documents.
+    *
+    * Each string becomes an array of character keys that index the
+    * last-occurrence table: the code itself when both inputs are ASCII
+    * (read from the bytes, no `String` copy; 128 slots), else a dense
+    * index over the distinct characters of `lu` (one slot each; a
+    * character of `ru` that `lu` lacks is -1, which matches nothing and
+    * was last seen at row 0). */
+  def damerauLevenshtein(lu: UTF8String, ru: UTF8String): Int =
+    if (lu.isFullAscii && ru.isFullAscii) {
+      def codes(u: UTF8String): Array[Int] = {
+        val k = new Array[Int](u.numBytes)
+        var i = 0
+        while (i < k.length) { k(i) = u.getByte(i); i += 1 }
+        k
+      }
+      lowranceWagner(codes(lu), codes(ru), 128)
+    } else {
+      val s = lu.toString; val t = ru.toString
+      val alphabet = s.toCharArray
+      java.util.Arrays.sort(alphabet)
+      var slots = 0
+      var i = 0
+      while (i < alphabet.length) {
+        if (slots == 0 || alphabet(slots - 1) != alphabet(i)) { alphabet(slots) = alphabet(i); slots += 1 }
+        i += 1
+      }
+      def keys(str: String): Array[Int] = {
+        val k = new Array[Int](str.length)
+        var i = 0
+        while (i < k.length) {
+          k(i) = math.max(java.util.Arrays.binarySearch(alphabet, 0, slots, str.charAt(i)), -1)
+          i += 1
+        }
+        k
+      }
+      lowranceWagner(keys(s), keys(t), slots)
+    }
+
+  /** The Lowrance-Wagner table over character keys (`s` keys in
+    * [0, slots), `t` keys in [-1, slots)), as one flat row-major array:
+    * (n+2) x (m+2) with a sentinel row/col of `inf`. */
+  private def lowranceWagner(s: Array[Int], t: Array[Int], slots: Int): Int = {
     val n = s.length; val m = t.length
     if (n == 0) return m
     if (m == 0) return n
     val inf = n + m
-    // d is (n+2) x (m+2) with a sentinel row/col of `inf`
-    val d = Array.ofDim[Int](n + 2, m + 2)
-    d(0)(0) = inf
+    val w = m + 2
+    val d = new Array[Int]((n + 2) * w)
+    d(0) = inf
     var i = 0
-    while (i <= n) { d(i + 1)(0) = inf; d(i + 1)(1) = i; i += 1 }
+    while (i <= n) { d((i + 1) * w) = inf; d((i + 1) * w + 1) = i; i += 1 }
     var j = 0
-    while (j <= m) { d(0)(j + 1) = inf; d(1)(j + 1) = j; j += 1 }
-    val last = new java.util.HashMap[Character, Integer]()
+    while (j <= m) { d(j + 1) = inf; d(w + j + 1) = j; j += 1 }
+    val last = new Array[Int](slots)
     i = 1
     while (i <= n) {
+      val si = s(i - 1)
+      val row = i * w
       var db = 0
       j = 1
       while (j <= m) {
-        val i1 = Option(last.get(t.charAt(j - 1))).fold(0)(_.intValue)
+        val tj = t(j - 1)
+        val i1 = if (tj < 0) 0 else last(tj)
         val j1 = db
         var cost = 1
-        if (s.charAt(i - 1) == t.charAt(j - 1)) { cost = 0; db = j }
-        val sub = d(i)(j) + cost
-        val ins = d(i + 1)(j) + 1
-        val del = d(i)(j + 1) + 1
-        val trans = d(i1)(j1) + (i - i1 - 1) + 1 + (j - j1 - 1)
-        d(i + 1)(j + 1) = math.min(math.min(sub, ins), math.min(del, trans))
+        if (si == tj) { cost = 0; db = j }
+        val sub = d(row + j) + cost
+        val ins = d(row + w + j) + 1
+        val del = d(row + j + 1) + 1
+        val trans = d(i1 * w + j1) + (i - i1 - 1) + 1 + (j - j1 - 1)
+        d(row + w + j + 1) = math.min(math.min(sub, ins), math.min(del, trans))
         j += 1
       }
-      last.put(s.charAt(i - 1), i)
+      last(si) = i
       i += 1
     }
-    d(n + 1)(m + 1)
+    d((n + 1) * w + m + 1)
   }
 }
 

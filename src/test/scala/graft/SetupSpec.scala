@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Levenshtein, Literal}
 import org.apache.spark.sql.functions._
-import graft.plans.{AsofJoinStrategy, BandedLevenshtein, BinnedRangeJoin}
+import graft.plans.{AsofJoinStrategy, BandedLevenshtein, BinnedRangeJoin, SmallSort}
 
 /** [[Setup]] on sessions with no graft state (`newSession()` starts from
   * the builtin function registry, empty rule and strategy lists and
@@ -24,11 +24,12 @@ class SetupSpec extends SparkSpec {
   private def exists(s: SparkSession, name: String): Boolean =
     s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
 
-  /** How often each rule and the strategy sit in the session's lists. */
+  /** How often each rule and each strategy sit in the session's lists. */
   private def installed(s: SparkSession): Seq[Int] = Seq(
     s.experimental.extraOptimizations.count(_ eq BandedLevenshtein),
     s.experimental.extraOptimizations.count(_ eq BinnedRangeJoin),
-    s.experimental.extraStrategies.count(_ eq AsofJoinStrategy))
+    s.experimental.extraStrategies.count(_ eq AsofJoinStrategy),
+    s.experimental.extraStrategies.count(_ eq SmallSort))
 
   test("one Setup resolves every graft function and sets the graft catalog") {
     val ns = spark.newSession()
@@ -40,10 +41,10 @@ class SetupSpec extends SparkSpec {
 
   test("a second Setup leaves each rule and the strategy in place once") {
     val ns = spark.newSession()
-    assert(installed(ns) == Seq(0, 0, 0))
+    assert(installed(ns) == Seq(0, 0, 0, 0))
     Setup(ns)
     Setup(ns)
-    assert(installed(ns) == Seq(1, 1, 1))
+    assert(installed(ns) == Seq(1, 1, 1, 1))
   }
 
   test("two threads setting up one fresh session install each rule and the strategy once") {
@@ -55,7 +56,7 @@ class SetupSpec extends SparkSpec {
       val racers = Seq.fill(2)(Future { go.await(); Setup(ns) })
       go.countDown()
       racers.foreach(Await.result(_, 1.minute))
-      assert(installed(ns) == Seq(1, 1, 1))
+      assert(installed(ns) == Seq(1, 1, 1, 1))
     } finally pool.shutdown()
   }
 
