@@ -1,16 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{OrderedDistribution, SinglePartition}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 
-/** Plans a global sort over a small, already-materialized input as one
-  * partition: `SortExec(global) ← ShuffleExchangeExec(SinglePartition)`.
+/** Plans a global sort over a small, already-materialized input in one
+  * partition: `SortExec(global) ← OnePartitionExec`, which
+  * `EnsureRequirements` completes with an `Exchange SinglePartition` where
+  * the input spans more than one partition.
   *
   * Spark plans every global `Sort` with a range exchange, and the
   * exchange's `RangePartitioner` samples the sort's input in a job of its
@@ -26,28 +29,18 @@ import org.apache.spark.sql.internal.SQLConf
   * runtime sizes. Otherwise (a bare scan under the sort, a large input) it
   * declines and Spark plans the range exchange; `orderBy(...).limit(n)`
   * never reaches it (`SpecialLimits` plans `TakeOrderedAndProject` from the
-  * limit). The plan keeps one exchange either way.
+  * limit).
   *
-  * The exchange's logical link is the sort's child, as for the exchange
-  * `EnsureRequirements` would add, so AQE wraps the finished stage as the
-  * sort's input and keeps the sort above it. On that last re-plan the
-  * input already satisfies the sort, and the strategy declines rather
-  * than add a second exchange. */
+  * The single-partition exchange is left to `EnsureRequirements`, which
+  * alone knows the planned input's partitioning: an input already in one
+  * partition (a cached single-partition frame, or the sort's own finished
+  * stage on AQE's last re-plan) gets no exchange, so the plan never holds
+  * more exchanges than Spark's own. */
 object SmallSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Sort(order, true, child, _) if !child.isStreaming && !satisfied(order, child) &&
-        fitsOnePartition(child) =>
-      val exchange = ShuffleExchangeExec(SinglePartition, planLater(child))
-      exchange.setLogicalLink(child)
-      SortExec(order, global = true, exchange) :: Nil
+    case Sort(order, true, child, _) if fitsOnePartition(child) =>
+      SortExec(order, global = true, OnePartitionExec(planLater(child))) :: Nil
     case _ => Nil
-  }
-
-  /** A finished stage whose partitioning already meets the sort's. */
-  private def satisfied(order: Seq[SortOrder], child: LogicalPlan): Boolean = child match {
-    case s: LogicalQueryStage =>
-      s.physicalPlan.outputPartitioning.satisfies(OrderedDistribution(order))
-    case _ => false
   }
 
   private def fitsOnePartition(child: LogicalPlan): Boolean = {
@@ -64,4 +57,16 @@ object SmallSort extends SparkStrategy {
     case r: LocalRelation => Some(r.computeStats().sizeInBytes)
     case _ => None
   }
+}
+
+/** Passes its child's rows through and requires them in one partition
+  * (`AllTuples`), so the global sort above it needs no range exchange. */
+final case class OnePartitionExec(child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(newChild: SparkPlan): OnePartitionExec =
+    copy(child = newChild)
 }

@@ -5,7 +5,8 @@ import graft.operators.{LinkageOps, Relational}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{PlanLater, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.functions._
 
@@ -78,7 +79,20 @@ class SmallSortSpec extends SparkSpec {
     assert(belowInputs(shape(sorted)).contains("rangepartitioning"))
   }
 
-  test("the last re-plan adds no second exchange over the finished single-partition stage") {
+  test("a sort over a cached frame already in one partition adds no exchange and no job") {
+    val one = spark.range(0, 2000, 1, 4).selectExpr("id % 97 AS k", "id").coalesce(1).cache()
+    try {
+      one.count()
+      def sorted = one.orderBy(col("k").desc, col("id"))
+      noopJobs(sorted)
+      assert(noopJobs(sorted) == belowInputs(noopJobs(sorted)))
+      val p = shape(sorted)
+      assert(p.contains("onepartition") && !p.contains("exchange"), p)
+      assert(sorted.collect().toSeq == belowInputs(sorted.collect().toSeq))
+    } finally one.unpersist()
+  }
+
+  test("AQE's last re-plan adds no second exchange over the sort's own finished stage") {
     val df = Relational.q03Frequencies.run(spark, sfDir)
     val plan = finalPlan(df)
     def within(p: SparkPlan): Seq[QueryStageExec] =
@@ -87,10 +101,14 @@ class SmallSortSpec extends SparkSpec {
     val single = stages.filter(_.outputPartitioning == SinglePartition)
     val hashed = stages.filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
     assert(single.size == 1 && hashed.nonEmpty, plan)
+    // the strategy's plan over a finished stage, completed as AQE does
     val sort = df.queryExecution.optimizedPlan.collectFirst { case s: Sort => s }.get
-    def over(stage: ShuffleQueryStageExec) =
-      SmallSort(sort.copy(child = LogicalQueryStage(sort.child, stage)))
-    assert(over(single.head).isEmpty, "the sort's own finished stage already satisfies it")
-    assert(over(hashed.head).nonEmpty, "a small finished hash stage still plans one partition")
+    def exchangesOver(stage: ShuffleQueryStageExec): Int = {
+      val planned = SmallSort(sort.copy(child = LogicalQueryStage(sort.child, stage))).head
+        .transformUp { case _: PlanLater => stage }
+      EnsureRequirements().apply(planned).collect { case e: ShuffleExchangeExec => e }.size
+    }
+    assert(exchangesOver(single.head) == 0, "the sort's own stage is already one partition")
+    assert(exchangesOver(hashed.head) == 1, "a hash-partitioned stage is gathered once")
   }
 }
