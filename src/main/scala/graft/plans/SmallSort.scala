@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -33,14 +33,22 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * The single-partition exchange is left to `EnsureRequirements`, which
   * alone knows the planned input's partitioning: an input already in one
-  * partition (a cached single-partition frame, or the sort's own finished
-  * stage on AQE's last re-plan) gets no exchange, so the plan never holds
-  * more exchanges than Spark's own. */
+  * partition (a cached single-partition frame, the sort's own finished
+  * stage on AQE's last re-plan) gets no exchange. Over a finished stage
+  * that already satisfies the sort (the range exchange Spark planned
+  * before the input was materialized) the strategy declines, so it never
+  * proposes an exchange that Spark's plan does not need. */
 object SmallSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Sort(order, true, child, _) if fitsOnePartition(child) =>
+    case Sort(order, true, child, _) if !satisfied(order, child) && fitsOnePartition(child) =>
       SortExec(order, global = true, OnePartitionExec(planLater(child))) :: Nil
     case _ => Nil
+  }
+
+  private def satisfied(order: Seq[SortOrder], child: LogicalPlan): Boolean = child match {
+    case s: LogicalQueryStage =>
+      s.physicalPlan.outputPartitioning.satisfies(OrderedDistribution(order))
+    case _ => false
   }
 
   private def fitsOnePartition(child: LogicalPlan): Boolean = {
