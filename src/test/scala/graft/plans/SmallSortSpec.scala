@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
   * materialized, the plan keeps the range exchange and its job. */
 class SmallSortSpec extends SparkSpec {
 
-  private val linkageDir = "/root/testdata/sf0.01"
-
   /** Sets the single-partition limit below every input here. */
   private def belowInputs[A](body: => A): A =
     QueryDef.withConf(spark, "spark.sql.maxSinglePartitionBytes" -> "1")(body)
@@ -39,18 +37,18 @@ class SmallSortSpec extends SparkSpec {
   private def shape(df: DataFrame): String = finalPlan(df).toString.toLowerCase
 
   Seq(
-    ("q03", Relational.q03Frequencies, graft.TestSession.sfDir, 4),
-    ("q136", LinkageOps.q136DamerauPairs, linkageDir, 4)
-  ).foreach { case (label, q, dir, parentJobs) =>
+    ("q03", Relational.q03Frequencies, 4),
+    ("q136", LinkageOps.q136DamerauPairs, 4)
+  ).foreach { case (label, q, parentJobs) =>
     test(s"$label: the final sort runs in one partition and starts one job fewer") {
-      noopJobs(q.run(spark, dir)) // first reads in the session infer schemas
-      val small = noopJobs(q.run(spark, dir))
-      val ranged = belowInputs(noopJobs(q.run(spark, dir)))
+      noopJobs(q.run(spark, sfDir)) // first reads in the session infer schemas
+      val small = noopJobs(q.run(spark, sfDir))
+      val ranged = belowInputs(noopJobs(q.run(spark, sfDir)))
       assert(ranged == parentJobs && small == parentJobs - 1,
         s"jobs: $small in one partition, $ranged with the range exchange")
-      val p = shape(q.run(spark, dir))
+      val p = shape(q.run(spark, sfDir))
       assert(p.contains("singlepartition") && !p.contains("rangepartitioning"), p)
-      val pr = belowInputs(shape(q.run(spark, dir)))
+      val pr = belowInputs(shape(q.run(spark, sfDir)))
       assert(pr.contains("rangepartitioning") && !pr.contains("singlepartition"), pr)
     }
   }
@@ -97,8 +95,9 @@ class SmallSortSpec extends SparkSpec {
       p.collect { case s: QueryStageExec => s }.flatMap(s => s +: within(s.plan))
     def stages(df: DataFrame) = within(finalPlan(df)).collect { case s: ShuffleQueryStageExec => s }
     val df = Relational.q03Frequencies.run(spark, sfDir)
-    val own = stages(df).filter(_.outputPartitioning == SinglePartition)
-    val hashed = stages(df).filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
+    val ran = stages(df)
+    val own = ran.filter(_.outputPartitioning == SinglePartition)
+    val hashed = ran.filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
     val dfRanged = Relational.q03Frequencies.run(spark, sfDir)
     val ranged = belowInputs(stages(dfRanged)).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
     assert(own.size == 1 && hashed.nonEmpty && ranged.size == 1)
